@@ -24,10 +24,6 @@ from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, BM25_LABELS
 
-# Java-regex twin of the reference tokenizer r"\b\w+\b" (statistics.py:28).
-_TOKEN_PATTERN = r"\b\w+\b"
-
-
 def doc_lengths(docs: DataFrame) -> DataFrame:
     """docs(url, text) -> (url, dl): token count per document.
 
@@ -45,74 +41,19 @@ def doc_lengths(docs: DataFrame) -> DataFrame:
     return docs.select("url", (collapsed - removed).cast("int").alias("dl"))
 
 
-def add_bm25(mentions: DataFrame, docs: DataFrame | None = None,
-             k1: float = BM25_K1, b: float = BM25_B,
-             labels: list[str] | None = None,
-             dls: DataFrame | None = None) -> DataFrame:
-    """Attach ``bm25_score`` to mention rows of the scored labels.
+def _bm25_key():
+    """The BM25 term key: lower(original_id or name) (statistics.py:46)."""
+    return F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
 
-    Rows of other categories (cve, ...) pass through with NULL score,
-    mirroring the reference which only scores BM25_LABELS
-    (statistics.py:36).  Pass ``dls(url, dl)`` when doc lengths were
-    already computed upstream (the mention stage emits them for free);
-    otherwise they are derived from ``docs(url, text)``.
-    """
-    labels = labels or BM25_LABELS
 
-    if dls is None:
-        dls = doc_lengths(docs)
-
-    # 1-row corpus stats; broadcast-crossjoined (never a driver collect, so
-    # the plan stays lazy and resumable).
-    stats = dls.agg(
-        F.count("*").alias("m"),
-        F.avg("dl").alias("avgdl"),
-    )
-
-    scored = mentions.filter(F.col("category").isin(labels))
-    passthrough = mentions.filter(~F.col("category").isin(labels))
-
-    key_expr = F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
-
-    # A3 stats on NARROW projections only — the wide mention rows (which
-    # carry context sentences) are never shuffled for stat computation.
-    # tf counts hit entries after dedup, exactly like the reference
-    # counting entries in the deduped hit files (statistics.py:37-40).
-    tf = (scored.select("category", "url", key_expr.alias("bm25_key"))
-          .groupBy("category", "url", "bm25_key")
-          .agg(F.count("*").alias("f")))
-    df_ = (tf.groupBy("category", "bm25_key")
-           .agg(F.count("*").alias("n")))          # tf is 1 row per (url,key)
-
-    score_table = (
-        tf.join(df_, ["category", "bm25_key"])
-        .join(dls, ["url"], "left")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("dl", F.coalesce(F.col("dl"), F.col("avgdl")))
-        .withColumn(
-            "idf",
-            F.log((F.col("m") - F.col("n") + 0.5) / (F.col("n") + 0.5) + 1.0))
-        .withColumn(
-            "denom",
-            F.col("f") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-        .select(
-            "category", "url", "bm25_key",
-            F.when(F.col("denom") != 0.0,
-                   F.round(F.col("idf") * (F.col("f") * (k1 + 1.0)) / F.col("denom"), 4))
-            .otherwise(F.lit(0.0)).alias("bm25_score"))
-    )
-
-    # ONE join attaches scores to the wide rows.  The score table scales
-    # with the data (1 row per distinct (doc, entity)) so it is shuffle-
-    # joined, not broadcast — broadcast builds are serial driver work.
-    out = (
-        scored.withColumn("bm25_key", key_expr)
-        .join(score_table, ["category", "url", "bm25_key"], "left")
-        .drop("bm25_key")
-    )
-
-    return out.unionByName(
-        passthrough.withColumn("bm25_score", F.lit(None).cast("double")))
+def _term_freqs(scored: DataFrame) -> DataFrame:
+    """(category, url, bm25_key, f) on a NARROW projection — the wide
+    mention rows (context sentences) are never shuffled for statistics.
+    tf counts hit entries after dedup, like the reference counting entries
+    in the deduped hit files (statistics.py:37-40)."""
+    return (scored.select("category", "url", _bm25_key().alias("bm25_key"))
+            .groupBy("category", "url", "bm25_key")
+            .agg(F.count("*").alias("f")))
 
 
 def bm25_global_stats(mentions: DataFrame, dls: DataFrame,
@@ -126,11 +67,7 @@ def bm25_global_stats(mentions: DataFrame, dls: DataFrame,
     (category, bm25_key, n) document frequencies."""
     labels = labels or BM25_LABELS
     stats = dls.agg(F.count("*").alias("m"), F.avg("dl").alias("avgdl"))
-    key_expr = F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
-    tf = (mentions.filter(F.col("category").isin(labels))
-          .select("category", "url", key_expr.alias("bm25_key"))
-          .groupBy("category", "url", "bm25_key")
-          .agg(F.count("*").alias("f")))
+    tf = _term_freqs(mentions.filter(F.col("category").isin(labels)))
     df_ = tf.groupBy("category", "bm25_key").agg(F.count("*").alias("n"))
     return stats, df_
 
@@ -140,27 +77,26 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
                           k1: float = BM25_K1, b: float = BM25_B,
                           labels: list[str] | None = None
                           ) -> tuple[DataFrame, DataFrame]:
-    """``add_bm25`` against FROZEN global stats, returning the scored and
-    passthrough branches SEPARATELY (both with a ``bm25_score`` column;
-    null on passthrough).  Exact on any url-subset of the corpus (tf and
-    dl are url-local; df/m/avgdl come frozen), so an interrupted link
-    stage resumes per-bucket with identical scores.
+    """Attach ``bm25_score`` to the mention rows of the scored labels,
+    against FROZEN global stats (``bm25_global_stats``), returning the
+    scored and passthrough branches SEPARATELY (both with a
+    ``bm25_score`` column; null on passthrough: like the reference,
+    statistics.py:36, other categories such as cve are not scored).
+    Exact on any url-subset of the corpus (tf and dl are url-local;
+    df/m/avgdl come frozen), so an interrupted link stage resumes
+    per-bucket with identical scores.
 
     Partitioning contract: when ``mentions`` is hash-partitioned by url,
     EVERY operation here preserves it — tf's groupBy keys include url, the
     df/stats joins are broadcast, and the score join keys include url on
     both sides — so the whole scoring pass adds zero exchanges and the
     caller can keep the two branches separate (a union would erase the
-    partitioning, which is why the batch link stage unions only at the
-    very end — plans/pipeline.py build_linked)."""
+    partitioning, which is why ``linking.link_stage`` unions only at the
+    very end)."""
     labels = labels or BM25_LABELS
     scored = mentions.filter(F.col("category").isin(labels))
     passthrough = mentions.filter(~F.col("category").isin(labels))
-    key_expr = F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
-
-    tf = (scored.select("category", "url", key_expr.alias("bm25_key"))
-          .groupBy("category", "url", "bm25_key")
-          .agg(F.count("*").alias("f")))
+    tf = _term_freqs(scored)
     score_table = (
         # dl attach is shuffle_hash too (round 4): both sides are narrow
         # and url-co-partitioned (zero exchange either way), but SMJ would
@@ -189,7 +125,7 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
     # Under matching url partitioning the join stays exchange-free either
     # way; the hint only removes the sorts.
     out = (
-        scored.withColumn("bm25_key", key_expr)
+        scored.withColumn("bm25_key", _bm25_key())
         .join(score_table.hint("shuffle_hash"),
               ["category", "url", "bm25_key"], "left")
         .drop("bm25_key")
@@ -202,7 +138,7 @@ def add_bm25_frozen(mentions: DataFrame, dls: DataFrame,
                     k1: float = BM25_K1, b: float = BM25_B,
                     labels: list[str] | None = None) -> DataFrame:
     """``add_bm25_frozen_split`` with the branches unioned back — the
-    standalone / chunked-incremental surface."""
+    standalone surface."""
     out, passthrough = add_bm25_frozen_split(
         mentions, dls, stats, df_table, k1=k1, b=b, labels=labels)
     return out.unionByName(passthrough)

@@ -29,11 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Folded into the canon-cache fingerprint (plans/pipeline.py _canon_stage):
-# the cross-run cache is keyed on (catalog, stage, THIS) so a change to the
-# canonicalization ALGORITHM invalidates caches built by older code — the
-# catalog fingerprint alone cannot see code changes.  Bump on any change
-# that alters canonical_map's output for the same catalog.
+# Folded into the canonicalize-stage fingerprint (plans/pipeline.py _fps):
+# a change to the canonicalization ALGORITHM invalidates stage tables built
+# by older code on resume — the catalog fingerprint alone cannot see code
+# changes.  Bump on any change that alters canonical_map's output for the
+# same catalog.
 CANON_ALGO_VERSION = 1
 
 

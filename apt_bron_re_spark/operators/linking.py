@@ -40,9 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import EMBED_DIM, SIM_THRESHOLD
+from ..config import BM25_LABELS, SIM_THRESHOLD
 from ..functions.embedder import embed_batch
 from ..functions.variants import generate_variants
+from . import bm25, mention
 
 LINKED_LABELS_EXCLUDE = {"cpe_versioned", "cpe_unversioned"}
 
@@ -218,6 +219,11 @@ def build_links(residues: DataFrame,
 # L6: merge links into mentions
 # --------------------------------------------------------------------------
 
+def _oid_l():
+    """The L6 merge key's id part: lower(original_id), null as ''."""
+    return F.lower(F.coalesce("original_id", F.lit("")))
+
+
 def best_links(links: DataFrame) -> DataFrame:
     """Best link per (url, category, oid_l) — L6's deterministic
     last-writer rule (module docstring): semantic over variant, then
@@ -233,7 +239,7 @@ def best_links(links: DataFrame) -> DataFrame:
     must reference it or pruning deletes it."""
     best = (
         links
-        .withColumn("oid_l", F.lower(F.coalesce("original_id", F.lit(""))))
+        .withColumn("oid_l", _oid_l())
         .groupBy("url", F.col("label").alias("category"), "oid_l")
         .agg(
             F.max("link_ner_score").alias("link_ner_score"),
@@ -263,8 +269,8 @@ def best_links(links: DataFrame) -> DataFrame:
 
 
 def _annotate(mentions: DataFrame, best: DataFrame) -> DataFrame:
-    """Left-join the best-link table onto mention rows (which must carry
-    ``oid_l``) and fold in the link annotations + ner_score max."""
+    """Left-join the best-link table onto mention rows by (url, category,
+    oid_l) and fold in the link annotations + ner_score max."""
     # `best` scales with the data (one row per linked doc-entity), so it is
     # NOT broadcast: collecting a data-sized side to the driver serializes
     # the stage.  shuffle_hash, not sort-merge: the left stream is the
@@ -272,8 +278,9 @@ def _annotate(mentions: DataFrame, best: DataFrame) -> DataFrame:
     # CPU in the link stage); the narrow best-link build side hashes
     # per-partition instead.
     return (
-        mentions.join(best.hint("shuffle_hash"),
-                      ["url", "category", "oid_l"], "left")
+        mentions.withColumn("oid_l", _oid_l())
+        .join(best.hint("shuffle_hash"), ["url", "category", "oid_l"],
+              "left")
         .withColumn(
             "ner_score",
             F.when(F.col("link_ner_score").isNotNull(),
@@ -326,12 +333,10 @@ def merge_links(mentions: DataFrame, links: DataFrame,
     recompute it saved).
     """
     best = best_links(links)
-    m = mentions.withColumn(
-        "oid_l", F.lower(F.coalesce("original_id", F.lit(""))))
-    merged = _annotate(m, best)
     if mention_keys is None:
-        mention_keys = m.select("url", "category", "oid_l").distinct()
-    return merged, _residuals(best, mention_keys)
+        mention_keys = mentions.select(
+            "url", "category", _oid_l().alias("oid_l")).distinct()
+    return _annotate(mentions, best), _residuals(best, mention_keys)
 
 
 def merge_links_split(scored: DataFrame, passthrough: DataFrame,
@@ -340,8 +345,8 @@ def merge_links_split(scored: DataFrame, passthrough: DataFrame,
                       ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """``merge_links`` over a (scored, passthrough) mention split, keeping
     the branches separate so a url-hash partitioning established upstream
-    survives every join here (a union erases partitioning info — the batch
-    link stage unions only at the very end; plans/pipeline.py).
+    survives every join here (a union erases partitioning info —
+    ``link_stage`` unions only at the very end).
 
     ``passthrough_may_link=False`` asserts the caller-checked invariant
     that every linkable label (layer_map keys minus the cpe family) is a
@@ -351,13 +356,9 @@ def merge_links_split(scored: DataFrame, passthrough: DataFrame,
     annotations.  Pass True for a catalog with non-BM25 linkable labels.
     Returns (merged_scored, merged_passthrough, residual_links)."""
     best = best_links(links)
-    s = scored.withColumn(
-        "oid_l", F.lower(F.coalesce("original_id", F.lit(""))))
-    merged_s = _annotate(s, best)
+    merged_s = _annotate(scored, best)
     if passthrough_may_link:
-        p = passthrough.withColumn(
-            "oid_l", F.lower(F.coalesce("original_id", F.lit(""))))
-        merged_p = _annotate(p, best)
+        merged_p = _annotate(passthrough, best)
     else:
         merged_p = (
             passthrough
@@ -366,3 +367,51 @@ def merge_links_split(scored: DataFrame, passthrough: DataFrame,
             .withColumn("semantic_score", F.lit(None).cast("double"))
         )
     return merged_s, merged_p, _residuals(best, mention_keys)
+
+
+# --------------------------------------------------------------------------
+# The link-stage kernel: BM25 -> L2-L5 -> L6 over one mention-stage table
+# --------------------------------------------------------------------------
+
+def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
+               layer_map: dict[str, list[dict]], semantic: bool = True,
+               threshold: float = SIM_THRESHOLD
+               ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Stage 3 over mention-stage rows (``mention.detect_mentions``
+    output): BM25 against the global ``(stats, df_table)`` of
+    ``bm25.bm25_global_stats``, link generation over the residues, and the
+    L6 merge.  Returns ``(merged, residual, links)``.
+
+    The one kernel behind the batch, bucket-chunked and streaming runs.
+    Scoring against GLOBAL stats is what keeps it exact on any url-subset
+    of the corpus (tf and dl are url-local; df/m/avgdl must not be
+    recomputed from a chunk or micro-batch, or idf comes out wrong).
+
+    Partitioning: when ``stage_rows`` is hash-partitioned by url (the
+    batch run repartitions the table once), the mention, residue and
+    doc-length views are filters above that ONE exchange, and every
+    operation below preserves it: BM25 tf, the score join, the best-link
+    aggregation, the L6 merge join and the residual anti-join all run
+    exchange-free.  The scored/passthrough branches are unioned only at
+    the very end (a union erases partitioning info), and the residual
+    anti-join takes its keys from a narrow pre-BM25 projection, so the
+    wide scored plan stays single-consumer and un-persisted.
+
+    ``links`` is the subplan both outputs read.  A caller that writes them
+    in SEPARATE jobs persists it first and unpersists it once its writes
+    commit; when one job consumes both (the streaming step), the cache
+    would only add a stage barrier."""
+    m = mention.mentions_view(stage_rows)
+    dls = mention.doc_lengths_view(stage_rows)
+    scored, passthrough = bm25.add_bm25_frozen_split(m, dls, stats, df_table)
+    links = build_links(mention.residue_view(stage_rows), layer_map,
+                        semantic=semantic, threshold=threshold)
+    keys = m.select("url", "category", _oid_l().alias("oid_l")).distinct()
+    # the passthrough branch can take a link only if some linkable label
+    # is not BM25-scored (never for the BRON-shaped catalog: links exclude
+    # the cpe family and cve is regex-only)
+    may_link = bool(set(layer_map) - LINKED_LABELS_EXCLUDE - set(BM25_LABELS))
+    merged_s, merged_p, residual = merge_links_split(
+        scored, passthrough, links, mention_keys=keys,
+        passthrough_may_link=may_link)
+    return merged_s.unionByName(merged_p), residual, links

@@ -81,32 +81,6 @@ def evidence_rows(mentions_linked: DataFrame,
     return m
 
 
-def evidence(mentions_linked: DataFrame,
-             residual_links: DataFrame | None,
-             canon: DataFrame | None,
-             partitions: int | None = None) -> DataFrame:
-    """(url, label, canon_id, score, sentence): best evidence per entity
-    per document — the semantic unit of stage 5.  ``materialize_triples``
-    accepts either this (post-aggregation) table or the raw
-    ``evidence_rows`` output (the aggregation is idempotent); the pipeline
-    passes raw rows so the narrow/sentence branches prune independently."""
-    m = evidence_rows(mentions_linked, residual_links, canon)
-    if partitions:
-        m = m.repartition(partitions, F.col("url"))
-    agg = (
-        m.groupBy("url", "label", "canon_id")
-        .agg(F.max("score").alias("score"),
-             F.max(F.struct(F.col("score").alias("s"), "sentence"))
-              .alias("_mx"),
-             # ObjectHashAggregate flip — see _evidence_sentences
-             F.collect_set(F.lit(1)).alias("_ohash"))
-    )
-    return agg.select(
-        "url", "label", "canon_id", "score",
-        F.when(F.size("_ohash") > 0, F.col("_mx.sentence"))
-         .alias("sentence"))
-
-
 def _evidence_sentences(ev: DataFrame) -> DataFrame:
     """(url, label, canon_id, sentence): the argmax-score sentence per
     evidence key (ties: max sentence string; null sorts lowest).  A plain
@@ -251,15 +225,13 @@ def _attach_justification(agg: DataFrame, ev_sent: DataFrame,
         ev_sent.sentence.alias("justification"))
 
 
-def materialize_triples(ev: DataFrame,
-                        predicate_map: dict | None = None,
-                        max_sources: int = 64,
-                        n_salts: int = 16,
-                        partitions: int | None = None) -> DataFrame:
-    """evidence -> triples(subj, pred, obj, sources, n_sources,
-    justification, score).  ``ev`` is ``evidence_rows`` output (preferred —
-    lets the narrow branch prune sentences from its scan) or the
-    aggregated ``evidence`` table (the per-key aggregation is idempotent).
+def _triple_aggregate(ev: DataFrame, predicate_map: dict | None,
+                      max_sources: int, n_salts: int,
+                      partitions: int | None,
+                      round_score: bool) -> DataFrame:
+    """The salted two-phase triple aggregation shared by
+    ``materialize_triples`` and ``partial_triples``: (subj, pred, obj,
+    sources, n_sources, bj, score, justification).
 
     Hub-entity skew handling (north_rule "salted skew handling"): at
     10^12-doc scale a hub edge's source set has millions of urls, so a
@@ -276,8 +248,7 @@ def materialize_triples(ev: DataFrame,
     deterministic and bounded.  ``n_sources`` carries the exact distinct
     source count (algebraic, skew-safe).  The best-justification argmax is
     equally salted (max of a max is the max) and carries only the
-    evidence KEY; the sentence attaches at the end (module docstring).
-    """
+    evidence KEY; the sentence attaches at the end (module docstring)."""
     predicate_map = predicate_map or PREDICATE_MAP
     pairs = _pairs(_narrow_evidence(ev, partitions), predicate_map)
 
@@ -294,6 +265,7 @@ def materialize_triples(ev: DataFrame,
         )
     )
 
+    score = F.max("salt_score")
     agg = (
         per_salt.groupBy("subj", "pred", "obj")
         .agg(
@@ -303,10 +275,24 @@ def materialize_triples(ev: DataFrame,
                 1, max_sources).alias("sources"),
             F.sum("salt_n").alias("n_sources"),
             F.max("bj").alias("bj"),
-            F.round(F.max("salt_score"), 4).alias("score"),
+            (F.round(score, 4) if round_score else score).alias("score"),
         )
     )
-    out = _attach_justification(agg, _evidence_sentences(ev))
+    return _attach_justification(agg, _evidence_sentences(ev))
+
+
+def materialize_triples(ev: DataFrame,
+                        predicate_map: dict | None = None,
+                        max_sources: int = 64,
+                        n_salts: int = 16,
+                        partitions: int | None = None) -> DataFrame:
+    """evidence -> triples(subj, pred, obj, sources, n_sources,
+    justification, score).  ``ev`` is ``evidence_rows`` output (raw rows
+    let the narrow branch prune sentences from its scan; any per-(url,
+    label, canon_id) pre-aggregation of it gives the same triples).  The
+    aggregation is ``_triple_aggregate``'s salted two-phase one."""
+    out = _triple_aggregate(ev, predicate_map, max_sources, n_salts,
+                            partitions, round_score=True)
     return out.select("subj", "pred", "obj", "sources", "n_sources",
                       "justification", "score")
 
@@ -330,41 +316,18 @@ def partial_triples(ev: DataFrame,
                     payload never decides a comparison
       part_score    max pair_score (rounded only at merge time)
     """
-    predicate_map = predicate_map or PREDICATE_MAP
-    pairs = _pairs(_narrow_evidence(ev, partitions), predicate_map)
-    per_salt = (
-        pairs
-        .withColumn("salt", F.pmod(F.crc32("url"), F.lit(n_salts)))
-        .groupBy("subj", "pred", "obj", "salt")
-        .agg(
-            F.slice(F.sort_array(F.collect_set("url")), 1, max_sources)
-             .alias("salt_sources"),
-            F.countDistinct("url").alias("salt_n"),
-            _bj().alias("bj"),
-            F.max("pair_score").alias("salt_score"),
-        )
-    )
-    agg = (
-        per_salt.groupBy("subj", "pred", "obj")
-        .agg(
-            F.slice(
-                F.array_sort(F.array_distinct(
-                    F.flatten(F.collect_list("salt_sources")))),
-                1, max_sources).alias("part_sources"),
-            F.sum("salt_n").alias("part_n"),
-            F.max("bj").alias("bj"),
-            F.max("salt_score").alias("part_score"),
-        )
-    )
-    with_j = _attach_justification(agg, _evidence_sentences(ev))
+    with_j = _triple_aggregate(ev, predicate_map, max_sources, n_salts,
+                               partitions, round_score=False)
     return with_j.select(
-        "subj", "pred", "obj", "part_sources", "part_n",
+        "subj", "pred", "obj",
+        F.col("sources").alias("part_sources"),
+        F.col("n_sources").alias("part_n"),
         F.struct(F.col("bj.s").alias("s"),
                  F.col("bj.has_s").alias("has_s"),
                  F.col("bj.url").alias("url"),
                  F.col("bj.subj_label").alias("subj_label"),
                  F.col("justification").alias("justification")).alias("part_bj"),
-        "part_score")
+        F.col("score").alias("part_score"))
 
 
 def merge_partial_triples(partials: DataFrame,

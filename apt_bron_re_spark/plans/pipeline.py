@@ -24,13 +24,22 @@ in-place file rewrites — SURVEY.md §3):
     canon/           (label, original_id, canon_id)
     triples/         subj, pred, obj, sources[], justification, score
                      partitioned by pred (S10)
+
+The link stage (BM25 -> L2-L5 links -> L6 merge) is ONE kernel,
+``operators.linking.link_stage``, behind three execution wrappers: ``run``
+(the whole table, repartitioned by url once, BM25 globals inline),
+``run_link_incremental`` (one call per bucket chunk) and
+``streaming.kg_stream.kg_batch_step`` (one call per micro-batch).  The
+kernel scores against the global BM25 (stats, df) it is handed, so the
+chunked and streaming wrappers freeze those once from the whole corpus;
+per-chunk stats would give wrong idf.  The ``run_*_incremental`` stages
+share one chunk loop (``_run_chunks``): exactly-once per-partition writes
+plus per-bucket lineage.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
 import time
 from pathlib import Path
 
@@ -60,20 +69,11 @@ class Pipeline:
                  sim_threshold: float = SIM_THRESHOLD,
                  lang: str | None = "en",
                  fuse_extract: bool = False,
-                 canon_cache_dir: str | Path | None = None,
                  catalog: str | None = None) -> None:
         """``fuse_extract=True`` runs E1 inside the mention UDF and skips
         materializing the docs table (half the stage-table IO; the same
         byte-identical extractor).  The unfused default keeps the extract
         checkpoint for stage-level resume granularity.
-
-        ``canon_cache_dir``: reuse the canonical map ACROSS pipeline runs
-        keyed by the catalog fingerprint.  The canon table is a
-        catalog-derived dimension (stage 4 depends only on the alias
-        graph, never on the corpus) — the same precompute-once shape as
-        the reference's node-embedding cache (embeddings.py) — so
-        recomputing the connected-components job per corpus run is pure
-        fixed latency; with a cache it is a parquet read.
 
         ``catalog``: the Iceberg one-line swap (S7/S8 proper).  When set
         (e.g. ``"ice.db"``), every stage table becomes the Iceberg table
@@ -93,7 +93,6 @@ class Pipeline:
         self.sim_threshold = sim_threshold
         self.lang = lang
         self.fuse_extract = fuse_extract
-        self.canon_cache_dir = canon_cache_dir
         self.catalog = catalog
         self.log = LineageLog(spark, base_dir)
         self._catalog_fp = fingerprint(layer_map)
@@ -134,103 +133,9 @@ class Pipeline:
             marker.write_text(json.dumps(want))
 
     def _canon_stage(self, resume: bool = True) -> DataFrame:
-        """Stage 4 with the optional cross-run cache (constructor doc).
-        ``resume=False`` (the documented full-recompute path) rebuilds the
-        stage table; an already-PUBLISHED cache (dir with ``_SUCCESS``) is
-        kept as-is — cache content is a pure function of the catalog
-        fingerprint, so a rebuild would republish identical bytes.  A
-        cache dir WITHOUT ``_SUCCESS`` (half-written by a legacy
-        non-atomic writer, or a crashed copy) is treated as ABSENT and
-        replaced (rename-away + rename-in), so a stale husk never blocks
-        publication.  Publication is atomic (write to a temp dir, rename
-        into place) so concurrent pipelines sharing ``canon_cache_dir``
-        never read a half-written cache."""
-        fp3 = self._fp3()
-        if self.canon_cache_dir is not None:
-            cache = Path(self.canon_cache_dir) / f"canon_{fp3[:16]}"
-            if resume and (cache / "_SUCCESS").exists():
-                if not self.log.is_complete("canonicalize", fp3):
-                    t0 = time.time()
-                    if self.catalog:
-                        self._write(self.spark.read.parquet(str(cache)),
-                                    "canon")
-                    else:
-                        # the published cache IS the stage table's parquet
-                        # layout — a filesystem copy is byte-identical and
-                        # skips a whole Spark read->write job (several
-                        # fixed job latencies on a catalog-sized table,
-                        # paid on every fresh-base-dir run that hits a
-                        # warm shared cache).  tmp + rename keeps the
-                        # stage-dir publication atomic, same as the
-                        # cache's own.
-                        dst = Path(self._path("canon"))
-                        tmp = dst.with_name(
-                            f"canon.tmp-{os.getpid()}-{time.time_ns()}")
-                        try:
-                            shutil.copytree(cache, tmp)
-                            if dst.exists():
-                                shutil.rmtree(str(dst), ignore_errors=True)
-                            tmp.rename(dst)
-                        except OSError:
-                            # don't orphan a canon.tmp-* inside base_dir on
-                            # a mid-copy/rename failure; fall back to the
-                            # Spark read->write path (slower, same bytes)
-                            shutil.rmtree(str(tmp), ignore_errors=True)
-                            self._write(
-                                self.spark.read.parquet(str(cache)),
-                                "canon")
-                    self.log.record("canonicalize", fp3,
-                                    self._read("canon"), time.time() - t0)
-                return self._read("canon")
-            out = self._run_stage(
-                "canonicalize", fp3,
-                lambda: canonicalize.canonical_map(self.spark, self.layer_map),
-                "canon", resume=resume)
-            tmp = cache.with_name(
-                f"{cache.name}.tmp-{os.getpid()}-{time.time_ns()}")
-            out.write.mode("overwrite").parquet(str(tmp))
-            try:
-                if cache.exists() and not (cache / "_SUCCESS").exists():
-                    # half-written husk (legacy non-atomic writer / crash):
-                    # rename it away so the fresh build can publish — a
-                    # rename, not an in-place delete, so a concurrent
-                    # reader of the husk (already wrong) can't see a
-                    # partially-deleted tree.  The exists/_SUCCESS check
-                    # is NOT atomic against a concurrent publication at
-                    # the same path, so re-check AFTER the rename: if the
-                    # grabbed dir turns out to hold _SUCCESS we raced a
-                    # concurrent publisher and stole a VALID cache — put
-                    # it back (or drop our copy if a third publisher
-                    # already refilled the slot; content is a pure
-                    # function of the fingerprint, so any published copy
-                    # is interchangeable).
-                    husk = cache.with_name(
-                        f"{cache.name}.husk-{os.getpid()}-{time.time_ns()}")
-                    try:
-                        cache.rename(husk)
-                    except OSError:
-                        pass  # lost a rename race; fall through to the
-                        # cache.exists() checks below
-                    else:
-                        if (husk / "_SUCCESS").exists():
-                            try:
-                                husk.rename(cache)
-                            except OSError:
-                                shutil.rmtree(str(husk),
-                                              ignore_errors=True)
-                        else:
-                            shutil.rmtree(str(husk), ignore_errors=True)
-                if cache.exists():
-                    # a concurrent run already published an identical cache
-                    # (content is a pure function of the fingerprint)
-                    shutil.rmtree(str(tmp), ignore_errors=True)
-                else:
-                    tmp.rename(cache)
-            except OSError:
-                shutil.rmtree(str(tmp), ignore_errors=True)
-            return out
+        """Stage 4: the catalog-derived canonical map."""
         return self._run_stage(
-            "canonicalize", fp3,
+            "canonicalize", self._fps()[3],
             lambda: canonicalize.canonical_map(self.spark, self.layer_map),
             "canon", resume=resume)
 
@@ -249,16 +154,24 @@ class Pipeline:
         return df.withColumn(
             "pbucket", F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
 
+    def _lang_filtered(self, pages: DataFrame) -> DataFrame:
+        return (pages.filter(F.col("lang") == self.lang)
+                if self.lang is not None else pages)
+
+    def _iceberg_writer(self, df: DataFrame, name: str,
+                        partition_by: list[str] | None):
+        w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
+        if partition_by == ["pbucket"]:
+            # the REAL bucket transform the parquet pbucket emulates
+            return w.partitionedBy(F.bucket(self.n_buckets, F.col("url")))
+        if partition_by:
+            return w.partitionedBy(*[F.col(c) for c in partition_by])
+        return w
+
     def _write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
                pre_partitioned: bool = False) -> None:
         if self.catalog:
-            w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
-            if partition_by == ["pbucket"]:
-                # the REAL bucket transform the parquet pbucket emulates
-                w = w.partitionedBy(F.bucket(self.n_buckets, F.col("url")))
-            elif partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
+            self._iceberg_writer(df, name, partition_by).createOrReplace()
             return
         if pre_partitioned:
             # the builder guarantees the plan is already
@@ -354,24 +267,25 @@ class Pipeline:
                     "the next resume will re-run that stage (idempotent) "
                     "and its per-stage wall is absent from metrics()")
 
-    def _run_link_stage(self, fp: str, build, resume: bool = True
-                        ) -> DataFrame:
+    def _run_link_stage(self, fp: str, stage2: DataFrame,
+                        resume: bool = True) -> DataFrame:
         """Link stage runner: writes the linked table and the residual
         side table as CONCURRENT jobs (the reference's thread-parallel
         driver, L7/E3, applied at the job level — Spark's FIFO scheduler
         interleaves their tasks).  The residual job is latency-dominated
         (narrow anti-join + small write), so overlapping it under the
         linked write removes a serial tail at higher parallelism while
-        costing nothing at one thread.  The shared ``links`` subplan is
-        persisted by the builder; a cache race at worst duplicates that
-        narrow compute.  The lineage row is recorded only after BOTH
-        writes commit, preserving resume atomicity."""
+        costing nothing at one thread.  Both read the persisted ``links``
+        subplan (a cache race at worst duplicates that narrow compute); it
+        is unpersisted once both writes are done.  The lineage row is
+        recorded only after BOTH writes commit, preserving resume
+        atomicity."""
         import threading
 
         if resume and self.log.is_complete("link", fp):
             return self._read("linked")
         t0 = time.time()
-        merged, residual = build()
+        merged, residual, links = self._link_plan(stage2)
         err: list[BaseException] = []
 
         def _res() -> None:
@@ -388,6 +302,7 @@ class Pipeline:
                         pre_partitioned=True)
         finally:
             th.join()
+            links.unpersist()
         if err:
             raise err[0]
         out = self._read("linked")
@@ -398,24 +313,47 @@ class Pipeline:
             "link", fp, out, wall))
         return out
 
-    def _fp3(self) -> str:
-        """Canonicalize-stage fingerprint — the SINGLE definition (it keys
-        both the lineage rows and the cross-run canon cache; a second
-        copy that drifted would silently desynchronize cache hits from
-        lineage skips).  CANON_ALGO_VERSION folds code changes into the
-        key that the catalog fingerprint cannot see."""
-        return fingerprint(self._catalog_fp, "canonicalize",
-                           canonicalize.CANON_ALGO_VERSION)
+    def _link_plan(self, stage2: DataFrame
+                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """The batch link plan: ``linking.link_stage`` over the mention
+        stage table repartitioned by url ONCE, with the BM25 globals
+        computed inline.  Returns the kernel's (merged, residual, links),
+        bucketed, with ``links`` persisted for the two concurrent writes.
 
-    def _fps(self) -> tuple[str, str, str, str, str]:
-        """The stage fingerprint chain (fp0..fp4) for the current config."""
+        The mention/residue/doc-length views are disjoint rec_type filters
+        over that one exchange (ReuseExchange collapses their subtrees
+        onto a single shuffle), and pbucket == the HashPartitioning
+        partition id (_bucketed), so both stage writes need no further
+        repartition.  Inline stats: df is catalog-bounded (its keys are
+        catalog entity names), so it broadcasts — which keeps the tf
+        stream's url partitioning intact — and its build subtree shares
+        the url exchange with the scored stream, so no extra pass over the
+        wide table and no aux-table write jobs.  The chunked path
+        (run_link_incremental) freezes them to parquet instead, where
+        cross-session exactness requires it."""
+        st = stage2.repartition(self.n_buckets, F.col("url"))
+        stats, df_ = bm25.bm25_global_stats(mention.mentions_view(st),
+                                            mention.doc_lengths_view(st))
+        merged, residual, links = linking.link_stage(
+            st, stats, df_, self.layer_map,
+            semantic=self.semantic, threshold=self.sim_threshold)
+        return (self._bucketed(merged), self._bucketed(residual),
+                links.persist())
+
+    def _fps(self, fused: bool | None = None
+             ) -> tuple[str, str, str, str, str]:
+        """The stage fingerprint chain (fp0..fp4) for the current config;
+        ``fused`` overrides ``fuse_extract`` for the mention stage."""
         fp0 = fingerprint(self._catalog_fp, self.lang, "extract")
-        if self.fuse_extract:
+        if self.fuse_extract if fused is None else fused:
             fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
         else:
             fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention")
         fp2 = fingerprint(fp1, self.semantic, self.sim_threshold, "link")
-        fp3 = self._fp3()
+        # canonicalize depends on the catalog only; CANON_ALGO_VERSION
+        # folds in the code changes the catalog fingerprint cannot see
+        fp3 = fingerprint(self._catalog_fp, "canonicalize",
+                          canonicalize.CANON_ALGO_VERSION)
         fp4 = fingerprint(fp2, fp3, "materialize")
         return fp0, fp1, fp2, fp3, fp4
 
@@ -432,13 +370,7 @@ class Pipeline:
                 # partitions the chunk touches — same exactly-once story
                 df.writeTo(tbl).overwritePartitions()
             else:
-                w = df.writeTo(tbl).using("iceberg")
-                if partition_col == "pbucket":
-                    w = w.partitionedBy(
-                        F.bucket(self.n_buckets, F.col("url")))
-                else:
-                    w = w.partitionedBy(partition_col)
-                w.create()
+                self._iceberg_writer(df, name, [partition_col]).create()
             return
         (df.repartition(self.n_buckets, F.col(partition_col))
          .write.mode("overwrite")
@@ -501,101 +433,27 @@ class Pipeline:
 
     def _run_body(self, pages: DataFrame, resume: bool,
                   canon_th, canon_box: dict) -> DataFrame:
-        fp0 = fingerprint(self._catalog_fp, self.lang, "extract")
+        fp0, fp1, fp2, _fp3, fp4 = self._fps()
         if self.fuse_extract:
-            fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
-            filtered = (pages.filter(F.col("lang") == self.lang)
-                        if self.lang is not None else pages)
             stage2 = self._run_stage(
                 "mention", fp1,
                 lambda: self._bucketed(mention.detect_mentions(
-                    filtered.select("url", "html"), self.layer_map,
-                    from_html=True)),
+                    self._lang_filtered(pages).select("url", "html"),
+                    self.layer_map, from_html=True)),
                 "mentions", resume=resume, record_async=True)
         else:
             docs = self._run_stage(
                 "extract", fp0,
                 lambda: self._bucketed(extract_docs(pages, self.lang)),
                 "docs", resume=resume)
-
-            fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention")
             stage2 = self._run_stage(
                 "mention", fp1,
                 lambda: self._bucketed(
                     mention.detect_mentions(docs.drop("pbucket"), self.layer_map)),
                 "mentions", resume=resume, record_async=True)
 
-        fp2 = fingerprint(fp1, self.semantic, self.sim_threshold, "link")
-
-        def build_linked() -> DataFrame:
-            # ONE url hash-partitioning for the whole stage: mentions and
-            # residues are each repartitioned by url once, and every
-            # downstream operation preserves it — BM25 tf (groupBy keys
-            # include url), the df/stats joins (broadcast against frozen
-            # catalog-bounded tables), the score join, the best-link
-            # aggregation + dedup (keys include url), the L6 merge join,
-            # and the residual anti-join all run EXCHANGE-FREE.  The
-            # scored/passthrough union happens at the very END (a union
-            # erases partitioning info, which round 2 measured as the
-            # partitioning-destroying step), and the stage write needs no
-            # repartition because pbucket == the partition id (_bucketed).
-            # The wide scored plan stays SINGLE-CONSUMER and un-persisted:
-            # the residual anti-join takes its keys from a narrow pre-BM25
-            # projection; dl comes free from the mention stage's 'doc'
-            # rows — no text re-scan.
-            # ONE physical exchange for all three stage-table views
-            # (round 7, the r6 verdict's "share one exchange" item,
-            # measured +0.9 s): the views are disjoint rec_type filters
-            # over the same table, so repartitioning the TABLE once and
-            # filtering above it lets ReuseExchange collapse the
-            # mention/residue/doc-length subtrees onto a single shuffle
-            # (two scans + two exchanges before), and doc lengths come
-            # out url-co-partitioned for the score join as a bonus.
-            # Filters preserve the HashPartitioning(url), so every
-            # downstream exchange-free invariant (and the
-            # pre_partitioned write) holds unchanged.  A/B at sf1.0
-            # pages: link-compute noop 4.3/3.9 -> 3.0/3.1 s.
-            st = stage2.repartition(self.n_buckets, F.col("url"))
-            m = mention.mentions_view(st)
-            r = mention.residue_view(st)
-            dls = mention.doc_lengths_view(st)
-
-            # BM25 globals inline: df is catalog-bounded (its keys are
-            # catalog entity names), so it broadcasts — which keeps the
-            # tf stream's url partitioning intact — and its build subtree
-            # shares the url-repartition exchange with the main scored
-            # stream (ReuseExchange), so no extra pass over the wide
-            # table and no aux-table write jobs.  The chunked-incremental
-            # path (run_link_incremental) still freezes these to parquet,
-            # where cross-session exactness requires it.
-            stats, df_ = bm25.bm25_global_stats(m, dls)
-            scored, passthrough = bm25.add_bm25_frozen_split(
-                m, dls, stats, df_)
-
-            links = linking.build_links(
-                r, self.layer_map,
-                semantic=self.semantic, threshold=self.sim_threshold).persist()
-            keys = (m.select(
-                "url", "category",
-                F.lower(F.coalesce("original_id", F.lit(""))).alias("oid_l"))
-                .distinct())
-            # invariant check for the passthrough shortcut: every linkable
-            # label must be BM25-scored (true for the BRON-shaped catalog:
-            # links exclude the cpe family and cve is regex-only).
-            from ..config import BM25_LABELS
-            from ..operators.linking import LINKED_LABELS_EXCLUDE
-            may_link = bool(
-                (set(self.layer_map) - LINKED_LABELS_EXCLUDE)
-                - set(BM25_LABELS))
-            merged_s, merged_p, residual = linking.merge_links_split(
-                scored, passthrough, links, mention_keys=keys,
-                passthrough_may_link=may_link)
-            merged = self._bucketed(merged_s).unionByName(
-                self._bucketed(merged_p))
-            return merged, self._bucketed(residual)
-
         try:
-            linked = self._run_link_stage(fp2, build_linked, resume=resume)
+            linked = self._run_link_stage(fp2, stage2, resume=resume)
         finally:
             # join before materialize (and on a link failure, before the
             # exception propagates); a mention-stage failure lets the
@@ -605,12 +463,10 @@ class Pipeline:
             canon_th.join()
         residual = self._read("links_residual")
 
-        fp3 = self._fp3()
         if "err" in canon_box:
             raise canon_box["err"]  # noqa: B904 — original stage error
         canon = canon_box["df"]
 
-        fp4 = fingerprint(fp2, fp3, "materialize")
         triples = self._run_stage(
             "materialize", fp4,
             lambda: materialize.materialize_triples(
@@ -624,75 +480,6 @@ class Pipeline:
         return self._read("triples")
 
     # -- per-partition incremental execution --------------------------------
-    def run_mention_incremental(self, pages: DataFrame,
-                                n_chunks: int = 4,
-                                max_chunks: int | None = None) -> bool:
-        """Execute the (fused) mention stage in bucket-group chunks with a
-        per-bucket lineage checkpoint after each chunk — the north-star
-        resume mechanism: kill the job between chunks and a re-run
-        anti-joins the completed buckets out of the input and appends only
-        the missing ones.  Idempotence: a chunk's parquet files become
-        visible only at job commit, so a mid-chunk kill leaves no partial
-        rows.
-
-        ``max_chunks`` processes at most that many chunks (test hook to
-        simulate interruption).  Returns True when the stage is complete
-        (summary lineage row written).
-        """
-        fp0 = fingerprint(self._catalog_fp, self.lang, "extract")
-        fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
-        if self.log.is_complete("mention", fp1):
-            return True
-
-        filtered = (pages.filter(F.col("lang") == self.lang)
-                    if self.lang is not None else pages)
-        filtered = filtered.withColumn(
-            "pbucket",
-            F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
-
-        done = self.log.completed_buckets("mention", fp1)
-        all_buckets = list(range(self.n_buckets))
-        pending = [b for b in all_buckets if b not in done]
-        chunk_size = max(1, (len(all_buckets) + n_chunks - 1) // n_chunks)
-        chunks = [pending[i:i + chunk_size]
-                  for i in range(0, len(pending), chunk_size)]
-
-        processed = 0
-        for chunk in chunks:
-            if max_chunks is not None and processed >= max_chunks:
-                return False
-            t0 = time.time()
-            part = filtered.filter(F.col("pbucket").isin(chunk))
-            out = mention.detect_mentions(
-                part.select("url", "html"), self.layer_map, from_html=True)
-            out = self._bucketed(out)
-            if self.catalog:
-                tbl = f"{self.catalog}.mentions"
-                if self.spark.catalog.tableExists(tbl):
-                    out.writeTo(tbl).append()
-                else:
-                    (out.writeTo(tbl).using("iceberg")
-                     .partitionedBy(F.bucket(self.n_buckets, F.col("url")))
-                     .create())
-            else:
-                (out.repartition(*[F.col("pbucket")])
-                 .write.mode("append").partitionBy("pbucket")
-                 .parquet(self._path("mentions")))
-            written = self._read("mentions").filter(
-                F.col("pbucket").isin(chunk))
-            counts = {r["pbucket"]: r["n"] for r in
-                      written.groupBy("pbucket")
-                      .agg(F.count("*").alias("n")).collect()}
-            # buckets with zero rows still checkpoint
-            for b in chunk:
-                counts.setdefault(b, 0)
-            self.log.record_buckets("mention", fp1, counts, time.time() - t0)
-            processed += 1
-
-        total = self._read("mentions").count()
-        self.log.record_summary("mention", fp1, total, 0.0)
-        return True
-
     def _pending_chunks(self, stage: str, fp: str, n_chunks: int
                         ) -> list[list[int]]:
         done = self.log.completed_buckets(stage, fp)
@@ -700,19 +487,80 @@ class Pipeline:
         size = max(1, (self.n_buckets + n_chunks - 1) // n_chunks)
         return [pending[i:i + size] for i in range(0, len(pending), size)]
 
+    def _run_chunks(self, stage: str, fp: str, n_chunks: int,
+                    max_chunks: int | None, build, result: str,
+                    partition_col: str = "pbucket", finish=None) -> bool:
+        """The chunk loop of the ``run_*_incremental`` stages.  For each
+        chunk of pending pbuckets, ``build(chunk)`` returns ``({table: df},
+        cached)``; each table is written with ``_write_buckets`` and
+        ``cached`` (a persisted DataFrame, or None) is unpersisted.  The
+        chunk's per-bucket lineage is appended only after its writes
+        commit, so a kill in between re-runs the chunk on resume, which
+        rewrites the same partitions.  Row counts come from the first
+        table.  After the last chunk, ``finish()`` (if given) runs and the
+        stage summary row records the ``result`` table's row count.
+        ``max_chunks`` processes at most that many chunks (test hook to
+        simulate interruption).  Returns True when the stage is done."""
+        for i, chunk in enumerate(self._pending_chunks(stage, fp, n_chunks)):
+            if max_chunks is not None and i >= max_chunks:
+                return False
+            t0 = time.time()
+            tables, cached = build(chunk)
+            try:
+                for name, df in tables.items():
+                    self._write_buckets(df, name, partition_col)
+            finally:
+                if cached is not None:
+                    cached.unpersist()
+            written = self._read(next(iter(tables)))
+            if partition_col == "pbucket":
+                counts = dict.fromkeys(chunk, 0)
+                counts.update(
+                    (r["pbucket"], r["n"]) for r in
+                    written.filter(F.col("pbucket").isin(chunk))
+                    .groupBy("pbucket").agg(F.count("*").alias("n"))
+                    .collect())
+            else:
+                counts = dict.fromkeys(chunk, written.filter(
+                    F.col(partition_col) == min(chunk)).count())
+            self.log.record_buckets(stage, fp, counts, time.time() - t0)
+        if finish is not None:
+            finish()
+        self.log.record_summary(stage, fp, self._read(result).count(), 0.0)
+        return True
+
+    def run_mention_incremental(self, pages: DataFrame,
+                                n_chunks: int = 4,
+                                max_chunks: int | None = None) -> bool:
+        """Execute the (fused) mention stage in bucket-group chunks with a
+        per-bucket lineage checkpoint after each chunk — the north-star
+        resume mechanism: kill the job between chunks and a re-run
+        processes only the buckets without a lineage row (_run_chunks).
+        Returns True when the stage is complete (summary lineage row
+        written)."""
+        fp1 = self._fps(fused=True)[1]
+        if self.log.is_complete("mention", fp1):
+            return True
+        filtered = self._bucketed(self._lang_filtered(pages))
+
+        def build(chunk):
+            part = filtered.filter(F.col("pbucket").isin(chunk))
+            return {"mentions": self._bucketed(mention.detect_mentions(
+                part.select("url", "html"), self.layer_map,
+                from_html=True))}, None
+
+        return self._run_chunks("mention", fp1, n_chunks, max_chunks, build,
+                                "mentions")
+
     def run_link_incremental(self, n_chunks: int = 4,
                              max_chunks: int | None = None) -> bool:
-        """Bucket-chunked link stage with per-bucket lineage resume.
-
-        The link stage consumes corpus-GLOBAL BM25 statistics (m, avgdl,
-        df) — naive per-chunk scoring would compute wrong idf — so the
-        globals are materialized ONCE from the complete mention table
-        (link_aux_stats/link_aux_df, guarded by a lineage row) and every
-        chunk scores against the frozen tables.  Everything else in the
-        stage (tf, dl, link generation, L6 merge, residuals) is url-local,
-        so chunking by url-bucket is exact.  Chunk writes use dynamic
-        partition overwrite: a retry rewrites its partitions idempotently.
-        """
+        """Bucket-chunked link stage with per-bucket lineage resume: one
+        ``linking.link_stage`` call per chunk.  The kernel needs
+        corpus-GLOBAL BM25 statistics, so they are materialized ONCE from
+        the complete mention table (link_aux_stats/link_aux_df, guarded
+        by a lineage row) and every chunk scores against the frozen
+        tables; everything else in the stage is url-local, so chunking by
+        url-bucket is exact."""
         _fp0, _fp1, fp2, _fp3, _fp4 = self._fps()
         if self.log.is_complete("link", fp2):
             return True
@@ -729,39 +577,18 @@ class Pipeline:
         stats = self._read("link_aux_stats")
         df_ = self._read("link_aux_df")
 
-        processed = 0
-        for chunk in self._pending_chunks("link", fp2, n_chunks):
-            if max_chunks is not None and processed >= max_chunks:
-                return False
-            t0 = time.time()
-            part = stage2.filter(F.col("pbucket").isin(chunk))
-            part_mentions = mention.mentions_view(part)
-            scored = bm25.add_bm25_frozen(
-                part_mentions,
-                mention.doc_lengths_view(part), stats, df_)
-            links = linking.build_links(
-                mention.residue_view(part), self.layer_map,
-                semantic=self.semantic, threshold=self.sim_threshold)
-            keys = (part_mentions.select(
-                "url", "category",
-                F.lower(F.coalesce("original_id", F.lit(""))).alias("oid_l"))
-                .distinct())
-            merged, residual = linking.merge_links(scored, links,
-                                                   mention_keys=keys)
-            self._write_buckets(merged, "linked")
-            self._write_buckets(self._bucketed(residual), "links_residual")
-            counts = {r["pbucket"]: r["n"] for r in
-                      self._read("linked").filter(F.col("pbucket").isin(chunk))
-                      .groupBy("pbucket").agg(F.count("*").alias("n"))
-                      .collect()}
-            for b in chunk:
-                counts.setdefault(b, 0)
-            self.log.record_buckets("link", fp2, counts, time.time() - t0)
-            processed += 1
+        def build(chunk):
+            merged, residual, links = linking.link_stage(
+                stage2.filter(F.col("pbucket").isin(chunk)), stats, df_,
+                self.layer_map, semantic=self.semantic,
+                threshold=self.sim_threshold)
+            tables = {"linked": self._bucketed(merged),
+                      "links_residual": self._bucketed(residual)}
+            # persisted: the two tables are written by separate jobs
+            return tables, links.persist()
 
-        self.log.record_summary("link", fp2,
-                                self._read("linked").count(), 0.0)
-        return True
+        return self._run_chunks("link", fp2, n_chunks, max_chunks, build,
+                                "linked")
 
     def run_materialize_incremental(self, n_chunks: int = 4,
                                     max_chunks: int | None = None) -> bool:
@@ -771,36 +598,27 @@ class Pipeline:
         mergeable because chunks partition the corpus by url), and the
         final merge reduces the partials into the triples table.  Identical
         output to single-shot materialize_triples (tested)."""
-        _fp0, _fp1, fp2, fp3, fp4 = self._fps()
+        _fp0, _fp1, _fp2, _fp3, fp4 = self._fps()
         if self.log.is_complete("materialize", fp4):
             return True
         linked = self._read("linked")
         residual = self._read("links_residual")
         canon = self._canon_stage(resume=True)
 
-        processed = 0
-        for chunk in self._pending_chunks("materialize", fp4, n_chunks):
-            if max_chunks is not None and processed >= max_chunks:
-                return False
-            t0 = time.time()
+        def build(chunk):
             ev = materialize.evidence_rows(
                 linked.filter(F.col("pbucket").isin(chunk)),
                 residual.filter(F.col("pbucket").isin(chunk)),
                 canon)
             part = (materialize.partial_triples(ev, partitions=self.n_buckets)
                     .withColumn("chunk_key", F.lit(min(chunk))))
-            self._write_buckets(part, "triples_partial",
-                                partition_col="chunk_key")
-            n_part = self._read("triples_partial").filter(
-                F.col("chunk_key") == min(chunk)).count()
-            self.log.record_buckets(
-                "materialize", fp4, {b: n_part for b in chunk},
-                time.time() - t0)
-            processed += 1
+            return {"triples_partial": part}, None
 
-        triples = materialize.merge_partial_triples(
-            self._read("triples_partial").drop("chunk_key"))
-        self._write(triples, "triples", partition_by=["pred"])
-        self.log.record_summary("materialize", fp4,
-                                self._read("triples").count(), 0.0)
-        return True
+        def merge() -> None:
+            self._write(materialize.merge_partial_triples(
+                self._read("triples_partial").drop("chunk_key")),
+                "triples", partition_by=["pred"])
+
+        return self._run_chunks("materialize", fp4, n_chunks, max_chunks,
+                                build, "triples", partition_col="chunk_key",
+                                finish=merge)

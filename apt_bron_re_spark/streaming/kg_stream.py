@@ -18,10 +18,11 @@ execution shapes, both reusing the batch operators:
    partition instead of appending duplicates — the same exactly-once
    mechanism as plans/pipeline.py ``_write_buckets``.
 
-   The BM25 globals (m, avgdl, df) must be frozen from a corpus snapshot
-   — the same rule the batch incremental link stage follows
-   (plans/pipeline.py run_link_incremental): naive per-batch stats would
-   compute wrong idf.
+   The link stage is the batch kernel, ``linking.link_stage``, called once
+   per micro-batch.  Its BM25 globals (m, avgdl, df) must be frozen from a
+   corpus snapshot and passed in — the kernel's contract, shared with the
+   chunked batch link stage: naive per-batch stats would compute wrong
+   idf.
 
 2. **Live triple view** (``stream_evidence_pairs`` + ``stream_triples_live``):
    a fully streaming stateful rollup.  Per-document evidence pairing runs
@@ -32,7 +33,7 @@ execution shapes, both reusing the batch operators:
    smallest source urls, the best-scored justification, and the max score
    — the same merge algebra as the batch salted aggregation, so on a
    url-disjoint stream the final emitted row per key equals the batch
-   ``materialize_triples(evidence(merged, residual, canon))`` row exactly
+   ``materialize_triples(evidence_rows(merged, residual, canon))`` row exactly
    (pytest-pinned).  With ``link=True`` the L2-L5 link pass (variant +
    semantic against the FROZEN catalog — neither needs corpus statistics)
    also runs row-locally inside the same UDF, mirroring the batch
@@ -69,7 +70,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..catalog.build import compile_catalog
 from ..config import PREDICATE_MAP
 from ..functions.extract_text import extract_text
-from ..operators import bm25, linking, materialize, mention
+from ..operators import linking, materialize, mention
 from ..operators.canonicalize import canonical_map
 from ..operators.doc_core import NerTagger, process_document
 
@@ -133,41 +134,29 @@ def _doc_pairs(results: dict, canon_map: dict,
     tie-break order (pair_score, has_sentence, url[=const here],
     subj_label) — associative with the cross-url aggregation in
     ``stream_triples_live``, so the global result is unchanged."""
+    def evidence():
+        for label, entries in results.items():
+            for ent in entries:
+                # explicit None check == F.coalesce(original_id, value): an
+                # empty-string original_id must NOT fall through to value
+                entity_id = ent.get("original_id")
+                if entity_id is None:
+                    entity_id = ent.get("value")
+                yield (label, entity_id, ent.get("NER_score"),
+                       ent.get("sentence"))
+        # residual-link evidence (label, original_id, score) — sentence-free,
+        # exactly like the batch residual_links branch of evidence_rows
+        for label, entity_id, score in residual_links or ():
+            yield label, entity_id, score, None
+
     # evidence: best (score, sentence) per (label, canon_id)
     ev: dict[tuple[str, str], tuple[float, str | None]] = {}
-    for label, entries in results.items():
-        for ent in entries:
-            # explicit None check == F.coalesce(original_id, value): an
-            # empty-string original_id must NOT fall through to value
-            entity_id = ent.get("original_id")
-            if entity_id is None:
-                entity_id = ent.get("value")
-            score = float(ent.get("NER_score", 0.0) or 0.0)
-            sentence = ent.get("sentence")
-            canon_id = canon_map.get((label, entity_id), entity_id)
-            key = (label, canon_id)
-            cur = ev.get(key)
-            if cur is None:
-                ev[key] = (score, sentence)
-            else:
-                best_sent = max((_sent_key(*cur), cur),
-                                (_sent_key(score, sentence),
-                                 (score, sentence)))[1][1]
-                ev[key] = (max(cur[0], score), best_sent)
-
-    # residual-link evidence (label, original_id, score) — sentence-free,
-    # exactly like the batch residual_links branch of evidence_rows
-    for (label, entity_id, score) in (residual_links or ()):
-        canon_id = canon_map.get((label, entity_id), entity_id)
-        key = (label, canon_id)
+    for label, entity_id, score, sentence in evidence():
+        row = (float(score or 0.0), sentence)
+        key = (label, canon_map.get((label, entity_id), entity_id))
         cur = ev.get(key)
-        if cur is None:
-            ev[key] = (float(score or 0.0), None)
-        else:
-            best_sent = max((_sent_key(*cur), cur),
-                            (_sent_key(float(score or 0.0), None),
-                             (float(score or 0.0), None)))[1][1]
-            ev[key] = (max(cur[0], float(score or 0.0)), best_sent)
+        ev[key] = row if cur is None else (
+            max(cur[0], row[0]), max(cur, row, key=lambda c: _sent_key(*c))[1])
 
     by_label: dict[str, list[tuple[str, float, str | None]]] = {}
     for (label, canon_id), (score, sentence) in ev.items():
@@ -408,10 +397,11 @@ def kg_batch_step(pages_batch: DataFrame, batch_id: int,
                   semantic: bool = True,
                   threshold: float | None = None,
                   lang: str = "en") -> None:
-    """One exact micro-batch of stages 2-5: mention -> frozen-stats BM25 ->
-    link -> evidence -> PARTIAL triple aggregate, appended under
-    ``batch_id=<id>`` with dynamic partition overwrite (replaying the same
-    batch_id rewrites its partition — exactly-once)."""
+    """One exact micro-batch of stages 2-5: mention -> ``link_stage``
+    against the frozen BM25 globals -> evidence -> PARTIAL triple
+    aggregate, appended under ``batch_id=<id>`` with dynamic partition
+    overwrite (replaying the same batch_id rewrites its partition —
+    exactly-once)."""
     from ..config import SIM_THRESHOLD
     threshold = SIM_THRESHOLD if threshold is None else threshold
 
@@ -419,18 +409,10 @@ def kg_batch_step(pages_batch: DataFrame, batch_id: int,
                 if lang is not None else pages_batch)
     stage2 = mention.detect_mentions(
         filtered.select("url", "html"), layer_map, from_html=True).persist()
-    batch_mentions = mention.mentions_view(stage2)
-    scored = bm25.add_bm25_frozen(
-        batch_mentions,
-        mention.doc_lengths_view(stage2), stats, df_table)
-    links = linking.build_links(
-        mention.residue_view(stage2), layer_map,
+    # links is NOT persisted: the one partial write below consumes it
+    merged, residual, _links = linking.link_stage(
+        stage2, stats, df_table, layer_map,
         semantic=semantic, threshold=threshold)
-    keys = (batch_mentions.select(
-        "url", "category",
-        F.lower(F.coalesce("original_id", F.lit(""))).alias("oid_l"))
-        .distinct())
-    merged, residual = linking.merge_links(scored, links, mention_keys=keys)
     ev = materialize.evidence_rows(merged, residual, canon)
     part = (materialize.partial_triples(ev)
             .withColumn("batch_id", F.lit(int(batch_id))))

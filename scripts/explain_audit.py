@@ -37,7 +37,6 @@ def plan_of(df) -> str:
 def main() -> None:
     import os
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    from pyspark.sql import functions as F
 
     from apt_bron_re_spark.catalog.synthetic import build_layer_map
     from apt_bron_re_spark.operators import bm25 as bm25_mod
@@ -264,30 +263,19 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from apt_bron_re_spark.operators import bm25 as _bm25
-    from apt_bron_re_spark.operators import linking as _linking
     from apt_bron_re_spark.operators import materialize as _mat
-    from apt_bron_re_spark.operators import mention as _mention
     from apt_bron_re_spark.plans.pipeline import Pipeline as _Pipeline
 
     td = tempfile.mkdtemp(prefix="_audit_stage_")
     lm = build_layer_map()
     pipe = _Pipeline(spark, lm, td, n_buckets=8, fuse_extract=True)
     pipe.run(pages_df(spark, 80), resume=False)
-    stage2 = spark.read.parquet(f"{td}/mentions")
-    m = _mention.mentions_view(stage2).repartition(8, F.col("url"))
-    r = _mention.residue_view(stage2).repartition(8, F.col("url"))
-    dls = _mention.doc_lengths_view(stage2)
-    _stats_a, _df_a = _bm25.bm25_global_stats(m, dls)
-    scored, passthrough = _bm25.add_bm25_frozen_split(
-        m, dls, _stats_a, _df_a)
-    links = _linking.build_links(r, lm)
-    keys = m.select("url", "category", F.lower(
-        F.coalesce("original_id", F.lit(""))).alias("oid_l")).distinct()
-    ms_, mp_, _res = _linking.merge_links_split(
-        scored, passthrough, links, keys)
-    merged = pipe._bucketed(ms_).unionByName(pipe._bucketed(mp_))
+    # the batch link plan exactly as Pipeline.run builds it (one
+    # linking.link_stage call over the url-repartitioned stage table)
+    merged, _residual, links = pipe._link_plan(
+        spark.read.parquet(f"{td}/mentions"))
     p = plan_of(merged)
+    links.unpersist()
     # a regression of subset co-partition reuse re-shuffles the score /
     # merge joins onto their FULL key sets — an exchange keyed on both
     # category and url.  (An exchange keyed on category alone is fine:

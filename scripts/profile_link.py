@@ -53,8 +53,7 @@ pp = os.path.join(base, "pages")
 pages_df(spark, {n_pages}, partitions=32).write.mode("overwrite").parquet(pp)
 pages = spark.read.parquet(pp)
 pipe = Pipeline(spark, build_layer_map(), os.path.join(base, "st"),
-                n_buckets=32, fuse_extract=True,
-                canon_cache_dir=os.path.join(base, "canon_cache"))
+                n_buckets=32, fuse_extract=True)
 pipe._canon_stage()
 t0 = time.time()
 pipe.run(pages)

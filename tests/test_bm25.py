@@ -3,7 +3,11 @@ statistics.py:69-71, k1=1.5, b=0.75)."""
 
 import math
 
-from apt_bron_re_spark.operators.bm25 import add_bm25, doc_lengths
+from apt_bron_re_spark.operators.bm25 import (
+    add_bm25_frozen,
+    bm25_global_stats,
+    doc_lengths,
+)
 
 MENTION_DDL = (
     "url string, category string, name string, original_id string, "
@@ -42,7 +46,9 @@ def test_bm25_hand_computed(spark):
         _mention("u2", "group", "Alpha", "G1", 0),
         _mention("u1", "cve", None, None, 3),         # unscored label
     ], MENTION_DDL)
-    out = add_bm25(mentions, docs)
+    dls = doc_lengths(docs)
+    stats, df_ = bm25_global_stats(mentions, dls)
+    out = add_bm25_frozen(mentions, dls, stats, df_)
     rows = out.collect()
     m, avgdl = 2, 2.5
 

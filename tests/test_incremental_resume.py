@@ -105,3 +105,40 @@ def test_link_and_materialize_interrupt_resume(spark, layer_map,
     lin_rows = pb.log.metrics().count()
     pb.run(pages, resume=True)
     assert pb.log.metrics().count() == lin_rows
+
+
+def _triples_of(df):
+    return {(r.subj, r.pred, r.obj):
+            (tuple(sorted(r.sources)), r.n_sources, r.justification, r.score)
+            for r in df.collect()}
+
+
+def test_mention_chunk_rerun_after_commit_is_exactly_once(spark, layer_map,
+                                                          tmp_path_factory):
+    """A kill after a chunk's data commit but BEFORE its lineage append
+    makes the resume run that chunk again.  The rerun must replace the
+    chunk's partitions, not append a second copy of its rows."""
+    pages = pages_df(spark, 120)
+
+    base_a = tmp_path_factory.mktemp("once_a")
+    pa = Pipeline(spark, layer_map, base_a, n_buckets=8, fuse_extract=True)
+    want = _triples_of(pa.run(pages))
+    want_rows = spark.read.parquet(str(base_a / "mentions"))
+
+    base_b = tmp_path_factory.mktemp("once_b")
+    pb = Pipeline(spark, layer_map, base_b, n_buckets=8, fuse_extract=True)
+    record = pb.log.record_buckets
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the lineage append")
+
+    pb.log.record_buckets = killed
+    with pytest.raises(RuntimeError, match="killed"):
+        pb.run_mention_incremental(pages, n_chunks=2)
+    pb.log.record_buckets = record
+    assert pb.run_mention_incremental(pages, n_chunks=2) is True
+
+    got_rows = spark.read.parquet(str(base_b / "mentions"))
+    assert got_rows.count() == want_rows.count()
+    assert rows_of(got_rows) == rows_of(want_rows)
+    assert _triples_of(pb.run(pages, resume=True)) == want

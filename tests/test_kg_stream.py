@@ -5,7 +5,7 @@ Two parity pins over the same multi-trigger stream of synthetic pages:
 * the foreachBatch micro-batch pipeline (stages 2-5, frozen BM25 globals,
   merge-on-append partials) == single-shot batch pipeline, EXACTLY;
 * the live applyInPandasWithState triple view == batch
-  materialize_triples(evidence(mentions, None, canon)), EXACTLY.
+  materialize_triples(evidence_rows(mentions, None, canon)), EXACTLY.
 
 Plus an exactly-once check: replaying a micro-batch with the same
 batch_id leaves the merged result unchanged.
@@ -55,6 +55,27 @@ def canon_df(spark, layer_map):
     return df
 
 
+@pytest.fixture(scope="module")
+def frozen_stats(batch_stage2):
+    """BM25 globals frozen from the full corpus snapshot (the production
+    rule: freeze once, score every increment against the frozen tables)."""
+    stats, df_ = bm25.bm25_global_stats(
+        mention.mentions_view(batch_stage2),
+        mention.doc_lengths_view(batch_stage2))
+    stats.persist().count()
+    df_.persist().count()
+    return stats, df_
+
+
+@pytest.fixture(scope="module")
+def batch_linked(layer_map, batch_stage2, frozen_stats):
+    """Batch truth for the link stage: the kernel over the whole corpus."""
+    merged, residual, links = linking.link_stage(
+        batch_stage2, *frozen_stats, layer_map)
+    yield merged, residual
+    links.unpersist()
+
+
 def _stream_pages(spark, path):
     from apt_bron_re_spark.streaming.mention_stream import PAGE_DDL
     return (spark.readStream.schema(PAGE_DDL).format("parquet")
@@ -69,23 +90,11 @@ def _canon_rows(df):
 
 
 def test_foreachbatch_pipeline_equals_batch(spark, layer_map, pages_path,
-                                            batch_stage2, canon_df,
-                                            tmp_path_factory):
-    # frozen globals from the full corpus snapshot (the production rule:
-    # freeze once, score every increment against the frozen tables)
-    stats, df_ = bm25.bm25_global_stats(
-        mention.mentions_view(batch_stage2),
-        mention.doc_lengths_view(batch_stage2))
-    stats.persist().count()
-    df_.persist().count()
-
-    # batch truth: the real (unfrozen) stage 3-5 composition
-    scored = bm25.add_bm25(mention.mentions_view(batch_stage2),
-                           dls=mention.doc_lengths_view(batch_stage2))
-    links = linking.build_links(mention.residue_view(batch_stage2), layer_map)
-    merged, residual = linking.merge_links(scored, links)
+                                            frozen_stats, batch_linked,
+                                            canon_df, tmp_path_factory):
+    stats, df_ = frozen_stats
     want = materialize.materialize_triples(
-        materialize.evidence(merged, residual, canon_df))
+        materialize.evidence_rows(*batch_linked, canon_df))
 
     out = str(tmp_path_factory.mktemp("kg_stream_out"))
     ckpt = str(tmp_path_factory.mktemp("kg_stream_ckpt"))
@@ -103,14 +112,12 @@ def test_foreachbatch_pipeline_equals_batch(spark, layer_map, pages_path,
 
 
 def test_batch_step_replay_is_idempotent(spark, layer_map, pages_path,
-                                         batch_stage2, canon_df,
+                                         frozen_stats, canon_df,
                                          tmp_path_factory):
     """foreachBatch replay semantics: running the SAME micro-batch with the
     same batch_id twice rewrites its partition (dynamic partition
     overwrite) instead of appending duplicates."""
-    stats, df_ = bm25.bm25_global_stats(
-        mention.mentions_view(batch_stage2),
-        mention.doc_lengths_view(batch_stage2))
+    stats, df_ = frozen_stats
     out = str(tmp_path_factory.mktemp("kg_replay_out"))
     micro = spark.read.parquet(pages_path).filter(
         F.pmod(F.crc32("url"), F.lit(2)) == 0)
@@ -129,7 +136,7 @@ def test_live_view_equals_batch_mention_triples(spark, layer_map,
                                                 canon_df,
                                                 tmp_path_factory):
     """Live view WITHOUT linking == batch triples over mentions only."""
-    want = materialize.materialize_triples(materialize.evidence(
+    want = materialize.materialize_triples(materialize.evidence_rows(
         mention.mentions_view(batch_stage2), None, canon_df))
 
     canon_map_d = canon_as_dict(spark, layer_map)
@@ -174,18 +181,15 @@ def _drain_live(spark, live, ckpt, name):
 
 
 def test_live_view_with_links_equals_batch_linked_triples(
-        spark, layer_map, pages_path, batch_stage2, canon_df,
+        spark, layer_map, pages_path, batch_stage2, batch_linked, canon_df,
         tmp_path_factory):
     """Live view WITH the row-local L2-L5 link pass == batch triples over
     merged mentions + residual links — on a corpus where the links really
     change the triple set (asserted), the round-3 residual-link parity."""
-    links = linking.build_links(
-        mention.residue_view(batch_stage2), layer_map)
-    merged, residual = linking.merge_links(
-        mention.mentions_view(batch_stage2), links)
+    merged, residual = batch_linked
     want = materialize.materialize_triples(
-        materialize.evidence(merged, residual, canon_df))
-    base = materialize.materialize_triples(materialize.evidence(
+        materialize.evidence_rows(merged, residual, canon_df))
+    base = materialize.materialize_triples(materialize.evidence_rows(
         mention.mentions_view(batch_stage2), None, canon_df))
     # the corpus must exercise the link pass, else this test proves nothing
     assert _canon_rows(want) != _canon_rows(base)
@@ -224,7 +228,7 @@ def test_live_view_replay_guard(spark, layer_map, pages_path, canon_df,
     final = _drain_live(spark, live, str(tmp_path_factory.mktemp(
         "live_dup_ckpt")), "live_triples_dup")
 
-    want = materialize.materialize_triples(materialize.evidence(
+    want = materialize.materialize_triples(materialize.evidence_rows(
         mention.detect_mentions(
             pages.filter(F.col("lang") == "en").select("url", "html"),
             layer_map, from_html=True)

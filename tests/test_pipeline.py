@@ -138,80 +138,20 @@ def test_layout_marker_fails_fast_on_mismatch(spark, layer_map,
         Pipeline(spark, layer_map, base, n_buckets=8)
 
 
-def test_canon_cache_honors_resume_false(spark, layer_map,
-                                         tmp_path_factory):
-    """resume=False rebuilds the canonical map even when a canon cache
-    exists (round-4 advice: the full-recompute path previously
-    short-circuited to the cached parquet).  An already-PUBLISHED cache
-    (_SUCCESS present) is KEPT, not republished — content is a pure
-    function of the fingerprint (round-5 advice: docstring/test comment
-    used to claim republication)."""
-    cache_root = tmp_path_factory.mktemp("canon_cache")
-    base = tmp_path_factory.mktemp("canon_base")
-    pipe = Pipeline(spark, layer_map, base, n_buckets=8,
-                    canon_cache_dir=cache_root)
-    want = {(r.label, r.original_id, r.canon_id)
-            for r in pipe._canon_stage().collect()}
+def test_runs_release_their_cache(spark, layer_map, tmp_path_factory):
+    """Everything a run persists (the link stage's shared ``links``
+    subplan) is unpersisted once its writes commit: repeated runs in one
+    session must not pile up cached data."""
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    # poison the published cache: a stale/corrupt entry under the same
-    # fingerprint (simulates a concurrent half-state or operator edit)
-    import glob
-    cache_dir = glob.glob(str(cache_root / "canon_*"))[0]
-    spark.createDataFrame(
-        [("group", "BOGUS", "BOGUS")],
-        "label string, original_id string, canon_id string"
-    ).coalesce(1).write.mode("overwrite").parquet(cache_dir)
-    poisoned = {(r.label, r.original_id, r.canon_id)
-                for r in spark.read.parquet(cache_dir).collect()}
-    assert poisoned != want
-
-    pipe2 = Pipeline(spark, layer_map, tmp_path_factory.mktemp("canon_b2"),
-                     n_buckets=8, canon_cache_dir=cache_root)
-    got = {(r.label, r.original_id, r.canon_id)
-           for r in pipe2._canon_stage(resume=False).collect()}
-    assert got == want
-    # resume=True on a fresh pipeline still uses the (re-valid) cache fast
-    # path; the poisoned cache was NOT republished over (cache existed),
-    # so the fast path is only safe after an explicit rebuild republishes
-    # it — delete + rebuild republishes atomically
-    import shutil
-    shutil.rmtree(cache_dir)
-    pipe3 = Pipeline(spark, layer_map, tmp_path_factory.mktemp("canon_b3"),
-                     n_buckets=8, canon_cache_dir=cache_root)
-    pipe3._canon_stage(resume=False)
-    republished = {(r.label, r.original_id, r.canon_id)
-                   for r in spark.read.parquet(cache_dir).collect()}
-    assert republished == want
-
-
-def test_canon_cache_husk_replaced(spark, layer_map, tmp_path_factory):
-    """A cache dir WITHOUT _SUCCESS (half-written by a legacy non-atomic
-    writer or a crashed copy) is treated as absent: the rebuild replaces
-    it instead of being permanently blocked (round-5 advice)."""
-    import glob
-    import json as _json
-
-    cache_root = tmp_path_factory.mktemp("canon_cache_husk")
-    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("husk_b1"),
-                    n_buckets=8, canon_cache_dir=cache_root)
-    want = {(r.label, r.original_id, r.canon_id)
-            for r in pipe._canon_stage().collect()}
-    cache_dir = glob.glob(str(cache_root / "canon_*"))[0]
-
-    # degrade the published cache to a husk: drop _SUCCESS, corrupt data
-    import os
-    os.remove(os.path.join(cache_dir, "_SUCCESS"))
-    with open(os.path.join(cache_dir, "junk.txt"), "w") as f:
-        f.write("half-written")
-
-    pipe2 = Pipeline(spark, layer_map, tmp_path_factory.mktemp("husk_b2"),
-                     n_buckets=8, canon_cache_dir=cache_root)
-    got = {(r.label, r.original_id, r.canon_id)
-           for r in pipe2._canon_stage().collect()}
-    assert got == want
-    # the husk was replaced by a real publication
-    assert os.path.exists(os.path.join(cache_dir, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(cache_dir, "junk.txt"))
+    before = n_persisted()
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("no_leak"),
+                    n_buckets=8)
+    pages = pages_df(spark, N_PAGES)
+    for _ in range(2):
+        pipe.run(pages, resume=False)
+    assert n_persisted() == before
 
 
 def test_unmarked_base_dir_with_data_refused(spark, layer_map,
