@@ -397,10 +397,11 @@ def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
     anti-join takes its keys from a narrow pre-BM25 projection, so the
     wide scored plan stays single-consumer and un-persisted.
 
-    ``links`` is the subplan both outputs read.  A caller that writes them
-    in SEPARATE jobs persists it first and unpersists it once its writes
-    commit; when one job consumes both (the streaming step), the cache
-    would only add a stage barrier."""
+    ``links`` is the subplan both outputs read.  The batch run, which
+    writes them in two concurrent jobs, persists it and unpersists it once
+    both writes commit; the chunked and streaming runs leave it uncached
+    (in the streaming step one job consumes both, so a cache would only
+    add a stage barrier)."""
     m = mention.mentions_view(stage_rows)
     dls = mention.doc_lengths_view(stage_rows)
     scored, passthrough = bm25.add_bm25_frozen_split(m, dls, stats, df_table)

@@ -79,9 +79,11 @@ class Pipeline:
         (e.g. ``"ice.db"``), every stage table becomes the Iceberg table
         ``<catalog>.<name>`` written via ``writeTo(...).partitionedBy(
         bucket(n_buckets, url))`` — the real partition transform the
-        parquet ``pbucket`` column emulates — and incremental chunks use
-        ``overwritePartitions()`` (Iceberg's native dynamic overwrite,
-        same exactly-once semantics as the parquet path).  Requires an
+        parquet ``pbucket`` column emulates.  Tables written by incremental
+        chunks are instead partitioned by identity(pbucket), the chunk
+        key, and each chunk uses ``overwritePartitions()`` (Iceberg's
+        native dynamic overwrite, same exactly-once semantics as the
+        parquet path).  Requires an
         Iceberg runtime on the session (tests/test_iceberg_optional.py
         runs the full pipeline this way when ``SPARK_ICEBERG_JAR`` is
         set; the sandbox has no jars, so it skips explicitly)."""
@@ -340,12 +342,10 @@ class Pipeline:
         return (self._bucketed(merged), self._bucketed(residual),
                 links.persist())
 
-    def _fps(self, fused: bool | None = None
-             ) -> tuple[str, str, str, str, str]:
-        """The stage fingerprint chain (fp0..fp4) for the current config;
-        ``fused`` overrides ``fuse_extract`` for the mention stage."""
+    def _fps(self) -> tuple[str, str, str, str, str]:
+        """The stage fingerprint chain (fp0..fp4) for the current config."""
         fp0 = fingerprint(self._catalog_fp, self.lang, "extract")
-        if self.fuse_extract if fused is None else fused:
+        if self.fuse_extract:
             fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
         else:
             fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention")
@@ -366,11 +366,16 @@ class Pipeline:
         if self.catalog:
             tbl = f"{self.catalog}.{name}"
             if self.spark.catalog.tableExists(tbl):
-                # Iceberg's native dynamic overwrite: replaces exactly the
-                # partitions the chunk touches — same exactly-once story
+                # Iceberg's native dynamic overwrite
                 df.writeTo(tbl).overwritePartitions()
             else:
-                self._iceberg_writer(df, name, [partition_col]).create()
+                # identity(partition_col), NOT bucket(n, url): Iceberg's
+                # bucket hash (murmur3_32, seed 0) is not Spark's
+                # pmod(hash(url), n) (seed 42) that picks the chunk, so a
+                # chunk's rows would touch most Iceberg buckets and
+                # overwritePartitions would delete earlier chunks' rows.
+                (df.writeTo(tbl).using("iceberg")
+                 .partitionedBy(F.col(partition_col)).create())
             return
         (df.repartition(self.n_buckets, F.col(partition_col))
          .write.mode("overwrite")
@@ -491,11 +496,9 @@ class Pipeline:
                     max_chunks: int | None, build, result: str,
                     partition_col: str = "pbucket", finish=None) -> bool:
         """The chunk loop of the ``run_*_incremental`` stages.  For each
-        chunk of pending pbuckets, ``build(chunk)`` returns ``({table: df},
-        cached)``; each table is written with ``_write_buckets`` and
-        ``cached`` (a persisted DataFrame, or None) is unpersisted.  The
-        chunk's per-bucket lineage is appended only after its writes
-        commit, so a kill in between re-runs the chunk on resume, which
+        chunk of pending pbuckets, ``build(chunk)`` returns ``{table: df}``
+        and each table is written with ``_write_buckets``.  The chunk's
+        per-bucket lineage is appended only after its writes commit, so a kill in between re-runs the chunk on resume, which
         rewrites the same partitions.  Row counts come from the first
         table.  After the last chunk, ``finish()`` (if given) runs and the
         stage summary row records the ``result`` table's row count.
@@ -505,13 +508,9 @@ class Pipeline:
             if max_chunks is not None and i >= max_chunks:
                 return False
             t0 = time.time()
-            tables, cached = build(chunk)
-            try:
-                for name, df in tables.items():
-                    self._write_buckets(df, name, partition_col)
-            finally:
-                if cached is not None:
-                    cached.unpersist()
+            tables = build(chunk)
+            for name, df in tables.items():
+                self._write_buckets(df, name, partition_col)
             written = self._read(next(iter(tables)))
             if partition_col == "pbucket":
                 counts = dict.fromkeys(chunk, 0)
@@ -538,7 +537,7 @@ class Pipeline:
         processes only the buckets without a lineage row (_run_chunks).
         Returns True when the stage is complete (summary lineage row
         written)."""
-        fp1 = self._fps(fused=True)[1]
+        fp1 = fingerprint(self._fps()[0], NER_MATCH_SCORE, "mention", "fused")
         if self.log.is_complete("mention", fp1):
             return True
         filtered = self._bucketed(self._lang_filtered(pages))
@@ -547,7 +546,7 @@ class Pipeline:
             part = filtered.filter(F.col("pbucket").isin(chunk))
             return {"mentions": self._bucketed(mention.detect_mentions(
                 part.select("url", "html"), self.layer_map,
-                from_html=True))}, None
+                from_html=True))}
 
         return self._run_chunks("mention", fp1, n_chunks, max_chunks, build,
                                 "mentions")
@@ -578,14 +577,12 @@ class Pipeline:
         df_ = self._read("link_aux_df")
 
         def build(chunk):
-            merged, residual, links = linking.link_stage(
+            merged, residual, _links = linking.link_stage(
                 stage2.filter(F.col("pbucket").isin(chunk)), stats, df_,
                 self.layer_map, semantic=self.semantic,
                 threshold=self.sim_threshold)
-            tables = {"linked": self._bucketed(merged),
-                      "links_residual": self._bucketed(residual)}
-            # persisted: the two tables are written by separate jobs
-            return tables, links.persist()
+            return {"linked": self._bucketed(merged),
+                    "links_residual": self._bucketed(residual)}
 
         return self._run_chunks("link", fp2, n_chunks, max_chunks, build,
                                 "linked")
@@ -612,7 +609,7 @@ class Pipeline:
                 canon)
             part = (materialize.partial_triples(ev, partitions=self.n_buckets)
                     .withColumn("chunk_key", F.lit(min(chunk))))
-            return {"triples_partial": part}, None
+            return {"triples_partial": part}
 
         def merge() -> None:
             self._write(materialize.merge_partial_triples(

@@ -8,6 +8,9 @@ transform (plans/pipeline.py module docstring).  Two tiers:
 * ``test_iceberg_bucket_partitioned_write_or_skip`` — the minimal
   ``writeTo(...).partitionedBy(bucket(...))`` swap against whatever
   session exists (skips when no Iceberg catalog/jars are configured);
+* ``test_iceberg_chunk_tables_partition_by_chunk_key`` — runs without
+  Iceberg: the writer calls a chunk write makes (recorded on a stand-in
+  DataFrame), pinning the partition spec ``overwritePartitions`` relies on;
 * ``test_iceberg_full_pipeline_or_skip`` — the FULL 5-stage pipeline with
   ``Pipeline(catalog="ice.db")`` (every stage table an Iceberg table,
   incremental chunks via ``overwritePartitions``), run in a subprocess
@@ -23,6 +26,8 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+
+from apt_bron_re_spark.plans.pipeline import Pipeline
 
 
 def test_iceberg_bucket_partitioned_write_or_skip(spark, tmp_path):
@@ -42,6 +47,60 @@ def test_iceberg_bucket_partitioned_write_or_skip(spark, tmp_path):
 
     got = spark.read.table("ice.db.docs_stage")
     assert got.count() == 20
+
+
+class _Writer:
+    """Stands in for ``DataFrame.writeTo(...)``; records every call."""
+
+    def __init__(self, calls: list, table: str) -> None:
+        self.calls = calls
+        calls.append(("writeTo", table))
+
+    def using(self, fmt):
+        self.calls.append(("using", fmt))
+        return self
+
+    def partitionedBy(self, *cols):
+        self.calls.append(("partitionedBy", [str(c) for c in cols]))
+        return self
+
+    def create(self):
+        self.calls.append(("create",))
+
+    def overwritePartitions(self):
+        self.calls.append(("overwritePartitions",))
+
+
+class _Frame:
+    def __init__(self) -> None:
+        self.calls: list = []
+
+    def writeTo(self, table):
+        return _Writer(self.calls, table)
+
+
+def test_iceberg_chunk_tables_partition_by_chunk_key(spark, layer_map,
+                                                     tmp_path, monkeypatch):
+    """A chunk is a set of pbucket values, and later chunks replace their
+    partitions with ``overwritePartitions``.  That is exact only if the
+    table is partitioned by the chunk key itself: under Iceberg's
+    ``bucket(n, url)`` (a different hash from Spark's pmod(hash(url), n))
+    one chunk's rows touch most partitions, and each later chunk would
+    delete earlier chunks' rows."""
+    pipe = Pipeline(spark, layer_map, tmp_path, n_buckets=8,
+                    catalog="ice.db")
+    exists = False
+    monkeypatch.setattr(spark.catalog, "tableExists", lambda _t: exists)
+    for col in ("pbucket", "chunk_key"):
+        df = _Frame()
+        pipe._write_buckets(df, "t", col)
+        assert df.calls == [("writeTo", "ice.db.t"), ("using", "iceberg"),
+                            ("partitionedBy", [str(F.col(col))]),
+                            ("create",)]
+    exists = True
+    df = _Frame()
+    pipe._write_buckets(df, "t")
+    assert df.calls == [("writeTo", "ice.db.t"), ("overwritePartitions",)]
 
 
 _FULL_PIPELINE_RUNNER = r"""
