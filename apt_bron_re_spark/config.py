@@ -14,17 +14,15 @@ CPE_CHAR_RANGE = 75
 # Words of context kept on each side of a hit (reference config.py:8).
 CONTEXT_LENGTH = 15
 
+# Page language the pipeline keeps (pages carry a ``lang`` column).
+LANG = "en"
+
 # Cosine threshold for semantic entity linking (reference config.py:14).
 SIM_THRESHOLD = 0.8
 
 # BM25 parameters (reference statistics.py:9).
 BM25_K1 = 1.5
 BM25_B = 0.75
-
-# Feature toggles (reference config.py:17-22).
-ADD_NER_SCORE = True
-ADD_BM25_SCORE = True
-SEMANTIC_NER_INTERSECTION = True
 
 # Labels that receive BM25 scores (reference statistics.py:36).
 BM25_LABELS = [

@@ -56,8 +56,7 @@ def _term_freqs(scored: DataFrame) -> DataFrame:
             .agg(F.count("*").alias("f")))
 
 
-def bm25_global_stats(mentions: DataFrame, dls: DataFrame,
-                      labels: list[str] | None = None
+def bm25_global_stats(mentions: DataFrame, dls: DataFrame
                       ) -> tuple[DataFrame, DataFrame]:
     """The corpus-GLOBAL inputs of BM25, materializable once so chunked
     (per-partition incremental) scoring stays exact: naive per-chunk
@@ -65,17 +64,14 @@ def bm25_global_stats(mentions: DataFrame, dls: DataFrame,
 
     Returns (stats, df_table): stats is the 1-row (m, avgdl); df_table is
     (category, bm25_key, n) document frequencies."""
-    labels = labels or BM25_LABELS
     stats = dls.agg(F.count("*").alias("m"), F.avg("dl").alias("avgdl"))
-    tf = _term_freqs(mentions.filter(F.col("category").isin(labels)))
+    tf = _term_freqs(mentions.filter(F.col("category").isin(BM25_LABELS)))
     df_ = tf.groupBy("category", "bm25_key").agg(F.count("*").alias("n"))
     return stats, df_
 
 
 def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
-                          stats: DataFrame, df_table: DataFrame,
-                          k1: float = BM25_K1, b: float = BM25_B,
-                          labels: list[str] | None = None
+                          stats: DataFrame, df_table: DataFrame
                           ) -> tuple[DataFrame, DataFrame]:
     """Attach ``bm25_score`` to the mention rows of the scored labels,
     against FROZEN global stats (``bm25_global_stats``), returning the
@@ -93,9 +89,8 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
     caller can keep the two branches separate (a union would erase the
     partitioning, which is why ``linking.link_stage`` unions only at the
     very end)."""
-    labels = labels or BM25_LABELS
-    scored = mentions.filter(F.col("category").isin(labels))
-    passthrough = mentions.filter(~F.col("category").isin(labels))
+    scored = mentions.filter(F.col("category").isin(BM25_LABELS))
+    passthrough = mentions.filter(~F.col("category").isin(BM25_LABELS))
     tf = _term_freqs(scored)
     score_table = (
         # dl attach is shuffle_hash too (round 4): both sides are narrow
@@ -110,11 +105,13 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
             F.log((F.col("m") - F.col("n") + 0.5) / (F.col("n") + 0.5) + 1.0))
         .withColumn(
             "denom",
-            F.col("f") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+            F.col("f") + BM25_K1 * (1.0 - BM25_B
+                                    + BM25_B * F.col("dl") / F.col("avgdl")))
         .select(
             "category", "url", "bm25_key",
             F.when(F.col("denom") != 0.0,
-                   F.round(F.col("idf") * (F.col("f") * (k1 + 1.0)) / F.col("denom"), 4))
+                   F.round(F.col("idf") * (F.col("f") * (BM25_K1 + 1.0))
+                           / F.col("denom"), 4))
             .otherwise(F.lit(0.0)).alias("bm25_score"))
     )
     # shuffle_hash, not sort-merge: the LEFT stream is the wide mention
@@ -134,13 +131,10 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
 
 
 def add_bm25_frozen(mentions: DataFrame, dls: DataFrame,
-                    stats: DataFrame, df_table: DataFrame,
-                    k1: float = BM25_K1, b: float = BM25_B,
-                    labels: list[str] | None = None) -> DataFrame:
+                    stats: DataFrame, df_table: DataFrame) -> DataFrame:
     """``add_bm25_frozen_split`` with the branches unioned back — the
     standalone surface."""
-    out, passthrough = add_bm25_frozen_split(
-        mentions, dls, stats, df_table, k1=k1, b=b, labels=labels)
+    out, passthrough = add_bm25_frozen_split(mentions, dls, stats, df_table)
     return out.unionByName(passthrough)
 
 

@@ -65,9 +65,6 @@ def _union_find_components(pairs: list[tuple[str, str]]
 
 
 def connected_components(edges: DataFrame,
-                         src: str = "src",
-                         dst: str = "dst",
-                         max_iter: int = 25,
                          n_salts: int = 8,
                          partitions: int | None = None,
                          fixed_rounds: int | None = None,
@@ -97,15 +94,15 @@ def connected_components(edges: DataFrame,
     data-sized (raw corpus joins).  Output rows are identical on both
     paths (parity-tested)."""
     if driver_max_edges:
-        probe = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        probe = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
                  .limit(driver_max_edges + 1).collect())
         if len(probe) <= driver_max_edges:
             rows = _union_find_components([(r["a"], r["b"]) for r in probe])
             return edges.sparkSession.createDataFrame(
                 rows, "id string, component string")
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
     )
     if partitions:
@@ -124,7 +121,8 @@ def connected_components(edges: DataFrame,
         .withColumn("component", F.col("id"))
     )
 
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_iter
+    # without fixed_rounds: until no component changes, at most 25 rounds
+    n_rounds = fixed_rounds if fixed_rounds is not None else 25
     for round_i in range(n_rounds):
         # neighbour minimum, two-phase salted: (b, salt) -> b
         nbr = (
@@ -214,36 +212,20 @@ def _driver_canon_rows(edges: list[tuple[str, str]]) -> list[tuple[str, str, str
     (label, original_id, canon_id) rows — semantically identical to the
     distributed path (same node universe: only nodes appearing in
     edges; canon_id = min original_id per (component, label))."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:          # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for s, d in edges:
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            parent[max(rs, rd)] = min(rs, rd)
-
     groups: dict[tuple[str, str], list[str]] = {}
-    for s, _d in edges:                       # id-nodes are edge sources
-        if ":~" in s:
+    for node, comp in _union_find_components(edges):
+        if ":~" in node:                      # surface nodes
             continue
-        label, oid = s.split(":", 1)
-        groups.setdefault((find(s), label), []).append(oid)
+        label, oid = node.split(":", 1)
+        groups.setdefault((comp, label), []).append(oid)
     rows = []
     for (_root, label), oids in groups.items():
         canon = min(oids)
-        rows.extend((label, oid, canon) for oid in set(oids))
+        rows.extend((label, oid, canon) for oid in oids)
     return sorted(rows)
 
 
-def canonical_map(spark, layer_map: dict[str, list[dict]],
-                  max_iter: int = 25) -> DataFrame:
+def canonical_map(spark, layer_map: dict[str, list[dict]]) -> DataFrame:
     """(label, original_id, canon_id): canon_id = lexicographically-min
     original_id among alias-connected nodes of the same label.
 
@@ -260,8 +242,7 @@ def canonical_map(spark, layer_map: dict[str, list[dict]],
     edges = spark.createDataFrame(edge_list, "src string, dst string")
     # id <-> surface bipartite graph: component diameter <= ~8 even with
     # chained shared aliases; 4 pointer-jumped rounds cover 2^4 hops.
-    comp = connected_components(edges, max_iter=max_iter, partitions=4,
-                                fixed_rounds=4)
+    comp = connected_components(edges, partitions=4, fixed_rounds=4)
 
     ids = (
         comp.filter(~F.col("id").contains(":~"))

@@ -13,8 +13,7 @@ operator:
   M6  cpe_unversioned per-line match — **dead code** in the reference (the
       tokenizer regex at basic.py:232 is the raw string r"\\b\\w+\\b" which
       matches literal backslashes, so tokens is always empty and nothing is
-      ever emitted).  Preserved: we emit nothing; the intended logic exists
-      behind ``enable_cpe_unversioned=True`` for future use.
+      ever emitted).  Preserved: we emit nothing.
   M7  technique name∪id merge, deduped by canonical key (basic.py:202-207)
   N4  NER score per hit                                 (ner.py:110-135, basic.py:257-260)
   N5  NER residue filter                                (basic.py:262-279)
@@ -32,7 +31,8 @@ from __future__ import annotations
 import re
 
 from ..catalog.build import CompiledCatalog
-from ..config import NER_BLACKLIST, NER_CATEGORY_MAP
+from ..config import (CONTEXT_LENGTH, CPE_CHAR_RANGE, NER_BLACKLIST,
+                      NER_CATEGORY_MAP, NER_MATCH_SCORE)
 from ..functions.matcher import MultiPatternMatcher
 from ..functions.variants import generate_variants
 
@@ -91,9 +91,7 @@ _EXTRA_SURFACES = {
 class NerTagger:
     """Deterministic stand-in for the reference's Lookup_Table NER service."""
 
-    def __init__(self, layer_map: dict[str, list[dict]],
-                 extra_surfaces: dict[str, str] | None = None,
-                 ner_only_surfaces: list[str] | None = None) -> None:
+    def __init__(self, layer_map: dict[str, list[dict]]) -> None:
         surface_to_cat: dict[str, str] = {}
 
         def add(surface: str, cat: str) -> None:
@@ -112,12 +110,10 @@ class NerTagger:
         for node in layer_map.get("technique", []):
             add(node["name"], "TECHNIQUE")
 
-        surfaces = (NER_ONLY_SURFACES if ner_only_surfaces is None
-                    else ner_only_surfaces)
-        for s in surfaces:
+        for s in NER_ONLY_SURFACES:
             add(s, "THREAT_ACTOR")
 
-        for surface, cat in (extra_surfaces or _EXTRA_SURFACES).items():
+        for surface, cat in _EXTRA_SURFACES.items():
             add(surface, cat)
 
         self._normalized = {s.lower(): cv for s, cv in _NORMALIZED_SURFACES.items()}
@@ -277,12 +273,7 @@ def _canonical_key(entry: dict) -> tuple:
 
 def process_document(text: str,
                      catalog: CompiledCatalog,
-                     tagger: NerTagger | None,
-                     add_ner_score: bool = True,
-                     exact_score: float = 1.0,
-                     char_len: int = 75,
-                     context_length: int = 15,
-                     enable_cpe_unversioned: bool = False,
+                     tagger: NerTagger,
                      ) -> tuple[dict[str, list[dict]], dict[str, list[str]], int]:
     """Faithful re-expression of process_folder's per-file body
     (basic.py:194-292) + inline A2 context sentences.
@@ -296,12 +287,9 @@ def process_document(text: str,
     # Tokenize once; every matcher (and the tagger) shares the spans.
     tokens, tok_strs = MultiPatternMatcher.tokenize(text_lower)
 
-    if add_ner_score and tagger is not None:
-        raw_ner = tagger.tag(text, tokens=tokens, tok_strs=tok_strs)
-        mapped_ner = map_ner_results(raw_ner)
-        ner_lookup = build_ner_lookup(mapped_ner)
-    else:
-        mapped_ner, ner_lookup = {}, {}
+    mapped_ner = map_ner_results(
+        tagger.tag(text, tokens=tokens, tok_strs=tok_strs))
+    ner_lookup = build_ner_lookup(mapped_ner)
 
     results: dict[str, list[dict]] = {}
 
@@ -329,7 +317,7 @@ def process_document(text: str,
             for m in matcher.find_all_occurrences(text_lower, tokens, tok_strs):
                 node = catalog.variant_to_node["cpe_versioned"][m.pattern]
                 at_least = node["at_least"]
-                radius = at_least * char_len
+                radius = at_least * CPE_CHAR_RANGE
                 context = text[max(0, m.start - radius):
                                min(len(text), m.end + radius)].lower()
                 count = sum(1 for w in node["words"] if w.lower() in context)
@@ -341,11 +329,7 @@ def process_document(text: str,
                 results["cpe_versioned"] = filtered
 
         elif layer_type == "cpe_unversioned":
-            if enable_cpe_unversioned:
-                filtered = _match_cpe_unversioned(text_lower, catalog)
-                if filtered:
-                    results["cpe_unversioned"] = filtered
-            # else: faithful dead-code behaviour — emit nothing (M6)
+            pass  # faithful dead-code behaviour — emit nothing (M6)
 
         else:
             hits = _hits_from_matches(
@@ -363,10 +347,9 @@ def process_document(text: str,
     # N4 score + N5 residue filter (basic.py:257-279)
     for category, entries in results.items():
         for ent in entries:
-            score = (ner_score(ent, category, ner_lookup, exact_score)
-                     if (add_ner_score and ner_lookup) else 0.0)
+            score = ner_score(ent, category, ner_lookup, NER_MATCH_SCORE)
             ent["NER_score"] = score
-            if score == exact_score and mapped_ner:
+            if score == NER_MATCH_SCORE and mapped_ner:
                 terms = hit_search_terms(ent, category)
                 for k in mapped_ner:
                     mapped_ner[k] = [s for s in mapped_ner[k]
@@ -388,7 +371,7 @@ def process_document(text: str,
                         break
 
     # A1 exact-dedup per category (basic.py:304-340) then A2 context.
-    ctx = _ContextIndex(text, context_length)
+    ctx = _ContextIndex(text, CONTEXT_LENGTH)
     for category, entries in results.items():
         seen = set()
         deduped = []
@@ -429,15 +412,6 @@ def _hits_from_matches(matches, category: str,
     return out
 
 
-def _match_variants(text_lower: str, category: str,
-                    catalog: CompiledCatalog,
-                    tokens: list[tuple[int, int]] | None = None) -> list[dict]:
-    """Single-label M1 scan (kept for tests/direct use; process_document
-    uses the union matcher)."""
-    return _hits_from_matches(
-        catalog.matchers[category].find(text_lower, tokens), category, catalog)
-
-
 def _match_technique_ids(text: str, catalog: CompiledCatalog) -> list[dict]:
     """M2 (reference basic.py:151-166)."""
     out = []
@@ -452,23 +426,3 @@ def _match_technique_ids(text: str, catalog: CompiledCatalog) -> list[dict]:
             })
     return out
 
-
-def _match_cpe_unversioned(text_lower: str,
-                           catalog: CompiledCatalog) -> list[dict]:
-    r"""The *intended* M6 logic (reference basic.py:228-246 with the
-    tokenizer bug fixed: "\b\w+\b" -> r"\b\w+\b").  Disabled by default
-    for fixture parity with the reference's observed (empty) output."""
-    filtered = []
-    for i, sentence in enumerate(text_lower.splitlines()):
-        tokens = set(WORD_RE.findall(sentence))
-        for node in catalog.variant_to_node["cpe_unversioned"].values():
-            words = node["words"]
-            at_least = node.get("at_least", 2)
-            count = sum(1 for w in words if w in tokens and w not in {"a", "this"})
-            if count >= at_least - 1 and count > 1:
-                full = dict(node)
-                full["index"] = i
-                full["sentence"] = sentence.strip()
-                full["count"] = count
-                filtered.append(full)
-    return filtered

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import LANG
 from ..functions.extract_text import extract_text
 
 
@@ -28,28 +29,24 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-def extract_docs(pages: DataFrame, lang: str | None = "en") -> DataFrame:
+def extract_docs(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> docs(url, text).
 
-    The language predicate is applied *before* the UDF so Catalyst pushes
-    it into the scan and non-matching rows never reach Python.
+    The language predicate (``config.LANG``) is applied *before* the UDF so
+    Catalyst pushes it into the scan and non-matching rows never reach
+    Python.
     """
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return df.select("url", extract_text_udf(F.col("html")).alias("text"))
+    return (pages.filter(F.col("lang") == LANG)
+            .select("url", extract_text_udf(F.col("html")).alias("text")))
 
 
-def extraction_parity(pages: DataFrame, lang: str | None = "en") -> DataFrame:
+def extraction_parity(pages: DataFrame) -> DataFrame:
     """Byte-identity check of the extract stage vs the gold ``text`` column.
 
     Returns rows (url, ok) — ``ok`` false where extraction diverges.  Used
     by tests and the lineage metrics; at scale this is a single narrow pass.
     """
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return df.select(
+    return pages.filter(F.col("lang") == LANG).select(
         "url",
         (extract_text_udf(F.col("html")) == F.col("text")).alias("ok"),
     )

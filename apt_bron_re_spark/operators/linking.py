@@ -36,7 +36,7 @@ a rule and the gold fixtures pin the rebuild):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,26 +72,6 @@ def node_embedding_rows(layer_map: dict[str, list[dict]]) -> list[dict]:
                         "name": node.get("name"),
                     })
     return rows
-
-
-def node_embeddings_df(spark: SparkSession,
-                       layer_map: dict[str, list[dict]]) -> DataFrame:
-    """The materializable node_embeddings table (FIXTURES.md §3)."""
-    rows = node_embedding_rows(layer_map)
-    embs = embed_batch([r["text"] for r in rows])
-    data = [
-        (r["label"], r["text"], r["original_id"], r["name"],
-         [float(x) for x in embs[i]])
-        for i, r in enumerate(rows)
-    ]
-    schema = T.StructType([
-        T.StructField("label", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("original_id", T.StringType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-    ])
-    return spark.createDataFrame(data, schema)
 
 
 # --------------------------------------------------------------------------
@@ -155,8 +135,7 @@ _SEM_SCHEMA = T.ArrayType(T.StructType([
 
 
 def semantic_links(residues: DataFrame,
-                   layer_map: dict[str, list[dict]],
-                   threshold: float = SIM_THRESHOLD) -> DataFrame:
+                   layer_map: dict[str, list[dict]]) -> DataFrame:
     """Cosine θ-join of residue values against all node embeddings."""
     rows = node_embedding_rows(layer_map)
     emb_matrix = embed_batch([r["text"] for r in rows])  # K x D, L2-normed
@@ -172,7 +151,7 @@ def semantic_links(residues: DataFrame,
         sims = vecs @ emb_matrix.T                      # B x K
         out = []
         for row in sims:
-            idx = (row >= threshold).nonzero()[0]
+            idx = (row >= SIM_THRESHOLD).nonzero()[0]
             out.append([
                 {"label": labels[k], "original_id": oids[k],
                  "name": names[k], "score": float(row[k])}
@@ -205,14 +184,11 @@ def semantic_links(residues: DataFrame,
 
 
 def build_links(residues: DataFrame,
-                layer_map: dict[str, list[dict]],
-                semantic: bool = True,
-                threshold: float = SIM_THRESHOLD) -> DataFrame:
-    """L2+L3 (+L4), deduped (L5)."""
-    links = variant_links(residues, layer_map)
-    if semantic:
-        links = links.unionByName(semantic_links(residues, layer_map, threshold))
-    return links.dropDuplicates()
+                layer_map: dict[str, list[dict]]) -> DataFrame:
+    """L2+L3+L4, deduped (L5)."""
+    return (variant_links(residues, layer_map)
+            .unionByName(semantic_links(residues, layer_map))
+            .dropDuplicates())
 
 
 # --------------------------------------------------------------------------
@@ -374,8 +350,7 @@ def merge_links_split(scored: DataFrame, passthrough: DataFrame,
 # --------------------------------------------------------------------------
 
 def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
-               layer_map: dict[str, list[dict]], semantic: bool = True,
-               threshold: float = SIM_THRESHOLD
+               layer_map: dict[str, list[dict]]
                ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Stage 3 over mention-stage rows (``mention.detect_mentions``
     output): BM25 against the global ``(stats, df_table)`` of
@@ -405,8 +380,7 @@ def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
     m = mention.mentions_view(stage_rows)
     dls = mention.doc_lengths_view(stage_rows)
     scored, passthrough = bm25.add_bm25_frozen_split(m, dls, stats, df_table)
-    links = build_links(mention.residue_view(stage_rows), layer_map,
-                        semantic=semantic, threshold=threshold)
+    links = build_links(mention.residue_view(stage_rows), layer_map)
     keys = m.select("url", "category", _oid_l().alias("oid_l")).distinct()
     # the passthrough branch can take a link only if some linkable label
     # is not BM25-scored (never for the BRON-shaped catalog: links exclude

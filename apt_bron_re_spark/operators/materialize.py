@@ -43,10 +43,15 @@ from pyspark.sql import functions as F
 
 from ..config import PREDICATE_MAP
 
+# Source urls kept per triple (the k smallest) and salts of the two-phase
+# triple aggregation (_triple_aggregate).
+MAX_SOURCES = 64
+N_SALTS = 16
+
 
 def evidence_rows(mentions_linked: DataFrame,
                   residual_links: DataFrame | None,
-                  canon: DataFrame | None) -> DataFrame:
+                  canon: DataFrame) -> DataFrame:
     """Pre-aggregation evidence: one row per mention / residual link with
     (url, label, canon_id, score, sentence).  CVE mentions (value, no
     original_id) use the CVE id; the canonical map is broadcast
@@ -67,18 +72,14 @@ def evidence_rows(mentions_linked: DataFrame,
             F.lit(None).cast("string").alias("sentence"),
         ))
 
-    if canon is not None:
-        m = (
-            m.join(F.broadcast(canon),
-                   (m.label == canon.label) & (m.entity_id == canon.original_id),
-                   "left")
-            .select(m.url, m.label,
-                    F.coalesce(canon.canon_id, m.entity_id).alias("canon_id"),
-                    m.score, m.sentence)
-        )
-    else:
-        m = m.withColumnRenamed("entity_id", "canon_id")
-    return m
+    return (
+        m.join(F.broadcast(canon),
+               (m.label == canon.label) & (m.entity_id == canon.original_id),
+               "left")
+        .select(m.url, m.label,
+                F.coalesce(canon.canon_id, m.entity_id).alias("canon_id"),
+                m.score, m.sentence)
+    )
 
 
 def _evidence_sentences(ev: DataFrame) -> DataFrame:
@@ -140,7 +141,7 @@ def _narrow_evidence(ev: DataFrame, partitions: int | None) -> DataFrame:
     )
 
 
-def _pairs(evn: DataFrame, predicate_map: dict) -> DataFrame:
+def _pairs(evn: DataFrame) -> DataFrame:
     """Doc-level co-occurrence pairing over NARROW evidence — as a
     row-local explode, NOT a self-join.
 
@@ -156,7 +157,7 @@ def _pairs(evn: DataFrame, predicate_map: dict) -> DataFrame:
     count — the same bound the self-join's per-url sort buffer had."""
     spark = evn.sparkSession
     preds = spark.createDataFrame(
-        [(a, b, p) for (a, b), p in predicate_map.items()],
+        [(a, b, p) for (a, b), p in PREDICATE_MAP.items()],
         "subj_label string, obj_label string, pred string")
     ents = (
         evn.groupBy("url")
@@ -225,8 +226,7 @@ def _attach_justification(agg: DataFrame, ev_sent: DataFrame,
         ev_sent.sentence.alias("justification"))
 
 
-def _triple_aggregate(ev: DataFrame, predicate_map: dict | None,
-                      max_sources: int, n_salts: int,
+def _triple_aggregate(ev: DataFrame, max_sources: int, n_salts: int,
                       partitions: int | None,
                       round_score: bool) -> DataFrame:
     """The salted two-phase triple aggregation shared by
@@ -249,8 +249,7 @@ def _triple_aggregate(ev: DataFrame, predicate_map: dict | None,
     source count (algebraic, skew-safe).  The best-justification argmax is
     equally salted (max of a max is the max) and carries only the
     evidence KEY; the sentence attaches at the end (module docstring)."""
-    predicate_map = predicate_map or PREDICATE_MAP
-    pairs = _pairs(_narrow_evidence(ev, partitions), predicate_map)
+    pairs = _pairs(_narrow_evidence(ev, partitions))
 
     per_salt = (
         pairs
@@ -282,25 +281,21 @@ def _triple_aggregate(ev: DataFrame, predicate_map: dict | None,
 
 
 def materialize_triples(ev: DataFrame,
-                        predicate_map: dict | None = None,
-                        max_sources: int = 64,
-                        n_salts: int = 16,
+                        max_sources: int = MAX_SOURCES,
+                        n_salts: int = N_SALTS,
                         partitions: int | None = None) -> DataFrame:
     """evidence -> triples(subj, pred, obj, sources, n_sources,
     justification, score).  ``ev`` is ``evidence_rows`` output (raw rows
     let the narrow branch prune sentences from its scan; any per-(url,
     label, canon_id) pre-aggregation of it gives the same triples).  The
     aggregation is ``_triple_aggregate``'s salted two-phase one."""
-    out = _triple_aggregate(ev, predicate_map, max_sources, n_salts,
-                            partitions, round_score=True)
+    out = _triple_aggregate(ev, max_sources, n_salts, partitions,
+                            round_score=True)
     return out.select("subj", "pred", "obj", "sources", "n_sources",
                       "justification", "score")
 
 
 def partial_triples(ev: DataFrame,
-                    predicate_map: dict | None = None,
-                    max_sources: int = 64,
-                    n_salts: int = 16,
                     partitions: int | None = None) -> DataFrame:
     """Chunk-local partial triple aggregate for merge-on-append incremental
     materialization.  Because chunks partition the corpus BY URL, every
@@ -316,8 +311,8 @@ def partial_triples(ev: DataFrame,
                     payload never decides a comparison
       part_score    max pair_score (rounded only at merge time)
     """
-    with_j = _triple_aggregate(ev, predicate_map, max_sources, n_salts,
-                               partitions, round_score=False)
+    with_j = _triple_aggregate(ev, MAX_SOURCES, N_SALTS, partitions,
+                               round_score=False)
     return with_j.select(
         "subj", "pred", "obj",
         F.col("sources").alias("part_sources"),
@@ -330,8 +325,7 @@ def partial_triples(ev: DataFrame,
         F.col("score").alias("part_score"))
 
 
-def merge_partial_triples(partials: DataFrame,
-                          max_sources: int = 64) -> DataFrame:
+def merge_partial_triples(partials: DataFrame) -> DataFrame:
     """Merge chunk-partial aggregates into final triples — identical output
     to a single-shot materialize_triples over the full evidence table."""
     return (
@@ -340,7 +334,7 @@ def merge_partial_triples(partials: DataFrame,
             F.slice(
                 F.array_sort(F.array_distinct(
                     F.flatten(F.collect_list("part_sources")))),
-                1, max_sources).alias("sources"),
+                1, MAX_SOURCES).alias("sources"),
             F.sum("part_n").alias("n_sources"),
             F.max("part_bj").getField("justification").alias("justification"),
             F.round(F.max("part_score"), 4).alias("score"),

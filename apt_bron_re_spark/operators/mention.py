@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog.build import compile_catalog
-from ..config import CONTEXT_LENGTH, CPE_CHAR_RANGE, NER_MATCH_SCORE
 from ..functions.extract_text import extract_text
 from .doc_core import NerTagger, process_document
 
@@ -58,10 +57,6 @@ _COLS = [f.name for f in MENTION_SCHEMA.fields]
 
 def detect_mentions(docs: DataFrame,
                     layer_map: dict[str, list[dict]],
-                    add_ner_score: bool = True,
-                    exact_score: float = NER_MATCH_SCORE,
-                    char_len: int = CPE_CHAR_RANGE,
-                    context_length: int = CONTEXT_LENGTH,
                     event_time_col: str | None = None,
                     from_html: bool = False) -> DataFrame:
     """docs(url, text) -> union table of doc + mention + residue rows.
@@ -74,7 +69,7 @@ def detect_mentions(docs: DataFrame,
     unfused path keeps the extract checkpoint).
     """
     catalog = compile_catalog(layer_map)
-    tagger = NerTagger(layer_map) if add_ner_score else None
+    tagger = NerTagger(layer_map)
 
     schema = MENTION_SCHEMA
     in_cols = ["url", "html" if from_html else "text"]
@@ -96,12 +91,7 @@ def detect_mentions(docs: DataFrame,
                     text = extract_text(text)
                 try:
                     results, residue, dl = process_document(
-                        text, catalog, tagger,
-                        add_ner_score=add_ner_score,
-                        exact_score=exact_score,
-                        char_len=char_len,
-                        context_length=context_length,
-                    )
+                        text, catalog, tagger)
                 except Exception as exc:  # reference basic.py:300-301
                     rows.append({
                         **extra, "url": url, "rec_type": "error",

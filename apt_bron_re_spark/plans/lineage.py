@@ -110,14 +110,14 @@ class LineageLog:
                           & (F.col("bucket") == -1)).limit(1).count() > 0)
 
     def record(self, stage: str, fp: str, out: DataFrame,
-               wall_s: float, bucket_col: str | None = "pbucket") -> None:
-        """Append per-bucket row counts + the stage summary row."""
+               wall_s: float) -> None:
+        """Append per-pbucket row counts + the stage summary row."""
         now = time.time()
         rows = []
-        if bucket_col and bucket_col in out.columns:
-            per_bucket = (out.groupBy(bucket_col)
+        if "pbucket" in out.columns:
+            per_bucket = (out.groupBy("pbucket")
                           .agg(F.count("*").alias("n")).collect())
-            rows = [(stage, fp, int(r[bucket_col]), int(r["n"]), wall_s, now)
+            rows = [(stage, fp, int(r["pbucket"]), int(r["n"]), wall_s, now)
                     for r in per_bucket]
         total = sum(r[3] for r in rows) if rows else out.count()
         rows.append((stage, fp, -1, int(total), wall_s, now))

@@ -45,8 +45,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..config import NER_MATCH_SCORE, SIM_THRESHOLD
+from ..config import LANG, NER_MATCH_SCORE, SIM_THRESHOLD
 from ..operators import bm25, canonicalize, linking, materialize, mention
 from ..operators.extract import extract_docs
 from .lineage import LineageLog, fingerprint
@@ -59,15 +60,16 @@ from .lineage import LineageLog, fingerprint
 # write; a mismatched resume fails fast instead of mis-bucketing.
 LAYOUT_ID = "pbucket=pmod(murmur3_hash(url),n_buckets)"
 
+# Schema of a partitioned stage table that was written with zero rows
+# (``Pipeline._keep_schema_if_empty``); readers skip '_' files.
+EMPTY_SCHEMA = "_schema.json"
+
 
 class Pipeline:
     def __init__(self, spark: SparkSession,
                  layer_map: dict[str, list[dict]],
                  base_dir: str | Path,
                  n_buckets: int = 32,
-                 semantic: bool = True,
-                 sim_threshold: float = SIM_THRESHOLD,
-                 lang: str | None = "en",
                  fuse_extract: bool = False,
                  catalog: str | None = None) -> None:
         """``fuse_extract=True`` runs E1 inside the mention UDF and skips
@@ -81,9 +83,10 @@ class Pipeline:
         bucket(n_buckets, url))`` — the real partition transform the
         parquet ``pbucket`` column emulates.  Tables written by incremental
         chunks are instead partitioned by identity(pbucket), the chunk
-        key, and each chunk uses ``overwritePartitions()`` (Iceberg's
-        native dynamic overwrite, same exactly-once semantics as the
-        parquet path).  Requires an
+        key: a stage's first chunk replaces the table, and each later
+        chunk uses ``overwritePartitions()`` (Iceberg's native dynamic
+        overwrite, same exactly-once semantics as the parquet path).
+        Requires an
         Iceberg runtime on the session (tests/test_iceberg_optional.py
         runs the full pipeline this way when ``SPARK_ICEBERG_JAR`` is
         set; the sandbox has no jars, so it skips explicitly)."""
@@ -91,9 +94,6 @@ class Pipeline:
         self.layer_map = layer_map
         self.base = Path(base_dir)
         self.n_buckets = n_buckets
-        self.semantic = semantic
-        self.sim_threshold = sim_threshold
-        self.lang = lang
         self.fuse_extract = fuse_extract
         self.catalog = catalog
         self.log = LineageLog(spark, base_dir)
@@ -156,10 +156,6 @@ class Pipeline:
         return df.withColumn(
             "pbucket", F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
 
-    def _lang_filtered(self, pages: DataFrame) -> DataFrame:
-        return (pages.filter(F.col("lang") == self.lang)
-                if self.lang is not None else pages)
-
     def _iceberg_writer(self, df: DataFrame, name: str,
                         partition_by: list[str] | None):
         w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
@@ -170,30 +166,18 @@ class Pipeline:
             return w.partitionedBy(*[F.col(c) for c in partition_by])
         return w
 
-    def _write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
-               pre_partitioned: bool = False) -> None:
+    def _write(self, df: DataFrame, name: str,
+               partition_by: list[str] | None = None) -> None:
         if self.catalog:
             self._iceberg_writer(df, name, partition_by).createOrReplace()
             return
-        if pre_partitioned:
-            # the builder guarantees the plan is already
-            # HashPartitioning(url, n_buckets)-clustered (or a union of
-            # such branches): every task holds exactly one pbucket value
-            # (see _bucketed), so partitionBy writes one file per dir per
-            # branch with NO write-side shuffle.
-            pass
-        elif partition_by == ["pbucket"]:
-            # WIDE bucketed stage tables: pin the partition COUNT
-            # (REPARTITION_BY_NUM).  A bare repartition(col) is
-            # AQE-coalescible, and AQE's 64MB advisory size collapses the
-            # zstd parquet encode to 1-2 tasks — a data-sized SERIAL tail
-            # that capped the link stage at ~1.3x on 4 cores (measured at
-            # 256k pages; the encode is CPU-bound, not IO).  pbucket is
-            # uniform (pmod(murmur3(url), n) — see _bucketed), so pinning
-            # loses no skew handling.
-            df = df.repartition(self.n_buckets, F.col("pbucket"))
-        elif partition_by:
-            # low-cardinality partition columns (pred): ALSO pinned.  A
+        # pbucket tables are written here only by the batch link stage,
+        # whose plans are already HashPartitioning(url, n_buckets)-clustered
+        # (or a union of such branches): every task holds exactly one
+        # pbucket value (see _bucketed), so partitionBy writes one file per
+        # dir per branch with NO write-side shuffle.
+        if partition_by and partition_by != ["pbucket"]:
+            # low-cardinality partition columns (pred): pinned.  A
             # rebalance hint was tried here and AQE's 64MB advisory
             # re-serialized the triples encode into 1 task on most runs
             # (materialize stage 31 s <-> 132 s across identical reps);
@@ -205,16 +189,34 @@ class Pipeline:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(name))
+        if partition_by:
+            self._keep_schema_if_empty(df, name, partition_by)
+
+    def _keep_schema_if_empty(self, df: DataFrame, name: str,
+                              partition_by: list[str]) -> None:
+        """A partitioned parquet write of zero rows leaves no data file, so
+        a read could not infer the schema.  Keep it beside the table
+        (partition columns last, as a read infers them) for ``_read``."""
+        path = Path(self._path(name))
+        if next(path.rglob("*.parquet"), None) is None:
+            fields = sorted(df.schema.fields,
+                            key=lambda f: f.name in partition_by)
+            (path / EMPTY_SCHEMA).write_text(T.StructType(fields).json())
 
     def _read(self, name: str) -> DataFrame:
         if self.catalog:
             return self.spark.table(f"{self.catalog}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        path = Path(self._path(name))
+        schema = path / EMPTY_SCHEMA
+        if schema.exists() and next(path.rglob("*.parquet"), None) is None:
+            return (self.spark.read
+                    .schema(T.StructType.fromJson(json.loads(schema.read_text())))
+                    .parquet(str(path)))
+        return self.spark.read.parquet(str(path))
 
     def _run_stage(self, stage: str, fp: str, build, name: str,
                    partition_by: list[str] | None = None,
                    resume: bool = True,
-                   pre_partitioned: bool = False,
                    record_async: bool = False) -> DataFrame:
         """``record_async=True`` moves the lineage record's per-bucket
         count scan (a full extra pass over the just-written table) off
@@ -228,7 +230,7 @@ class Pipeline:
             return self._read(name)
         t0 = time.time()
         df = build()
-        self._write(df, name, partition_by, pre_partitioned=pre_partitioned)
+        self._write(df, name, partition_by)
         out = self._read(name)
         wall = time.time() - t0
         if record_async:
@@ -292,16 +294,14 @@ class Pipeline:
 
         def _res() -> None:
             try:
-                self._write(residual, "links_residual",
-                            partition_by=["pbucket"], pre_partitioned=True)
+                self._write(residual, "links_residual", partition_by=["pbucket"])
             except BaseException as exc:  # surfaced after join
                 err.append(exc)
 
         th = threading.Thread(target=_res, name="links-residual-write")
         th.start()
         try:
-            self._write(merged, "linked", partition_by=["pbucket"],
-                        pre_partitioned=True)
+            self._write(merged, "linked", partition_by=["pbucket"])
         finally:
             th.join()
             links.unpersist()
@@ -337,19 +337,20 @@ class Pipeline:
         stats, df_ = bm25.bm25_global_stats(mention.mentions_view(st),
                                             mention.doc_lengths_view(st))
         merged, residual, links = linking.link_stage(
-            st, stats, df_, self.layer_map,
-            semantic=self.semantic, threshold=self.sim_threshold)
+            st, stats, df_, self.layer_map)
         return (self._bucketed(merged), self._bucketed(residual),
                 links.persist())
 
     def _fps(self) -> tuple[str, str, str, str, str]:
         """The stage fingerprint chain (fp0..fp4) for the current config."""
-        fp0 = fingerprint(self._catalog_fp, self.lang, "extract")
+        fp0 = fingerprint(self._catalog_fp, LANG, "extract")
         if self.fuse_extract:
             fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
         else:
             fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention")
-        fp2 = fingerprint(fp1, self.semantic, self.sim_threshold, "link")
+        # (True, SIM_THRESHOLD): semantic linking is always on; the pair
+        # stays in the hash so existing base_dirs still resume
+        fp2 = fingerprint(fp1, True, SIM_THRESHOLD, "link")
         # canonicalize depends on the catalog only; CANON_ALGO_VERSION
         # folds in the code changes the catalog fingerprint cannot see
         fp3 = fingerprint(self._catalog_fp, "canonicalize",
@@ -362,26 +363,40 @@ class Pipeline:
         """Exactly-once per-partition write for incremental chunks: dynamic
         partition overwrite replaces exactly the chunk's partitions, so a
         retry after a kill between data-commit and lineage-append rewrites
-        the same partitions instead of appending duplicates."""
+        the same partitions instead of appending duplicates.  The table
+        exists: the stage's first chunk wrote it (``_replace_table``)."""
         if self.catalog:
-            tbl = f"{self.catalog}.{name}"
-            if self.spark.catalog.tableExists(tbl):
-                # Iceberg's native dynamic overwrite
-                df.writeTo(tbl).overwritePartitions()
-            else:
-                # identity(partition_col), NOT bucket(n, url): Iceberg's
-                # bucket hash (murmur3_32, seed 0) is not Spark's
-                # pmod(hash(url), n) (seed 42) that picks the chunk, so a
-                # chunk's rows would touch most Iceberg buckets and
-                # overwritePartitions would delete earlier chunks' rows.
-                (df.writeTo(tbl).using("iceberg")
-                 .partitionedBy(F.col(partition_col)).create())
+            # Iceberg's native dynamic overwrite
+            df.writeTo(f"{self.catalog}.{name}").overwritePartitions()
             return
-        (df.repartition(self.n_buckets, F.col(partition_col))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(partition_col)
-         .parquet(self._path(name)))
+        self._chunk_writer(df, partition_col, "dynamic").parquet(
+            self._path(name))
+
+    def _replace_table(self, df: DataFrame, name: str,
+                       partition_col: str) -> None:
+        """The first chunk of a stage with no completed buckets replaces
+        the whole table.  A chunk overwrite replaces only the partitions
+        its output touches, so otherwise a bucket that comes out empty
+        would keep the rows an earlier fingerprint (or a batch run) wrote."""
+        if self.catalog:
+            # identity(partition_col), NOT bucket(n, url): Iceberg's
+            # bucket hash (murmur3_32, seed 0) is not Spark's
+            # pmod(hash(url), n) (seed 42) that picks the chunk, so a
+            # chunk's rows would touch most Iceberg buckets and
+            # overwritePartitions would delete earlier chunks' rows.
+            (df.writeTo(f"{self.catalog}.{name}").using("iceberg")
+             .partitionedBy(F.col(partition_col)).createOrReplace())
+            return
+        self._chunk_writer(df, partition_col, "static").parquet(
+            self._path(name))
+        self._keep_schema_if_empty(df, name, [partition_col])
+
+    def _chunk_writer(self, df: DataFrame, partition_col: str,
+                      overwrite_mode: str):
+        return (df.repartition(self.n_buckets, F.col(partition_col))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", overwrite_mode)
+                .partitionBy(partition_col))
 
     # -- stages -----------------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = True) -> DataFrame:
@@ -443,13 +458,13 @@ class Pipeline:
             stage2 = self._run_stage(
                 "mention", fp1,
                 lambda: self._bucketed(mention.detect_mentions(
-                    self._lang_filtered(pages).select("url", "html"),
+                    pages.filter(F.col("lang") == LANG).select("url", "html"),
                     self.layer_map, from_html=True)),
                 "mentions", resume=resume, record_async=True)
         else:
             docs = self._run_stage(
                 "extract", fp0,
-                lambda: self._bucketed(extract_docs(pages, self.lang)),
+                lambda: self._bucketed(extract_docs(pages)),
                 "docs", resume=resume)
             stage2 = self._run_stage(
                 "mention", fp1,
@@ -485,32 +500,32 @@ class Pipeline:
         return self._read("triples")
 
     # -- per-partition incremental execution --------------------------------
-    def _pending_chunks(self, stage: str, fp: str, n_chunks: int
-                        ) -> list[list[int]]:
-        done = self.log.completed_buckets(stage, fp)
-        pending = [b for b in range(self.n_buckets) if b not in done]
-        size = max(1, (self.n_buckets + n_chunks - 1) // n_chunks)
-        return [pending[i:i + size] for i in range(0, len(pending), size)]
-
     def _run_chunks(self, stage: str, fp: str, n_chunks: int,
                     max_chunks: int | None, build, result: str,
                     partition_col: str = "pbucket", finish=None) -> bool:
         """The chunk loop of the ``run_*_incremental`` stages.  For each
         chunk of pending pbuckets, ``build(chunk)`` returns ``{table: df}``
-        and each table is written with ``_write_buckets``.  The chunk's
+        and each table is written with ``_write_buckets`` (the first chunk
+        of a stage with no completed buckets: ``_replace_table``).  The chunk's
         per-bucket lineage is appended only after its writes commit, so a kill in between re-runs the chunk on resume, which
         rewrites the same partitions.  Row counts come from the first
         table.  After the last chunk, ``finish()`` (if given) runs and the
         stage summary row records the ``result`` table's row count.
         ``max_chunks`` processes at most that many chunks (test hook to
         simulate interruption).  Returns True when the stage is done."""
-        for i, chunk in enumerate(self._pending_chunks(stage, fp, n_chunks)):
+        done = self.log.completed_buckets(stage, fp)
+        pending = [b for b in range(self.n_buckets) if b not in done]
+        size = max(1, (self.n_buckets + n_chunks - 1) // n_chunks)
+        chunks = [pending[i:i + size] for i in range(0, len(pending), size)]
+        for i, chunk in enumerate(chunks):
             if max_chunks is not None and i >= max_chunks:
                 return False
             t0 = time.time()
             tables = build(chunk)
+            write = (self._replace_table if i == 0 and not done
+                     else self._write_buckets)
             for name, df in tables.items():
-                self._write_buckets(df, name, partition_col)
+                write(df, name, partition_col)
             written = self._read(next(iter(tables)))
             if partition_col == "pbucket":
                 counts = dict.fromkeys(chunk, 0)
@@ -540,7 +555,7 @@ class Pipeline:
         fp1 = fingerprint(self._fps()[0], NER_MATCH_SCORE, "mention", "fused")
         if self.log.is_complete("mention", fp1):
             return True
-        filtered = self._bucketed(self._lang_filtered(pages))
+        filtered = self._bucketed(pages.filter(F.col("lang") == LANG))
 
         def build(chunk):
             part = filtered.filter(F.col("pbucket").isin(chunk))
@@ -579,8 +594,7 @@ class Pipeline:
         def build(chunk):
             merged, residual, _links = linking.link_stage(
                 stage2.filter(F.col("pbucket").isin(chunk)), stats, df_,
-                self.layer_map, semantic=self.semantic,
-                threshold=self.sim_threshold)
+                self.layer_map)
             return {"linked": self._bucketed(merged),
                     "links_residual": self._bucketed(residual)}
 

@@ -45,7 +45,7 @@ execution shapes, both reusing the batch operators:
    Urls must arrive in exactly one micro-batch; proven violations are
    surfaced per key as ``replays_detected`` (see stream_triples_live).
 
-Scale notes: state per key is O(max_sources) regardless of how many pages
+Scale notes: state per key is O(MAX_SOURCES) regardless of how many pages
 mention a hub edge — the streaming twin of the batch salted two-phase
 k-smallest design.  The pairing mapInPandas carries the compiled catalog +
 canon map in the UDF closure (catalog-sized, broadcast semantics).
@@ -68,7 +68,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog.build import compile_catalog
-from ..config import PREDICATE_MAP
+from ..config import LANG, PREDICATE_MAP, SIM_THRESHOLD
 from ..functions.extract_text import extract_text
 from ..operators import linking, materialize, mention
 from ..operators.canonicalize import canonical_map
@@ -192,23 +192,17 @@ class RowLinker:
     Built once on the driver, shipped in the UDF closure (catalog-sized,
     broadcast semantics)."""
 
-    def __init__(self, layer_map: dict[str, list[dict]],
-                 semantic: bool = True,
-                 threshold: float | None = None) -> None:
-        from ..config import SIM_THRESHOLD
+    def __init__(self, layer_map: dict[str, list[dict]]) -> None:
         from ..functions.embedder import embed_batch
         from ..operators.linking import (node_embedding_rows,
                                          node_variant_rows)
-        self.threshold = SIM_THRESHOLD if threshold is None else threshold
-        self.semantic = semantic
         self.variants: dict[str, list[tuple]] = {}
         for label, variant, oid, name in node_variant_rows(layer_map):
             self.variants.setdefault(variant, []).append((label, oid, name))
-        if semantic:
-            rows = node_embedding_rows(layer_map)
-            self.emb_matrix = embed_batch([r["text"] for r in rows])
-            self.emb_nodes = [(r["label"], r["original_id"], r["name"])
-                              for r in rows]
+        rows = node_embedding_rows(layer_map)
+        self.emb_matrix = embed_batch([r["text"] for r in rows])
+        self.emb_nodes = [(r["label"], r["original_id"], r["name"])
+                          for r in rows]
         self._embed = embed_batch
 
     def _links_for(self, residue: dict) -> dict[tuple, tuple]:
@@ -232,13 +226,12 @@ class RowLinker:
                         (label, (oid or "").lower()), []).append(
                         (False, s, -1.0, value.lower(), "variant",
                          None, name, oid))
-                if self.semantic:
-                    sem_values.append((bucket, value))
-        if self.semantic and sem_values:
+                sem_values.append((bucket, value))
+        if sem_values:
             vecs = self._embed([v for _b, v in sem_values])
             sims = vecs @ self.emb_matrix.T
             for (bucket, value), row in zip(sem_values, sims):
-                for k in (row >= self.threshold).nonzero()[0]:
+                for k in (row >= SIM_THRESHOLD).nonzero()[0]:
                     label, oid, name = self.emb_nodes[int(k)]
                     s = 1.0 if bucket == label else 0.5
                     ss = round(float(row[k]), 4)
@@ -285,20 +278,14 @@ class RowLinker:
 def stream_evidence_pairs(pages_stream: DataFrame,
                           layer_map: dict[str, list[dict]],
                           canon_map: dict,
-                          predicate_map: dict | None = None,
-                          lang: str = "en",
-                          link: bool = True,
-                          semantic: bool = True,
-                          threshold: float | None = None) -> DataFrame:
+                          link: bool = True) -> DataFrame:
     """pages stream -> (subj, pred, obj, url, pair_score, justification):
     extract + mention + frozen-catalog linking + canonicalize + per-doc
     pairing in ONE row-local mapInPandas pass (works identically on a
     batch DataFrame).  ``link=False`` restores the mentions-only view."""
-    predicate_map = predicate_map or PREDICATE_MAP
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
-    linker = RowLinker(layer_map, semantic=semantic,
-                       threshold=threshold) if link else None
+    linker = RowLinker(layer_map) if link else None
     out_cols = [f.name for f in PAIR_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -313,20 +300,18 @@ def stream_evidence_pairs(pages_stream: DataFrame,
                     continue
                 residuals = linker.apply(results, residue) if linker else []
                 for (subj, pred, obj), (s, j) in _doc_pairs(
-                        results, canon_map, predicate_map,
+                        results, canon_map, PREDICATE_MAP,
                         residuals).items():
                     rows.append({"subj": subj, "pred": pred, "obj": obj,
                                  "url": url, "pair_score": s,
                                  "justification": j})
             yield pd.DataFrame(rows, columns=out_cols)
 
-    filtered = pages_stream.filter(F.col("lang") == lang) \
-        if lang is not None else pages_stream
-    return filtered.select("url", "html").mapInPandas(run, PAIR_SCHEMA)
+    return (pages_stream.filter(F.col("lang") == LANG)
+            .select("url", "html").mapInPandas(run, PAIR_SCHEMA))
 
 
-def stream_triples_live(pairs: DataFrame,
-                        max_sources: int = 64) -> DataFrame:
+def stream_triples_live(pairs: DataFrame) -> DataFrame:
     """Stateful streaming rollup of evidence pairs into live triples.
 
     Keyed by (subj, pred, obj); per-key state is bounded: (exact distinct
@@ -370,7 +355,7 @@ def stream_triples_live(pairs: DataFrame,
                 # (materialize._bj; subj_label already folded per url)
                 if (s, j is not None, url) > (bj_s, bj_has, bj_url):
                     bj_s, bj_has, bj_url, bj = s, j is not None, url, j
-            sources = sorted(set(sources) | seen_urls)[:max_sources]
+            sources = sorted(set(sources) | seen_urls)[:materialize.MAX_SOURCES]
 
         state.update((n, sources, score, bj_s, bj_has, bj_url, bj, replays))
         subj, pred, obj = key
@@ -393,26 +378,18 @@ def stream_triples_live(pairs: DataFrame,
 def kg_batch_step(pages_batch: DataFrame, batch_id: int,
                   layer_map: dict[str, list[dict]],
                   stats: DataFrame, df_table: DataFrame,
-                  canon: DataFrame, out_path: str,
-                  semantic: bool = True,
-                  threshold: float | None = None,
-                  lang: str = "en") -> None:
+                  canon: DataFrame, out_path: str) -> None:
     """One exact micro-batch of stages 2-5: mention -> ``link_stage``
     against the frozen BM25 globals -> evidence -> PARTIAL triple
     aggregate, appended under ``batch_id=<id>`` with dynamic partition
     overwrite (replaying the same batch_id rewrites its partition —
     exactly-once)."""
-    from ..config import SIM_THRESHOLD
-    threshold = SIM_THRESHOLD if threshold is None else threshold
-
-    filtered = (pages_batch.filter(F.col("lang") == lang)
-                if lang is not None else pages_batch)
     stage2 = mention.detect_mentions(
-        filtered.select("url", "html"), layer_map, from_html=True).persist()
+        pages_batch.filter(F.col("lang") == LANG).select("url", "html"),
+        layer_map, from_html=True).persist()
     # links is NOT persisted: the one partial write below consumes it
     merged, residual, _links = linking.link_stage(
-        stage2, stats, df_table, layer_map,
-        semantic=semantic, threshold=threshold)
+        stage2, stats, df_table, layer_map)
     ev = materialize.evidence_rows(merged, residual, canon)
     part = (materialize.partial_triples(ev)
             .withColumn("batch_id", F.lit(int(batch_id))))
@@ -433,17 +410,13 @@ def run_kg_stream(pages_stream: DataFrame,
                   stats: DataFrame, df_table: DataFrame,
                   canon: DataFrame, out_path: str,
                   checkpoint: str,
-                  semantic: bool = True,
-                  threshold: float | None = None,
-                  lang: str = "en",
                   available_now: bool = False):
     """Start the exact micro-batch KG pipeline over a pages stream.
     Returns the StreamingQuery; read the result with ``merged_triples``."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         kg_batch_step(batch_df, batch_id, layer_map, stats, df_table,
-                      canon, out_path, semantic=semantic,
-                      threshold=threshold, lang=lang)
+                      canon, out_path)
 
     writer = (pages_stream.writeStream.foreachBatch(step)
               .option("checkpointLocation", checkpoint))

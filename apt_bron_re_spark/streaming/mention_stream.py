@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import LANG
 from ..operators.extract import extract_text_udf
 from ..operators.mention import MENTION_SCHEMA, detect_mentions
 
@@ -36,14 +37,13 @@ def stream_pages(spark: SparkSession, path: str,
 
 
 def stream_mentions(pages_stream: DataFrame,
-                    layer_map: dict[str, list[dict]],
-                    lang: str = "en") -> DataFrame:
+                    layer_map: dict[str, list[dict]]) -> DataFrame:
     """extract -> mention on a streaming DataFrame (same UDFs as batch).
     The event time rides through the mention UDF (``event_time_col``) so no
     stream-stream join is needed downstream."""
     docs = (
         pages_stream
-        .filter(F.col("lang") == lang)
+        .filter(F.col("lang") == LANG)
         .select("url", "warc_ts",
                 extract_text_udf(F.col("html")).alias("text"))
     )

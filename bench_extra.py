@@ -27,15 +27,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from apt_bron_re_spark.queries import SPARK_QUERIES  # noqa: E402
-
-HEADLINE = [
-    "dict_first_mention", "bm25_terms", "cooccur_triples", "theta_join_sim",
-    "ann_topk", "tpch_q1", "orders_by_nation", "window_running",
-    "events_hourly", "part_revenue", "ngram_jaccard_dups", "quality_score",
-    "near_dup_pipeline", "near_dup_clusters", "minhash_dedup", "simhash_docs",
-    "shared_passages", "ann_lsh_topk", "ann_ivf_topk", "embedding_near_dups",
-    "connected_components", "lang_id_pred", "stratified_sample",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def _steal_s() -> float | None:

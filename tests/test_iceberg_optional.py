@@ -64,8 +64,8 @@ class _Writer:
         self.calls.append(("partitionedBy", [str(c) for c in cols]))
         return self
 
-    def create(self):
-        self.calls.append(("create",))
+    def createOrReplace(self):
+        self.calls.append(("createOrReplace",))
 
     def overwritePartitions(self):
         self.calls.append(("overwritePartitions",))
@@ -80,24 +80,23 @@ class _Frame:
 
 
 def test_iceberg_chunk_tables_partition_by_chunk_key(spark, layer_map,
-                                                     tmp_path, monkeypatch):
+                                                     tmp_path):
     """A chunk is a set of pbucket values, and later chunks replace their
     partitions with ``overwritePartitions``.  That is exact only if the
     table is partitioned by the chunk key itself: under Iceberg's
     ``bucket(n, url)`` (a different hash from Spark's pmod(hash(url), n))
     one chunk's rows touch most partitions, and each later chunk would
-    delete earlier chunks' rows."""
+    delete earlier chunks' rows.  The first chunk of a fresh stage
+    replaces the table whole with that spec, so a table left by a batch
+    run or an earlier fingerprint keeps no rows."""
     pipe = Pipeline(spark, layer_map, tmp_path, n_buckets=8,
                     catalog="ice.db")
-    exists = False
-    monkeypatch.setattr(spark.catalog, "tableExists", lambda _t: exists)
     for col in ("pbucket", "chunk_key"):
         df = _Frame()
-        pipe._write_buckets(df, "t", col)
+        pipe._replace_table(df, "t", col)
         assert df.calls == [("writeTo", "ice.db.t"), ("using", "iceberg"),
                             ("partitionedBy", [str(F.col(col))]),
-                            ("create",)]
-    exists = True
+                            ("createOrReplace",)]
     df = _Frame()
     pipe._write_buckets(df, "t")
     assert df.calls == [("writeTo", "ice.db.t"), ("overwritePartitions",)]

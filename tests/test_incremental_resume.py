@@ -60,9 +60,9 @@ def test_interrupt_and_resume_equals_single_shot(spark, layer_map,
 
 
 def _mention_fp(pipe):
-    from apt_bron_re_spark.config import NER_MATCH_SCORE
+    from apt_bron_re_spark.config import LANG, NER_MATCH_SCORE
     from apt_bron_re_spark.plans.lineage import fingerprint
-    fp0 = fingerprint(pipe._catalog_fp, pipe.lang, "extract")
+    fp0 = fingerprint(pipe._catalog_fp, LANG, "extract")
     return fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
 
 
@@ -142,3 +142,79 @@ def test_mention_chunk_rerun_after_commit_is_exactly_once(spark, layer_map,
     assert got_rows.count() == want_rows.count()
     assert rows_of(got_rows) == rows_of(want_rows)
     assert _triples_of(pb.run(pages, resume=True)) == want
+
+
+def _run_chunked(pipe, pages):
+    assert pipe.run_mention_incremental(pages, n_chunks=2) is True
+    assert pipe.run_link_incremental(n_chunks=2) is True
+    assert pipe.run_materialize_incremental(n_chunks=2) is True
+
+
+def _stage_rows(spark, base, name):
+    return sorted(repr(tuple(r))
+                  for r in spark.read.parquet(str(base / name)).collect())
+
+
+def test_chunked_rerun_under_new_fingerprint_keeps_no_stale_rows(
+        spark, layer_map, tmp_path_factory):
+    """A chunk overwrite replaces only the partitions its output touches,
+    so a bucket that comes out empty under a new fingerprint must not
+    keep the rows an earlier chunked (or batch) run wrote there."""
+    pages = pages_df(spark, N_PAGES)
+    lm_b = {k: v for k, v in layer_map.items()
+            if k not in ("technique", "software", "capec", "cwe")}
+
+    fresh = tmp_path_factory.mktemp("fp_fresh")
+    _run_chunked(Pipeline(spark, lm_b, fresh, n_buckets=32,
+                          fuse_extract=True), pages)
+    want = {name: _stage_rows(spark, fresh, name)
+            for name in ("links_residual", "linked", "triples")}
+
+    for first in ("chunked", "batch"):
+        base = tmp_path_factory.mktemp(f"fp_{first}")
+        pa = Pipeline(spark, layer_map, base, n_buckets=32,
+                      fuse_extract=True)
+        if first == "chunked":
+            _run_chunked(pa, pages)
+        else:
+            pa.run(pages)
+        _run_chunked(Pipeline(spark, lm_b, base, n_buckets=32,
+                              fuse_extract=True), pages)
+        for name, rows in want.items():
+            assert _stage_rows(spark, base, name) == rows, (first, name)
+
+
+def test_empty_residual_table_reads_back(spark, layer_map, tmp_path_factory):
+    """A catalog whose residues link to nothing writes a zero-row
+    ``links_residual``; the partitioned write leaves no data file, and the
+    batch and chunked runs must still read it back and finish."""
+    from apt_bron_re_spark.operators import bm25, linking, materialize, mention
+    from apt_bron_re_spark.operators.canonicalize import canonical_map
+
+    pages = pages_df(spark, N_PAGES)
+    lm = {"tactic": layer_map["tactic"]}
+
+    stage2 = mention.detect_mentions(
+        pages.filter(F.col("lang") == "en").select("url", "html"), lm,
+        from_html=True)
+    stats, df_ = bm25.bm25_global_stats(mention.mentions_view(stage2),
+                                        mention.doc_lengths_view(stage2))
+    merged, residual, _links = linking.link_stage(stage2, stats, df_, lm)
+    assert residual.count() == 0
+    want = _triples_of(materialize.materialize_triples(
+        materialize.evidence_rows(merged, residual,
+                                  canonical_map(spark, lm))))
+
+    batch = Pipeline(spark, lm, tmp_path_factory.mktemp("empty_batch"),
+                     n_buckets=8)
+    assert _triples_of(batch.run(pages)) == want
+    assert batch._read("links_residual").count() == 0
+
+    base = tmp_path_factory.mktemp("empty_chunked")
+    chunked = Pipeline(spark, lm, base, n_buckets=8, fuse_extract=True)
+    _run_chunked(chunked, pages)
+    assert _triples_of(chunked.triples()) == want
+    # a resume skips every stage and reads the empty tables back
+    lin_rows = chunked.log.metrics().count()
+    assert _triples_of(chunked.run(pages, resume=True)) == want
+    assert chunked.log.metrics().count() == lin_rows

@@ -58,7 +58,7 @@ def test_semantic_links_threshold(spark, residues, layer_map):
 
 
 def test_merge_links_max_score_and_residual(spark, residues, layer_map):
-    links = build_links(residues, layer_map, semantic=True)
+    links = build_links(residues, layer_map)
     mentions = spark.createDataFrame(
         [("u1", "group", "Crimson Mantis", "G0101", None, 5, None, None,
           None, None, None, 0.0, "s", 1.0)],
@@ -86,7 +86,7 @@ def test_merge_links_mention_keys_equivalent(spark, residues, layer_map):
     outputs identical to the default key derivation."""
     from pyspark.sql import functions as F
 
-    links = build_links(residues, layer_map, semantic=True)
+    links = build_links(residues, layer_map)
     mentions = spark.createDataFrame(
         [("u1", "group", "Crimson Mantis", "G0101", None, 5, None, None,
           None, None, None, 0.0, "s", 1.0),
