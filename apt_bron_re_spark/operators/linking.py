@@ -357,10 +357,10 @@ def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
     ``bm25.bm25_global_stats``, link generation over the residues, and the
     L6 merge.  Returns ``(merged, residual, links)``.
 
-    The one kernel behind the batch, bucket-chunked and streaming runs.
-    Scoring against GLOBAL stats is what keeps it exact on any url-subset
-    of the corpus (tf and dl are url-local; df/m/avgdl must not be
-    recomputed from a chunk or micro-batch, or idf comes out wrong).
+    The one kernel behind the batch and bucket-chunked runs.  Scoring
+    against GLOBAL stats is what keeps it exact on any url-subset of the
+    corpus (tf and dl are url-local; df/m/avgdl must not be recomputed
+    from a chunk, or idf comes out wrong).
 
     Partitioning: when ``stage_rows`` is hash-partitioned by url (the
     batch run repartitions the table once), the mention, residue and
@@ -374,9 +374,7 @@ def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
 
     ``links`` is the subplan both outputs read.  The batch run, which
     writes them in two concurrent jobs, persists it and unpersists it once
-    both writes commit; the chunked and streaming runs leave it uncached
-    (in the streaming step one job consumes both, so a cache would only
-    add a stage barrier)."""
+    both writes commit; the chunked run leaves it uncached."""
     m = mention.mentions_view(stage_rows)
     dls = mention.doc_lengths_view(stage_rows)
     scored, passthrough = bm25.add_bm25_frozen_split(m, dls, stats, df_table)

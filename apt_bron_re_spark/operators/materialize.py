@@ -185,14 +185,16 @@ def _pairs(evn: DataFrame) -> DataFrame:
     )
 
 
-def _bj():
+def _bj(*payload):
     """Best-evidence KEY aggregate per triple: (score, has-sentence, url,
     subj_label) — the justification attaches by key after aggregation,
-    never rides it."""
+    never rides it.  ``payload`` columns ride after the key; they never
+    decide a comparison when a triple has at most one pair row per url."""
     return F.max(F.struct(F.col("pair_score").alias("s"),
                           F.col("subj_has_s").alias("has_s"),
                           F.col("url"),
-                          F.col("subj_label")))
+                          F.col("subj_label"),
+                          *payload))
 
 
 def _attach_justification(agg: DataFrame, ev_sent: DataFrame,
@@ -229,9 +231,21 @@ def _attach_justification(agg: DataFrame, ev_sent: DataFrame,
 def _triple_aggregate(ev: DataFrame, max_sources: int, n_salts: int,
                       partitions: int | None,
                       round_score: bool) -> DataFrame:
-    """The salted two-phase triple aggregation shared by
-    ``materialize_triples`` and ``partial_triples``: (subj, pred, obj,
-    sources, n_sources, bj, score, justification).
+    """Evidence -> (subj, pred, obj, sources, n_sources, bj, score,
+    justification) for ``materialize_triples`` and ``partial_triples``:
+    the narrow evidence is paired, aggregated by ``_salted_aggregate`` and
+    the justification attached by the best-evidence key."""
+    pairs = _pairs(_narrow_evidence(ev, partitions))
+    agg = _salted_aggregate(pairs, _bj(), max_sources, n_salts, round_score)
+    return _attach_justification(agg, _evidence_sentences(ev))
+
+
+def _salted_aggregate(pairs: DataFrame, bj, max_sources: int, n_salts: int,
+                      round_score: bool) -> DataFrame:
+    """The salted two-phase triple aggregation over evidence pairs (subj,
+    pred, obj, url, subj_label, pair_score, subj_has_s): (subj, pred, obj,
+    sources, n_sources, bj, score), ``bj`` being the per-salt ``_bj``
+    aggregate it is handed.
 
     Hub-entity skew handling (north_rule "salted skew handling"): at
     10^12-doc scale a hub edge's source set has millions of urls, so a
@@ -248,9 +262,7 @@ def _triple_aggregate(ev: DataFrame, max_sources: int, n_salts: int,
     deterministic and bounded.  ``n_sources`` carries the exact distinct
     source count (algebraic, skew-safe).  The best-justification argmax is
     equally salted (max of a max is the max) and carries only the
-    evidence KEY; the sentence attaches at the end (module docstring)."""
-    pairs = _pairs(_narrow_evidence(ev, partitions))
-
+    evidence KEY; the sentence attaches afterwards (module docstring)."""
     per_salt = (
         pairs
         .withColumn("salt", F.pmod(F.crc32("url"), F.lit(n_salts)))
@@ -259,13 +271,13 @@ def _triple_aggregate(ev: DataFrame, max_sources: int, n_salts: int,
             F.slice(F.sort_array(F.collect_set("url")), 1, max_sources)
              .alias("salt_sources"),
             F.countDistinct("url").alias("salt_n"),
-            _bj().alias("bj"),
+            bj.alias("bj"),
             F.max("pair_score").alias("salt_score"),
         )
     )
 
     score = F.max("salt_score")
-    agg = (
+    return (
         per_salt.groupBy("subj", "pred", "obj")
         .agg(
             F.slice(
@@ -277,7 +289,6 @@ def _triple_aggregate(ev: DataFrame, max_sources: int, n_salts: int,
             (F.round(score, 4) if round_score else score).alias("score"),
         )
     )
-    return _attach_justification(agg, _evidence_sentences(ev))
 
 
 def materialize_triples(ev: DataFrame,
@@ -313,15 +324,35 @@ def partial_triples(ev: DataFrame,
     """
     with_j = _triple_aggregate(ev, MAX_SOURCES, N_SALTS, partitions,
                                round_score=False)
-    return with_j.select(
+    return _as_partial(with_j, F.struct(
+        F.col("bj.s").alias("s"),
+        F.col("bj.has_s").alias("has_s"),
+        F.col("bj.url").alias("url"),
+        F.col("bj.subj_label").alias("subj_label"),
+        F.col("justification").alias("justification")))
+
+
+def partial_triples_of_pairs(pairs: DataFrame) -> DataFrame:
+    """``partial_triples`` over evidence PAIRS that are already folded per
+    url: (subj, pred, obj, url, subj_label, pair_score, justification),
+    at most one row per (triple, url) — the output of the row-local
+    pairing kernel ``streaming.kg_stream.stream_evidence_pairs``.  Same
+    salted aggregate, same output schema; the justification is the winning
+    pair's own, so it rides the best-evidence key as a payload instead of
+    being joined back."""
+    agg = _salted_aggregate(
+        pairs.withColumn("subj_has_s", F.col("justification").isNotNull()),
+        _bj(F.col("justification")), MAX_SOURCES, N_SALTS, round_score=False)
+    return _as_partial(agg, F.col("bj"))
+
+
+def _as_partial(agg: DataFrame, part_bj) -> DataFrame:
+    """The partial-aggregate schema ``merge_partial_triples`` reads."""
+    return agg.select(
         "subj", "pred", "obj",
         F.col("sources").alias("part_sources"),
         F.col("n_sources").alias("part_n"),
-        F.struct(F.col("bj.s").alias("s"),
-                 F.col("bj.has_s").alias("has_s"),
-                 F.col("bj.url").alias("url"),
-                 F.col("bj.subj_label").alias("subj_label"),
-                 F.col("justification").alias("justification")).alias("part_bj"),
+        part_bj.alias("part_bj"),
         F.col("score").alias("part_score"))
 
 

@@ -26,15 +26,16 @@ in-place file rewrites — SURVEY.md §3):
                      partitioned by pred (S10)
 
 The link stage (BM25 -> L2-L5 links -> L6 merge) is ONE kernel,
-``operators.linking.link_stage``, behind three execution wrappers: ``run``
-(the whole table, repartitioned by url once, BM25 globals inline),
-``run_link_incremental`` (one call per bucket chunk) and
-``streaming.kg_stream.kg_batch_step`` (one call per micro-batch).  The
-kernel scores against the global BM25 (stats, df) it is handed, so the
-chunked and streaming wrappers freeze those once from the whole corpus;
-per-chunk stats would give wrong idf.  The ``run_*_incremental`` stages
-share one chunk loop (``_run_chunks``): exactly-once per-partition writes
-plus per-bucket lineage.
+``operators.linking.link_stage``, behind two execution wrappers: ``run``
+(the whole table, repartitioned by url once, BM25 globals inline) and
+``run_link_incremental`` (one call per bucket chunk).  The kernel scores
+against the global BM25 (stats, df) it is handed, so the chunked wrapper
+freezes those once from the whole corpus; per-chunk stats would give
+wrong idf.  (The streaming micro-batch step,
+``streaming.kg_stream.kg_batch_step``, runs stages 2-5 row-locally
+instead.)  The ``run_*_incremental`` stages share one chunk loop
+(``_run_chunks``): exactly-once per-partition writes plus per-bucket
+lineage.
 """
 
 from __future__ import annotations

@@ -1,33 +1,34 @@
-"""Streaming KG construction — stages 3-5 over arriving pages.
+"""Streaming KG construction — stages 2-5 over arriving pages.
 
 The reference is a pure batch pipeline (SURVEY.md §1.3), but a
 Common-Crawl-scale deployment ingests pages continuously.  Two streaming
 execution shapes, both reusing the batch operators:
 
 1. **Exact micro-batch pipeline** (``run_kg_stream``): foreachBatch runs
-   the REAL stage 3-5 logic (BM25 scoring against FROZEN global stats,
-   variant+semantic linking, evidence, salted partial triple aggregation)
-   on every micro-batch and appends an exact partial aggregate partitioned
-   by ``batch_id``.  The partials merge associatively
-   (operators/materialize.py ``partial_triples``/``merge_partial_triples``
-   — correct because a page's url lives in exactly one micro-batch, the
-   same url-disjointness that makes the batch incremental chunks exact),
-   so ``merged_triples`` equals the single-shot batch pipeline EXACTLY
-   (pytest-pinned).  Idempotence: a foreachBatch replay after failure
-   reuses the same ``batch_id``; dynamic partition overwrite rewrites that
-   partition instead of appending duplicates — the same exactly-once
-   mechanism as plans/pipeline.py ``_write_buckets``.
-
-   The link stage is the batch kernel, ``linking.link_stage``, called once
-   per micro-batch.  Its BM25 globals (m, avgdl, df) must be frozen from a
-   corpus snapshot and passed in — the kernel's contract, shared with the
-   chunked batch link stage: naive per-batch stats would compute wrong
-   idf.
+   stages 2-5 on every micro-batch as ONE row-local pass, the pairing
+   kernel of shape 2 (``stream_evidence_pairs``: extract, mentions,
+   frozen-catalog links, canon lookup and per-url pairing in one
+   url-clustered ``mapInPandas``), then the salted partial triple
+   aggregate (operators/materialize.py ``partial_triples_of_pairs``), and
+   appends it partitioned by ``batch_id``.  A micro-batch is six Spark
+   jobs: the canon collect, the url exchange, the three exchanges of the
+   aggregate (its first phase counts distinct urls) and the write.  The
+   partials merge associatively
+   (``merge_partial_triples`` — correct because a page's url lives in
+   exactly one micro-batch, the same url-disjointness that makes the
+   batch incremental chunks exact), so ``merged_triples`` equals the
+   single-shot batch pipeline EXACTLY (pytest-pinned).  No BM25 runs
+   here: evidence scores never read it.  Idempotence: a foreachBatch
+   replay after failure reuses the same ``batch_id``; dynamic partition
+   overwrite rewrites that partition instead of appending duplicates —
+   the same exactly-once mechanism as plans/pipeline.py
+   ``_write_buckets``.
 
 2. **Live triple view** (``stream_evidence_pairs`` + ``stream_triples_live``):
-   a fully streaming stateful rollup.  Per-document evidence pairing runs
-   row-locally inside one ``mapInPandas`` (a page's mentions never leave
-   the task — zero shuffle before the keyed state), then
+   a fully streaming stateful rollup.  Per-url evidence pairing runs
+   row-locally inside one ``mapInPandas`` after one ``repartition(url)``
+   (every page row of a url lands in one task and is merged there before
+   linking and pairing, as the batch link stage merges them), then
    ``applyInPandasWithState`` keyed by (subj, pred, obj) maintains BOUNDED
    per-key state: exact distinct-source count, the k lexicographically
    smallest source urls, the best-scored justification, and the max score
@@ -70,7 +71,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..catalog.build import compile_catalog
 from ..config import LANG, PREDICATE_MAP, SIM_THRESHOLD
 from ..functions.extract_text import extract_text
-from ..operators import linking, materialize, mention
+from ..operators import materialize
 from ..operators.canonicalize import canonical_map
 from ..operators.doc_core import NerTagger, process_document
 
@@ -79,6 +80,7 @@ PAIR_SCHEMA = T.StructType([
     T.StructField("pred", T.StringType(), False),
     T.StructField("obj", T.StringType(), False),
     T.StructField("url", T.StringType(), False),
+    T.StructField("subj_label", T.StringType(), False),
     T.StructField("pair_score", T.DoubleType(), False),
     T.StructField("justification", T.StringType(), True),
 ])
@@ -113,8 +115,12 @@ def canon_as_dict(spark: SparkSession,
                   layer_map: dict[str, list[dict]]) -> dict:
     """{(label, original_id): canon_id} — the catalog-sized canonical map
     (stage 4 output), collected once for closure broadcast."""
+    return _collect_canon(canonical_map(spark, layer_map))
+
+
+def _collect_canon(canon: DataFrame) -> dict:
     return {(r["label"], r["original_id"]): r["canon_id"]
-            for r in canonical_map(spark, layer_map).collect()}
+            for r in canon.collect()}
 
 
 def _sent_key(score: float, sentence: str | None) -> tuple:
@@ -130,10 +136,11 @@ def _doc_pairs(results: dict, canon_map: dict,
     """Per-document evidence pairing — the row-local twin of
     materialize.evidence_rows + the pairing join in materialize_triples,
     restricted to one url.  Returns {(subj, pred, obj): (pair_score,
-    justification)} with the per-url max already folded by the batch
-    tie-break order (pair_score, has_sentence, url[=const here],
+    justification, subj_label)} with the per-url max already folded by
+    the batch tie-break order (pair_score, has_sentence, url[=const here],
     subj_label) — associative with the cross-url aggregation in
-    ``stream_triples_live``, so the global result is unchanged."""
+    ``stream_triples_live`` and ``materialize.partial_triples_of_pairs``,
+    so the global result is unchanged."""
     def evidence():
         for label, entries in results.items():
             for ent in entries:
@@ -177,7 +184,7 @@ def _doc_pairs(results: dict, canon_map: dict,
                 # carries the max pair_score for the (triple, url) fold
                 ck = (pair_score, s_sent is not None, subj_label)
                 if key not in pairs or ck > cand_keys[key]:
-                    pairs[key] = (pair_score, s_sent)
+                    pairs[key] = (pair_score, s_sent, subj_label)
                     cand_keys[key] = ck
     return pairs
 
@@ -279,36 +286,50 @@ def stream_evidence_pairs(pages_stream: DataFrame,
                           layer_map: dict[str, list[dict]],
                           canon_map: dict,
                           link: bool = True) -> DataFrame:
-    """pages stream -> (subj, pred, obj, url, pair_score, justification):
-    extract + mention + frozen-catalog linking + canonicalize + per-doc
-    pairing in ONE row-local mapInPandas pass (works identically on a
-    batch DataFrame).  ``link=False`` restores the mentions-only view."""
+    """pages stream -> (subj, pred, obj, url, subj_label, pair_score,
+    justification), at most one row per (triple, url): extract + mention
+    + frozen-catalog linking + canonicalize + per-url pairing in ONE
+    row-local mapInPandas pass (works identically on a batch DataFrame).
+    ``link=False`` restores the mentions-only view.
+
+    Exact per url, like the batch link stage: one ``repartition(url)``
+    puts every page row of a url in one task, which merges their
+    ``process_document`` outputs (mentions and residues) before linking
+    and pairing.  So the task holds its partition's per-doc outputs until
+    its input is drained."""
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
     linker = RowLinker(layer_map) if link else None
     out_cols = [f.name for f in PAIR_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        docs: dict[str, tuple[dict, dict]] = {}
         for pdf in batches:
-            rows: list[dict] = []
             for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text(html)
                 try:
-                    results, residue, _dl = process_document(
-                        text, catalog, tagger)
+                    doc = process_document(extract_text(html), catalog,
+                                           tagger)[:2]
                 except Exception:  # reference catch-and-log per doc
                     continue
-                residuals = linker.apply(results, residue) if linker else []
-                for (subj, pred, obj), (s, j) in _doc_pairs(
-                        results, canon_map, PREDICATE_MAP,
-                        residuals).items():
-                    rows.append({"subj": subj, "pred": pred, "obj": obj,
-                                 "url": url, "pair_score": s,
-                                 "justification": j})
-            yield pd.DataFrame(rows, columns=out_cols)
+                if url not in docs:
+                    docs[url] = doc
+                    continue
+                for merged, part in zip(docs[url], doc):
+                    for key, values in part.items():
+                        merged.setdefault(key, []).extend(values)
+        rows: list[dict] = []
+        for url, (results, residue) in docs.items():
+            residuals = linker.apply(results, residue) if linker else []
+            for (subj, pred, obj), (s, j, subj_label) in _doc_pairs(
+                    results, canon_map, PREDICATE_MAP, residuals).items():
+                rows.append({"subj": subj, "pred": pred, "obj": obj,
+                             "url": url, "subj_label": subj_label,
+                             "pair_score": s, "justification": j})
+        yield pd.DataFrame(rows, columns=out_cols)
 
     return (pages_stream.filter(F.col("lang") == LANG)
-            .select("url", "html").mapInPandas(run, PAIR_SCHEMA))
+            .select("url", "html").repartition("url")
+            .mapInPandas(run, PAIR_SCHEMA))
 
 
 def stream_triples_live(pairs: DataFrame) -> DataFrame:
@@ -318,7 +339,9 @@ def stream_triples_live(pairs: DataFrame) -> DataFrame:
     source count, k-smallest source urls, max score, best justification).
     Assumes each url arrives in exactly one micro-batch (file-drop / log
     semantics — the same url-disjointness the batch incremental chunks
-    rely on); duplicate urls *within* a batch are deduped exactly.
+    rely on).  Page rows sharing a url *within* a micro-batch are merged
+    by ``stream_evidence_pairs`` before pairing, as in batch, so each url
+    reaches a key here at most once per trigger.
     Emits the updated triple row per key per trigger (update mode)."""
 
     def update(key: tuple, pdfs: Iterator[pd.DataFrame],
@@ -372,26 +395,27 @@ def stream_triples_live(pairs: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Shape 1: exact micro-batch pipeline (stages 3-5 in foreachBatch)
+# Shape 1: exact micro-batch pipeline (stages 2-5 in foreachBatch)
 # --------------------------------------------------------------------------
+
+def batch_partials(pages_batch: DataFrame,
+                   layer_map: dict[str, list[dict]],
+                   canon: DataFrame) -> DataFrame:
+    """The PARTIAL triple aggregate of one micro-batch of pages: the
+    row-local pairing kernel against the frozen catalog and the ``canon``
+    table, then ``materialize.partial_triples_of_pairs``."""
+    pairs = stream_evidence_pairs(pages_batch, layer_map,
+                                  _collect_canon(canon))
+    return materialize.partial_triples_of_pairs(pairs)
+
 
 def kg_batch_step(pages_batch: DataFrame, batch_id: int,
                   layer_map: dict[str, list[dict]],
-                  stats: DataFrame, df_table: DataFrame,
                   canon: DataFrame, out_path: str) -> None:
-    """One exact micro-batch of stages 2-5: mention -> ``link_stage``
-    against the frozen BM25 globals -> evidence -> PARTIAL triple
-    aggregate, appended under ``batch_id=<id>`` with dynamic partition
-    overwrite (replaying the same batch_id rewrites its partition —
-    exactly-once)."""
-    stage2 = mention.detect_mentions(
-        pages_batch.filter(F.col("lang") == LANG).select("url", "html"),
-        layer_map, from_html=True).persist()
-    # links is NOT persisted: the one partial write below consumes it
-    merged, residual, _links = linking.link_stage(
-        stage2, stats, df_table, layer_map)
-    ev = materialize.evidence_rows(merged, residual, canon)
-    part = (materialize.partial_triples(ev)
+    """One exact micro-batch of stages 2-5 (``batch_partials``), appended
+    under ``batch_id=<id>`` with dynamic partition overwrite (replaying
+    the same batch_id rewrites its partition — exactly-once)."""
+    part = (batch_partials(pages_batch, layer_map, canon)
             .withColumn("batch_id", F.lit(int(batch_id))))
     # NOT repartition(batch_id): batch_id is constant per micro-batch, so
     # hashing it funnels every row into ONE task — the serial-tail class
@@ -402,7 +426,6 @@ def kg_batch_step(pages_batch: DataFrame, batch_id: int,
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("batch_id")
      .parquet(out_path))
-    stage2.unpersist()
 
 
 def run_kg_stream(pages_stream: DataFrame,
@@ -412,11 +435,14 @@ def run_kg_stream(pages_stream: DataFrame,
                   checkpoint: str,
                   available_now: bool = False):
     """Start the exact micro-batch KG pipeline over a pages stream.
-    Returns the StreamingQuery; read the result with ``merged_triples``."""
+    Returns the StreamingQuery; read the result with ``merged_triples``.
+
+    ``stats`` and ``df_table`` (frozen BM25 globals) are unused: the step
+    computes no BM25, since evidence scores never read it.  They stay in
+    the signature for callers that pass them by position."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        kg_batch_step(batch_df, batch_id, layer_map, stats, df_table,
-                      canon, out_path)
+        kg_batch_step(batch_df, batch_id, layer_map, canon, out_path)
 
     writer = (pages_stream.writeStream.foreachBatch(step)
               .option("checkpointLocation", checkpoint))

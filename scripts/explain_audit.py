@@ -317,6 +317,19 @@ def main() -> None:
         ["ONE_PINNED_OK"],
         [],
     ))
+
+    # 22b. streaming micro-batch step: the partial aggregate kg_batch_step
+    # writes.  Stages 2-5 are ONE url-clustered MapInPandas (extract,
+    # mentions, links, canon lookup, pairing) — no cached mention table,
+    # no join of any kind before the salted aggregate
+    from apt_bron_re_spark.streaming.kg_stream import batch_partials
+    p = plan_of(batch_partials(pages_pq, lm, canon))
+    checks.append((
+        "kg_batch_step (one url-clustered row-local pass + salted partial "
+        "aggregate)", p,
+        ["MapInPandas", "REPARTITION_BY_COL"],
+        ["InMemoryTableScan", "BroadcastNestedLoopJoin", "ShuffledHashJoin"],
+    ))
     shutil.rmtree(td, ignore_errors=True)
 
     # 23. stratified_sample: scan-local hash-threshold filter — the whole

@@ -8,7 +8,8 @@ Two parity pins over the same multi-trigger stream of synthetic pages:
   materialize_triples(evidence_rows(mentions, None, canon)), EXACTLY.
 
 Plus an exactly-once check: replaying a micro-batch with the same
-batch_id leaves the merged result unchanged.
+batch_id leaves the merged result unchanged, parity on a stream whose
+urls repeat within one trigger, and the micro-batch step's job count.
 """
 
 import pytest
@@ -112,23 +113,43 @@ def test_foreachbatch_pipeline_equals_batch(spark, layer_map, pages_path,
 
 
 def test_batch_step_replay_is_idempotent(spark, layer_map, pages_path,
-                                         frozen_stats, canon_df,
-                                         tmp_path_factory):
+                                         canon_df, tmp_path_factory):
     """foreachBatch replay semantics: running the SAME micro-batch with the
     same batch_id twice rewrites its partition (dynamic partition
     overwrite) instead of appending duplicates."""
-    stats, df_ = frozen_stats
     out = str(tmp_path_factory.mktemp("kg_replay_out"))
     micro = spark.read.parquet(pages_path).filter(
         F.pmod(F.crc32("url"), F.lit(2)) == 0)
 
-    kg_batch_step(micro, 7, layer_map, stats, df_, canon_df, out)
+    kg_batch_step(micro, 7, layer_map, canon_df, out)
     once = _canon_rows(merged_triples(spark, out))
     n_once = spark.read.parquet(out).count()
 
-    kg_batch_step(micro, 7, layer_map, stats, df_, canon_df, out)  # replay
+    kg_batch_step(micro, 7, layer_map, canon_df, out)  # replay
     assert _canon_rows(merged_triples(spark, out)) == once
     assert spark.read.parquet(out).count() == n_once
+
+
+def test_batch_step_runs_few_jobs(spark, layer_map, pages_path, canon_df,
+                                  tmp_path_factory):
+    """One micro-batch step is one row-local pass plus the partial
+    aggregate: at most 8 Spark jobs (under AQE, one per exchange, plus
+    the canon collect and the write)."""
+    out = str(tmp_path_factory.mktemp("kg_jobs_out"))
+    micro = spark.read.parquet(pages_path).filter(
+        F.pmod(F.crc32("url"), F.lit(3)) == 0)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "kg_batch_step_jobs"
+    sc.setJobGroup(group, "job count of one micro-batch step")
+    try:
+        before = set(tracker.getJobIdsForGroup(group))
+        kg_batch_step(micro, 0, layer_map, canon_df, out)
+        started = set(tracker.getJobIdsForGroup(group)) - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(started) <= 8, sorted(started)
 
 
 def test_live_view_equals_batch_mention_triples(spark, layer_map,
@@ -242,6 +263,52 @@ def test_live_view_replay_guard(spark, layer_map, pages_path, canon_df,
     assert any(r["replays_detected"] > 0 for r in final.values())
 
 
+def test_duplicate_urls_within_a_trigger_equal_batch(
+        spark, layer_map, canon_df, tmp_path_factory):
+    """Pages 50-59 reuse the urls of pages 0-9 with other content, in the
+    same trigger.  Batch merges every page row of a url before linking
+    and pairing; the micro-batch pipeline and the live view must too."""
+    from apt_bron_re_spark.plans.pipeline import Pipeline
+    from apt_bron_re_spark.sources.pages import generate_page
+    from apt_bron_re_spark.streaming.mention_stream import PAGE_DDL
+
+    rows = [generate_page(i, 1) for i in range(60)]
+    for i in range(50, 60):
+        rows[i]["url"] = rows[i - 50]["url"]
+    cols = [c.split()[0] for c in PAGE_DDL.split(", ")]
+    pages = spark.createDataFrame([tuple(r[c] for c in cols) for r in rows],
+                                  PAGE_DDL)
+    # two files, two triggers; every repeated url shares the first one
+    path = str(tmp_path_factory.mktemp("kg_pages_dup_urls") / "p")
+    first = F.col("url").isin([r["url"] for r in rows[:30]])
+    pages.filter(first).coalesce(1).write.parquet(path)
+    pages.filter(~first).coalesce(1).write.mode("append").parquet(path)
+
+    want = _canon_rows(Pipeline(
+        spark, layer_map, str(tmp_path_factory.mktemp("kg_dup_batch")),
+        n_buckets=8, fuse_extract=True).run(pages, resume=False))
+
+    out = str(tmp_path_factory.mktemp("kg_dup_out"))
+    q = run_kg_stream(_stream_pages(spark, path), layer_map, None, None,
+                      canon_df, out,
+                      str(tmp_path_factory.mktemp("kg_dup_ckpt")),
+                      available_now=True)
+    q.awaitTermination(600)
+    assert spark.read.parquet(out).select("batch_id").distinct().count() == 2
+    assert _canon_rows(merged_triples(spark, out)) == want
+
+    pairs = stream_evidence_pairs(_stream_pages(spark, path), layer_map,
+                                  canon_as_dict(spark, layer_map))
+    final = _drain_live(spark, stream_triples_live(pairs), str(
+        tmp_path_factory.mktemp("live_dup_urls_ckpt")), "live_dup_urls")
+    got = sorted(
+        (k[0], k[1], k[2], tuple(r["sources"]), r["n_sources"],
+         r["justification"], r["score"])
+        for k, r in final.items())
+    assert got == want
+    assert all(r["replays_detected"] == 0 for r in final.values())
+
+
 def test_row_linker_score_is_max_over_candidates(spark, layer_map):
     """RowLinker must report max(link_ner_score) over ALL of a key's
     candidates — mirroring batch best_links' SEPARATE F.max aggregate —
@@ -302,4 +369,4 @@ def test_doc_pairs_pure_function(layer_map):
         ],
     }
     pairs = _doc_pairs(results, {}, {("group", "technique"): "uses"})
-    assert pairs == {("G1", "uses", "T1"): (0.5, "abd")}
+    assert pairs == {("G1", "uses", "T1"): (0.5, "abd", "group")}
