@@ -12,14 +12,16 @@ m = number of corpus documents, dl = \\b\\w+\\b token count of the doc.
 
 Spark mapping: dl is a native expression over docs; tf and df are classic
 partial+final hash aggregations; (m, avgdl) is a 1-row aggregate broadcast
-back via crossJoin — so the whole thing is two shuffles (tf keyed by
-(category,url,key); df keyed by (category,key)) and broadcast joins back.
-No Python in the hot path.
+back — so the whole thing is two shuffles (tf keyed by (category,url,key);
+df keyed by (category,key)) and broadcast joins back.  The pipeline's link
+stage takes tf and dl from its url-local kernel instead
+(``score_frozen``); both paths evaluate the one score expression,
+``_score``.  No Python computes a score.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, BM25_LABELS
@@ -41,7 +43,7 @@ def doc_lengths(docs: DataFrame) -> DataFrame:
     return docs.select("url", (collapsed - removed).cast("int").alias("dl"))
 
 
-def _bm25_key():
+def bm25_key():
     """The BM25 term key: lower(original_id or name) (statistics.py:46)."""
     return F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
 
@@ -51,7 +53,7 @@ def _term_freqs(scored: DataFrame) -> DataFrame:
     mention rows (context sentences) are never shuffled for statistics.
     tf counts hit entries after dedup, like the reference counting entries
     in the deduped hit files (statistics.py:37-40)."""
-    return (scored.select("category", "url", _bm25_key().alias("bm25_key"))
+    return (scored.select("category", "url", bm25_key().alias("bm25_key"))
             .groupBy("category", "url", "bm25_key")
             .agg(F.count("*").alias("f")))
 
@@ -68,6 +70,40 @@ def bm25_global_stats(mentions: DataFrame, dls: DataFrame
     tf = _term_freqs(mentions.filter(F.col("category").isin(BM25_LABELS)))
     df_ = tf.groupBy("category", "bm25_key").agg(F.count("*").alias("n"))
     return stats, df_
+
+
+def _score(f: Column, n: Column, dl: Column, m: Column,
+           avgdl: Column) -> Column:
+    """The BM25 score of a term with frequency ``f`` in a doc of length
+    ``dl`` (the corpus mean ``avgdl`` where null), the term in ``n`` of
+    ``m`` docs: the formula of the module docstring, 0.0 where its
+    denominator is 0.  The one copy of the formula."""
+    dl = F.coalesce(dl, avgdl)
+    idf = F.log((m - n + 0.5) / (n + 0.5) + 1.0)
+    denom = f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
+    return (F.when(denom != 0.0,
+                   F.round(idf * (f * (BM25_K1 + 1.0)) / denom, 4))
+            .otherwise(F.lit(0.0)))
+
+
+def score_frozen(rows: DataFrame, stats: DataFrame,
+                 df_table: DataFrame) -> DataFrame:
+    """Attach ``bm25_score`` to rows that carry their BM25 inputs
+    (``category``, ``bm25_key``, the term frequency ``f`` and the doc
+    length ``dl``, as ``linking.link_rows`` emits them), against FROZEN
+    global stats (``bm25_global_stats``).  Null where ``bm25_key`` is null
+    (the passthrough labels) or has no df row, as in
+    ``add_bm25_frozen_split``.
+
+    The df table is a broadcast hash join; (m, avgdl) enter as one scalar
+    subquery, so the rows' partitioning survives and no nested-loop join
+    is planned."""
+    g = stats.select(F.struct("m", "avgdl")).scalar()
+    return (rows.join(F.broadcast(df_table), ["category", "bm25_key"], "left")
+            .withColumn("bm25_score",
+                        F.when(F.col("n").isNotNull(),
+                               _score(F.col("f"), F.col("n"), F.col("dl"),
+                                      g["m"], g["avgdl"]))))
 
 
 def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
@@ -87,8 +123,8 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
     df/stats joins are broadcast, and the score join keys include url on
     both sides — so the whole scoring pass adds zero exchanges and the
     caller can keep the two branches separate (a union would erase the
-    partitioning, which is why ``linking.link_stage`` unions only at the
-    very end)."""
+    partitioning, which is why ``linking.merge_links_split`` keeps them
+    apart)."""
     scored = mentions.filter(F.col("category").isin(BM25_LABELS))
     passthrough = mentions.filter(~F.col("category").isin(BM25_LABELS))
     tf = _term_freqs(scored)
@@ -99,20 +135,9 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
         tf.join(F.broadcast(df_table), ["category", "bm25_key"])
         .join(dls.hint("shuffle_hash"), ["url"], "left")
         .crossJoin(F.broadcast(stats))
-        .withColumn("dl", F.coalesce(F.col("dl"), F.col("avgdl")))
-        .withColumn(
-            "idf",
-            F.log((F.col("m") - F.col("n") + 0.5) / (F.col("n") + 0.5) + 1.0))
-        .withColumn(
-            "denom",
-            F.col("f") + BM25_K1 * (1.0 - BM25_B
-                                    + BM25_B * F.col("dl") / F.col("avgdl")))
-        .select(
-            "category", "url", "bm25_key",
-            F.when(F.col("denom") != 0.0,
-                   F.round(F.col("idf") * (F.col("f") * (BM25_K1 + 1.0))
-                           / F.col("denom"), 4))
-            .otherwise(F.lit(0.0)).alias("bm25_score"))
+        .select("category", "url", "bm25_key",
+                _score(*map(F.col, ("f", "n", "dl", "m", "avgdl")))
+                .alias("bm25_score"))
     )
     # shuffle_hash, not sort-merge: the LEFT stream is the wide mention
     # rows (sentences) — an SMJ would SORT them, a per-partition O(n log n)
@@ -122,7 +147,7 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
     # Under matching url partitioning the join stays exchange-free either
     # way; the hint only removes the sorts.
     out = (
-        scored.withColumn("bm25_key", _bm25_key())
+        scored.withColumn("bm25_key", bm25_key())
         .join(score_table.hint("shuffle_hash"),
               ["category", "url", "bm25_key"], "left")
         .drop("bm25_key")

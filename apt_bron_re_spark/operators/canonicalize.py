@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 # Folded into the canonicalize-stage fingerprint (plans/pipeline.py _fps):
 # a change to the canonicalization ALGORITHM invalidates stage tables built
 # by older code on resume — the catalog fingerprint alone cannot see code
@@ -98,8 +100,8 @@ def connected_components(edges: DataFrame,
                  .limit(driver_max_edges + 1).collect())
         if len(probe) <= driver_max_edges:
             rows = _union_find_components([(r["a"], r["b"]) for r in probe])
-            return edges.sparkSession.createDataFrame(
-                rows, "id string, component string")
+            return local_table(edges.sparkSession, rows,
+                               "id string, component string")
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
@@ -236,8 +238,8 @@ def canonical_map(spark, layer_map: dict[str, list[dict]]) -> DataFrame:
     """
     edge_list = alias_edges(layer_map)
     if len(edge_list) <= DRIVER_CC_MAX_EDGES:
-        return spark.createDataFrame(
-            _driver_canon_rows(edge_list),
+        return local_table(
+            spark, _driver_canon_rows(edge_list),
             "label string, original_id string, canon_id string")
     edges = spark.createDataFrame(edge_list, "src string, dst string")
     # id <-> surface bipartite graph: component diameter <= ~8 even with

@@ -13,12 +13,24 @@ three ways and merged back into the mention table:
   L6  merge into mentions keyed by (url, label, lower(original_id)):
       annotate + NER_score = max(old, link)          (ner.py:281-339)
 
-Spark mapping: L2/L3 are ONE broadcast hash equi-join against the exploded
-variant catalog (small: ~6 variants x catalog nodes; the score is a CASE on
-label equality).  L4 is a broadcast nested-loop θ-join executed as a
-vectorized pandas UDF over the residue values (numpy matmul against the
-closure-captured node-embedding matrix, then explode).  L6 is an
-aggregation + a single left join.
+Spark mapping: the pipeline runs L2-L6 as ONE row-local kernel,
+``link_stage``.  The mention-stage rows, hash-partitioned by url once, are
+coalesced to at most one partition per core, sorted by url inside each
+partition and streamed url by url through a single ``mapInPandas``:
+``RowLinker`` builds the variant and semantic links of the url's residues
+against the frozen catalog and picks the best link per key, then the url's
+mention rows are annotated and its residual links emitted.  The kernel
+also emits each scored row's BM25 inputs; the score itself stays a Spark
+expression (``bm25.score_frozen``).
+
+The DataFrame operators below are the column-wise form of the same rules,
+and the differential tests pin the kernel to them: L2/L3 are ONE
+broadcast hash equi-join against the exploded variant catalog (small: ~6
+variants x catalog nodes; the score is a CASE on label equality), L4 is a
+broadcast nested-loop θ-join executed as a vectorized pandas UDF over the
+distinct residue values (numpy matmul against the closure-captured
+node-embedding matrix, then explode), and L6 is an aggregation + a single
+left join.
 
 Like the reference (ner.py:233-255 builds its layer_map from the embedding
 cache, which skips cpe labels — embeddings.py:24-25), linking covers the
@@ -34,6 +46,10 @@ a rule and the gold fixtures pin the rebuild):
 """
 
 from __future__ import annotations
+
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -316,75 +332,308 @@ def merge_links(mentions: DataFrame, links: DataFrame,
 
 
 def merge_links_split(scored: DataFrame, passthrough: DataFrame,
-                      links: DataFrame, mention_keys: DataFrame,
-                      passthrough_may_link: bool = False
+                      links: DataFrame, mention_keys: DataFrame
                       ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """``merge_links`` over a (scored, passthrough) mention split, keeping
     the branches separate so a url-hash partitioning established upstream
-    survives every join here (a union erases partitioning info —
-    ``link_stage`` unions only at the very end).
-
-    ``passthrough_may_link=False`` asserts the caller-checked invariant
-    that every linkable label (layer_map keys minus the cpe family) is a
-    BM25-scored label, so links can never target a passthrough-category
-    mention (e.g. cve — regex-matched, not in the link catalog) and the
-    passthrough branch skips the merge join entirely, taking null link
-    annotations.  Pass True for a catalog with non-BM25 linkable labels.
+    survives every join here (a union erases partitioning info).
     Returns (merged_scored, merged_passthrough, residual_links)."""
     best = best_links(links)
-    merged_s = _annotate(scored, best)
-    if passthrough_may_link:
-        merged_p = _annotate(passthrough, best)
-    else:
-        merged_p = (
-            passthrough
-            .withColumn("ner", F.lit(None).cast("string"))
-            .withColumn("match_type", F.lit(None).cast("string"))
-            .withColumn("semantic_score", F.lit(None).cast("double"))
-        )
-    return merged_s, merged_p, _residuals(best, mention_keys)
+    return (_annotate(scored, best), _annotate(passthrough, best),
+            _residuals(best, mention_keys))
 
 
 # --------------------------------------------------------------------------
-# The link-stage kernel: BM25 -> L2-L5 -> L6 over one mention-stage table
+# Row-local linking: L2-L5 + the best-link rule for one url at a time
 # --------------------------------------------------------------------------
+
+def spark_round(x: float) -> float:
+    """``F.round(x, 4)`` of a double, in Python: the semantic score's
+    rounding.  Spark rounds HALF_UP on the double's decimal string
+    (``BigDecimal(Double.toString(x))``); Python's ``round`` rounds the
+    binary value half-to-even, so the two differ on ties: 0.90625 ->
+    0.9063 in Spark, 0.9062 in Python (a float32 cosine can be exactly
+    k/32)."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+class RowLinker:
+    """Frozen-catalog entity linking (L2-L5) for ONE document at a time —
+    the row-local twin of ``build_links`` + the best-link rule of
+    ``best_links``.  Neither the variant table nor the node embeddings
+    depend on the corpus, so the pass is exact inside a per-url kernel;
+    only BM25 (corpus df/m/avgdl) cannot move here.
+
+    Built once on the driver, shipped in the UDF closure (catalog-sized,
+    broadcast semantics).  ``link_stage`` and the streaming kernel
+    (streaming/kg_stream.py) both run it."""
+
+    def __init__(self, layer_map: dict[str, list[dict]]) -> None:
+        self.variants: dict[str, list[tuple]] = {}
+        for label, variant, oid, name in node_variant_rows(layer_map):
+            self.variants.setdefault(variant, []).append((label, oid, name))
+        rows = node_embedding_rows(layer_map)
+        self.emb_matrix = embed_batch([r["text"] for r in rows])
+        self.emb_nodes = [(r["label"], r["original_id"], r["name"])
+                          for r in rows]
+
+    def _links_for(self, residue: dict) -> dict[tuple, tuple]:
+        """residue {bucket: [values]} -> {(label, oid_l): (best link tuple,
+        max_s)} where the best link follows the batch struct-max order
+        (semantic over variant, then score, then semantic score, then max
+        ner...) and ``max_s`` is max(link_ner_score) over ALL candidates
+        for the key — mirroring ``best_links``' SEPARATE
+        ``F.max(link_ner_score)`` aggregate, which is independent of the
+        struct-max winner: a bucket-matching variant-only candidate
+        (s=1.0) must supply the merged score even when a cross-bucket
+        semantic candidate (s=0.5) wins the struct.  A link tuple is
+        (is_semantic, s, ss, ner, match_type, semantic_score, name,
+        original_id)."""
+        cands: dict[tuple, list] = {}
+        sem_values = []
+        for bucket, values in residue.items():
+            for value in values:
+                for (label, oid, name) in self.variants.get(
+                        value.lower(), ()):
+                    s = 1.0 if bucket == label else 0.5
+                    cands.setdefault(
+                        (label, (oid or "").lower()), []).append(
+                        (False, s, -1.0, value.lower(), "variant",
+                         None, name, oid))
+                sem_values.append((bucket, value))
+        if sem_values:
+            vecs = embed_batch([v for _b, v in sem_values])
+            sims = vecs @ self.emb_matrix.T
+            for (bucket, value), row in zip(sem_values, sims):
+                for k in (row >= SIM_THRESHOLD).nonzero()[0]:
+                    label, oid, name = self.emb_nodes[int(k)]
+                    s = 1.0 if bucket == label else 0.5
+                    ss = spark_round(float(row[k]))
+                    cands.setdefault(
+                        (label, (oid or "").lower()), []).append(
+                        (True, s, ss, value, "semantic", ss, name, oid))
+
+        def ordkey(c):
+            # mirror of best_links' struct-max: null sorts lowest
+            (is_sem, s, ss, ner, mt, sem, name, oid) = c
+            return (is_sem, s, ss, ner, mt,
+                    sem is not None, sem or 0.0,
+                    name is not None, name or "",
+                    oid is not None, oid or "")
+
+        return {key: (max(cs, key=ordkey), max(c[1] for c in cs))
+                for key, cs in cands.items()}
+
+    def merge(self, residue: dict, mentions: list[tuple]
+              ) -> tuple[list[tuple], list[tuple]]:
+        """L6 for one url (``merge_links``): link its residues, then fold
+        the best link per key into its mention rows.  ``mentions`` is
+        [(category, original_id, ner_score)], keyed by (category,
+        lower(original_id or '')).  Returns ``(annotated, residual)``:
+        ``annotated[i]`` is mention i's ``(ner_score, winner)`` — where its
+        key has a link, ner_score = max(coalesce(score, 0), max_s) and
+        ``winner`` the key's best link tuple, else the score unchanged and
+        None; ``residual`` is [(label, winner, max_s)] for every best-link
+        key with no mention."""
+        best = self._links_for(residue)
+        keys = set()
+        annotated = []
+        for category, oid, score in mentions:
+            key = (category, (oid if oid is not None else "").lower())
+            keys.add(key)
+            hit = best.get(key)
+            if hit is None:
+                annotated.append((score, None))
+                continue
+            # max_s, NOT the winner's s: _annotate folds the separate
+            # F.max(link_ner_score) aggregate
+            winner, max_s = hit
+            annotated.append(
+                (max(float(score) if score is not None else 0.0, max_s),
+                 winner))
+        residual = [(label, winner, max_s)
+                    for (label, oid_l), (winner, max_s) in best.items()
+                    if (label, oid_l) not in keys]
+        return annotated, residual
+
+    def apply(self, results: dict, residue: dict) -> list[tuple]:
+        """``merge`` over a document's {category: [entry]} results: fold
+        the link scores into the entries' NER_score IN PLACE and return
+        the residual-link evidence [(label, original_id, score)]."""
+        entries = [(category, ent) for category, ents in results.items()
+                   for ent in ents]
+        annotated, residual = self.merge(
+            residue, [(category, ent.get("original_id"), ent.get("NER_score"))
+                      for category, ent in entries])
+        for (_category, ent), (score, winner) in zip(entries, annotated):
+            if winner is not None:
+                ent["NER_score"] = score
+        return [(label, winner[7], max_s) for label, winner, max_s in residual]
+
+
+# --------------------------------------------------------------------------
+# The link-stage kernel: L2-L6 in one url-local pass, then the BM25 score
+# --------------------------------------------------------------------------
+
+# mention-row columns the kernel carries through, in ``linked`` order: the
+# mention stage's columns minus those ``mention.mentions_view`` drops
+_MENTION_FIELDS = [f for f in mention.MENTION_SCHEMA.fields
+                   if f.name not in ("url", "rec_type", "bucket")]
+_MENTION_COLS = [f.name for f in _MENTION_FIELDS]
+_LINK_COLS = ["ner", "match_type", "semantic_score"]
+_RESIDUAL_COLS = ["url", "category", "original_id", "name", "ner",
+                  "ner_score", "match_type", "semantic_score"]
+
+# One kernel output row per annotated mention row (``residual`` false) or
+# residual link (``residual`` true).  A scored mention row carries its BM25
+# inputs: the term key, the term's frequency f in the url and the doc
+# length dl; the other rows leave them null.
+LINK_ROWS_SCHEMA = T.StructType(
+    [T.StructField("url", T.StringType()),
+     T.StructField("residual", T.BooleanType())]
+    + _MENTION_FIELDS
+    + [T.StructField("ner", T.StringType()),
+       T.StructField("match_type", T.StringType()),
+       T.StructField("semantic_score", T.DoubleType()),
+       T.StructField("bm25_key", T.StringType()),
+       T.StructField("f", T.LongType()),
+       T.StructField("dl", T.IntegerType())])
+
+_KERNEL_IN = ["url", "rec_type", "bucket", "bm25_key"] + _MENTION_COLS
+_CAT, _NAME, _OID, _SCORE = (_MENTION_COLS.index(c) for c in
+                             ("category", "name", "original_id",
+                              "ner_score"))
+# long columns arrive as floats when pandas holds a null among them
+_LONGS = [i for i, f in enumerate(_MENTION_FIELDS)
+          if isinstance(f.dataType, T.LongType)]
+
+
+def _null(x):
+    """pandas' null (None, or NaN in a numeric column) as None."""
+    return None if x is None or x != x else x
+
+
+def _link_urls(linker: RowLinker, pdf: pd.DataFrame) -> pd.DataFrame:
+    """The kernel over rows holding COMPLETE urls, sorted by url."""
+    col = {c: pdf[c].tolist() for c in _KERNEL_IN}
+    urls, rec_type, keys = col["url"], col["rec_type"], col["bm25_key"]
+    out: list[tuple] = []
+    i, n = 0, len(urls)
+    while i < n:
+        url, j = urls[i], i
+        while j < n and urls[j] == url:
+            j += 1
+        dls, residue, mentions = [], {}, []
+        for k in range(i, j):
+            if rec_type[k] == "mention":
+                mentions.append(k)
+            elif rec_type[k] == "residue":
+                residue.setdefault(col["bucket"][k], []).append(
+                    col["value"][k])
+            elif rec_type[k] == "doc":
+                dl = _null(col["index"][k])
+                dls.append(None if dl is None else int(dl))
+        i = j
+        rows = [[_null(col[c][k]) for c in _MENTION_COLS] for k in mentions]
+        annotated, residual = linker.merge(
+            residue, [(row[_CAT], row[_OID], row[_SCORE]) for row in rows])
+        tf = Counter((col["category"][k], keys[k]) for k in mentions
+                     if keys[k] is not None)
+        for k, row, (score, winner) in zip(mentions, rows, annotated):
+            row[_SCORE] = score
+            # ner, match_type, semantic_score
+            link = winner[3:6] if winner is not None else (None, None, None)
+            for x in _LONGS:
+                if row[x] is not None:
+                    row[x] = int(row[x])
+            if keys[k] is None:
+                out.append((url, False, *row, *link, None, None, None))
+                continue
+            # a scored row once per doc row of its url (a repeated url
+            # has several), each with that row's dl
+            f = tf[(row[_CAT], keys[k])]
+            out.extend((url, False, *row, *link, keys[k], f, dl)
+                       for dl in dls or [None])
+        # residual links: best-link keys with no mention row
+        for label, winner, max_s in residual:
+            row = [None] * len(_MENTION_COLS)
+            row[_CAT], row[_NAME], row[_OID] = label, winner[6], winner[7]
+            row[_SCORE] = max_s
+            out.append((url, True, *row, *winner[3:6], None, None, None))
+    return pd.DataFrame(out, columns=LINK_ROWS_SCHEMA.names)
+
+
+def link_rows(stage_rows: DataFrame, layer_map: dict[str, list[dict]],
+              n_buckets: int) -> DataFrame:
+    """The url-local kernel (L2-L6) over mention-stage rows: one
+    ``LINK_ROWS_SCHEMA`` row per annotated mention row and per residual
+    link.
+
+    The rows are hash-partitioned by url into ``n_buckets`` partitions
+    (``repartition(n_buckets, "url")``, the stage's only exchange), which
+    puts every row of a url in one partition.  The partitions are
+    coalesced to at most one per core (every Python task pays a fixed
+    start-up cost, and coalescing keeps each hash partition, hence each
+    url, inside one task), sorted by url, and
+    streamed through ``mapInPandas`` url by url: the rows of the last url
+    of an Arrow batch are carried into the next, so a task holds one url's
+    rows at a time, never its whole partition.  Error rows are dropped;
+    every other row of a url, from every page that shares it, is merged
+    before linking."""
+    linker = RowLinker(layer_map)
+    cores = stage_rows.sparkSession.sparkContext.defaultParallelism
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            urls = pdf["url"].to_numpy()
+            if not len(urls):
+                continue
+            earlier = (urls != urls[-1]).nonzero()[0]
+            cut = int(earlier[-1]) + 1 if len(earlier) else 0
+            carry = pdf.iloc[cut:]
+            if cut:
+                yield _link_urls(linker, pdf.iloc[:cut])
+        if carry is not None and len(carry):
+            yield _link_urls(linker, carry)
+
+    scored = ((F.col("rec_type") == "mention")
+              & F.col("category").isin(BM25_LABELS))
+    return (stage_rows.repartition(n_buckets, F.col("url"))
+            .filter(F.col("rec_type") != "error")
+            .withColumn("bm25_key", F.when(scored, bm25.bm25_key()))
+            .select(*_KERNEL_IN)
+            .coalesce(cores)
+            .sortWithinPartitions("url")
+            .mapInPandas(run, LINK_ROWS_SCHEMA))
+
 
 def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
-               layer_map: dict[str, list[dict]]
+               layer_map: dict[str, list[dict]], n_buckets: int
                ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Stage 3 over mention-stage rows (``mention.detect_mentions``
-    output): BM25 against the global ``(stats, df_table)`` of
-    ``bm25.bm25_global_stats``, link generation over the residues, and the
-    L6 merge.  Returns ``(merged, residual, links)``.
+    output, in any partitioning).  Returns ``(merged, residual, rows)``.
 
-    The one kernel behind the batch and bucket-chunked runs.  Scoring
-    against GLOBAL stats is what keeps it exact on any url-subset of the
-    corpus (tf and dl are url-local; df/m/avgdl must not be recomputed
-    from a chunk, or idf comes out wrong).
+    ``rows`` is the url-local kernel (``link_rows``), the one pass both
+    outputs read: ``residual`` is its residual links, and ``merged`` is
+    its mention rows with ``bm25_score`` computed by
+    ``bm25.score_frozen`` against the global ``(stats, df_table)`` of
+    ``bm25.bm25_global_stats``.  Scoring against GLOBAL stats is what
+    keeps the stage exact on any url-subset of the corpus (tf and dl are
+    url-local; df/m/avgdl must not be recomputed from a chunk, or idf
+    comes out wrong).  Callers that write both outputs persist ``rows``
+    and unpersist it once both writes commit, so the Python kernel runs
+    once.
 
-    Partitioning: when ``stage_rows`` is hash-partitioned by url (the
-    batch run repartitions the table once), the mention, residue and
-    doc-length views are filters above that ONE exchange, and every
-    operation below preserves it: BM25 tf, the score join, the best-link
-    aggregation, the L6 merge join and the residual anti-join all run
-    exchange-free.  The scored/passthrough branches are unioned only at
-    the very end (a union erases partitioning info), and the residual
-    anti-join takes its keys from a narrow pre-BM25 projection, so the
-    wide scored plan stays single-consumer and un-persisted.
-
-    ``links`` is the subplan both outputs read.  The batch run, which
-    writes them in two concurrent jobs, persists it and unpersists it once
-    both writes commit; the chunked run leaves it uncached."""
-    m = mention.mentions_view(stage_rows)
-    dls = mention.doc_lengths_view(stage_rows)
-    scored, passthrough = bm25.add_bm25_frozen_split(m, dls, stats, df_table)
-    links = build_links(mention.residue_view(stage_rows), layer_map)
-    keys = m.select("url", "category", _oid_l().alias("oid_l")).distinct()
-    # the passthrough branch can take a link only if some linkable label
-    # is not BM25-scored (never for the BRON-shaped catalog: links exclude
-    # the cpe family and cve is regex-only)
-    may_link = bool(set(layer_map) - LINKED_LABELS_EXCLUDE - set(BM25_LABELS))
-    merged_s, merged_p, residual = merge_links_split(
-        scored, passthrough, links, mention_keys=keys,
-        passthrough_may_link=may_link)
-    return merged_s.unionByName(merged_p), residual, links
+    The kernel coalesces its ``n_buckets`` url hash partitions without a
+    shuffle, so each partition of ``merged`` and ``residual`` holds whole
+    hash partitions: with the pipeline's ``pbucket`` (== the hash
+    partition id) every pbucket lies in one task."""
+    rows = link_rows(stage_rows, layer_map, n_buckets)
+    merged = bm25.score_frozen(
+        rows.filter(~F.col("residual")), stats, df_table).select(
+        "url", *_MENTION_COLS, "bm25_score", *_LINK_COLS)
+    residual = rows.filter(F.col("residual")).select(*_RESIDUAL_COLS)
+    return merged, residual, rows

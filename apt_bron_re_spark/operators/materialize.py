@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PREDICATE_MAP
+from ..session import local_table
 
 # Source urls kept per triple (the k smallest) and salts of the two-phase
 # triple aggregation (_triple_aggregate).
@@ -156,8 +157,8 @@ def _pairs(evn: DataFrame) -> DataFrame:
     side).  Memory per row is bounded by a DOCUMENT's distinct entity
     count — the same bound the self-join's per-url sort buffer had."""
     spark = evn.sparkSession
-    preds = spark.createDataFrame(
-        [(a, b, p) for (a, b), p in PREDICATE_MAP.items()],
+    preds = local_table(
+        spark, [(a, b, p) for (a, b), p in PREDICATE_MAP.items()],
         "subj_label string, obj_label string, pred string")
     ents = (
         evn.groupBy("url")

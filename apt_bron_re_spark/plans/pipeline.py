@@ -25,9 +25,12 @@ in-place file rewrites — SURVEY.md §3):
     triples/         subj, pred, obj, sources[], justification, score
                      partitioned by pred (S10)
 
-The link stage (BM25 -> L2-L5 links -> L6 merge) is ONE kernel,
-``operators.linking.link_stage``, behind two execution wrappers: ``run``
-(the whole table, repartitioned by url once, BM25 globals inline) and
+The link stage (L2-L5 links -> L6 merge, then BM25) is ONE kernel,
+``operators.linking.link_stage``: a url-local ``mapInPandas`` pass over
+the mention stage table repartitioned by url, run with the same
+``linking.RowLinker`` as the streaming kernel.  Two execution wrappers
+call it: ``run`` (the whole table, BM25 globals inline, the kernel output
+persisted for the linked and residual writes) and
 ``run_link_incremental`` (one call per bucket chunk).  The kernel scores
 against the global BM25 (stats, df) it is handed, so the chunked wrapper
 freezes those once from the whole corpus; per-chunk stats would give
@@ -173,10 +176,10 @@ class Pipeline:
             self._iceberg_writer(df, name, partition_by).createOrReplace()
             return
         # pbucket tables are written here only by the batch link stage,
-        # whose plans are already HashPartitioning(url, n_buckets)-clustered
-        # (or a union of such branches): every task holds exactly one
-        # pbucket value (see _bucketed), so partitionBy writes one file per
-        # dir per branch with NO write-side shuffle.
+        # whose plans are HashPartitioning(url, n_buckets) partitions
+        # coalesced without a shuffle: every pbucket value (see _bucketed)
+        # lies in one task, so partitionBy writes one file per dir with NO
+        # write-side shuffle.
         if partition_by and partition_by != ["pbucket"]:
             # low-cardinality partition columns (pred): pinned.  A
             # rebalance hint was tried here and AQE's 64MB advisory
@@ -274,40 +277,20 @@ class Pipeline:
 
     def _run_link_stage(self, fp: str, stage2: DataFrame,
                         resume: bool = True) -> DataFrame:
-        """Link stage runner: writes the linked table and the residual
-        side table as CONCURRENT jobs (the reference's thread-parallel
-        driver, L7/E3, applied at the job level — Spark's FIFO scheduler
-        interleaves their tasks).  The residual job is latency-dominated
-        (narrow anti-join + small write), so overlapping it under the
-        linked write removes a serial tail at higher parallelism while
-        costing nothing at one thread.  Both read the persisted ``links``
-        subplan (a cache race at worst duplicates that narrow compute); it
-        is unpersisted once both writes are done.  The lineage row is
-        recorded only after BOTH writes commit, preserving resume
-        atomicity."""
-        import threading
-
+        """Link stage runner: writes the linked table, then the residual
+        side table, both from the persisted kernel output (``_link_plan``),
+        so the Python kernel runs once; it is unpersisted once both writes
+        are done.  The lineage row is recorded only after BOTH writes
+        commit, preserving resume atomicity."""
         if resume and self.log.is_complete("link", fp):
             return self._read("linked")
         t0 = time.time()
-        merged, residual, links = self._link_plan(stage2)
-        err: list[BaseException] = []
-
-        def _res() -> None:
-            try:
-                self._write(residual, "links_residual", partition_by=["pbucket"])
-            except BaseException as exc:  # surfaced after join
-                err.append(exc)
-
-        th = threading.Thread(target=_res, name="links-residual-write")
-        th.start()
+        merged, residual, rows = self._link_plan(stage2)
         try:
             self._write(merged, "linked", partition_by=["pbucket"])
+            self._write(residual, "links_residual", partition_by=["pbucket"])
         finally:
-            th.join()
-            links.unpersist()
-        if err:
-            raise err[0]
+            rows.unpersist()
         out = self._read("linked")
         wall = time.time() - t0
         # deferred like the mention record (_run_stage record_async):
@@ -319,28 +302,27 @@ class Pipeline:
     def _link_plan(self, stage2: DataFrame
                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """The batch link plan: ``linking.link_stage`` over the mention
-        stage table repartitioned by url ONCE, with the BM25 globals
-        computed inline.  Returns the kernel's (merged, residual, links),
-        bucketed, with ``links`` persisted for the two concurrent writes.
+        stage table, which the kernel repartitions by url ONCE, the
+        stage's only exchange of the wide rows, with the BM25 globals
+        computed inline.  Returns
+        the kernel's (merged, residual, rows), bucketed, with ``rows``
+        persisted for the two writes.
 
-        The mention/residue/doc-length views are disjoint rec_type filters
-        over that one exchange (ReuseExchange collapses their subtrees
-        onto a single shuffle), and pbucket == the HashPartitioning
-        partition id (_bucketed), so both stage writes need no further
-        repartition.  Inline stats: df is catalog-bounded (its keys are
-        catalog entity names), so it broadcasts — which keeps the tf
-        stream's url partitioning intact — and its build subtree shares
-        the url exchange with the scored stream, so no extra pass over the
-        wide table and no aux-table write jobs.  The chunked path
-        (run_link_incremental) freezes them to parquet instead, where
-        cross-session exactness requires it."""
-        st = stage2.repartition(self.n_buckets, F.col("url"))
-        stats, df_ = bm25.bm25_global_stats(mention.mentions_view(st),
-                                            mention.doc_lengths_view(st))
-        merged, residual, links = linking.link_stage(
-            st, stats, df_, self.layer_map)
+        The kernel coalesces the url hash partitions without a shuffle, so
+        every pbucket (== the HashPartitioning partition id, _bucketed)
+        lies in one task and both stage writes need no further
+        repartition.  Inline stats come from the un-repartitioned
+        ``stage2``: their aggregations shuffle narrow projections of their
+        own, and df is catalog-bounded (its keys are catalog entity
+        names), so it broadcasts.  The chunked path (run_link_incremental)
+        freezes them to parquet instead, where cross-session exactness
+        requires it."""
+        stats, df_ = bm25.bm25_global_stats(mention.mentions_view(stage2),
+                                            mention.doc_lengths_view(stage2))
+        merged, residual, rows = linking.link_stage(
+            stage2, stats, df_, self.layer_map, self.n_buckets)
         return (self._bucketed(merged), self._bucketed(residual),
-                links.persist())
+                rows.persist())
 
     def _fps(self) -> tuple[str, str, str, str, str]:
         """The stage fingerprint chain (fp0..fp4) for the current config."""
@@ -417,11 +399,11 @@ class Pipeline:
         # materialize — several seconds of catalog-sized pointer-jumping
         # job latency in the timed span of every fresh run.  Build it on
         # a background thread under the CPU-bound mention/link stages
-        # (the reference's thread-parallel driver, L7/E3, same machinery
-        # as the residual-write overlap): its tiny jobs interleave with
-        # the mention UDF tasks at near-zero wall cost.  Lineage appends
-        # are lock-serialized (LineageLog._append), and the canon stage
-        # writes only its own paths, so the overlap is race-free.
+        # (the reference's thread-parallel driver, L7/E3): its tiny jobs
+        # interleave with the mention UDF tasks at near-zero wall cost.
+        # Lineage appends are lock-serialized (LineageLog._append), and the
+        # canon stage writes only its own paths, so the overlap is
+        # race-free.
         import threading
 
         canon_box: dict[str, object] = {}
@@ -570,12 +552,14 @@ class Pipeline:
     def run_link_incremental(self, n_chunks: int = 4,
                              max_chunks: int | None = None) -> bool:
         """Bucket-chunked link stage with per-bucket lineage resume: one
-        ``linking.link_stage`` call per chunk.  The kernel needs
-        corpus-GLOBAL BM25 statistics, so they are materialized ONCE from
-        the complete mention table (link_aux_stats/link_aux_df, guarded
-        by a lineage row) and every chunk scores against the frozen
-        tables; everything else in the stage is url-local, so chunking by
-        url-bucket is exact."""
+        ``linking.link_stage`` call per chunk, over the chunk's rows.  The
+        kernel needs corpus-GLOBAL BM25 statistics, so they are
+        materialized ONCE from the complete mention table
+        (link_aux_stats/link_aux_df, guarded by a lineage row) and every
+        chunk scores against the frozen tables; everything else in the
+        stage is url-local, so chunking by url-bucket is exact.  Each
+        chunk's kernel output is persisted for its two writes and
+        unpersisted before the next chunk."""
         _fp0, _fp1, fp2, _fp3, _fp4 = self._fps()
         if self.log.is_complete("link", fp2):
             return True
@@ -591,16 +575,24 @@ class Pipeline:
             self.log.record_summary("link_aux", aux_fp, 1, 0.0)
         stats = self._read("link_aux_stats")
         df_ = self._read("link_aux_df")
+        cached: list[DataFrame] = []
 
         def build(chunk):
-            merged, residual, _links = linking.link_stage(
+            while cached:  # the previous chunk's writes have committed
+                cached.pop().unpersist()
+            merged, residual, rows = linking.link_stage(
                 stage2.filter(F.col("pbucket").isin(chunk)), stats, df_,
-                self.layer_map)
+                self.layer_map, self.n_buckets)
+            cached.append(rows.persist())
             return {"linked": self._bucketed(merged),
                     "links_residual": self._bucketed(residual)}
 
-        return self._run_chunks("link", fp2, n_chunks, max_chunks, build,
-                                "linked")
+        try:
+            return self._run_chunks("link", fp2, n_chunks, max_chunks, build,
+                                    "linked")
+        finally:
+            for rows in cached:
+                rows.unpersist()
 
     def run_materialize_incremental(self, n_chunks: int = 4,
                                     max_chunks: int | None = None) -> bool:

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(app_name: str = "apt_bron_re_spark",
@@ -57,3 +59,16 @@ def get_spark(app_name: str = "apt_bron_re_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows: list[tuple],
+                ddl: str) -> DataFrame:
+    """A driver-side table of ``rows`` with the schema ``ddl``, built from
+    a pandas frame: with Arrow on, the driver hands the rows to the JVM as
+    Arrow data (a small table becomes a local relation).
+    ``createDataFrame`` on the list itself converts the rows in Python
+    worker tasks, which cost far more than the work on a catalog-sized
+    table."""
+    schema = T.StructType.fromDDL(ddl)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names),
+                                 schema)

@@ -37,8 +37,8 @@ execution shapes, both reusing the batch operators:
    ``materialize_triples(evidence_rows(merged, residual, canon))`` row exactly
    (pytest-pinned).  With ``link=True`` the L2-L5 link pass (variant +
    semantic against the FROZEN catalog — neither needs corpus statistics)
-   also runs row-locally inside the same UDF, mirroring the batch
-   ``build_links``/``merge_links`` per url: mention scores take
+   also runs row-locally inside the same UDF, with the same
+   ``linking.RowLinker`` as the batch link stage: mention scores take
    max(mention, link) and link-only keys become sentence-free residual
    evidence.  Only the BM25 annotation (corpus-global df/m/avgdl) is
    inherently batch-shaped; it never feeds evidence scores, so the live
@@ -69,11 +69,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog.build import compile_catalog
-from ..config import LANG, PREDICATE_MAP, SIM_THRESHOLD
+from ..config import LANG, PREDICATE_MAP
 from ..functions.extract_text import extract_text
 from ..operators import materialize
 from ..operators.canonicalize import canonical_map
 from ..operators.doc_core import NerTagger, process_document
+from ..operators.linking import RowLinker
 
 PAIR_SCHEMA = T.StructType([
     T.StructField("subj", T.StringType(), False),
@@ -187,99 +188,6 @@ def _doc_pairs(results: dict, canon_map: dict,
                     pairs[key] = (pair_score, s_sent, subj_label)
                     cand_keys[key] = ck
     return pairs
-
-
-class RowLinker:
-    """Frozen-catalog entity linking (L2-L5) for ONE document at a time —
-    the row-local twin of ``linking.build_links`` + the best-link rule of
-    ``linking.best_links``.  Neither the variant table nor the node
-    embeddings depend on the corpus, so the pass is exact inside a
-    streaming UDF; only BM25 (corpus df/m/avgdl) cannot move here.
-
-    Built once on the driver, shipped in the UDF closure (catalog-sized,
-    broadcast semantics)."""
-
-    def __init__(self, layer_map: dict[str, list[dict]]) -> None:
-        from ..functions.embedder import embed_batch
-        from ..operators.linking import (node_embedding_rows,
-                                         node_variant_rows)
-        self.variants: dict[str, list[tuple]] = {}
-        for label, variant, oid, name in node_variant_rows(layer_map):
-            self.variants.setdefault(variant, []).append((label, oid, name))
-        rows = node_embedding_rows(layer_map)
-        self.emb_matrix = embed_batch([r["text"] for r in rows])
-        self.emb_nodes = [(r["label"], r["original_id"], r["name"])
-                          for r in rows]
-        self._embed = embed_batch
-
-    def _links_for(self, residue: dict) -> dict[tuple, tuple]:
-        """residue {bucket: [values]} -> {(label, oid_l): (best link tuple,
-        max_s)} where the best link follows the batch struct-max order
-        (semantic over variant, then score, then semantic score, then max
-        ner...) and ``max_s`` is max(link_ner_score) over ALL candidates
-        for the key — mirroring batch ``best_links``' SEPARATE
-        ``F.max(link_ner_score)`` aggregate (linking.py:233), which is
-        independent of the struct-max winner: a bucket-matching
-        variant-only candidate (s=1.0) must supply the merged score even
-        when a cross-bucket semantic candidate (s=0.5) wins the struct."""
-        cands: dict[tuple, list] = {}
-        sem_values = []
-        for bucket, values in residue.items():
-            for value in values:
-                for (label, oid, name) in self.variants.get(
-                        value.lower(), ()):
-                    s = 1.0 if bucket == label else 0.5
-                    cands.setdefault(
-                        (label, (oid or "").lower()), []).append(
-                        (False, s, -1.0, value.lower(), "variant",
-                         None, name, oid))
-                sem_values.append((bucket, value))
-        if sem_values:
-            vecs = self._embed([v for _b, v in sem_values])
-            sims = vecs @ self.emb_matrix.T
-            for (bucket, value), row in zip(sem_values, sims):
-                for k in (row >= SIM_THRESHOLD).nonzero()[0]:
-                    label, oid, name = self.emb_nodes[int(k)]
-                    s = 1.0 if bucket == label else 0.5
-                    ss = round(float(row[k]), 4)
-                    cands.setdefault(
-                        (label, (oid or "").lower()), []).append(
-                        (True, s, ss, value, "semantic", ss, name, oid))
-
-        def ordkey(c):
-            # mirror of linking.best_links struct-max: null sorts lowest
-            (is_sem, s, ss, ner, mt, sem, name, oid) = c
-            return (is_sem, s, ss, ner, mt,
-                    sem is not None, sem or 0.0,
-                    name is not None, name or "",
-                    oid is not None, oid or "")
-
-        return {key: (max(cs, key=ordkey), max(c[1] for c in cs))
-                for key, cs in cands.items()}
-
-    def apply(self, results: dict, residue: dict) -> list[tuple]:
-        """Fold links into ``results`` IN PLACE (NER_score = max(mention,
-        link) on every matching mention entry — batch merge_links) and
-        return the residual-link evidence [(label, original_id, score)]
-        for keys with no mention."""
-        best = self._links_for(residue)
-        if not best:
-            return []
-        mention_keys = set()
-        for category, entries in results.items():
-            for ent in entries:
-                oid = ent.get("original_id")
-                key = (category, (oid if oid is not None else "").lower())
-                mention_keys.add(key)
-                hit = best.get(key)
-                if hit is not None:
-                    # max_s, NOT the winner's s: batch _annotate folds the
-                    # separate F.max(link_ner_score) aggregate
-                    ent["NER_score"] = max(
-                        float(ent.get("NER_score", 0.0) or 0.0), hit[1])
-        return [(label, winner[7], max_s)
-                for (label, oid_l), (winner, max_s) in best.items()
-                if (label, oid_l) not in mention_keys]
 
 
 def stream_evidence_pairs(pages_stream: DataFrame,

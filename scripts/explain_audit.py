@@ -163,13 +163,19 @@ def main() -> None:
     # round (localCheckpoint), so the FINAL plan must be a flat
     # checkpoint scan + projection — a growing per-round lineage (the
     # failure mode checkpointing prevents) would show the whole join
-    # pyramid here.  Round-internal caching of the verified-pair graph
-    # (the edge persist) is pinned by the wall-clock regression test in
-    # the bench record instead (20 s -> 12.7 s at sf0.1, NOTES_r4).
+    # pyramid here.  A graph small enough for the driver-side union-find
+    # (sf0.001's) comes back as a local table instead: a LocalTableScan
+    # the projection folds into.  Round-internal caching of the
+    # verified-pair graph (the edge persist) is pinned by the wall-clock
+    # regression test in the bench record instead (20 s -> 12.7 s at
+    # sf0.1, NOTES_r4).
     p = plan_of(SPARK_QUERIES["near_dup_clusters"](spark, SF_DIR))
+    flat = (("Scan ExistingRDD" in p or "LocalTableScan" in p)
+            and "Join" not in p and "Exchange" not in p)
     checks.append((
-        "near_dup_clusters (LSH -> verify -> CC -> representative)", p,
-        ["Scan ExistingRDD"],
+        "near_dup_clusters (LSH -> verify -> CC -> representative)",
+        p + (" FLAT_FINAL_PLAN" if flat else ""),
+        ["FLAT_FINAL_PLAN"],
         ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
          "SortMergeJoin"],
     ))
@@ -253,12 +259,12 @@ def main() -> None:
     ))
 
     # 17/18. link + materialize stage plans over REAL stage tables: one
-    # url hash-partitioning per stage.  A regression of the subset
-    # co-partition reuse re-shuffles the score/merge joins onto their full
-    # key sets — visible as an ENSURE_REQUIREMENTS exchange keyed
-    # "hashpartitioning(category" (the score join) — and a regression of
-    # argmax-first justification puts "sentence" back into the pairing
-    # branch.  Built on a tiny fused mention stage in a temp dir.
+    # url hash-partitioning per stage.  The link stage is one url exchange
+    # feeding one url-local MapInPandas kernel; a regression that brings
+    # back the DataFrame composition plans a scan + url exchange per view
+    # and shuffle joins above them.  A regression of argmax-first
+    # justification puts "sentence" back into the pairing branch.  Built
+    # on a tiny fused mention stage in a temp dir.
     import re
     import shutil
     import tempfile
@@ -270,25 +276,26 @@ def main() -> None:
     lm = build_layer_map()
     pipe = _Pipeline(spark, lm, td, n_buckets=8, fuse_extract=True)
     pipe.run(pages_df(spark, 80), resume=False)
-    # the batch link plan exactly as Pipeline.run builds it (one
+    # the linked write plan exactly as Pipeline.run builds it (one
     # linking.link_stage call over the url-repartitioned stage table)
-    merged, _residual, links = pipe._link_plan(
+    merged, _residual, rows = pipe._link_plan(
         spark.read.parquet(f"{td}/mentions"))
     p = plan_of(merged)
-    links.unpersist()
-    # a regression of subset co-partition reuse re-shuffles the score /
-    # merge joins onto their FULL key sets — an exchange keyed on both
-    # category and url.  (An exchange keyed on category alone is fine:
-    # the catalog-bounded df aggregation inside the broadcast build.)
-    bad_exchange = any(
-        "hashpartitioning(category" in ln and ", url#" in ln
-        for ln in p.splitlines() if "Arguments: hashpartitioning" in ln)
+    rows.unpersist()
+    n_url = len(re.findall(
+        r"hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_NUM", p))
     checks.append((
-        "link stage (one url partitioning; score+merge joins exchange-free)",
-        p + ("" if bad_exchange else " NO_FULLKEY_RESHUFFLE"),
-        # shuffle_hash joins: the wide mention stream is never SORTED
-        ["REPARTITION_BY_NUM", "ShuffledHashJoin", "Union",
-         "NO_FULLKEY_RESHUFFLE"],
+        "link stage (one url exchange, one url-local MapInPandas kernel)", p,
+        ["MapInPandas", "REPARTITION_BY_NUM"],
+        ["ShuffledHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin"],
+    ))
+    checks.append((
+        f"link stage: exactly one url exchange in the linked write plan "
+        f"(found {n_url})",
+        f"(derived from the plan above: {n_url} hashpartitioning(url, n), "
+        f"REPARTITION_BY_NUM exchange(s))"
+        + (" ONE_URL_EXCHANGE_OK" if n_url == 1 else ""),
+        ["ONE_URL_EXCHANGE_OK"],
         [],
     ))
 

@@ -74,3 +74,26 @@ def test_driver_canon_rows_union_find():
         ("group", "G1", "G1"), ("group", "G2", "G1"),
         ("group", "G3", "G3"), ("tool", "G1", "G1"),
     ]
+
+
+def test_local_table_equals_list_path(spark, layer_map):
+    """The catalog-sized tables (canonical map, CC driver path, typed
+    predicates) are built from a pandas frame: rows and schema must equal
+    ``createDataFrame`` on the list of tuples, empty tables included."""
+    from apt_bron_re_spark.config import PREDICATE_MAP
+    from apt_bron_re_spark.session import local_table
+
+    tables = [
+        (_driver_canon_rows(alias_edges(layer_map)),
+         "label string, original_id string, canon_id string"),
+        ([(a, b, p) for (a, b), p in PREDICATE_MAP.items()],
+         "subj_label string, obj_label string, pred string"),
+        ([("a", None), (None, "b")], "id string, component string"),
+        ([], "id string, component string"),
+    ]
+    for rows, ddl in tables:
+        want = spark.createDataFrame(rows, ddl)
+        got = local_table(spark, rows, ddl)
+        assert got.schema == want.schema
+        assert sorted(map(tuple, got.collect()), key=repr) == \
+            sorted(map(tuple, want.collect()), key=repr)

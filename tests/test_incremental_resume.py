@@ -199,7 +199,7 @@ def test_empty_residual_table_reads_back(spark, layer_map, tmp_path_factory):
         from_html=True)
     stats, df_ = bm25.bm25_global_stats(mention.mentions_view(stage2),
                                         mention.doc_lengths_view(stage2))
-    merged, residual, _links = linking.link_stage(stage2, stats, df_, lm)
+    merged, residual, _links = linking.link_stage(stage2, stats, df_, lm, 8)
     assert residual.count() == 0
     want = _triples_of(materialize.materialize_triples(
         materialize.evidence_rows(merged, residual,

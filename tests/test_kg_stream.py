@@ -70,11 +70,14 @@ def frozen_stats(batch_stage2):
 
 @pytest.fixture(scope="module")
 def batch_linked(layer_map, batch_stage2, frozen_stats):
-    """Batch truth for the link stage: the kernel over the whole corpus."""
-    merged, residual, links = linking.link_stage(
-        batch_stage2, *frozen_stats, layer_map)
-    yield merged, residual
-    links.unpersist()
+    """Batch truth for the link stage: the DataFrame composition of its
+    rules over the whole corpus (not the url-local kernel, which runs the
+    same RowLinker as the streaming pass)."""
+    m = mention.mentions_view(batch_stage2)
+    return linking.merge_links(
+        bm25.add_bm25_frozen(m, mention.doc_lengths_view(batch_stage2),
+                             *frozen_stats),
+        linking.build_links(mention.residue_view(batch_stage2), layer_map))
 
 
 def _stream_pages(spark, path):
@@ -316,7 +319,7 @@ def test_row_linker_score_is_max_over_candidates(spark, layer_map):
     residue {'tactic': ['initial_access'], 'others': ['Initial Access']}
     for TA0001 — the bucket-matching variant candidate scores 1.0 while a
     cross-bucket semantic candidate can win the struct with s=0.5."""
-    from apt_bron_re_spark.streaming.kg_stream import RowLinker
+    from apt_bron_re_spark.operators.linking import RowLinker
 
     residue = {"tactic": ["initial_access"], "others": ["Initial Access"]}
     url = "https://example.test/p1"

@@ -1,14 +1,21 @@
 """L2-L6 linking tests: variant same/cross-label scores, semantic θ-join
-threshold behaviour, and merge max-score/annotation semantics
-(reference ner.py:152-212, 281-339)."""
+threshold behaviour, merge max-score/annotation semantics (reference
+ner.py:152-212, 281-339), and the url-local link-stage kernel against the
+DataFrame composition of the same rules."""
+
+import random
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import functions as F
 
+from apt_bron_re_spark.operators import mention
+from apt_bron_re_spark.operators.bm25 import add_bm25_frozen, bm25_global_stats
 from apt_bron_re_spark.operators.linking import (
     build_links,
+    link_stage,
     merge_links,
     semantic_links,
+    spark_round,
     variant_links,
 )
 
@@ -107,3 +114,75 @@ def test_merge_links_mention_keys_equivalent(spark, residues, layer_map):
         sorted(map(tuple, m_key.collect()))
     assert sorted(map(tuple, r_def.collect())) == \
         sorted(map(tuple, r_key.collect()))
+
+
+def test_spark_round_matches_f_round(spark):
+    """RowLinker rounds semantic scores like the batch ``F.round(x, 4)``:
+    HALF_UP on the decimal string, not Python's half-to-even on the binary
+    value (0.90625 is a tie a float32 cosine can hit exactly)."""
+    rng = random.Random(7)
+    xs = [0.84375, 0.90625, 0.96875] + [rng.random() for _ in range(1000)]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)],
+                               "i int, x double")
+    want = {r["i"]: r["r"] for r in
+            df.select("i", F.round("x", 4).alias("r")).collect()}
+    assert [spark_round(x) for x in xs] == [want[i] for i in range(len(xs))]
+    assert spark_round(0.90625) == 0.9063
+
+
+def _bucketed(df, n):
+    return df.withColumn("pbucket", F.pmod(F.hash("url"), F.lit(n)).cast("int"))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _assert_kernel_equals_composition(spark, pages, layer_map, n=8):
+    stage2 = mention.detect_mentions(
+        pages.filter(F.col("lang") == "en").select("url", "html"),
+        layer_map, from_html=True).persist()
+    try:
+        m = mention.mentions_view(stage2)
+        dls = mention.doc_lengths_view(stage2)
+        stats, df_ = bm25_global_stats(m, dls)
+        want_m, want_r = merge_links(
+            add_bm25_frozen(m, dls, stats, df_),
+            build_links(mention.residue_view(stage2), layer_map))
+        got_m, got_r, rows = link_stage(stage2, stats, df_, layer_map, n)
+        rows.persist()
+        for got, want in ((got_m, want_m), (got_r, want_r)):
+            got, want = _bucketed(got, n), _bucketed(want, n)
+            assert got.columns == want.columns
+            assert got.dtypes == want.dtypes
+            assert _rows(got) == _rows(want)
+        # the input exercises every branch: annotated mentions, semantic
+        # links, residual links and unscored (passthrough) rows
+        assert got_m.filter(F.col("match_type") == "semantic").count() > 0
+        assert got_m.filter(F.col("bm25_score").isNull()).count() > 0
+        assert got_r.count() > 0
+        rows.unpersist()
+    finally:
+        stage2.unpersist()
+
+
+def test_kernel_equals_composition_on_repeated_urls(spark, layer_map):
+    """Pages 50-59 reuse the urls of pages 0-9 with other content: the
+    kernel must merge every row of a url before linking, and emit a
+    scored row once per doc row of its url, as the dl join does."""
+    from apt_bron_re_spark.sources.pages import generate_page
+    from apt_bron_re_spark.streaming.mention_stream import PAGE_DDL
+
+    rows = [generate_page(i, 1) for i in range(60)]
+    for i in range(50, 60):
+        rows[i]["url"] = rows[i - 50]["url"]
+    cols = [c.split()[0] for c in PAGE_DDL.split(", ")]
+    pages = spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows], PAGE_DDL).repartition(3)
+    _assert_kernel_equals_composition(spark, pages, layer_map)
+
+
+def test_kernel_equals_composition_on_corpus(spark, layer_map):
+    from apt_bron_re_spark.sources.pages import pages_df
+    _assert_kernel_equals_composition(spark, pages_df(spark, 200),
+                                      layer_map, n=32)

@@ -139,9 +139,9 @@ def test_layout_marker_fails_fast_on_mismatch(spark, layer_map,
 
 
 def test_runs_release_their_cache(spark, layer_map, tmp_path_factory):
-    """Everything a run persists (the link stage's shared ``links``
-    subplan) is unpersisted once its writes commit: repeated runs in one
-    session must not pile up cached data."""
+    """Everything a run persists (the link kernel's output, shared by
+    the linked and residual writes) is unpersisted once its writes
+    commit: repeated runs in one session must not pile up cached data."""
     def n_persisted():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
@@ -163,3 +163,30 @@ def test_unmarked_base_dir_with_data_refused(spark, layer_map,
     (base / "mentions").mkdir()
     with pytest.raises(RuntimeError, match="_layout.json"):
         Pipeline(spark, layer_map, base, n_buckets=8)
+
+
+def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
+    """The link stage is one url exchange, the BM25 globals and one
+    url-local kernel, persisted for its two writes: at most 12 Spark jobs
+    (under AQE one per exchange and broadcast, plus the writes and the
+    read-back)."""
+    from apt_bron_re_spark.operators import mention
+
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("link_jobs"),
+                    n_buckets=8, fuse_extract=True)
+    pipe._write(pipe._bucketed(mention.detect_mentions(
+        pages_df(spark, N_PAGES).select("url", "html"), layer_map,
+        from_html=True)), "mentions")
+    stage2 = pipe._read("mentions")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "link_stage_jobs"
+    sc.setJobGroup(group, "job count of one link stage")
+    try:
+        pipe._run_link_stage(pipe._fps()[2], stage2, resume=False)
+        started = set(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        pipe._join_records()
+    assert 0 < len(started) <= 12, sorted(started)
