@@ -224,11 +224,15 @@ def best_links(links: DataFrame) -> DataFrame:
     Partitioning: the groupBy keys include url, so a url-hash-partitioned
     ``links`` input aggregates exchange-free.
 
-    The ``_ohash`` companion aggregate flips the struct-max from
-    SortAggregate (string-bearing buffers don't hash; the links table
-    would be SORTED) to ObjectHashAggregateExec — see
-    materialize._evidence_sentences for the mechanism; one output column
-    must reference it or pruning deletes it."""
+    The ``_ohash`` companion aggregate exists only to flip the struct-max
+    from SortAggregate to ObjectHashAggregateExec.  Spark hashes only
+    primitive-buffer aggregates, so a bare max(struct(..., string))
+    sort-aggregates: the links table would be SORTED.  A TypedImperative
+    aggregate in the group (collect_set of a constant: one tiny set per
+    key) makes the planner pick ObjectHashAggregateExec for the whole
+    group, with identical results.  One output column must reference it
+    (a non-foldable always-true guard) or column pruning deletes it and
+    the sort returns."""
     best = (
         links
         .withColumn("oid_l", _oid_l())
@@ -513,6 +517,29 @@ def _null(x):
     return None if x is None or x != x else x
 
 
+def complete_urls(batches: Iterator[pd.DataFrame]
+                  ) -> Iterator[pd.DataFrame]:
+    """Re-cut a url-sorted stream of Arrow batches into frames that hold
+    only COMPLETE urls: the rows of the last url of a batch are carried
+    into the next, so a url-local kernel holds one url's rows at a time,
+    never its whole partition.  ``link_rows`` and
+    ``materialize.evidence_pairs`` stream their partitions through it."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        urls = pdf["url"].to_numpy()
+        if not len(urls):
+            continue
+        earlier = (urls != urls[-1]).nonzero()[0]
+        cut = int(earlier[-1]) + 1 if len(earlier) else 0
+        carry = pdf.iloc[cut:]
+        if cut:
+            yield pdf.iloc[:cut]
+    if carry is not None and len(carry):
+        yield carry
+
+
 def _link_urls(linker: RowLinker, pdf: pd.DataFrame) -> pd.DataFrame:
     """The kernel over rows holding COMPLETE urls, sorted by url."""
     col = {c: pdf[c].tolist() for c in _KERNEL_IN}
@@ -574,30 +601,16 @@ def link_rows(stage_rows: DataFrame, layer_map: dict[str, list[dict]],
     puts every row of a url in one partition.  The partitions are
     coalesced to at most one per core (every Python task pays a fixed
     start-up cost, and coalescing keeps each hash partition, hence each
-    url, inside one task), sorted by url, and
-    streamed through ``mapInPandas`` url by url: the rows of the last url
-    of an Arrow batch are carried into the next, so a task holds one url's
-    rows at a time, never its whole partition.  Error rows are dropped;
-    every other row of a url, from every page that shares it, is merged
-    before linking."""
+    url, inside one task), sorted by url, and streamed through
+    ``mapInPandas`` url by url (``complete_urls``).  Error rows are
+    dropped; every other row of a url, from every page that shares it, is
+    merged before linking."""
     linker = RowLinker(layer_map)
     cores = stage_rows.sparkSession.sparkContext.defaultParallelism
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            urls = pdf["url"].to_numpy()
-            if not len(urls):
-                continue
-            earlier = (urls != urls[-1]).nonzero()[0]
-            cut = int(earlier[-1]) + 1 if len(earlier) else 0
-            carry = pdf.iloc[cut:]
-            if cut:
-                yield _link_urls(linker, pdf.iloc[:cut])
-        if carry is not None and len(carry):
-            yield _link_urls(linker, carry)
+        for pdf in complete_urls(batches):
+            yield _link_urls(linker, pdf)
 
     scored = ((F.col("rec_type") == "mention")
               & F.col("category").isin(BM25_LABELS))

@@ -5,49 +5,69 @@ Edge shape per the reference's output spec (README.md:47-58):
 (config.PREDICATE_MAP) and a confidence ``score``.
 
 Pipeline:
-  1. per-document *evidence* rows: one row per (url, label, canon_id) with
-     the best score + sentence (mentions + residual links, canonicalized);
-  2. doc-level co-occurrence pairing restricted to the typed label pairs
-     (no quadratic all-pairs blowup);
-  3. groupBy (subj, pred, obj) with the k-smallest source urls — the
-     partial+final aggregation Catalyst already optimizes.
+  1. per-document *evidence* rows (``evidence_rows``): one row per mention
+     or residual link with (url, label, canon_id, score, sentence);
+  2. the url-local pair kernel (``evidence_pairs``): the evidence is
+     hash-partitioned by url once, coalesced to at most one partition per
+     core, sorted by url and streamed url by url through ONE
+     ``mapInPandas``, where ``doc_pairs`` folds each url's evidence into
+     co-occurrence pairs restricted to the typed label pairs (no quadratic
+     all-pairs blowup) — at most one pair row per (triple, url);
+  3. ``_salted_aggregate``: groupBy (subj, pred, obj) with the k-smallest
+     source urls, a salted two-phase aggregation, map-side combined.
 
-Scale notes: the pairing is a row-local double explode over per-url
-entity arrays (bounded fan-out: a doc has few entities) — no self-join,
-so the evidence table shuffles exactly once; the hub-entity skew shows up
-in the final groupBy, which is algebraic (set-union/max) and map-side
-combined; AQE handles the rest.  The output table should be partitioned
-by ``pred`` (S10).
+Batch (``materialize_triples``), chunked (``partial_triples``) and
+streaming (streaming/kg_stream.py) runs all pair with ``doc_pairs`` and
+aggregate with ``_salted_aggregate``: the rules below exist once.
 
-Argmax-first justification (round 3): justification SENTENCES never ride
-the pairing self-join.  The pairing/aggregation runs on a narrow evidence
-projection (url, label, canon_id, score, has_sentence) and each triple's
-best-evidence KEY — max(struct(pair_score, has_sentence, url,
-subj_label)) — is aggregated instead of the sentence string; the sentence
-is attached afterwards by ONE narrow equi-join against the per-(url,
-label, canon_id) best-sentence table.  This shrinks the dominant shuffle
-(the pairing join fans every evidence row out by its co-occurrence count)
-from sentence-bearing rows to ~40-byte keys.  Tie-break rule (pinned by
-scripts/ref_interpreter.py and the gold fixtures): among a triple's
-evidence rows, prefer higher pair_score, then rows that carry a sentence,
-then the lexicographically LARGEST source url, then the largest subject
-label; the justification is that row's (url, subj_label, subj) evidence
-sentence.  (Rounds 1-2 tie-broke equal-score rows by the sentence string
-itself, which forced sentences through every aggregation buffer.)
+Scale notes: the evidence table shuffles exactly once, by url, and a task
+holds one url's evidence at a time; the hub-entity skew shows up in the
+final groupBy, which is algebraic (set-union/max) and salted.  The output
+table should be partitioned by ``pred`` (S10).
+
+Justification as a payload: each pair row carries its subject's evidence
+sentence, and each triple's best-evidence KEY — max(struct(pair_score,
+has_sentence, url, subj_label)) — carries that sentence as a trailing
+payload field.  With at most one pair row per (triple, url) the key never
+ties, so the payload never decides a comparison.  Tie-break rule (pinned
+by scripts/ref_interpreter.py and the gold fixtures): among a triple's
+evidence pairs, prefer higher pair_score, then pairs whose subject carries
+a sentence, then the lexicographically LARGEST source url, then the
+largest subject label; the justification is that pair's subject evidence
+sentence — the argmax-score sentence of its (url, label, canon_id), ties
+to the larger string, null lowest.
 """
 
 from __future__ import annotations
 
+from itertools import groupby
+from operator import itemgetter
+from typing import Iterable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import PREDICATE_MAP
-from ..session import local_table
+from .linking import complete_urls
 
 # Source urls kept per triple (the k smallest) and salts of the two-phase
-# triple aggregation (_triple_aggregate).
+# triple aggregation (_salted_aggregate).
 MAX_SOURCES = 64
 N_SALTS = 16
+
+# One evidence pair per (triple, url): the pair kernel's output.  Every
+# column is nullable, as in ``evidence_rows``.
+PAIR_SCHEMA = T.StructType([
+    T.StructField("subj", T.StringType()),
+    T.StructField("pred", T.StringType()),
+    T.StructField("obj", T.StringType()),
+    T.StructField("url", T.StringType()),
+    T.StructField("subj_label", T.StringType()),
+    T.StructField("pair_score", T.DoubleType()),
+    T.StructField("justification", T.StringType()),
+])
 
 
 def evidence_rows(mentions_linked: DataFrame,
@@ -83,170 +103,100 @@ def evidence_rows(mentions_linked: DataFrame,
     )
 
 
-def _evidence_sentences(ev: DataFrame) -> DataFrame:
-    """(url, label, canon_id, sentence): the argmax-score sentence per
-    evidence key (ties: max sentence string; null sorts lowest).  A plain
-    partial+final aggregation — the shuffle carries at most one sentence
-    per (key, map task).
-
-    The ``_ohash`` companion aggregate exists ONLY to flip the physical
-    aggregation from SortAggregate to ObjectHashAggregate: Spark hashes
-    only primitive-buffer aggregates, so a bare max(struct(double,
-    string)) SORT-aggregates — a full sort of the sentence-bearing scan
-    that profiling showed anti-scaling (round-4).  A TypedImperative
-    aggregate in the group (collect_set of a constant: one tiny set per
-    key) makes the planner pick ObjectHashAggregateExec for the whole
-    group — hash-based, no sort, identical results.  The output must
-    REFERENCE the companion (a non-foldable always-true guard) or column
-    pruning deletes it and the sort returns."""
-    agg = (
-        ev.groupBy("url", "label", "canon_id")
-        .agg(F.max(F.struct(F.col("score").alias("s"), "sentence"))
-              .alias("_mx"),
-             F.collect_set(F.lit(1)).alias("_ohash"))
-    )
-    return agg.select(
-        "url", "label", "canon_id",
-        F.when(F.size("_ohash") > 0, F.col("_mx.sentence"))
-         .alias("sentence"))
+def _sent_key(row: tuple[float, str | None]) -> tuple:
+    """Total order of (score, sentence) matching Spark's struct(score,
+    sentence) max: null sentence sorts below any string."""
+    score, sentence = row
+    return score, sentence is not None, sentence or ""
 
 
-def _narrow_evidence(ev: DataFrame, partitions: int | None) -> DataFrame:
-    """Sentence-free per-doc evidence: (url, label, canon_id, score,
-    has_sentence).  ``has_sentence`` is true iff the argmax-score sentence
-    for the key is non-null — computed from a boolean BEFORE the shuffle so
-    column pruning drops the sentence string from this branch's scan."""
-    m = ev.select("url", "label", "canon_id", "score",
-                  F.col("sentence").isNotNull().alias("has_s"))
-    if partitions:
-        # HashPartitioning(url) satisfies every downstream clustering whose
-        # keys include url: the groupBy and BOTH pairing-join branches run
-        # exchange-free on this single narrow shuffle (ReuseExchange
-        # collapses the two identical branches to one physical exchange).
-        m = m.repartition(partitions, F.col("url"))
-    # has_sentence = "the argmax-score row carries a sentence", expressed
-    # as two PRIMITIVE maxes (max score overall vs max score among
-    # sentence rows) instead of max(struct(score, has_s)): a struct
-    # aggregation buffer forces SortAggregate (full sort of the evidence
-    # table — round-4 profiling), while double-buffer maxes whole-stage
-    # HashAggregate.  Equivalent by case analysis: the struct max picks
-    # has_s=true iff some max-score row has a sentence iff
-    # max(score | has_s) == max(score).
-    return (
-        m.groupBy("url", "label", "canon_id")
-        .agg(F.max("score").alias("score"),
-             F.coalesce(
-                 F.max(F.when(F.col("has_s"), F.col("score")))
-                 >= F.max("score"),
-                 F.lit(False)).alias("has_sentence"))
-    )
+def doc_pairs(evidence: Iterable[tuple], predicate_map: dict) -> dict:
+    """The pairing and tie-break rules for ONE url: evidence tuples
+    (label, canon_id, score, sentence) -> {(subj, pred, obj): (pair_score,
+    justification, subj_label)}.
+
+    The evidence folds to one (max score, argmax sentence) per (label,
+    canon_id), a null score counting as 0.  Evidence with a null canon_id
+    never pairs, as SQL's ``s.canon_id != o.canon_id`` is null there.
+    Pairs follow ``predicate_map``'s typed label pairs and never join an
+    entity to itself; pair_score = min(max(s_score, 0), max(o_score, 0)).
+    Per triple, the pair with the largest (pair_score, subject has a
+    sentence, subj_label) wins and carries the subject's sentence — the
+    cross-url best-evidence key of ``_salted_aggregate`` with its url
+    fixed, so the fold is associative with the aggregation over urls."""
+    ev: dict[tuple[str, str], tuple[float, str | None]] = {}
+    for label, canon_id, score, sentence in evidence:
+        if canon_id is None:
+            continue
+        row = (float(score or 0.0), sentence)
+        cur = ev.get((label, canon_id))
+        ev[(label, canon_id)] = row if cur is None else max(
+            cur, row, key=_sent_key)
+
+    by_label: dict[str, list[tuple[str, float, str | None]]] = {}
+    for (label, canon_id), (score, sentence) in ev.items():
+        by_label.setdefault(label, []).append((canon_id, score, sentence))
+
+    pairs: dict[tuple[str, str, str], tuple[float, str | None, str]] = {}
+    for (subj_label, obj_label), pred in predicate_map.items():
+        for subj, s_score, s_sent in by_label.get(subj_label, ()):
+            for obj, o_score, _o_sent in by_label.get(obj_label, ()):
+                if subj == obj:
+                    continue
+                pair_score = min(max(s_score, 0.0), max(o_score, 0.0))
+                key = (subj, pred, obj)
+                cur = pairs.get(key)
+                if cur is None or ((pair_score, s_sent is not None,
+                                    subj_label)
+                                   > (cur[0], cur[1] is not None, cur[2])):
+                    pairs[key] = (pair_score, s_sent, subj_label)
+    return pairs
 
 
-def _pairs(evn: DataFrame) -> DataFrame:
-    """Doc-level co-occurrence pairing over NARROW evidence — as a
-    row-local explode, NOT a self-join.
-
-    A url's evidence entities are collected into one array (groupBy url —
-    exchange-free under the upstream url partitioning) and the pair
-    fan-out happens INSIDE the row via a double explode + broadcast join
-    against the typed predicate table.  Compared with the rounds-1/2
-    url-keyed self-join this removes a second data-sized shuffle+sort of
-    the evidence table and the AQE broadcast-vs-SMJ instability it had to
-    pin down (a self-join materializes both sides; rows 1-2 forced
-    shuffle_merge because AQE sporadically broadcast the data-sized b
-    side).  Memory per row is bounded by a DOCUMENT's distinct entity
-    count — the same bound the self-join's per-url sort buffer had."""
-    spark = evn.sparkSession
-    preds = local_table(
-        spark, [(a, b, p) for (a, b), p in PREDICATE_MAP.items()],
-        "subj_label string, obj_label string, pred string")
-    ents = (
-        evn.groupBy("url")
-        .agg(F.collect_list(
-            F.struct("label", "canon_id", "score", "has_sentence"))
-            .alias("ents"))
-    )
-    return (
-        ents
-        .select("url", "ents", F.explode("ents").alias("s"))
-        .select("url", F.col("s"), F.explode("ents").alias("o"))
-        .join(F.broadcast(preds),
-              (F.col("s.label") == F.col("subj_label"))
-              & (F.col("o.label") == F.col("obj_label")))
-        .filter(F.col("s.canon_id") != F.col("o.canon_id"))
-        .select(
-            "url", "subj_label",
-            F.col("s.canon_id").alias("subj"),
-            F.col("o.canon_id").alias("obj"),
-            "pred",
-            F.col("s.has_sentence").alias("subj_has_s"),
-            F.least(F.greatest(F.col("s.score"), F.lit(0.0)),
-                    F.greatest(F.col("o.score"), F.lit(0.0)))
-             .alias("pair_score"))
-    )
+def _pair_urls(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The pair kernel over evidence rows holding COMPLETE urls, sorted by
+    url."""
+    rows = zip(pdf["url"], pdf["label"], pdf["canon_id"], pdf["score"],
+               pdf["sentence"])
+    out = []
+    for url, ev in groupby(rows, key=itemgetter(0)):
+        out.extend((subj, pred, obj, url, subj_label, s, j)
+                   for (subj, pred, obj), (s, j, subj_label) in doc_pairs(
+                       (r[1:] for r in ev), PREDICATE_MAP).items())
+    return pd.DataFrame(out, columns=PAIR_SCHEMA.names)
 
 
-def _bj(*payload):
-    """Best-evidence KEY aggregate per triple: (score, has-sentence, url,
-    subj_label) — the justification attaches by key after aggregation,
-    never rides it.  ``payload`` columns ride after the key; they never
-    decide a comparison when a triple has at most one pair row per url."""
-    return F.max(F.struct(F.col("pair_score").alias("s"),
-                          F.col("subj_has_s").alias("has_s"),
-                          F.col("url"),
-                          F.col("subj_label"),
-                          *payload))
+def evidence_pairs(ev: DataFrame, partitions: int | None) -> DataFrame:
+    """``evidence_rows`` output -> ``PAIR_SCHEMA`` rows, at most one per
+    (triple, url): the url-local pair kernel.
+
+    The evidence is hash-partitioned by url (``partitions`` partitions, or
+    the session's shuffle partitions) — the stage's only exchange before
+    the triple aggregation — coalesced to at most one partition per core
+    (each Python task pays a fixed start-up cost; coalescing keeps every
+    url in one task), sorted by url and streamed url by url
+    (``linking.complete_urls``) through one ``mapInPandas`` that folds
+    each url with ``doc_pairs``."""
+    cores = ev.sparkSession.sparkContext.defaultParallelism
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in complete_urls(batches):
+            yield _pair_urls(pdf)
+
+    by_url = (ev.repartition(partitions, F.col("url")) if partitions
+              else ev.repartition(F.col("url")))
+    return (by_url.select("url", "label", "canon_id", "score", "sentence")
+            .coalesce(cores)
+            .sortWithinPartitions("url")
+            .mapInPandas(run, PAIR_SCHEMA))
 
 
-def _attach_justification(agg: DataFrame, ev_sent: DataFrame,
-                          bj: str = "bj") -> DataFrame:
-    """One narrow equi-join: triple best-evidence key -> sentence.
-
-    Pinned to a shuffle join: ev_sent scales with the data (one sentence
-    per doc-entity), and an AQE runtime broadcast of it is a serial
-    driver-side hash build — observed as a bimodal materialize stage
-    (80 s <-> 220 s at 256k pages) before the hint, the same failure
-    class round 2 pinned out of the old pairing self-join.  shuffle_HASH
-    with the triple side as build (round 4; was shuffle_merge): the
-    aggregated triple side is catalog-bounded (subj/obj are canonical
-    catalog ids) while ev_sent is data-sized — hashing the small side
-    skips sorting BOTH shuffled streams.
-
-    NOTE: building the LEFT (stream-preserved) side of a LEFT OUTER
-    shuffle_hash join requires Spark >= 3.5 (SPARK-36612); earlier
-    planners silently fall back to sort-merge (correctness unaffected,
-    the round-4 sort-free win lost).  scripts/explain_audit.py asserts
-    ShuffledHashJoin in the materialize stage plan so a silent fallback
-    fails the audit."""
-    joined = agg.hint("shuffle_hash").join(
-        ev_sent,
-        (F.col(f"{bj}.url") == ev_sent.url)
-        & (F.col(f"{bj}.subj_label") == ev_sent.label)
-        & (agg.subj == ev_sent.canon_id),
-        "left")
-    return joined.select(
-        *[agg[c] for c in agg.columns],
-        ev_sent.sentence.alias("justification"))
-
-
-def _triple_aggregate(ev: DataFrame, max_sources: int, n_salts: int,
-                      partitions: int | None,
+def _salted_aggregate(pairs: DataFrame, max_sources: int, n_salts: int,
                       round_score: bool) -> DataFrame:
-    """Evidence -> (subj, pred, obj, sources, n_sources, bj, score,
-    justification) for ``materialize_triples`` and ``partial_triples``:
-    the narrow evidence is paired, aggregated by ``_salted_aggregate`` and
-    the justification attached by the best-evidence key."""
-    pairs = _pairs(_narrow_evidence(ev, partitions))
-    agg = _salted_aggregate(pairs, _bj(), max_sources, n_salts, round_score)
-    return _attach_justification(agg, _evidence_sentences(ev))
-
-
-def _salted_aggregate(pairs: DataFrame, bj, max_sources: int, n_salts: int,
-                      round_score: bool) -> DataFrame:
-    """The salted two-phase triple aggregation over evidence pairs (subj,
-    pred, obj, url, subj_label, pair_score, subj_has_s): (subj, pred, obj,
-    sources, n_sources, bj, score), ``bj`` being the per-salt ``_bj``
-    aggregate it is handed.
+    """The salted two-phase triple aggregation over evidence pairs with at
+    most one row per (triple, url) (``PAIR_SCHEMA``): (subj, pred, obj,
+    sources, n_sources, bj, score), ``bj`` being the best-evidence key
+    struct(s, has_s, url, subj_label) with the justification as payload.
 
     Hub-entity skew handling (north_rule "salted skew handling"): at
     10^12-doc scale a hub edge's source set has millions of urls, so a
@@ -260,10 +210,13 @@ def _salted_aggregate(pairs: DataFrame, bj, max_sources: int, n_salts: int,
 
     Because the global k smallest urls are each among their own salt's k
     smallest, the result is EXACTLY the k smallest source urls —
-    deterministic and bounded.  ``n_sources`` carries the exact distinct
-    source count (algebraic, skew-safe).  The best-justification argmax is
-    equally salted (max of a max is the max) and carries only the
-    evidence KEY; the sentence attaches afterwards (module docstring)."""
+    deterministic and bounded.  ``n_sources`` is the exact distinct
+    source count: a plain row count, since no url repeats within a triple
+    (algebraic, skew-safe).  The best-evidence argmax is equally salted
+    (max of a max is the max)."""
+    bj = F.max(F.struct(F.col("pair_score").alias("s"),
+                        F.col("justification").isNotNull().alias("has_s"),
+                        "url", "subj_label", "justification"))
     per_salt = (
         pairs
         .withColumn("salt", F.pmod(F.crc32("url"), F.lit(n_salts)))
@@ -271,7 +224,7 @@ def _salted_aggregate(pairs: DataFrame, bj, max_sources: int, n_salts: int,
         .agg(
             F.slice(F.sort_array(F.collect_set("url")), 1, max_sources)
              .alias("salt_sources"),
-            F.countDistinct("url").alias("salt_n"),
+            F.count("url").alias("salt_n"),
             bj.alias("bj"),
             F.max("pair_score").alias("salt_score"),
         )
@@ -297,63 +250,42 @@ def materialize_triples(ev: DataFrame,
                         n_salts: int = N_SALTS,
                         partitions: int | None = None) -> DataFrame:
     """evidence -> triples(subj, pred, obj, sources, n_sources,
-    justification, score).  ``ev`` is ``evidence_rows`` output (raw rows
-    let the narrow branch prune sentences from its scan; any per-(url,
-    label, canon_id) pre-aggregation of it gives the same triples).  The
-    aggregation is ``_triple_aggregate``'s salted two-phase one."""
-    out = _triple_aggregate(ev, max_sources, n_salts, partitions,
-                            round_score=True)
-    return out.select("subj", "pred", "obj", "sources", "n_sources",
-                      "justification", "score")
+    justification, score).  ``ev`` is ``evidence_rows`` output (any
+    per-(url, label, canon_id) pre-aggregation of it gives the same
+    triples); ``partitions`` is the url exchange's partition count."""
+    agg = _salted_aggregate(evidence_pairs(ev, partitions), max_sources,
+                            n_salts, round_score=True)
+    return agg.select("subj", "pred", "obj", "sources", "n_sources",
+                      F.col("bj.justification").alias("justification"),
+                      "score")
 
 
 def partial_triples(ev: DataFrame,
                     partitions: int | None = None) -> DataFrame:
     """Chunk-local partial triple aggregate for merge-on-append incremental
-    materialization.  Because chunks partition the corpus BY URL, every
+    materialization: ``partial_triples_of_pairs`` over the pair kernel."""
+    return partial_triples_of_pairs(evidence_pairs(ev, partitions))
+
+
+def partial_triples_of_pairs(pairs: DataFrame) -> DataFrame:
+    """The partial triple aggregate of evidence pairs (``PAIR_SCHEMA``).
+    Because chunks and micro-batches partition the corpus BY URL, every
     per-triple statistic here is mergeable exactly:
 
       part_sources  k-smallest urls within the chunk (the global k smallest
                     are each within their own chunk's k smallest)
       part_n        exact distinct url count (urls disjoint across chunks)
-      part_bj       max (s, has_s, url, subj_label) evidence key, with the
-                    chunk-local justification attached as a PAYLOAD field —
-                    urls are chunk-disjoint, so the cross-chunk max can
-                    never tie on (s, has_s, url) across chunks and the
-                    payload never decides a comparison
+      part_bj       max (s, has_s, url, subj_label) evidence key with the
+                    justification as payload — urls are chunk-disjoint,
+                    so the cross-chunk max never ties on the key either
       part_score    max pair_score (rounded only at merge time)
     """
-    with_j = _triple_aggregate(ev, MAX_SOURCES, N_SALTS, partitions,
-                               round_score=False)
-    return _as_partial(with_j, F.struct(
-        F.col("bj.s").alias("s"),
-        F.col("bj.has_s").alias("has_s"),
-        F.col("bj.url").alias("url"),
-        F.col("bj.subj_label").alias("subj_label"),
-        F.col("justification").alias("justification")))
-
-
-def partial_triples_of_pairs(pairs: DataFrame) -> DataFrame:
-    """``partial_triples`` over evidence PAIRS that are already folded per
-    url: (subj, pred, obj, url, subj_label, pair_score, justification),
-    at most one row per (triple, url) — the output of the row-local
-    pairing kernel ``streaming.kg_stream.stream_evidence_pairs``.  Same
-    salted aggregate, same output schema; the justification is the winning
-    pair's own, so it rides the best-evidence key as a payload instead of
-    being joined back."""
-    agg = _salted_aggregate(
-        pairs.withColumn("subj_has_s", F.col("justification").isNotNull()),
-        _bj(F.col("justification")), MAX_SOURCES, N_SALTS, round_score=False)
-    return _as_partial(agg, F.col("bj"))
-
-
-def _as_partial(agg: DataFrame, part_bj) -> DataFrame:
-    """The partial-aggregate schema ``merge_partial_triples`` reads."""
+    agg = _salted_aggregate(pairs, MAX_SOURCES, N_SALTS, round_score=False)
     return agg.select(
         "subj", "pred", "obj",
         F.col("sources").alias("part_sources"),
         F.col("n_sources").alias("part_n"),
-        part_bj.alias("part_bj"),
+        F.col("bj").alias("part_bj"),
         F.col("score").alias("part_score"))
 
 

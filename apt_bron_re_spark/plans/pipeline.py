@@ -36,9 +36,12 @@ against the global BM25 (stats, df) it is handed, so the chunked wrapper
 freezes those once from the whole corpus; per-chunk stats would give
 wrong idf.  (The streaming micro-batch step,
 ``streaming.kg_stream.kg_batch_step``, runs stages 2-5 row-locally
-instead.)  The ``run_*_incremental`` stages share one chunk loop
-(``_run_chunks``): exactly-once per-partition writes plus per-bucket
-lineage.
+instead.)  Materialize is likewise one url-local kernel,
+``operators.materialize.evidence_pairs``, under ``run``
+(``materialize_triples``) and ``run_materialize_incremental``
+(``partial_triples`` per chunk).  The ``run_*_incremental`` stages share
+one chunk loop (``_run_chunks``): exactly-once per-partition writes plus
+per-bucket lineage.
 """
 
 from __future__ import annotations
@@ -50,6 +53,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions.partitioning import bucket
 
 from ..config import LANG, NER_MATCH_SCORE, SIM_THRESHOLD
 from ..operators import bm25, canonicalize, linking, materialize, mention
@@ -165,7 +169,7 @@ class Pipeline:
         w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
         if partition_by == ["pbucket"]:
             # the REAL bucket transform the parquet pbucket emulates
-            return w.partitionedBy(F.bucket(self.n_buckets, F.col("url")))
+            return w.partitionedBy(bucket(self.n_buckets, F.col("url")))
         if partition_by:
             return w.partitionedBy(*[F.col(c) for c in partition_by])
         return w

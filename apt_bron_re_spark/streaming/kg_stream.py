@@ -10,9 +10,10 @@ execution shapes, both reusing the batch operators:
    frozen-catalog links, canon lookup and per-url pairing in one
    url-clustered ``mapInPandas``), then the salted partial triple
    aggregate (operators/materialize.py ``partial_triples_of_pairs``), and
-   appends it partitioned by ``batch_id``.  A micro-batch is six Spark
-   jobs: the canon collect, the url exchange, the three exchanges of the
-   aggregate (its first phase counts distinct urls) and the write.  The
+   appends it partitioned by ``batch_id``.  A micro-batch is five Spark
+   jobs: the canon collect, the url exchange, the two exchanges of the
+   salted aggregate (one per phase) and the write.  The kernel pairs
+   with ``materialize.doc_pairs``, the batch pair kernel's fold.  The
    partials merge associatively
    (``merge_partial_triples`` — correct because a page's url lives in
    exactly one micro-batch, the same url-disjointness that makes the
@@ -76,16 +77,6 @@ from ..operators.canonicalize import canonical_map
 from ..operators.doc_core import NerTagger, process_document
 from ..operators.linking import RowLinker
 
-PAIR_SCHEMA = T.StructType([
-    T.StructField("subj", T.StringType(), False),
-    T.StructField("pred", T.StringType(), False),
-    T.StructField("obj", T.StringType(), False),
-    T.StructField("url", T.StringType(), False),
-    T.StructField("subj_label", T.StringType(), False),
-    T.StructField("pair_score", T.DoubleType(), False),
-    T.StructField("justification", T.StringType(), True),
-])
-
 TRIPLE_SCHEMA = T.StructType([
     T.StructField("subj", T.StringType(), False),
     T.StructField("pred", T.StringType(), False),
@@ -124,70 +115,24 @@ def _collect_canon(canon: DataFrame) -> dict:
             for r in canon.collect()}
 
 
-def _sent_key(score: float, sentence: str | None) -> tuple:
-    """Total order matching Spark's struct(score, sentence) max: null
-    sentence sorts below any string.  Used for the EVIDENCE-level argmax
-    (best sentence per (url, label, canon_id))."""
-    return (score, sentence is not None, sentence or "")
-
-
-def _doc_pairs(results: dict, canon_map: dict,
-               predicate_map: dict,
-               residual_links: list[tuple] | None = None) -> dict:
-    """Per-document evidence pairing — the row-local twin of
-    materialize.evidence_rows + the pairing join in materialize_triples,
-    restricted to one url.  Returns {(subj, pred, obj): (pair_score,
-    justification, subj_label)} with the per-url max already folded by
-    the batch tie-break order (pair_score, has_sentence, url[=const here],
-    subj_label) — associative with the cross-url aggregation in
-    ``stream_triples_live`` and ``materialize.partial_triples_of_pairs``,
-    so the global result is unchanged."""
-    def evidence():
-        for label, entries in results.items():
-            for ent in entries:
-                # explicit None check == F.coalesce(original_id, value): an
-                # empty-string original_id must NOT fall through to value
-                entity_id = ent.get("original_id")
-                if entity_id is None:
-                    entity_id = ent.get("value")
-                yield (label, entity_id, ent.get("NER_score"),
-                       ent.get("sentence"))
-        # residual-link evidence (label, original_id, score) — sentence-free,
-        # exactly like the batch residual_links branch of evidence_rows
-        for label, entity_id, score in residual_links or ():
-            yield label, entity_id, score, None
-
-    # evidence: best (score, sentence) per (label, canon_id)
-    ev: dict[tuple[str, str], tuple[float, str | None]] = {}
-    for label, entity_id, score, sentence in evidence():
-        row = (float(score or 0.0), sentence)
-        key = (label, canon_map.get((label, entity_id), entity_id))
-        cur = ev.get(key)
-        ev[key] = row if cur is None else (
-            max(cur[0], row[0]), max(cur, row, key=lambda c: _sent_key(*c))[1])
-
-    by_label: dict[str, list[tuple[str, float, str | None]]] = {}
-    for (label, canon_id), (score, sentence) in ev.items():
-        by_label.setdefault(label, []).append((canon_id, score, sentence))
-
-    # within one url the batch best-justification struct (s, has_s, url,
-    # subj_label) reduces to (s, has_s, subj_label)
-    pairs: dict[tuple[str, str, str], tuple[float, str | None]] = {}
-    cand_keys: dict[tuple[str, str, str], tuple] = {}
-    for (subj_label, obj_label), pred in predicate_map.items():
-        for subj, s_score, s_sent in by_label.get(subj_label, ()):
-            for obj, o_score, _o_sent in by_label.get(obj_label, ()):
-                if subj == obj:
-                    continue
-                pair_score = min(max(s_score, 0.0), max(o_score, 0.0))
-                key = (subj, pred, obj)
-                # first key component is pair_score, so the winner also
-                # carries the max pair_score for the (triple, url) fold
-                ck = (pair_score, s_sent is not None, subj_label)
-                if key not in pairs or ck > cand_keys[key]:
-                    pairs[key] = (pair_score, s_sent, subj_label)
-                    cand_keys[key] = ck
-    return pairs
+def _evidence(results: dict, residual_links: list[tuple],
+              canon_map: dict) -> Iterator[tuple]:
+    """One document's evidence tuples (label, canon_id, score, sentence)
+    for ``materialize.doc_pairs`` — the row-local twin of
+    ``materialize.evidence_rows``: mention entries, then the sentence-free
+    residual links (label, original_id, score), canonicalized through the
+    collected canon map."""
+    for label, entries in results.items():
+        for ent in entries:
+            # explicit None check == F.coalesce(original_id, value): an
+            # empty-string original_id must NOT fall through to value
+            entity_id = ent.get("original_id")
+            if entity_id is None:
+                entity_id = ent.get("value")
+            yield (label, canon_map.get((label, entity_id), entity_id),
+                   ent.get("NER_score"), ent.get("sentence"))
+    for label, entity_id, score in residual_links:
+        yield label, canon_map.get((label, entity_id), entity_id), score, None
 
 
 def stream_evidence_pairs(pages_stream: DataFrame,
@@ -208,7 +153,6 @@ def stream_evidence_pairs(pages_stream: DataFrame,
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
     linker = RowLinker(layer_map) if link else None
-    out_cols = [f.name for f in PAIR_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         docs: dict[str, tuple[dict, dict]] = {}
@@ -225,19 +169,20 @@ def stream_evidence_pairs(pages_stream: DataFrame,
                 for merged, part in zip(docs[url], doc):
                     for key, values in part.items():
                         merged.setdefault(key, []).extend(values)
-        rows: list[dict] = []
+        rows: list[tuple] = []
         for url, (results, residue) in docs.items():
             residuals = linker.apply(results, residue) if linker else []
-            for (subj, pred, obj), (s, j, subj_label) in _doc_pairs(
-                    results, canon_map, PREDICATE_MAP, residuals).items():
-                rows.append({"subj": subj, "pred": pred, "obj": obj,
-                             "url": url, "subj_label": subj_label,
-                             "pair_score": s, "justification": j})
-        yield pd.DataFrame(rows, columns=out_cols)
+            rows.extend(
+                (subj, pred, obj, url, subj_label, s, j)
+                for (subj, pred, obj), (s, j, subj_label)
+                in materialize.doc_pairs(
+                    _evidence(results, residuals, canon_map),
+                    PREDICATE_MAP).items())
+        yield pd.DataFrame(rows, columns=materialize.PAIR_SCHEMA.names)
 
     return (pages_stream.filter(F.col("lang") == LANG)
             .select("url", "html").repartition("url")
-            .mapInPandas(run, PAIR_SCHEMA))
+            .mapInPandas(run, materialize.PAIR_SCHEMA))
 
 
 def stream_triples_live(pairs: DataFrame) -> DataFrame:
@@ -282,8 +227,9 @@ def stream_triples_live(pairs: DataFrame) -> DataFrame:
                         n += 1
                 score = max(score, s)
                 # cross-url best-justification order — the streaming twin
-                # of the batch argmax key struct(s, has_sentence, url)
-                # (materialize._bj; subj_label already folded per url)
+                # of the best-evidence key struct(s, has_s, url) of
+                # materialize._salted_aggregate (subj_label already folded
+                # per url by materialize.doc_pairs)
                 if (s, j is not None, url) > (bj_s, bj_has, bj_url):
                     bj_s, bj_has, bj_url, bj = s, j is not None, url, j
             sources = sorted(set(sources) | seen_urls)[:materialize.MAX_SOURCES]

@@ -17,6 +17,7 @@ Writes PLANS.md with the verdicts + plan excerpts.
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -32,6 +33,26 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# joins no url-local kernel plan may contain
+NO_SHUFFLE_JOINS = ["ShuffledHashJoin", "SortMergeJoin",
+                    "BroadcastNestedLoopJoin", "CartesianProduct"]
+
+
+def one_url_exchange(stage: str, plan: str) -> tuple:
+    """A derived check: ``plan`` holds exactly one
+    ``hashpartitioning(url, n), REPARTITION_BY_NUM`` exchange."""
+    n = len(re.findall(
+        r"hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_NUM", plan))
+    return (
+        f"{stage}: exactly one url exchange (found {n})",
+        f"(derived from the plan above: {n} hashpartitioning(url, n), "
+        f"REPARTITION_BY_NUM exchange(s))"
+        + (" ONE_URL_EXCHANGE_OK" if n == 1 else ""),
+        ["ONE_URL_EXCHANGE_OK"],
+        [],
+    )
 
 
 def main() -> None:
@@ -210,27 +231,23 @@ def main() -> None:
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ))
 
-    # 14. evidence pairing: a row-local double explode over per-url entity
-    # arrays — NO self-join at all (rounds 1-2 used a forced-SMJ self-join;
-    # AQE sporadically broadcast its data-sized side), and the sentence
-    # string must be ABSENT from the pairing branch (argmax-first
-    # justification: only (url, label, canon_id, score, has_sentence)
-    # shuffles; the sentence attaches after aggregation)
+    # 14. evidence pairing: one url exchange feeding the url-local pair
+    # kernel (materialize.evidence_pairs) — no join of any kind pairs the
+    # evidence, and the url exchange is the only one before the salted
+    # triple aggregate
     from apt_bron_re_spark.operators.materialize import materialize_triples
-    # label must VARY: a constant label constant-folds the preds equi-join
-    # into a degenerate BNLJ and the check would flag an artifact
     ev = docs_df.selectExpr(
         "url",
         "CASE WHEN length(url) % 2 = 0 THEN 'group' ELSE 'technique' END"
         " as label",
         "substr(url, 1, 2) as canon_id",
         "0.5 as score", "text as sentence")
-    p = plan_of(materialize_triples(ev))
+    p = plan_of(materialize_triples(ev, partitions=8))
     checks.append((
-        "materialize pairing (row-local explode, argmax-first sentence)", p,
-        ["Generate", "HashAggregate", "collect_list"],
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
+        "materialize pairing (one url exchange, url-local pair kernel)", p,
+        ["MapInPandas", "REPARTITION_BY_NUM"], NO_SHUFFLE_JOINS,
     ))
+    checks.append(one_url_exchange("materialize pairing", p))
 
     # 15. IVF ANN (round 7): centroid assignment is ONE ArrowEvalPython
     # projection (integer-exact numpy matmul argmax per Arrow batch —
@@ -259,13 +276,10 @@ def main() -> None:
     ))
 
     # 17/18. link + materialize stage plans over REAL stage tables: one
-    # url hash-partitioning per stage.  The link stage is one url exchange
-    # feeding one url-local MapInPandas kernel; a regression that brings
-    # back the DataFrame composition plans a scan + url exchange per view
-    # and shuffle joins above them.  A regression of argmax-first
-    # justification puts "sentence" back into the pairing branch.  Built
-    # on a tiny fused mention stage in a temp dir.
-    import re
+    # url hash-partitioning per stage, each feeding one url-local
+    # MapInPandas kernel; a regression that brings back a DataFrame
+    # composition plans more url exchanges and shuffle joins above them.
+    # Built on a tiny fused mention stage in a temp dir.
     import shutil
     import tempfile
 
@@ -282,22 +296,12 @@ def main() -> None:
         spark.read.parquet(f"{td}/mentions"))
     p = plan_of(merged)
     rows.unpersist()
-    n_url = len(re.findall(
-        r"hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_NUM", p))
     checks.append((
         "link stage (one url exchange, one url-local MapInPandas kernel)", p,
         ["MapInPandas", "REPARTITION_BY_NUM"],
         ["ShuffledHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin"],
     ))
-    checks.append((
-        f"link stage: exactly one url exchange in the linked write plan "
-        f"(found {n_url})",
-        f"(derived from the plan above: {n_url} hashpartitioning(url, n), "
-        f"REPARTITION_BY_NUM exchange(s))"
-        + (" ONE_URL_EXCHANGE_OK" if n_url == 1 else ""),
-        ["ONE_URL_EXCHANGE_OK"],
-        [],
-    ))
+    checks.append(one_url_exchange("link stage", p))
 
     linked = spark.read.parquet(f"{td}/linked")
     residual = spark.read.parquet(f"{td}/links_residual")
@@ -305,25 +309,11 @@ def main() -> None:
     tri = _mat.materialize_triples(
         _mat.evidence_rows(linked, residual, canon), partitions=8)
     p = plan_of(tri)
-    n_repart = len(re.findall(r"REPARTITION_BY_NUM", p))
     checks.append((
-        "materialize stage (single narrow url shuffle, explode pairing)",
-        p,
-        # ShuffledHashJoin pins the justification-attach join shape: the
-        # LEFT-side shuffle_hash build on a LEFT OUTER join is honored
-        # only on Spark >= 3.5 (SPARK-36612) — an older planner silently
-        # falls back to SortMergeJoin and this marker catches it
-        ["Generate", "REPARTITION_BY_NUM", "ShuffledHashJoin"],
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
+        "materialize stage (one url exchange, url-local pair kernel)", p,
+        ["MapInPandas", "REPARTITION_BY_NUM"], NO_SHUFFLE_JOINS,
     ))
-    checks.append((
-        f"materialize stage: exactly one pinned url repartition "
-        f"(found {n_repart})",
-        f"(derived from the plan above: {n_repart} REPARTITION_BY_NUM "
-        f"exchange(s))" + (" ONE_PINNED_OK" if n_repart == 1 else ""),
-        ["ONE_PINNED_OK"],
-        [],
-    ))
+    checks.append(one_url_exchange("materialize stage", p))
 
     # 22b. streaming micro-batch step: the partial aggregate kg_batch_step
     # writes.  Stages 2-5 are ONE url-clustered MapInPandas (extract,
@@ -374,6 +364,8 @@ def main() -> None:
 
     (REPO / "PLANS.md").write_text("\n".join(lines))
     print(f"PLANS.md written; all checks {'OK' if ok_all else 'FAILED'}")
+    if not ok_all:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

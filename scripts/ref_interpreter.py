@@ -545,9 +545,10 @@ def materialize(evidence_rows, max_sources=64):
         by_url.setdefault(url, []).append((label, cid, score, sentence))
 
     # best-justification tie-break order — must mirror the rebuild's
-    # argmax-first key struct (pair_score, has_sentence, url, subj_label)
-    # (operators/materialize.py _BJ): the sentence string itself never
-    # decides; the winning evidence KEY determines the sentence.
+    # best-evidence key struct (pair_score, has_sentence, url, subj_label)
+    # (operators/materialize.py _salted_aggregate): the sentence string
+    # itself never decides; the winning evidence KEY determines the
+    # sentence.
     triples: dict[tuple, dict] = {}
     for url, ents in by_url.items():
         for (sl, sid, ss, ssent) in ents:

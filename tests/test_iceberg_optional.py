@@ -26,6 +26,7 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions.partitioning import bucket
 
 from apt_bron_re_spark.plans.pipeline import Pipeline
 
@@ -37,7 +38,7 @@ def test_iceberg_bucket_partitioned_write_or_skip(spark, tmp_path):
     try:
         (df.writeTo("ice.db.docs_stage")
          .using("iceberg")
-         .partitionedBy(F.bucket(8, F.col("url")))
+         .partitionedBy(bucket(8, F.col("url")))
          .createOrReplace())
     except Exception as exc:  # no Iceberg catalog/jars in this sandbox
         msg = str(exc).lower()

@@ -358,10 +358,11 @@ def test_row_linker_score_is_max_over_candidates(spark, layer_map):
 
 
 def test_doc_pairs_pure_function(layer_map):
-    """_doc_pairs folds per-url maxima associatively: planted two-entry
+    """doc_pairs folds per-url maxima associatively: planted two-entry
     case with a tie on score resolved by sentence order (Spark struct-max
     tie-break)."""
-    from apt_bron_re_spark.streaming.kg_stream import _doc_pairs
+    from apt_bron_re_spark.operators.materialize import doc_pairs
+    from apt_bron_re_spark.streaming.kg_stream import _evidence
     results = {
         "group": [
             {"original_id": "G1", "NER_score": 0.5, "sentence": "abc"},
@@ -371,5 +372,6 @@ def test_doc_pairs_pure_function(layer_map):
             {"original_id": "T1", "NER_score": 0.9, "sentence": "t"},
         ],
     }
-    pairs = _doc_pairs(results, {}, {("group", "technique"): "uses"})
+    pairs = doc_pairs(_evidence(results, [], {}),
+                      {("group", "technique"): "uses"})
     assert pairs == {("G1", "uses", "T1"): (0.5, "abd", "group")}

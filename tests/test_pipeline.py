@@ -190,3 +190,35 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
         sc.setLocalProperty("spark.job.description", None)
         pipe._join_records()
     assert 0 < len(started) <= 12, sorted(started)
+
+
+def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
+    """The materialize stage is the canon broadcast, one url exchange
+    feeding the url-local pair kernel, the two exchanges of the salted
+    aggregate and the pred-partitioned write, then the read-back and its
+    lineage record: at most 10 Spark jobs (under AQE one per exchange and
+    broadcast, plus the write, the read-back and the record's scans)."""
+    from apt_bron_re_spark.operators import materialize
+
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("mat_jobs"),
+                    n_buckets=8, fuse_extract=True)
+    pipe.run(pages_df(spark, N_PAGES), resume=False)
+    linked, residual, canon = (pipe._read(name) for name in
+                               ("linked", "links_residual", "canon"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "materialize_stage_jobs"
+    sc.setJobGroup(group, "job count of one materialize stage")
+    try:
+        # the stage exactly as Pipeline.run builds it
+        pipe._run_stage(
+            "materialize", pipe._fps()[4],
+            lambda: materialize.materialize_triples(
+                materialize.evidence_rows(linked, residual, canon),
+                partitions=pipe.n_buckets),
+            "triples", partition_by=["pred"], resume=False)
+        started = set(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(started) <= 10, sorted(started)
