@@ -2,15 +2,18 @@
 
 The reference resumes by skipping files whose outputs already exist
 (convert_reports.py:30-32, download_aptnotes.py:42-43 — S5 in SURVEY.md).
-The rebuild replaces that with a ``_lineage`` table: every completed stage
-appends one row per output bucket
+The rebuild replaces that with a ``_lineage`` table of rows
 
     (stage, fingerprint, bucket, n_rows, wall_s, completed_at)
 
-plus a stage-summary row (bucket = -1).  A stage re-runs only when no
-summary row matches its input fingerprint — re-running is always safe
-because stage outputs are idempotent overwrites of a deterministic
-function of their inputs.
+A completed stage appends one summary row (bucket = -1); a chunked
+(``run_*_incremental``) stage also appends one row per bucket of each
+chunk, zero-row buckets included, which is the set a resumed run skips.
+Every ``n_rows`` is counted by the write that produced the table (a
+``DataFrame.observe`` on it), so recording starts no Spark job.  A stage
+re-runs only when no summary row matches its input fingerprint —
+re-running is always safe because stage outputs are idempotent
+overwrites of a deterministic function of their inputs.
 
 Fingerprints are content-stable hashes of the stage's configuration and
 input fingerprint chain, so changing the catalog, the corpus, or an
@@ -43,44 +46,27 @@ class LineageLog:
     def __init__(self, spark: SparkSession, base_dir: str | Path) -> None:
         self.spark = spark
         self.path = str(Path(base_dir) / "_lineage")
-        # appends are serialized: the pipeline records stages from
-        # CONCURRENT driver threads (residual write, canon overlap);
+        # appends are serialized: the pipeline records stages from two
+        # CONCURRENT driver threads (the main one and the canon overlap);
         # unique filenames make the files conflict-free, the lock keeps
         # the mkdir+write critical section single-threaded
         self._append_lock = threading.Lock()
 
     def _append(self, rows: list[tuple]) -> None:
-        """Driver-side parquet append (round-6): appending a handful of
-        lineage rows as a Spark job (createDataFrame -> coalesce(1) ->
-        write) costs a full job round-trip — measured 1-6 s EACH when
-        other stages hold the task slots, and the canon record alone
-        kept materialize waiting ~6.5 s at sf0.1.  The rows are
-        driver-sized by construction (<= n_buckets + 1), so write them
-        with pyarrow directly into the table dir under a unique name:
-        same column names/types as LINEAGE_SCHEMA, so Spark reads the
-        mixed dir identically, at ~ms cost and no scheduler contention.
-        The lock keeps concurrent recorder threads from colliding on
-        anything shared driver-side; unique filenames make the files
-        themselves conflict-free."""
+        """Driver-side parquet append: the rows are driver-sized (<=
+        n_buckets + 1), so pyarrow writes them straight into the table dir
+        under a unique name, with LINEAGE_SCHEMA's names and types, at ~ms
+        cost (a Spark job per append took 1-6 s when other stages held the
+        task slots)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         schema = pa.schema([
-            ("stage", pa.string()),
-            ("fingerprint", pa.string()),
-            ("bucket", pa.int32()),
-            ("n_rows", pa.int64()),
-            ("wall_s", pa.float64()),
-            ("completed_at", pa.float64()),
-        ])
-        table = pa.table({
-            "stage": [r[0] for r in rows],
-            "fingerprint": [r[1] for r in rows],
-            "bucket": [r[2] for r in rows],
-            "n_rows": [r[3] for r in rows],
-            "wall_s": [float(r[4]) for r in rows],
-            "completed_at": [float(r[5]) for r in rows],
-        }, schema=schema)
+            ("stage", pa.string()), ("fingerprint", pa.string()),
+            ("bucket", pa.int32()), ("n_rows", pa.int64()),
+            ("wall_s", pa.float64()), ("completed_at", pa.float64())])
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema)
         with self._append_lock:
             Path(self.path).mkdir(parents=True, exist_ok=True)
             fname = (f"part-lineage-{os.getpid()}-{time.time_ns()}"
@@ -96,10 +82,13 @@ class LineageLog:
             os.rename(tmp, Path(self.path) / fname)
 
     def _read(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        """The ledger, or None when nothing was ever recorded.  The explicit
+        schema makes a dir holding only a killed append's dot-prefixed temp
+        file read as empty; any other read error (a corrupt part file, a
+        JVM failure) propagates instead of silently disabling resume."""
+        if not Path(self.path).exists():
             return None
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
     def is_complete(self, stage: str, fp: str) -> bool:
         df = self._read()
@@ -109,31 +98,26 @@ class LineageLog:
                           & (F.col("fingerprint") == fp)
                           & (F.col("bucket") == -1)).limit(1).count() > 0)
 
-    def record(self, stage: str, fp: str, out: DataFrame,
+    def record(self, stage: str, fp: str, n_rows: int,
                wall_s: float) -> None:
-        """Append per-pbucket row counts + the stage summary row."""
-        now = time.time()
-        rows = []
-        if "pbucket" in out.columns:
-            per_bucket = (out.groupBy("pbucket")
-                          .agg(F.count("*").alias("n")).collect())
-            rows = [(stage, fp, int(r["pbucket"]), int(r["n"]), wall_s, now)
-                    for r in per_bucket]
-        total = sum(r[3] for r in rows) if rows else out.count()
-        rows.append((stage, fp, -1, int(total), wall_s, now))
-        self._append(rows)
+        """Append the stage summary row: the stage is complete."""
+        self._append([(stage, fp, -1, int(n_rows), wall_s, time.time())])
 
-    def completed_buckets(self, stage: str, fp: str) -> set[int]:
-        """Buckets with a lineage row for this (stage, fingerprint) —
-        the per-partition checkpoint set used for mid-stage resume."""
+    def bucket_counts(self, stage: str, fp: str) -> dict[int, int]:
+        """{bucket: n_rows} of the per-bucket rows for this (stage,
+        fingerprint) — the per-partition checkpoint of mid-stage resume."""
         df = self._read()
         if df is None:
-            return set()
+            return {}
         rows = (df.filter((F.col("stage") == stage)
                           & (F.col("fingerprint") == fp)
                           & (F.col("bucket") >= 0))
-                .select("bucket").distinct().collect())
-        return {r.bucket for r in rows}
+                .select("bucket", "n_rows").collect())
+        return {r.bucket: r.n_rows for r in rows}
+
+    def completed_buckets(self, stage: str, fp: str) -> set[int]:
+        """Buckets with a lineage row for this (stage, fingerprint)."""
+        return set(self.bucket_counts(stage, fp))
 
     def record_buckets(self, stage: str, fp: str, bucket_counts: dict[int, int],
                        wall_s: float) -> None:
@@ -143,11 +127,6 @@ class LineageLog:
         rows = [(stage, fp, int(b), int(n), wall_s, now)
                 for b, n in bucket_counts.items()]
         self._append(rows)
-
-    def record_summary(self, stage: str, fp: str, n_rows: int,
-                       wall_s: float) -> None:
-        now = time.time()
-        self._append([(stage, fp, -1, int(n_rows), wall_s, now)])
 
     def metrics(self) -> DataFrame | None:
         return self._read()

@@ -8,9 +8,11 @@ HashPartitioning partition id, so url-partitioned plans write with no
 extra shuffle; the parquet stand-in for Iceberg's ``bucket(url)``
 partition transform — a production deployment swaps the writer for
 ``df.writeTo(...).partitionedBy(bucket(N, "url"))`` with zero logic
-changes) and appends per-bucket lineage rows.  ``run(resume=True)``
-skips stages whose fingerprint already completed — kill the job at any
-stage boundary and re-running continues where it stopped.
+changes) and appends a lineage summary row whose row count the write
+itself observed (``_observed``: no scan recounts a table).
+``run(resume=True)`` skips stages whose fingerprint already completed —
+kill the job at any stage boundary and re-running continues where it
+stopped.
 
 Stage-table layout (versioned stage tables replace the reference's
 in-place file rewrites — SURVEY.md §3):
@@ -41,7 +43,7 @@ instead.)  Materialize is likewise one url-local kernel,
 (``materialize_triples``) and ``run_materialize_incremental``
 (``partial_triples`` per chunk).  The ``run_*_incremental`` stages share
 one chunk loop (``_run_chunks``): exactly-once per-partition writes plus
-per-bucket lineage.
+per-bucket lineage, counted by each chunk's write.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions.partitioning import bucket
@@ -71,6 +73,26 @@ LAYOUT_ID = "pbucket=pmod(murmur3_hash(url),n_buckets)"
 # Schema of a partitioned stage table that was written with zero rows
 # (``Pipeline._keep_schema_if_empty``); readers skip '_' files.
 EMPTY_SCHEMA = "_schema.json"
+
+
+def _observed(df: DataFrame, buckets=()):
+    """-> (``df`` observed, ``counts``): once a write has run the observed
+    plan, ``counts()`` is its row count ``n`` plus one count per pbucket
+    in ``buckets`` (keyed ``str(b)``), so no second scan counts the table.
+    AQE drops a stage it finds empty together with the metrics observed
+    in it, so under an exchange (a chunk writer's repartition, an Iceberg
+    write distribution) an empty observation means zero rows."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"), *[
+        F.count_if(F.col("pbucket") == b).alias(str(b)) for b in buckets])
+
+    def counts() -> dict[str, int]:
+        # Observation.get cannot convert the empty row: test it first
+        if obs._jo.getRow().length():
+            return obs.get
+        return dict.fromkeys(["n", *map(str, buckets)], 0)
+
+    return df, counts
 
 
 class Pipeline:
@@ -106,7 +128,6 @@ class Pipeline:
         self.catalog = catalog
         self.log = LineageLog(spark, base_dir)
         self._catalog_fp = fingerprint(layer_map)
-        self._record_threads: list = []   # deferred lineage-record scans
         if not catalog:
             self._check_layout()
 
@@ -175,10 +196,13 @@ class Pipeline:
         return w
 
     def _write(self, df: DataFrame, name: str,
-               partition_by: list[str] | None = None) -> None:
+               partition_by: list[str] | None = None) -> int:
+        """Write a stage table; returns its row count, observed by the
+        write (``_observed``)."""
         if self.catalog:
+            df, counts = _observed(df)
             self._iceberg_writer(df, name, partition_by).createOrReplace()
-            return
+            return counts()["n"]
         # pbucket tables are written here only by the batch link stage,
         # whose plans are HashPartitioning(url, n_buckets) partitions
         # coalesced without a shuffle: every pbucket value (see _bucketed)
@@ -193,12 +217,14 @@ class Pipeline:
             # stable write tasks (measured: materialize 66.8 -> 36.2 s at
             # 256k pages, local[4]).
             df = df.repartition(self.n_buckets, *[F.col(c) for c in partition_by])
+        df, counts = _observed(df)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(name))
         if partition_by:
             self._keep_schema_if_empty(df, name, partition_by)
+        return counts()["n"]
 
     def _keep_schema_if_empty(self, df: DataFrame, name: str,
                               partition_by: list[str]) -> None:
@@ -224,60 +250,21 @@ class Pipeline:
 
     def _run_stage(self, stage: str, fp: str, build, name: str,
                    partition_by: list[str] | None = None,
-                   resume: bool = True,
-                   record_async: bool = False) -> DataFrame:
-        """``record_async=True`` moves the lineage record's per-bucket
-        count scan (a full extra pass over the just-written table) off
-        the serial path onto a background thread, so the NEXT stage
-        starts immediately — the data write is already committed, which
-        is the only ordering the resume invariant needs (a crash before
-        the deferred append just re-runs the stage idempotently on
-        resume).  Appends are lock-serialized in LineageLog; the thread
-        is joined in _join_records() before run() returns."""
+                   resume: bool = True) -> DataFrame:
+        """Build and write one batch stage, then append its summary lineage
+        row (the write's observed count), unless its fingerprint already
+        completed."""
         if resume and self.log.is_complete(stage, fp):
             return self._read(name)
         t0 = time.time()
-        df = build()
-        self._write(df, name, partition_by)
+        n_rows = self._write(build(), name, partition_by)
         out = self._read(name)
-        wall = time.time() - t0
-        if record_async:
-            self._spawn_record(stage, lambda: self.log.record(
-                stage, fp, out, wall))
-        else:
-            self.log.record(stage, fp, out, wall)
+        self.log.record(stage, fp, n_rows, time.time() - t0)
         return out
 
-    def _spawn_record(self, stage: str, fn) -> None:
-        """Run a deferred lineage record on a background thread, capturing
-        any exception so _join_records can surface it (ADVICE r6: a
-        silently-failed record leaves the stage's summary row missing —
-        run() would report success while the next resume re-runs the
-        stage and bench stage-wall attribution comes up short)."""
-        import threading
-        box: list[BaseException] = []
-
-        def _run() -> None:
-            try:
-                fn()
-            except BaseException as exc:
-                box.append(exc)
-
-        th = threading.Thread(target=_run, name=f"lineage-record-{stage}")
-        th.start()
-        self._record_threads.append((th, box))
-
     def _join_records(self) -> None:
-        import warnings
-        while self._record_threads:
-            th, box = self._record_threads.pop()
-            th.join()
-            if box:
-                warnings.warn(
-                    f"deferred lineage record {th.name!r} failed: "
-                    f"{box[0]!r} — the stage's summary row is missing, so "
-                    "the next resume will re-run that stage (idempotent) "
-                    "and its per-stage wall is absent from metrics()")
+        """No-op: lineage records are synchronous and start no thread.
+        Kept only because ``perfbench/spans.py`` wraps this name."""
 
     def _run_link_stage(self, fp: str, stage2: DataFrame,
                         resume: bool = True) -> DataFrame:
@@ -291,16 +278,12 @@ class Pipeline:
         t0 = time.time()
         merged, residual, rows = self._link_plan(stage2)
         try:
-            self._write(merged, "linked", partition_by=["pbucket"])
+            n_rows = self._write(merged, "linked", partition_by=["pbucket"])
             self._write(residual, "links_residual", partition_by=["pbucket"])
         finally:
             rows.unpersist()
         out = self._read("linked")
-        wall = time.time() - t0
-        # deferred like the mention record (_run_stage record_async):
-        # both writes are committed; the count scan overlaps materialize
-        self._spawn_record("link", lambda: self.log.record(
-            "link", fp, out, wall))
+        self.log.record("link", fp, n_rows, time.time() - t0)
         return out
 
     def _link_plan(self, stage2: DataFrame
@@ -405,9 +388,9 @@ class Pipeline:
         # a background thread under the CPU-bound mention/link stages
         # (the reference's thread-parallel driver, L7/E3): its tiny jobs
         # interleave with the mention UDF tasks at near-zero wall cost.
-        # Lineage appends are lock-serialized (LineageLog._append), and the
-        # canon stage writes only its own paths, so the overlap is
-        # race-free.
+        # It is the only thread a run starts.  Lineage appends are
+        # lock-serialized (LineageLog._append), and the canon stage writes
+        # only its own paths, so the overlap is race-free.
         import threading
 
         canon_box: dict[str, object] = {}
@@ -423,12 +406,11 @@ class Pipeline:
         try:
             return self._run_body(pages, resume, canon_th, canon_box)
         finally:
-            # join canon + deferred records on EVERY exit path (ADVICE
-            # r6): a mention-stage failure must not leave the canon
-            # thread racing a caller's spark.stop(), and a canon failure
-            # that loses to another exception should still be visible.
+            # join canon on EVERY exit path (ADVICE r6): a mention-stage
+            # failure must not leave the canon thread racing a caller's
+            # spark.stop(), and a canon failure that loses to another
+            # exception should still be visible.
             canon_th.join()
-            self._join_records()
             if "err" in canon_box:
                 import sys
                 import warnings
@@ -447,7 +429,7 @@ class Pipeline:
                 lambda: self._bucketed(mention.detect_mentions(
                     pages.filter(F.col("lang") == LANG).select("url", "html"),
                     self.layer_map, from_html=True)),
-                "mentions", resume=resume, record_async=True)
+                "mentions", resume=resume)
         else:
             docs = self._run_stage(
                 "extract", fp0,
@@ -457,7 +439,7 @@ class Pipeline:
                 "mention", fp1,
                 lambda: self._bucketed(
                     mention.detect_mentions(docs.drop("pbucket"), self.layer_map)),
-                "mentions", resume=resume, record_async=True)
+                "mentions", resume=resume)
 
         try:
             linked = self._run_link_stage(fp2, stage2, resume=resume)
@@ -474,60 +456,57 @@ class Pipeline:
             raise canon_box["err"]  # noqa: B904 — original stage error
         canon = canon_box["df"]
 
-        triples = self._run_stage(
+        return self._run_stage(
             "materialize", fp4,
             lambda: materialize.materialize_triples(
                 materialize.evidence_rows(linked, residual, canon),
                 partitions=self.n_buckets),
             "triples", partition_by=["pred"], resume=resume)
-        self._join_records()
-        return triples
 
     def triples(self) -> DataFrame:
         return self._read("triples")
 
     # -- per-partition incremental execution --------------------------------
     def _run_chunks(self, stage: str, fp: str, n_chunks: int,
-                    max_chunks: int | None, build, result: str,
+                    max_chunks: int | None, build,
                     partition_col: str = "pbucket", finish=None) -> bool:
         """The chunk loop of the ``run_*_incremental`` stages.  For each
         chunk of pending pbuckets, ``build(chunk)`` returns ``{table: df}``
         and each table is written with ``_write_buckets`` (the first chunk
-        of a stage with no completed buckets: ``_replace_table``).  The chunk's
-        per-bucket lineage is appended only after its writes commit, so a kill in between re-runs the chunk on resume, which
-        rewrites the same partitions.  Row counts come from the first
-        table.  After the last chunk, ``finish()`` (if given) runs and the
-        stage summary row records the ``result`` table's row count.
+        of a stage with no completed buckets: ``_replace_table``).  The
+        first table's write counts the chunk's rows per bucket (the chunk's
+        total for each bucket when not chunked by pbucket); those lineage
+        rows are appended only after the chunk's writes commit, so a kill in
+        between re-runs the chunk on resume, which rewrites the same
+        partitions.  The summary row records the count ``finish()`` returns
+        if given, else the sum of the stage's per-bucket rows.
         ``max_chunks`` processes at most that many chunks (test hook to
         simulate interruption).  Returns True when the stage is done."""
-        done = self.log.completed_buckets(stage, fp)
-        pending = [b for b in range(self.n_buckets) if b not in done]
+        counts = self.log.bucket_counts(stage, fp)
+        fresh = not counts
+        pending = [b for b in range(self.n_buckets) if b not in counts]
         size = max(1, (self.n_buckets + n_chunks - 1) // n_chunks)
         chunks = [pending[i:i + size] for i in range(0, len(pending), size)]
+        per_bucket = partition_col == "pbucket"
         for i, chunk in enumerate(chunks):
             if max_chunks is not None and i >= max_chunks:
                 return False
             t0 = time.time()
             tables = build(chunk)
-            write = (self._replace_table if i == 0 and not done
+            first = next(iter(tables))
+            tables[first], observed = _observed(
+                tables[first], chunk if per_bucket else ())
+            write = (self._replace_table if i == 0 and fresh
                      else self._write_buckets)
             for name, df in tables.items():
                 write(df, name, partition_col)
-            written = self._read(next(iter(tables)))
-            if partition_col == "pbucket":
-                counts = dict.fromkeys(chunk, 0)
-                counts.update(
-                    (r["pbucket"], r["n"]) for r in
-                    written.filter(F.col("pbucket").isin(chunk))
-                    .groupBy("pbucket").agg(F.count("*").alias("n"))
-                    .collect())
-            else:
-                counts = dict.fromkeys(chunk, written.filter(
-                    F.col(partition_col) == min(chunk)).count())
-            self.log.record_buckets(stage, fp, counts, time.time() - t0)
-        if finish is not None:
-            finish()
-        self.log.record_summary(stage, fp, self._read(result).count(), 0.0)
+            n = observed()
+            chunk_counts = ({b: n[str(b)] for b in chunk} if per_bucket
+                            else dict.fromkeys(chunk, n["n"]))
+            self.log.record_buckets(stage, fp, chunk_counts, time.time() - t0)
+            counts.update(chunk_counts)
+        n_rows = finish() if finish is not None else sum(counts.values())
+        self.log.record(stage, fp, n_rows, 0.0)
         return True
 
     def run_mention_incremental(self, pages: DataFrame,
@@ -550,8 +529,7 @@ class Pipeline:
                 part.select("url", "html"), self.layer_map,
                 from_html=True))}
 
-        return self._run_chunks("mention", fp1, n_chunks, max_chunks, build,
-                                "mentions")
+        return self._run_chunks("mention", fp1, n_chunks, max_chunks, build)
 
     def run_link_incremental(self, n_chunks: int = 4,
                              max_chunks: int | None = None) -> bool:
@@ -576,7 +554,7 @@ class Pipeline:
                 mention.doc_lengths_view(stage2))
             self._write(stats, "link_aux_stats")
             self._write(df_, "link_aux_df")
-            self.log.record_summary("link_aux", aux_fp, 1, 0.0)
+            self.log.record("link_aux", aux_fp, 1, 0.0)
         stats = self._read("link_aux_stats")
         df_ = self._read("link_aux_df")
         cached: list[DataFrame] = []
@@ -592,8 +570,7 @@ class Pipeline:
                     "links_residual": self._bucketed(residual)}
 
         try:
-            return self._run_chunks("link", fp2, n_chunks, max_chunks, build,
-                                    "linked")
+            return self._run_chunks("link", fp2, n_chunks, max_chunks, build)
         finally:
             for rows in cached:
                 rows.unpersist()
@@ -622,11 +599,11 @@ class Pipeline:
                     .withColumn("chunk_key", F.lit(min(chunk))))
             return {"triples_partial": part}
 
-        def merge() -> None:
-            self._write(materialize.merge_partial_triples(
+        def merge() -> int:
+            return self._write(materialize.merge_partial_triples(
                 self._read("triples_partial").drop("chunk_key")),
                 "triples", partition_by=["pred"])
 
         return self._run_chunks("materialize", fp4, n_chunks, max_chunks,
-                                build, "triples", partition_col="chunk_key",
+                                build, partition_col="chunk_key",
                                 finish=merge)
