@@ -26,7 +26,8 @@ from ..functions.extract_text import extract_text
 
 @F.pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text)
+    # a null page stays null; the mention stage reports it as an error
+    return html.map(extract_text, na_action="ignore")
 
 
 def extract_docs(pages: DataFrame) -> DataFrame:

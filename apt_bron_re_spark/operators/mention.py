@@ -87,9 +87,9 @@ def detect_mentions(docs: DataFrame,
             payload = pdf["html"] if from_html else pdf["text"]
             for i, (url, text) in enumerate(zip(pdf["url"], payload)):
                 extra = {event_time_col: ets.iloc[i]} if event_time_col else {}
-                if from_html:
-                    text = extract_text(text)
                 try:
+                    if from_html:
+                        text = extract_text(text)
                     results, residue, dl = process_document(
                         text, catalog, tagger)
                 except Exception as exc:  # reference basic.py:300-301

@@ -115,10 +115,6 @@ class LineageLog:
                 .select("bucket", "n_rows").collect())
         return {r.bucket: r.n_rows for r in rows}
 
-    def completed_buckets(self, stage: str, fp: str) -> set[int]:
-        """Buckets with a lineage row for this (stage, fingerprint)."""
-        return set(self.bucket_counts(stage, fp))
-
     def record_buckets(self, stage: str, fp: str, bucket_counts: dict[int, int],
                        wall_s: float) -> None:
         """Append per-bucket rows only (no summary row) — one chunk of an

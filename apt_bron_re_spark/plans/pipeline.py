@@ -27,12 +27,13 @@ in-place file rewrites — SURVEY.md §3):
     triples/         subj, pred, obj, sources[], justification, score
                      partitioned by pred (S10)
 
-The link stage (L2-L5 links -> L6 merge, then BM25) is ONE kernel,
-``operators.linking.link_stage``: a url-local ``mapInPandas`` pass over
-the mention stage table repartitioned by url, run with the same
-``linking.RowLinker`` as the streaming kernel.  Two execution wrappers
-call it: ``run`` (the whole table, BM25 globals inline, the kernel output
-persisted for the linked and residual writes) and
+Every batch stage, the chunked link stage's frozen BM25 globals included,
+is written by one runner, ``_run_stage``.  The link stage (L2-L5 links ->
+L6 merge, then BM25) is ONE kernel, ``operators.linking.link_stage``: a
+url-local ``mapInPandas`` pass over the mention stage table repartitioned
+by url, run with the same ``linking.RowLinker`` as the streaming kernel.
+``_link_tables`` builds its two tables from the persisted kernel output
+for ``run`` (the whole table, BM25 globals inline) and for
 ``run_link_incremental`` (one call per bucket chunk).  The kernel scores
 against the global BM25 (stats, df) it is handed, so the chunked wrapper
 freezes those once from the whole corpus; per-chunk stats would give
@@ -50,6 +51,9 @@ from __future__ import annotations
 
 import json
 import time
+import warnings
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager, nullcontext
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -93,6 +97,12 @@ def _observed(df: DataFrame, buckets=()):
         return dict.fromkeys(["n", *map(str, buckets)], 0)
 
     return df, counts
+
+
+def _bm25_globals(stage_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The corpus-global BM25 (stats, df) of a mention stage table."""
+    return bm25.bm25_global_stats(mention.mentions_view(stage_rows),
+                                  mention.doc_lengths_view(stage_rows))
 
 
 class Pipeline:
@@ -165,10 +175,11 @@ class Pipeline:
 
     def _canon_stage(self, resume: bool = True) -> DataFrame:
         """Stage 4: the catalog-derived canonical map."""
-        return self._run_stage(
+        self._run_stage(
             "canonicalize", self._fps()[3],
-            lambda: canonicalize.canonical_map(self.spark, self.layer_map),
-            "canon", resume=resume)
+            lambda: nullcontext({"canon": canonicalize.canonical_map(
+                self.spark, self.layer_map)}), resume=resume)
+        return self._read("canon")
 
     # -- helpers ----------------------------------------------------------
     def _path(self, name: str) -> str:
@@ -248,68 +259,57 @@ class Pipeline:
                     .parquet(str(path)))
         return self.spark.read.parquet(str(path))
 
-    def _run_stage(self, stage: str, fp: str, build, name: str,
+    def _run_stage(self, stage: str, fp: str, tables,
                    partition_by: list[str] | None = None,
-                   resume: bool = True) -> DataFrame:
-        """Build and write one batch stage, then append its summary lineage
-        row (the write's observed count), unless its fingerprint already
-        completed."""
+                   resume: bool = True) -> None:
+        """Build and write one batch stage unless its fingerprint already
+        completed.  ``tables()`` is a context manager yielding the stage's
+        ``{table: df}``; each table is written in order, and only after
+        every write has committed is the summary lineage row (the first
+        table's observed count) appended, so a kill in between re-runs the
+        whole stage.  Callers ``_read`` the tables they need."""
         if resume and self.log.is_complete(stage, fp):
-            return self._read(name)
+            return
         t0 = time.time()
-        n_rows = self._write(build(), name, partition_by)
-        out = self._read(name)
-        self.log.record(stage, fp, n_rows, time.time() - t0)
-        return out
+        with tables() as out:
+            n_rows = [self._write(df, name, partition_by)
+                      for name, df in out.items()]
+        self.log.record(stage, fp, n_rows[0], time.time() - t0)
 
     def _join_records(self) -> None:
         """No-op: lineage records are synchronous and start no thread.
         Kept only because ``perfbench/spans.py`` wraps this name."""
 
-    def _run_link_stage(self, fp: str, stage2: DataFrame,
-                        resume: bool = True) -> DataFrame:
-        """Link stage runner: writes the linked table, then the residual
-        side table, both from the persisted kernel output (``_link_plan``),
-        so the Python kernel runs once; it is unpersisted once both writes
-        are done.  The lineage row is recorded only after BOTH writes
-        commit, preserving resume atomicity."""
-        if resume and self.log.is_complete("link", fp):
-            return self._read("linked")
-        t0 = time.time()
-        merged, residual, rows = self._link_plan(stage2)
+    @contextmanager
+    def _link_tables(self, stage_rows: DataFrame, stats: DataFrame,
+                     df_: DataFrame):
+        """The link stage's bucketed ``{linked, links_residual}``:
+        ``linking.link_stage`` over mention stage rows, scored against the
+        BM25 globals ``(stats, df_)``.  The kernel output both tables read
+        is persisted while the context is open (the Python kernel runs
+        once) and unpersisted on exit, a failed write included.  The kernel
+        coalesces its url hash partitions without a shuffle, so each
+        pbucket (== the HashPartitioning partition id, _bucketed) lies in
+        one task and neither write repartitions.  ``run`` passes globals
+        computed inline from the un-repartitioned mention table (narrow
+        aggregations; df is catalog-bounded, so it broadcasts);
+        ``run_link_incremental`` passes frozen parquet copies, which
+        cross-session exactness requires."""
+        merged, residual, rows = linking.link_stage(
+            stage_rows, stats, df_, self.layer_map, self.n_buckets)
+        rows.persist()
         try:
-            n_rows = self._write(merged, "linked", partition_by=["pbucket"])
-            self._write(residual, "links_residual", partition_by=["pbucket"])
+            yield {"linked": self._bucketed(merged),
+                   "links_residual": self._bucketed(residual)}
         finally:
             rows.unpersist()
-        out = self._read("linked")
-        self.log.record("link", fp, n_rows, time.time() - t0)
-        return out
 
-    def _link_plan(self, stage2: DataFrame
-                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """The batch link plan: ``linking.link_stage`` over the mention
-        stage table, which the kernel repartitions by url ONCE, the
-        stage's only exchange of the wide rows, with the BM25 globals
-        computed inline.  Returns
-        the kernel's (merged, residual, rows), bucketed, with ``rows``
-        persisted for the two writes.
-
-        The kernel coalesces the url hash partitions without a shuffle, so
-        every pbucket (== the HashPartitioning partition id, _bucketed)
-        lies in one task and both stage writes need no further
-        repartition.  Inline stats come from the un-repartitioned
-        ``stage2``: their aggregations shuffle narrow projections of their
-        own, and df is catalog-bounded (its keys are catalog entity
-        names), so it broadcasts.  The chunked path (run_link_incremental)
-        freezes them to parquet instead, where cross-session exactness
-        requires it."""
-        stats, df_ = bm25.bm25_global_stats(mention.mentions_view(stage2),
-                                            mention.doc_lengths_view(stage2))
-        merged, residual, rows = linking.link_stage(
-            stage2, stats, df_, self.layer_map, self.n_buckets)
-        return (self._bucketed(merged), self._bucketed(residual),
-                rows.persist())
+    def _mentions(self, pages: DataFrame) -> DataFrame:
+        """The fused extract+mention plan: ``pages`` (already filtered to
+        ``LANG``) -> the bucketed mention stage rows, with E1 run inside
+        the mention UDF."""
+        return self._bucketed(mention.detect_mentions(
+            pages.select("url", "html"), self.layer_map, from_html=True))
 
     def _fps(self) -> tuple[str, str, str, str, str]:
         """The stage fingerprint chain (fp0..fp4) for the current config."""
@@ -382,86 +382,63 @@ class Pipeline:
         # filter there, with dir pruning as a bonus when dirs exist.
         #
         # Canon overlap: stage 4 is CATALOG-derived (canonical_map never
-        # reads the corpus), yet ran serially between link and
-        # materialize — several seconds of catalog-sized pointer-jumping
-        # job latency in the timed span of every fresh run.  Build it on
-        # a background thread under the CPU-bound mention/link stages
-        # (the reference's thread-parallel driver, L7/E3): its tiny jobs
-        # interleave with the mention UDF tasks at near-zero wall cost.
-        # It is the only thread a run starts.  Lineage appends are
-        # lock-serialized (LineageLog._append), and the canon stage writes
-        # only its own paths, so the overlap is race-free.
-        import threading
-
-        canon_box: dict[str, object] = {}
-
-        def _canon_bg() -> None:
+        # reads the corpus), so it runs on a one-worker pool under the
+        # CPU-bound mention/link stages (the reference's thread-parallel
+        # driver, L7/E3): its tiny jobs interleave with the mention UDF
+        # tasks, hiding seconds of catalog-sized job latency.  It is the
+        # only thread a run starts.  Lineage appends are lock-serialized
+        # (LineageLog._append) and the canon stage writes only its own
+        # paths, so the overlap is race-free.  Leaving the pool joins the
+        # thread on EVERY exit path: a failed run leaves no thread racing
+        # a caller's spark.stop() (ADVICE r6).
+        with ThreadPoolExecutor(1, thread_name_prefix="canon-stage") as pool:
+            canon = pool.submit(self._canon_stage, resume)
             try:
-                canon_box["df"] = self._canon_stage(resume)
+                return self._run_body(pages, resume, canon)
             except BaseException as exc:
-                canon_box["err"] = exc
-
-        canon_th = threading.Thread(target=_canon_bg, name="canon-stage")
-        canon_th.start()
-        try:
-            return self._run_body(pages, resume, canon_th, canon_box)
-        finally:
-            # join canon on EVERY exit path (ADVICE r6): a mention-stage
-            # failure must not leave the canon thread racing a caller's
-            # spark.stop(), and a canon failure that loses to another
-            # exception should still be visible.
-            canon_th.join()
-            if "err" in canon_box:
-                import sys
-                import warnings
-                exc = sys.exc_info()[1]
-                if exc is not None and exc is not canon_box["err"]:
+                # a canon failure that loses to another error stays visible
+                canon_exc = canon.exception()
+                if canon_exc is not None and canon_exc is not exc:
                     warnings.warn(
                         "canon stage ALSO failed (suppressed in favor of "
-                        f"the propagating error): {canon_box['err']!r}")
+                        f"the propagating error): {canon_exc!r}")
+                raise
 
     def _run_body(self, pages: DataFrame, resume: bool,
-                  canon_th, canon_box: dict) -> DataFrame:
+                  canon: Future) -> DataFrame:
         fp0, fp1, fp2, _fp3, fp4 = self._fps()
         if self.fuse_extract:
-            stage2 = self._run_stage(
-                "mention", fp1,
-                lambda: self._bucketed(mention.detect_mentions(
-                    pages.filter(F.col("lang") == LANG).select("url", "html"),
-                    self.layer_map, from_html=True)),
-                "mentions", resume=resume)
+            def mentions():
+                return nullcontext({"mentions": self._mentions(
+                    pages.filter(F.col("lang") == LANG))})
         else:
-            docs = self._run_stage(
+            self._run_stage(
                 "extract", fp0,
-                lambda: self._bucketed(extract_docs(pages)),
-                "docs", resume=resume)
-            stage2 = self._run_stage(
-                "mention", fp1,
-                lambda: self._bucketed(
-                    mention.detect_mentions(docs.drop("pbucket"), self.layer_map)),
-                "mentions", resume=resume)
+                lambda: nullcontext({"docs": self._bucketed(
+                    extract_docs(pages))}), resume=resume)
+            docs = self._read("docs").drop("pbucket")
 
-        try:
-            linked = self._run_link_stage(fp2, stage2, resume=resume)
-        finally:
-            # join before materialize (and on a link failure, before the
-            # exception propagates); a mention-stage failure lets the
-            # canon thread finish on its own — it writes only its own
-            # stage paths, idempotently, and is joined at interpreter
-            # shutdown (non-daemon)
-            canon_th.join()
+            def mentions():
+                return nullcontext({"mentions": self._bucketed(
+                    mention.detect_mentions(docs, self.layer_map))})
+        self._run_stage("mention", fp1, mentions, resume=resume)
+        stage2 = self._read("mentions")
+
+        self._run_stage(
+            "link", fp2,
+            lambda: self._link_tables(stage2, *_bm25_globals(stage2)),
+            partition_by=["pbucket"], resume=resume)
+        linked = self._read("linked")
         residual = self._read("links_residual")
 
-        if "err" in canon_box:
-            raise canon_box["err"]  # noqa: B904 — original stage error
-        canon = canon_box["df"]
-
-        return self._run_stage(
+        canon_df = canon.result()  # re-raises the canon stage's error
+        self._run_stage(
             "materialize", fp4,
-            lambda: materialize.materialize_triples(
-                materialize.evidence_rows(linked, residual, canon),
-                partitions=self.n_buckets),
-            "triples", partition_by=["pred"], resume=resume)
+            lambda: nullcontext({"triples": materialize.materialize_triples(
+                materialize.evidence_rows(linked, residual, canon_df),
+                partitions=self.n_buckets)}),
+            partition_by=["pred"], resume=resume)
+        return self._read("triples")
 
     def triples(self) -> DataFrame:
         return self._read("triples")
@@ -471,8 +448,9 @@ class Pipeline:
                     max_chunks: int | None, build,
                     partition_col: str = "pbucket", finish=None) -> bool:
         """The chunk loop of the ``run_*_incremental`` stages.  For each
-        chunk of pending pbuckets, ``build(chunk)`` returns ``{table: df}``
-        and each table is written with ``_write_buckets`` (the first chunk
+        chunk of pending pbuckets, ``build(chunk)`` is a context manager
+        yielding ``{table: df}`` (as ``_run_stage``'s ``tables()``), and
+        each table is written with ``_write_buckets`` (the first chunk
         of a stage with no completed buckets: ``_replace_table``).  The
         first table's write counts the chunk's rows per bucket (the chunk's
         total for each bucket when not chunked by pbucket); those lineage
@@ -492,14 +470,14 @@ class Pipeline:
             if max_chunks is not None and i >= max_chunks:
                 return False
             t0 = time.time()
-            tables = build(chunk)
-            first = next(iter(tables))
-            tables[first], observed = _observed(
-                tables[first], chunk if per_bucket else ())
             write = (self._replace_table if i == 0 and fresh
                      else self._write_buckets)
-            for name, df in tables.items():
-                write(df, name, partition_col)
+            with build(chunk) as tables:
+                first = next(iter(tables))
+                tables[first], observed = _observed(
+                    tables[first], chunk if per_bucket else ())
+                for name, df in tables.items():
+                    write(df, name, partition_col)
             n = observed()
             chunk_counts = ({b: n[str(b)] for b in chunk} if per_bucket
                             else dict.fromkeys(chunk, n["n"]))
@@ -524,10 +502,8 @@ class Pipeline:
         filtered = self._bucketed(pages.filter(F.col("lang") == LANG))
 
         def build(chunk):
-            part = filtered.filter(F.col("pbucket").isin(chunk))
-            return {"mentions": self._bucketed(mention.detect_mentions(
-                part.select("url", "html"), self.layer_map,
-                from_html=True))}
+            return nullcontext({"mentions": self._mentions(
+                filtered.filter(F.col("pbucket").isin(chunk)))})
 
         return self._run_chunks("mention", fp1, n_chunks, max_chunks, build)
 
@@ -540,40 +516,23 @@ class Pipeline:
         (link_aux_stats/link_aux_df, guarded by a lineage row) and every
         chunk scores against the frozen tables; everything else in the
         stage is url-local, so chunking by url-bucket is exact.  Each
-        chunk's kernel output is persisted for its two writes and
-        unpersisted before the next chunk."""
+        chunk's tables come from ``_link_tables``, as in ``run``."""
         _fp0, _fp1, fp2, _fp3, _fp4 = self._fps()
         if self.log.is_complete("link", fp2):
             return True
         stage2 = self._read("mentions")
 
-        aux_fp = fingerprint(fp2, "link_aux")
-        if not self.log.is_complete("link_aux", aux_fp):
-            stats, df_ = bm25.bm25_global_stats(
-                mention.mentions_view(stage2),
-                mention.doc_lengths_view(stage2))
-            self._write(stats, "link_aux_stats")
-            self._write(df_, "link_aux_df")
-            self.log.record("link_aux", aux_fp, 1, 0.0)
+        def frozen():
+            stats, df_ = _bm25_globals(stage2)
+            return nullcontext({"link_aux_stats": stats, "link_aux_df": df_})
+
+        self._run_stage("link_aux", fingerprint(fp2, "link_aux"), frozen)
         stats = self._read("link_aux_stats")
         df_ = self._read("link_aux_df")
-        cached: list[DataFrame] = []
-
-        def build(chunk):
-            while cached:  # the previous chunk's writes have committed
-                cached.pop().unpersist()
-            merged, residual, rows = linking.link_stage(
-                stage2.filter(F.col("pbucket").isin(chunk)), stats, df_,
-                self.layer_map, self.n_buckets)
-            cached.append(rows.persist())
-            return {"linked": self._bucketed(merged),
-                    "links_residual": self._bucketed(residual)}
-
-        try:
-            return self._run_chunks("link", fp2, n_chunks, max_chunks, build)
-        finally:
-            for rows in cached:
-                rows.unpersist()
+        return self._run_chunks(
+            "link", fp2, n_chunks, max_chunks,
+            lambda chunk: self._link_tables(
+                stage2.filter(F.col("pbucket").isin(chunk)), stats, df_))
 
     def run_materialize_incremental(self, n_chunks: int = 4,
                                     max_chunks: int | None = None) -> bool:
@@ -597,7 +556,7 @@ class Pipeline:
                 canon)
             part = (materialize.partial_triples(ev, partitions=self.n_buckets)
                     .withColumn("chunk_key", F.lit(min(chunk))))
-            return {"triples_partial": part}
+            return nullcontext({"triples_partial": part})
 
         def merge() -> int:
             return self._write(materialize.merge_partial_triples(

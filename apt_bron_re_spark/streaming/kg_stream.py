@@ -10,9 +10,10 @@ execution shapes, both reusing the batch operators:
    frozen-catalog links, canon lookup and per-url pairing in one
    url-clustered ``mapInPandas``), then the salted partial triple
    aggregate (operators/materialize.py ``partial_triples_of_pairs``), and
-   appends it partitioned by ``batch_id``.  A micro-batch is five Spark
-   jobs: the canon collect, the url exchange, the two exchanges of the
-   salted aggregate (one per phase) and the write.  The kernel pairs
+   appends it partitioned by ``batch_id``.  A micro-batch is four Spark
+   jobs: the url exchange, the two exchanges of the salted aggregate (one
+   per phase) and the write; the canon map is collected once per stream
+   query, before it starts.  The kernel pairs
    with ``materialize.doc_pairs``, the batch pair kernel's fold.  The
    partials merge associatively
    (``merge_partial_triples`` — correct because a page's url lives in
@@ -254,22 +255,21 @@ def stream_triples_live(pairs: DataFrame) -> DataFrame:
 
 def batch_partials(pages_batch: DataFrame,
                    layer_map: dict[str, list[dict]],
-                   canon: DataFrame) -> DataFrame:
+                   canon_map: dict) -> DataFrame:
     """The PARTIAL triple aggregate of one micro-batch of pages: the
-    row-local pairing kernel against the frozen catalog and the ``canon``
-    table, then ``materialize.partial_triples_of_pairs``."""
-    pairs = stream_evidence_pairs(pages_batch, layer_map,
-                                  _collect_canon(canon))
+    row-local pairing kernel against the frozen catalog and ``canon_map``
+    (``canon_as_dict``), then ``materialize.partial_triples_of_pairs``."""
+    pairs = stream_evidence_pairs(pages_batch, layer_map, canon_map)
     return materialize.partial_triples_of_pairs(pairs)
 
 
 def kg_batch_step(pages_batch: DataFrame, batch_id: int,
                   layer_map: dict[str, list[dict]],
-                  canon: DataFrame, out_path: str) -> None:
+                  canon_map: dict, out_path: str) -> None:
     """One exact micro-batch of stages 2-5 (``batch_partials``), appended
     under ``batch_id=<id>`` with dynamic partition overwrite (replaying
     the same batch_id rewrites its partition — exactly-once)."""
-    part = (batch_partials(pages_batch, layer_map, canon)
+    part = (batch_partials(pages_batch, layer_map, canon_map)
             .withColumn("batch_id", F.lit(int(batch_id))))
     # NOT repartition(batch_id): batch_id is constant per micro-batch, so
     # hashing it funnels every row into ONE task — the serial-tail class
@@ -293,10 +293,12 @@ def run_kg_stream(pages_stream: DataFrame,
 
     ``stats`` and ``df_table`` (frozen BM25 globals) are unused: the step
     computes no BM25, since evidence scores never read it.  They stay in
-    the signature for callers that pass them by position."""
+    the signature for callers that pass them by position.  The ``canon``
+    table is collected once here, not once per micro-batch."""
+    canon_map = _collect_canon(canon)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        kg_batch_step(batch_df, batch_id, layer_map, canon, out_path)
+        kg_batch_step(batch_df, batch_id, layer_map, canon_map, out_path)
 
     writer = (pages_stream.writeStream.foreachBatch(step)
               .option("checkpointLocation", checkpoint))

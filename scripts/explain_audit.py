@@ -285,6 +285,7 @@ def main() -> None:
 
     from apt_bron_re_spark.operators import materialize as _mat
     from apt_bron_re_spark.plans.pipeline import Pipeline as _Pipeline
+    from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     td = tempfile.mkdtemp(prefix="_audit_stage_")
     lm = build_layer_map()
@@ -292,10 +293,9 @@ def main() -> None:
     pipe.run(pages_df(spark, 80), resume=False)
     # the linked write plan exactly as Pipeline.run builds it (one
     # linking.link_stage call over the url-repartitioned stage table)
-    merged, _residual, rows = pipe._link_plan(
-        spark.read.parquet(f"{td}/mentions"))
-    p = plan_of(merged)
-    rows.unpersist()
+    stage2 = spark.read.parquet(f"{td}/mentions")
+    with pipe._link_tables(stage2, *_bm25_globals(stage2)) as tables:
+        p = plan_of(tables["linked"])
     checks.append((
         "link stage (one url exchange, one url-local MapInPandas kernel)", p,
         ["MapInPandas", "REPARTITION_BY_NUM"],
@@ -319,8 +319,9 @@ def main() -> None:
     # writes.  Stages 2-5 are ONE url-clustered MapInPandas (extract,
     # mentions, links, canon lookup, pairing) — no cached mention table,
     # no join of any kind before the salted aggregate
-    from apt_bron_re_spark.streaming.kg_stream import batch_partials
-    p = plan_of(batch_partials(pages_pq, lm, canon))
+    from apt_bron_re_spark.streaming.kg_stream import (batch_partials,
+                                                       canon_as_dict)
+    p = plan_of(batch_partials(pages_pq, lm, canon_as_dict(spark, lm)))
     checks.append((
         "kg_batch_step (one url-clustered row-local pass + salted partial "
         "aggregate)", p,

@@ -35,9 +35,9 @@ def test_interrupt_and_resume_equals_single_shot(spark, layer_map,
 
     partial = spark.read.parquet(str(base_b / "mentions"))
     assert 0 < partial.count() < len(want)
-    done = pb.log.completed_buckets(
+    done = set(pb.log.bucket_counts(
         "mention",
-        _mention_fp(pb))
+        _mention_fp(pb)))
     assert 0 < len(done) < 8
 
     # resume: completes only the missing buckets
@@ -88,7 +88,7 @@ def test_link_and_materialize_interrupt_resume(spark, layer_map,
     # link: interrupt after 1 of 4 chunks, then resume
     assert pb.run_link_incremental(n_chunks=4, max_chunks=1) is False
     _fp0, _fp1, fp2, _fp3, fp4 = pb._fps()
-    done = pb.log.completed_buckets("link", fp2)
+    done = set(pb.log.bucket_counts("link", fp2))
     assert 0 < len(done) < 8
     assert pb.run_link_incremental(n_chunks=4) is True
 

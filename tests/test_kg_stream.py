@@ -116,43 +116,46 @@ def test_foreachbatch_pipeline_equals_batch(spark, layer_map, pages_path,
 
 
 def test_batch_step_replay_is_idempotent(spark, layer_map, pages_path,
-                                         canon_df, tmp_path_factory):
+                                         tmp_path_factory):
     """foreachBatch replay semantics: running the SAME micro-batch with the
     same batch_id twice rewrites its partition (dynamic partition
     overwrite) instead of appending duplicates."""
     out = str(tmp_path_factory.mktemp("kg_replay_out"))
     micro = spark.read.parquet(pages_path).filter(
         F.pmod(F.crc32("url"), F.lit(2)) == 0)
+    canon_map = canon_as_dict(spark, layer_map)
 
-    kg_batch_step(micro, 7, layer_map, canon_df, out)
+    kg_batch_step(micro, 7, layer_map, canon_map, out)
     once = _canon_rows(merged_triples(spark, out))
     n_once = spark.read.parquet(out).count()
 
-    kg_batch_step(micro, 7, layer_map, canon_df, out)  # replay
+    kg_batch_step(micro, 7, layer_map, canon_map, out)  # replay
     assert _canon_rows(merged_triples(spark, out)) == once
     assert spark.read.parquet(out).count() == n_once
 
 
-def test_batch_step_runs_few_jobs(spark, layer_map, pages_path, canon_df,
+def test_batch_step_runs_few_jobs(spark, layer_map, pages_path,
                                   tmp_path_factory):
     """One micro-batch step is one row-local pass plus the partial
-    aggregate: at most 8 Spark jobs (under AQE, one per exchange, plus
-    the canon collect and the write)."""
+    aggregate: at most 4 Spark jobs (under AQE, one per exchange, plus
+    the write; the canon map is collected once per stream query, not per
+    step)."""
     out = str(tmp_path_factory.mktemp("kg_jobs_out"))
     micro = spark.read.parquet(pages_path).filter(
         F.pmod(F.crc32("url"), F.lit(3)) == 0)
+    canon_map = canon_as_dict(spark, layer_map)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "kg_batch_step_jobs"
     sc.setJobGroup(group, "job count of one micro-batch step")
     try:
         before = set(tracker.getJobIdsForGroup(group))
-        kg_batch_step(micro, 0, layer_map, canon_df, out)
+        kg_batch_step(micro, 0, layer_map, canon_map, out)
         started = set(tracker.getJobIdsForGroup(group)) - before
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert 0 < len(started) <= 8, sorted(started)
+    assert 0 < len(started) <= 4, sorted(started)
 
 
 def test_live_view_equals_batch_mention_triples(spark, layer_map,

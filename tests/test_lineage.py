@@ -30,7 +30,7 @@ def test_pyarrow_append_reads_back_with_exact_schema(spark, tmp_path):
     assert rows[("stage_a", -1)] == 10
     assert log.is_complete("stage_a", "fp1")
     assert not log.is_complete("stage_a", "other_fp")
-    assert log.completed_buckets("stage_a", "fp1") == {0, 1}
+    assert set(log.bucket_counts("stage_a", "fp1")) == {0, 1}
 
 
 def test_mixed_spark_and_pyarrow_files_read_as_one_table(spark, tmp_path):
@@ -75,7 +75,7 @@ def test_read_missing_or_temp_only_ledger_is_empty(spark, tmp_path):
     log = LineageLog(spark, tmp_path)
     assert log.metrics() is None
     assert not log.is_complete("s", "fp")
-    assert log.completed_buckets("s", "fp") == set()
+    assert set(log.bucket_counts("s", "fp")) == set()
 
     (tmp_path / "_lineage").mkdir()
     (tmp_path / "_lineage" / ".part-lineage-1-2.snappy.parquet.tmp"

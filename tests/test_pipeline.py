@@ -1,6 +1,8 @@
 """End-to-end 5-stage pipeline: structural checks, determinism, lineage,
 and idempotent resume (SURVEY.md §5 resume/idempotency tests)."""
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -171,6 +173,7 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
     (under AQE one per exchange and broadcast, plus the writes and the
     read-back)."""
     from apt_bron_re_spark.operators import mention
+    from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("link_jobs"),
                     n_buckets=8, fuse_extract=True)
@@ -183,7 +186,12 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
     group = "link_stage_jobs"
     sc.setJobGroup(group, "job count of one link stage")
     try:
-        pipe._run_link_stage(pipe._fps()[2], stage2, resume=False)
+        # the stage exactly as Pipeline.run builds it
+        pipe._run_stage(
+            "link", pipe._fps()[2],
+            lambda: pipe._link_tables(stage2, *_bm25_globals(stage2)),
+            partition_by=["pbucket"], resume=False)
+        pipe._read("linked")
         started = set(tracker.getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -197,6 +205,8 @@ def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
     aggregate and the pred-partitioned write, then the read-back: at most
     7 Spark jobs (under AQE one per exchange and broadcast, plus the write
     and the read-back; the lineage record starts none)."""
+    from contextlib import nullcontext
+
     from apt_bron_re_spark.operators import materialize
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("mat_jobs"),
@@ -212,10 +222,11 @@ def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
         # the stage exactly as Pipeline.run builds it
         pipe._run_stage(
             "materialize", pipe._fps()[4],
-            lambda: materialize.materialize_triples(
+            lambda: nullcontext({"triples": materialize.materialize_triples(
                 materialize.evidence_rows(linked, residual, canon),
-                partitions=pipe.n_buckets),
-            "triples", partition_by=["pred"], resume=False)
+                partitions=pipe.n_buckets)}),
+            partition_by=["pred"], resume=False)
+        pipe._read("triples")
         started = set(tracker.getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -289,3 +300,100 @@ def test_observed_counts_of_an_empty_write(spark, tmp_path):
     (df.repartition(8, "pbucket").write.partitionBy("pbucket")
      .parquet(str(tmp_path / "u")))
     assert counts() == {"n": 3, "0": 2, "1": 0}
+
+
+def _triple_rows(df):
+    return sorted(
+        (r.subj, r.pred, r.obj, tuple(r.sources), r.n_sources,
+         r.justification, r.score) for r in df.collect())
+
+
+@pytest.mark.parametrize("fuse_extract", [True, False])
+def test_null_html_page_is_one_error_row(spark, layer_map, tmp_path_factory,
+                                         fuse_extract):
+    """A page whose html is null becomes one ``rec_type='error'`` row of
+    the mention stage (the reference's per-document catch-and-log), fused
+    or not; the run completes with the triples of the corpus without it."""
+    pages = pages_df(spark, 20)
+    bad_url = "http://example.invalid/null-html"
+    with_null = pages.unionByName(spark.createDataFrame(
+        [(bad_url, None, None, None, "en")], pages.schema))
+    want = Pipeline(spark, layer_map, tmp_path_factory.mktemp("null_want"),
+                    n_buckets=8, fuse_extract=fuse_extract).run(
+        pages, resume=False)
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("null_html"),
+                    n_buckets=8, fuse_extract=fuse_extract)
+    got = pipe.run(with_null, resume=False)
+    rows = pipe._read("mentions").filter(F.col("url") == bad_url).collect()
+    assert [r.rec_type for r in rows] == ["error"]
+    assert _triple_rows(got) == _triple_rows(want)
+
+
+def _canon_threads():
+    return [t for t in threading.enumerate()
+            if t.name.startswith("canon-stage") and t.is_alive()]
+
+
+def test_canon_overlap_failures_propagate(spark, layer_map, tmp_path_factory,
+                                          monkeypatch):
+    """A canon stage error propagates from ``run`` before materialize
+    writes anything; when the mention stage fails too, its error wins and
+    the canon error is reported as a warning.  No canon thread outlives
+    the run."""
+    from apt_bron_re_spark.operators import canonicalize, mention
+
+    def canon_fails(*args, **kwargs):
+        raise RuntimeError("canon failed")
+
+    monkeypatch.setattr(canonicalize, "canonical_map", canon_fails)
+    pages = pages_df(spark, 10)
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("canon_err"),
+                    n_buckets=8, fuse_extract=True)
+    with pytest.raises(RuntimeError, match="canon failed"):
+        pipe.run(pages, resume=False)
+    assert pipe.log.metrics().filter(
+        F.col("stage") == "materialize").count() == 0
+    assert not _canon_threads()
+
+    def mention_fails(*args, **kwargs):
+        raise ValueError("mention failed")
+
+    monkeypatch.setattr(mention, "detect_mentions", mention_fails)
+    with pytest.warns(UserWarning, match="canon stage ALSO failed"), \
+            pytest.raises(ValueError, match="mention failed"):
+        pipe.run(pages, resume=False)
+    assert not _canon_threads()
+
+
+def test_failed_link_write_releases_cache(spark, layer_map, tmp_path_factory,
+                                         monkeypatch):
+    """A ``links_residual`` write that fails, batch or chunked, leaves no
+    link kernel output cached and no link lineage row."""
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def failing(write):
+        def wrapped(self, df, name, *args, **kwargs):
+            if name == "links_residual":
+                raise RuntimeError("residual write failed")
+            return write(self, df, name, *args, **kwargs)
+        return wrapped
+
+    pages = pages_df(spark, 10)
+    before = n_persisted()
+    batch = Pipeline(spark, layer_map, tmp_path_factory.mktemp("link_err"),
+                     n_buckets=8, fuse_extract=True)
+    chunked = Pipeline(spark, layer_map,
+                       tmp_path_factory.mktemp("link_err_chunks"),
+                       n_buckets=8, fuse_extract=True)
+    assert chunked.run_mention_incremental(pages, n_chunks=2) is True
+    for name in ("_write", "_replace_table", "_write_buckets"):
+        monkeypatch.setattr(Pipeline, name, failing(getattr(Pipeline, name)))
+    with pytest.raises(RuntimeError, match="residual write failed"):
+        batch.run(pages, resume=False)
+    with pytest.raises(RuntimeError, match="residual write failed"):
+        chunked.run_link_incremental(n_chunks=2)
+    assert n_persisted() == before
+    for pipe in (batch, chunked):
+        assert pipe.log.metrics().filter(
+            F.col("stage") == "link").count() == 0
