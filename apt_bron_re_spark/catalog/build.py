@@ -38,7 +38,20 @@ class CompiledCatalog:
     pattern_labels: dict[str, list[str]] = field(default_factory=dict)
     union_matcher: MultiPatternMatcher | None = None
 
-UNION_EXCLUDED = {"cpe_versioned", "cpe_unversioned"}
+# The CPE labels are keyed by version string or id word, never by surface
+# form: the union scan, linking and canonicalization all skip them.
+CPE_LABELS = {"cpe_versioned", "cpe_unversioned"}
+
+
+def surface_texts(label: str, node: dict) -> list[str]:
+    """A catalog node's surface forms, the texts linking and
+    canonicalization match it by: its name and original_id, then a
+    group's MITRE and Malpedia aliases, empty texts skipped."""
+    texts = [node.get("name"), node.get("original_id")]
+    if label == "group":
+        for alias_field in ("MITRE_aliases", "malpedia_aliases"):
+            texts.extend(node.get(alias_field, []))
+    return [t for t in texts if t]
 
 
 def compile_catalog(layer_map: dict[str, list[dict]]) -> CompiledCatalog:
@@ -105,7 +118,7 @@ def compile_catalog(layer_map: dict[str, list[dict]]) -> CompiledCatalog:
         cat.matchers[label] = MultiPatternMatcher(node_map.keys())
 
     for label in layer_map:
-        if label in UNION_EXCLUDED:
+        if label in CPE_LABELS:
             continue
         for pattern in cat.variant_to_node[label]:
             cat.pattern_labels.setdefault(pattern, []).append(label)

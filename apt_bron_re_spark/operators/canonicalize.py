@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_table
+from .linking import node_variant_rows
 
 # Folded into the canonicalize-stage fingerprint (plans/pipeline.py _fps):
 # a change to the canonicalization ALGORITHM invalidates stage tables built
@@ -171,29 +172,12 @@ def connected_components(edges: DataFrame,
 
 def alias_edges(layer_map: dict[str, list[dict]]) -> list[tuple[str, str]]:
     """Per-label alias-graph edges: ``label:original_id`` <-> every surface
-    variant node ``label:~surface``.  Two catalog nodes that share a surface
-    form land in one component (e.g. a shared alias between two groups)."""
-    from ..functions.variants import generate_variants
-
-    edges = []
-    for label, nodes in layer_map.items():
-        if label in ("cpe_versioned", "cpe_unversioned"):
-            continue
-        for node in nodes:
-            oid = node.get("original_id")
-            if not oid:
-                continue
-            surfaces: set[str] = set()
-            for field in ("name", "original_id"):
-                if node.get(field):
-                    surfaces |= generate_variants(node[field])
-            if label == "group":
-                for alias_field in ("MITRE_aliases", "malpedia_aliases"):
-                    for alias in node.get(alias_field, []):
-                        surfaces |= generate_variants(alias)
-            for s in surfaces:
-                edges.append((f"{label}:{oid}", f"{label}:~{s}"))
-    return edges
+    variant node ``label:~surface`` (``linking.node_variant_rows``; nodes
+    without an original_id have no edge).  Two catalog nodes that share a
+    surface form land in one component (e.g. a shared alias between two
+    groups)."""
+    return [(f"{label}:{oid}", f"{label}:~{v}")
+            for label, v, oid, _name in node_variant_rows(layer_map) if oid]
 
 
 # Above this many alias edges the canonical map is built with the

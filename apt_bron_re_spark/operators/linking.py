@@ -14,14 +14,16 @@ three ways and merged back into the mention table:
       annotate + NER_score = max(old, link)          (ner.py:281-339)
 
 Spark mapping: the pipeline runs L2-L6 as ONE row-local kernel,
-``link_stage``.  The mention-stage rows, hash-partitioned by url once, are
-coalesced to at most one partition per core, sorted by url inside each
-partition and streamed url by url through a single ``mapInPandas``:
-``RowLinker`` builds the variant and semantic links of the url's residues
-against the frozen catalog and picks the best link per key, then the url's
-mention rows are annotated and its residual links emitted.  The kernel
-also emits each scored row's BM25 inputs; the score itself stays a Spark
-expression (``bm25.score_frozen``).
+``link_stage``.  Its ``link_rows`` runs the mention-stage rows through
+``url_local``, the url-clustered plan it shares with materialize's pair
+kernel: hash-partitioned by url once, coalesced to at most one partition
+per core, sorted by url inside each partition and streamed url by url
+through a single ``mapInPandas``.  There ``RowLinker`` builds the variant
+and semantic links of the url's residues against the frozen catalog and
+picks the best link per key, then the url's mention rows are annotated
+and its residual links emitted.  The kernel also emits each scored row's
+BM25 inputs; the score itself stays a Spark expression
+(``bm25.score_frozen``).
 
 The DataFrame operators below are the column-wise form of the same rules,
 and the differential tests pin the kernel to them: L2/L3 are ONE
@@ -49,19 +51,19 @@ from __future__ import annotations
 
 from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
-from typing import Iterator
+from functools import partial
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog.build import CPE_LABELS, surface_texts
 from ..config import BM25_LABELS, SIM_THRESHOLD
 from ..functions.embedder import embed_batch
 from ..functions.variants import generate_variants
 from . import bm25, mention
-
-LINKED_LABELS_EXCLUDE = {"cpe_versioned", "cpe_unversioned"}
 
 
 # --------------------------------------------------------------------------
@@ -69,25 +71,11 @@ LINKED_LABELS_EXCLUDE = {"cpe_versioned", "cpe_unversioned"}
 # --------------------------------------------------------------------------
 
 def node_embedding_rows(layer_map: dict[str, list[dict]]) -> list[dict]:
-    """One row per (node, candidate text): name, original_id, group aliases."""
-    rows = []
-    for label, nodes in layer_map.items():
-        if label in LINKED_LABELS_EXCLUDE:
-            continue
-        for node in nodes:
-            fields = [node.get("name", ""), node.get("original_id", "")]
-            if label == "group":
-                for alias_field in ("MITRE_aliases", "malpedia_aliases"):
-                    fields.extend(node.get(alias_field, []))
-            for text in fields:
-                if text:
-                    rows.append({
-                        "label": label,
-                        "text": text,
-                        "original_id": node.get("original_id"),
-                        "name": node.get("name"),
-                    })
-    return rows
+    """One row per (node, surface text) (``catalog.build.surface_texts``)."""
+    return [{"label": label, "text": text,
+             "original_id": node.get("original_id"), "name": node.get("name")}
+            for label, nodes in layer_map.items() if label not in CPE_LABELS
+            for node in nodes for text in surface_texts(label, node)]
 
 
 # --------------------------------------------------------------------------
@@ -95,24 +83,19 @@ def node_embedding_rows(layer_map: dict[str, list[dict]]) -> list[dict]:
 # --------------------------------------------------------------------------
 
 def node_variant_rows(layer_map: dict[str, list[dict]]) -> list[tuple]:
-    """(label, variant, original_id, name) — every node keeps ALL its
-    variants here (unlike the automaton's first-writer-wins): ner.py:160-168
-    checks every node's own variant set independently."""
+    """(label, variant, original_id, name): the variants of a node's
+    surface texts.  Every node keeps ALL its variants here (unlike the
+    automaton's first-writer-wins): ner.py:160-168 checks every node's own
+    variant set independently."""
     rows = []
     for label, nodes in layer_map.items():
-        if label in LINKED_LABELS_EXCLUDE:
+        if label in CPE_LABELS:
             continue
         for node in nodes:
-            variants: set[str] = set()
-            for field in ("name", "original_id"):
-                if field in node:
-                    variants |= generate_variants(node[field])
-            if label == "group":
-                for alias_field in ("MITRE_aliases", "malpedia_aliases"):
-                    for alias in node.get(alias_field, []):
-                        variants |= generate_variants(alias)
-            for v in variants:
-                rows.append((label, v, node.get("original_id"), node.get("name")))
+            variants = set().union(*map(generate_variants,
+                                        surface_texts(label, node)))
+            rows.extend((label, v, node.get("original_id"), node.get("name"))
+                        for v in variants)
     return rows
 
 
@@ -522,8 +505,8 @@ def complete_urls(batches: Iterator[pd.DataFrame]
     """Re-cut a url-sorted stream of Arrow batches into frames that hold
     only COMPLETE urls: the rows of the last url of a batch are carried
     into the next, so a url-local kernel holds one url's rows at a time,
-    never its whole partition.  ``link_rows`` and
-    ``materialize.evidence_pairs`` stream their partitions through it."""
+    never its whole partition.  ``url_local`` streams every partition
+    through it."""
     carry = None
     for pdf in batches:
         if carry is not None:
@@ -538,6 +521,34 @@ def complete_urls(batches: Iterator[pd.DataFrame]
             yield pdf.iloc[:cut]
     if carry is not None and len(carry):
         yield carry
+
+
+def url_local(rows: DataFrame, partitions: int | None,
+              fold: Callable[[pd.DataFrame], pd.DataFrame],
+              schema: T.StructType) -> DataFrame:
+    """The url-clustered plan of the batch kernels (``link_rows``,
+    ``materialize.evidence_pairs``): ``fold`` over frames of complete
+    urls, sorted by url, returning ``schema`` rows.
+
+    ``rows`` is hash-partitioned by url into ``partitions`` partitions
+    (the session's shuffle partitions when None) — the kernel's only
+    exchange, which puts every row of a url in one partition.  The
+    partitions are coalesced to at most one per core: every Python task
+    pays a fixed start-up cost, and coalescing keeps each hash partition,
+    hence each url, inside one task.  Each partition is sorted by url and
+    streamed through ONE ``mapInPandas`` url by url
+    (``complete_urls``)."""
+    cores = rows.sparkSession.sparkContext.defaultParallelism
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in complete_urls(batches):
+            yield fold(pdf)
+
+    by_url = (rows.repartition(partitions, F.col("url")) if partitions
+              else rows.repartition(F.col("url")))
+    return (by_url.coalesce(cores)
+            .sortWithinPartitions("url")
+            .mapInPandas(run, schema))
 
 
 def _link_urls(linker: RowLinker, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -594,33 +605,17 @@ def link_rows(stage_rows: DataFrame, layer_map: dict[str, list[dict]],
               n_buckets: int) -> DataFrame:
     """The url-local kernel (L2-L6) over mention-stage rows: one
     ``LINK_ROWS_SCHEMA`` row per annotated mention row and per residual
-    link.
-
-    The rows are hash-partitioned by url into ``n_buckets`` partitions
-    (``repartition(n_buckets, "url")``, the stage's only exchange), which
-    puts every row of a url in one partition.  The partitions are
-    coalesced to at most one per core (every Python task pays a fixed
-    start-up cost, and coalescing keeps each hash partition, hence each
-    url, inside one task), sorted by url, and streamed through
-    ``mapInPandas`` url by url (``complete_urls``).  Error rows are
-    dropped; every other row of a url, from every page that shares it, is
-    merged before linking."""
+    link, folded by ``_link_urls`` under ``url_local`` with ``n_buckets``
+    url hash partitions.  Error rows are dropped; every other row of a
+    url, from every page that shares it, is merged before linking."""
     linker = RowLinker(layer_map)
-    cores = stage_rows.sparkSession.sparkContext.defaultParallelism
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in complete_urls(batches):
-            yield _link_urls(linker, pdf)
-
     scored = ((F.col("rec_type") == "mention")
               & F.col("category").isin(BM25_LABELS))
-    return (stage_rows.repartition(n_buckets, F.col("url"))
-            .filter(F.col("rec_type") != "error")
-            .withColumn("bm25_key", F.when(scored, bm25.bm25_key()))
-            .select(*_KERNEL_IN)
-            .coalesce(cores)
-            .sortWithinPartitions("url")
-            .mapInPandas(run, LINK_ROWS_SCHEMA))
+    return url_local(
+        stage_rows.filter(F.col("rec_type") != "error")
+        .withColumn("bm25_key", F.when(scored, bm25.bm25_key()))
+        .select(*_KERNEL_IN),
+        n_buckets, partial(_link_urls, linker), LINK_ROWS_SCHEMA)
 
 
 def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,

@@ -7,18 +7,21 @@ Edge shape per the reference's output spec (README.md:47-58):
 Pipeline:
   1. per-document *evidence* rows (``evidence_rows``): one row per mention
      or residual link with (url, label, canon_id, score, sentence);
-  2. the url-local pair kernel (``evidence_pairs``): the evidence is
-     hash-partitioned by url once, coalesced to at most one partition per
-     core, sorted by url and streamed url by url through ONE
-     ``mapInPandas``, where ``doc_pairs`` folds each url's evidence into
-     co-occurrence pairs restricted to the typed label pairs (no quadratic
-     all-pairs blowup) — at most one pair row per (triple, url);
-  3. ``_salted_aggregate``: groupBy (subj, pred, obj) with the k-smallest
-     source urls, a salted two-phase aggregation, map-side combined.
+  2. the url-local pair kernel (``evidence_pairs``): under
+     ``linking.url_local`` the evidence is hash-partitioned by url once,
+     coalesced to at most one partition per core, sorted by url and
+     streamed url by url through ONE ``mapInPandas``, where ``doc_pairs``
+     folds each url's evidence into co-occurrence pairs restricted to the
+     typed label pairs (no quadratic all-pairs blowup) — at most one pair
+     row per (triple, url);
+  3. the salted two-phase triple aggregation, map-side combined:
+     ``_per_salt`` (one partial row per triple and url salt), then
+     ``_merge_parts`` (one merged row per triple), then ``_finish``.
 
-Batch (``materialize_triples``), chunked (``partial_triples``) and
-streaming (streaming/kg_stream.py) runs all pair with ``doc_pairs`` and
-aggregate with ``_salted_aggregate``: the rules below exist once.
+A *partial* (``partial_triples``) is a merged row per triple of one chunk
+or micro-batch, so ``merge_partial_triples`` is finish . merge.  Batch,
+chunked and streaming (streaming/kg_stream.py) runs pair with
+``doc_pairs`` and merge with ``_merge_parts``: the rules exist once.
 
 Scale notes: the evidence table shuffles exactly once, by url, and a task
 holds one url's evidence at a time; the hub-entity skew shows up in the
@@ -42,7 +45,7 @@ from __future__ import annotations
 
 from itertools import groupby
 from operator import itemgetter
-from typing import Iterable, Iterator
+from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,10 +53,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PREDICATE_MAP
-from .linking import complete_urls
+from .linking import url_local
 
 # Source urls kept per triple (the k smallest) and salts of the two-phase
-# triple aggregation (_salted_aggregate).
+# triple aggregation (_per_salt).
 MAX_SOURCES = 64
 N_SALTS = 16
 
@@ -70,8 +73,7 @@ PAIR_SCHEMA = T.StructType([
 ])
 
 
-def evidence_rows(mentions_linked: DataFrame,
-                  residual_links: DataFrame | None,
+def evidence_rows(mentions_linked: DataFrame, residual_links: DataFrame,
                   canon: DataFrame) -> DataFrame:
     """Pre-aggregation evidence: one row per mention / residual link with
     (url, label, canon_id, score, sentence).  CVE mentions (value, no
@@ -83,15 +85,13 @@ def evidence_rows(mentions_linked: DataFrame,
         F.coalesce("original_id", "value").alias("entity_id"),
         F.coalesce("ner_score", F.lit(0.0)).alias("score"),
         "sentence",
-    )
-    if residual_links is not None:
-        m = m.unionByName(residual_links.select(
-            "url",
-            F.col("category").alias("label"),
-            F.col("original_id").alias("entity_id"),
-            F.coalesce("ner_score", F.lit(0.0)).alias("score"),
-            F.lit(None).cast("string").alias("sentence"),
-        ))
+    ).unionByName(residual_links.select(
+        "url",
+        F.col("category").alias("label"),
+        F.col("original_id").alias("entity_id"),
+        F.coalesce("ner_score", F.lit(0.0)).alias("score"),
+        F.lit(None).cast("string").alias("sentence"),
+    ))
 
     return (
         m.join(F.broadcast(canon),
@@ -122,7 +122,7 @@ def doc_pairs(evidence: Iterable[tuple], predicate_map: dict) -> dict:
     entity to itself; pair_score = min(max(s_score, 0), max(o_score, 0)).
     Per triple, the pair with the largest (pair_score, subject has a
     sentence, subj_label) wins and carries the subject's sentence — the
-    cross-url best-evidence key of ``_salted_aggregate`` with its url
+    cross-url best-evidence key of ``_per_salt`` with its url
     fixed, so the fold is associative with the aggregation over urls."""
     ev: dict[tuple[str, str], tuple[float, str | None]] = {}
     for label, canon_id, score, sentence in evidence:
@@ -168,81 +168,72 @@ def _pair_urls(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def evidence_pairs(ev: DataFrame, partitions: int | None) -> DataFrame:
     """``evidence_rows`` output -> ``PAIR_SCHEMA`` rows, at most one per
-    (triple, url): the url-local pair kernel.
-
-    The evidence is hash-partitioned by url (``partitions`` partitions, or
-    the session's shuffle partitions) — the stage's only exchange before
-    the triple aggregation — coalesced to at most one partition per core
-    (each Python task pays a fixed start-up cost; coalescing keeps every
-    url in one task), sorted by url and streamed url by url
-    (``linking.complete_urls``) through one ``mapInPandas`` that folds
-    each url with ``doc_pairs``."""
-    cores = ev.sparkSession.sparkContext.defaultParallelism
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in complete_urls(batches):
-            yield _pair_urls(pdf)
-
-    by_url = (ev.repartition(partitions, F.col("url")) if partitions
-              else ev.repartition(F.col("url")))
-    return (by_url.select("url", "label", "canon_id", "score", "sentence")
-            .coalesce(cores)
-            .sortWithinPartitions("url")
-            .mapInPandas(run, PAIR_SCHEMA))
+    (triple, url): the url-local pair kernel, ``doc_pairs`` folded url by
+    url under ``linking.url_local``.  The url exchange is the stage's only
+    one before the triple aggregation."""
+    return url_local(ev.select("url", "label", "canon_id", "score",
+                               "sentence"),
+                     partitions, _pair_urls, PAIR_SCHEMA)
 
 
-def _salted_aggregate(pairs: DataFrame, max_sources: int, n_salts: int,
-                      round_score: bool) -> DataFrame:
-    """The salted two-phase triple aggregation over evidence pairs with at
-    most one row per (triple, url) (``PAIR_SCHEMA``): (subj, pred, obj,
-    sources, n_sources, bj, score), ``bj`` being the best-evidence key
-    struct(s, has_s, url, subj_label) with the justification as payload.
-
-    Hub-entity skew handling (north_rule "salted skew handling"): at
-    10^12-doc scale a hub edge's source set has millions of urls, so a
-    plain collect_set explodes one reducer.  The source list is therefore
-    aggregated in TWO salted phases, each memory-bounded:
-
-      phase 1: group by (subj, pred, obj, salt=crc32(url)%n_salts), keep
-               only the ``max_sources`` lexicographically-smallest urls;
-      phase 2: merge the per-salt lists and keep the smallest
-               ``max_sources`` again.
-
-    Because the global k smallest urls are each among their own salt's k
-    smallest, the result is EXACTLY the k smallest source urls —
-    deterministic and bounded.  ``n_sources`` is the exact distinct
-    source count: a plain row count, since no url repeats within a triple
-    (algebraic, skew-safe).  The best-evidence argmax is equally salted
-    (max of a max is the max)."""
+def _per_salt(pairs: DataFrame, max_sources: int,
+              n_salts: int) -> DataFrame:
+    """Phase 1 of the salted triple aggregation over evidence pairs
+    (``PAIR_SCHEMA``, at most one row per (triple, url)): per (triple,
+    salt=crc32(url)%n_salts), the ``max_sources`` smallest urls, the url
+    count, the best-evidence key max(struct(s, has_s, url, subj_label))
+    with the justification as payload, and the max pair_score.  A hub
+    edge's millions of urls (10^12-doc scale) would explode one reducer
+    in a plain collect_set; the salt spreads them over ``n_salts``
+    memory-bounded groups, which ``_merge_parts`` folds."""
     bj = F.max(F.struct(F.col("pair_score").alias("s"),
                         F.col("justification").isNotNull().alias("has_s"),
                         "url", "subj_label", "justification"))
-    per_salt = (
+    return (
         pairs
         .withColumn("salt", F.pmod(F.crc32("url"), F.lit(n_salts)))
         .groupBy("subj", "pred", "obj", "salt")
         .agg(
             F.slice(F.sort_array(F.collect_set("url")), 1, max_sources)
-             .alias("salt_sources"),
-            F.count("url").alias("salt_n"),
-            bj.alias("bj"),
-            F.max("pair_score").alias("salt_score"),
+             .alias("part_sources"),
+            F.count("url").alias("part_n"),
+            bj.alias("part_bj"),
+            F.max("pair_score").alias("part_score"),
         )
     )
 
-    score = F.max("salt_score")
+
+def _merge_parts(parts: DataFrame, max_sources: int) -> DataFrame:
+    """Fold partial rows (``_per_salt``'s columns) into one per triple:
+    the ``max_sources`` smallest of the flattened sources, the sum of the
+    counts, the max key and the max score.  Exact whenever the parts hold
+    disjoint url sets — salts, chunks and micro-batches all do: the global
+    k smallest urls are each among their own part's k smallest, counts of
+    disjoint sets add, and the max of maxima is the max (urls never repeat
+    across parts, so the key never ties)."""
     return (
-        per_salt.groupBy("subj", "pred", "obj")
+        parts.groupBy("subj", "pred", "obj")
         .agg(
             F.slice(
                 F.array_sort(F.array_distinct(
-                    F.flatten(F.collect_list("salt_sources")))),
-                1, max_sources).alias("sources"),
-            F.sum("salt_n").alias("n_sources"),
-            F.max("bj").alias("bj"),
-            (F.round(score, 4) if round_score else score).alias("score"),
+                    F.flatten(F.collect_list("part_sources")))),
+                1, max_sources).alias("part_sources"),
+            F.sum("part_n").alias("part_n"),
+            F.max("part_bj").alias("part_bj"),
+            F.max("part_score").alias("part_score"),
         )
     )
+
+
+def _finish(merged: DataFrame) -> DataFrame:
+    """One merged partial row per triple -> the triple row: (subj, pred,
+    obj, sources, n_sources, justification, round(score, 4))."""
+    return merged.select(
+        "subj", "pred", "obj",
+        F.col("part_sources").alias("sources"),
+        F.col("part_n").alias("n_sources"),
+        F.col("part_bj.justification").alias("justification"),
+        F.round("part_score", 4).alias("score"))
 
 
 def materialize_triples(ev: DataFrame,
@@ -253,11 +244,9 @@ def materialize_triples(ev: DataFrame,
     justification, score).  ``ev`` is ``evidence_rows`` output (any
     per-(url, label, canon_id) pre-aggregation of it gives the same
     triples); ``partitions`` is the url exchange's partition count."""
-    agg = _salted_aggregate(evidence_pairs(ev, partitions), max_sources,
-                            n_salts, round_score=True)
-    return agg.select("subj", "pred", "obj", "sources", "n_sources",
-                      F.col("bj.justification").alias("justification"),
-                      "score")
+    return _finish(_merge_parts(
+        _per_salt(evidence_pairs(ev, partitions), max_sources, n_salts),
+        max_sources))
 
 
 def partial_triples(ev: DataFrame,
@@ -268,41 +257,14 @@ def partial_triples(ev: DataFrame,
 
 
 def partial_triples_of_pairs(pairs: DataFrame) -> DataFrame:
-    """The partial triple aggregate of evidence pairs (``PAIR_SCHEMA``).
-    Because chunks and micro-batches partition the corpus BY URL, every
-    per-triple statistic here is mergeable exactly:
-
-      part_sources  k-smallest urls within the chunk (the global k smallest
-                    are each within their own chunk's k smallest)
-      part_n        exact distinct url count (urls disjoint across chunks)
-      part_bj       max (s, has_s, url, subj_label) evidence key with the
-                    justification as payload — urls are chunk-disjoint,
-                    so the cross-chunk max never ties on the key either
-      part_score    max pair_score (rounded only at merge time)
-    """
-    agg = _salted_aggregate(pairs, MAX_SOURCES, N_SALTS, round_score=False)
-    return agg.select(
-        "subj", "pred", "obj",
-        F.col("sources").alias("part_sources"),
-        F.col("n_sources").alias("part_n"),
-        F.col("bj").alias("part_bj"),
-        F.col("score").alias("part_score"))
+    """The partial triple aggregate of evidence pairs (``PAIR_SCHEMA``):
+    one merged row per triple (``_merge_parts``).  Chunks and micro-batches
+    partition the corpus BY URL, so partials of different chunks merge
+    exactly (``merge_partial_triples``)."""
+    return _merge_parts(_per_salt(pairs, MAX_SOURCES, N_SALTS), MAX_SOURCES)
 
 
 def merge_partial_triples(partials: DataFrame) -> DataFrame:
     """Merge chunk-partial aggregates into final triples — identical output
     to a single-shot materialize_triples over the full evidence table."""
-    return (
-        partials.groupBy("subj", "pred", "obj")
-        .agg(
-            F.slice(
-                F.array_sort(F.array_distinct(
-                    F.flatten(F.collect_list("part_sources")))),
-                1, MAX_SOURCES).alias("sources"),
-            F.sum("part_n").alias("n_sources"),
-            F.max("part_bj").getField("justification").alias("justification"),
-            F.round(F.max("part_score"), 4).alias("score"),
-        )
-        .select("subj", "pred", "obj", "sources", "n_sources",
-                "justification", "score")
-    )
+    return _finish(_merge_parts(partials, MAX_SOURCES))

@@ -37,16 +37,22 @@ execution shapes, both reusing the batch operators:
    — the same merge algebra as the batch salted aggregation, so on a
    url-disjoint stream the final emitted row per key equals the batch
    ``materialize_triples(evidence_rows(merged, residual, canon))`` row exactly
-   (pytest-pinned).  With ``link=True`` the L2-L5 link pass (variant +
-   semantic against the FROZEN catalog — neither needs corpus statistics)
-   also runs row-locally inside the same UDF, with the same
-   ``linking.RowLinker`` as the batch link stage: mention scores take
-   max(mention, link) and link-only keys become sentence-free residual
-   evidence.  Only the BM25 annotation (corpus-global df/m/avgdl) is
-   inherently batch-shaped; it never feeds evidence scores, so the live
-   triple set matches batch even on corpora where links change it.
-   Urls must arrive in exactly one micro-batch; proven violations are
-   surfaced per key as ``replays_detected`` (see stream_triples_live).
+   (pytest-pinned).  The L2-L5 link pass (variant + semantic against the
+   FROZEN catalog — neither needs corpus statistics) runs row-locally
+   inside the same UDF, with the same ``linking.RowLinker`` as the batch
+   link stage: mention scores take max(mention, link) and link-only keys
+   become sentence-free residual evidence.  Only the BM25 annotation
+   (corpus-global df/m/avgdl) is inherently batch-shaped; it never feeds
+   evidence scores, so the live triple set matches batch even on corpora
+   where links change it.  Urls must arrive in exactly one micro-batch;
+   proven violations are surfaced per key as ``replays_detected`` (see
+   stream_triples_live).
+
+   The kernel keeps its own plan rather than the batch kernels'
+   ``linking.url_local``: ``stream_triples_live`` feeds it a streaming
+   DataFrame, and Spark rejects any sort on one ("Sorting is not
+   supported on streaming DataFrames"), so each task merges its urls in
+   a dict instead of streaming them sorted.
 
 Scale notes: state per key is O(MAX_SOURCES) regardless of how many pages
 mention a hub edge — the streaming twin of the batch salted two-phase
@@ -138,13 +144,11 @@ def _evidence(results: dict, residual_links: list[tuple],
 
 def stream_evidence_pairs(pages_stream: DataFrame,
                           layer_map: dict[str, list[dict]],
-                          canon_map: dict,
-                          link: bool = True) -> DataFrame:
+                          canon_map: dict) -> DataFrame:
     """pages stream -> (subj, pred, obj, url, subj_label, pair_score,
     justification), at most one row per (triple, url): extract + mention
     + frozen-catalog linking + canonicalize + per-url pairing in ONE
     row-local mapInPandas pass (works identically on a batch DataFrame).
-    ``link=False`` restores the mentions-only view.
 
     Exact per url, like the batch link stage: one ``repartition(url)``
     puts every page row of a url in one task, which merges their
@@ -153,7 +157,7 @@ def stream_evidence_pairs(pages_stream: DataFrame,
     its input is drained."""
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
-    linker = RowLinker(layer_map) if link else None
+    linker = RowLinker(layer_map)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         docs: dict[str, tuple[dict, dict]] = {}
@@ -172,7 +176,7 @@ def stream_evidence_pairs(pages_stream: DataFrame,
                         merged.setdefault(key, []).extend(values)
         rows: list[tuple] = []
         for url, (results, residue) in docs.items():
-            residuals = linker.apply(results, residue) if linker else []
+            residuals = linker.apply(results, residue)
             rows.extend(
                 (subj, pred, obj, url, subj_label, s, j)
                 for (subj, pred, obj), (s, j, subj_label)
@@ -229,7 +233,7 @@ def stream_triples_live(pairs: DataFrame) -> DataFrame:
                 score = max(score, s)
                 # cross-url best-justification order — the streaming twin
                 # of the best-evidence key struct(s, has_s, url) of
-                # materialize._salted_aggregate (subj_label already folded
+                # materialize._per_salt (subj_label already folded
                 # per url by materialize.doc_pairs)
                 if (s, j is not None, url) > (bj_s, bj_has, bj_url):
                     bj_s, bj_has, bj_url, bj = s, j is not None, url, j

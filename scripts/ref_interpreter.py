@@ -546,7 +546,7 @@ def materialize(evidence_rows, max_sources=64):
 
     # best-justification tie-break order — must mirror the rebuild's
     # best-evidence key struct (pair_score, has_sentence, url, subj_label)
-    # (operators/materialize.py _salted_aggregate): the sentence string
+    # (operators/materialize.py _per_salt): the sentence string
     # itself never decides; the winning evidence KEY determines the
     # sentence.
     triples: dict[tuple, dict] = {}

@@ -5,7 +5,7 @@ Two parity pins over the same multi-trigger stream of synthetic pages:
 * the foreachBatch micro-batch pipeline (stages 2-5, frozen BM25 globals,
   merge-on-append partials) == single-shot batch pipeline, EXACTLY;
 * the live applyInPandasWithState triple view == batch
-  materialize_triples(evidence_rows(mentions, None, canon)), EXACTLY.
+  materialize_triples(evidence_rows(merged, residual, canon)), EXACTLY.
 
 Plus an exactly-once check: replaying a micro-batch with the same
 batch_id leaves the merged result unchanged, parity on a stream whose
@@ -158,41 +158,6 @@ def test_batch_step_runs_few_jobs(spark, layer_map, pages_path,
     assert 0 < len(started) <= 4, sorted(started)
 
 
-def test_live_view_equals_batch_mention_triples(spark, layer_map,
-                                                pages_path, batch_stage2,
-                                                canon_df,
-                                                tmp_path_factory):
-    """Live view WITHOUT linking == batch triples over mentions only."""
-    want = materialize.materialize_triples(materialize.evidence_rows(
-        mention.mentions_view(batch_stage2), None, canon_df))
-
-    canon_map_d = canon_as_dict(spark, layer_map)
-    pairs = stream_evidence_pairs(_stream_pages(spark, pages_path),
-                                  layer_map, canon_map_d, link=False)
-    live = stream_triples_live(pairs)
-
-    ckpt = str(tmp_path_factory.mktemp("live_ckpt"))
-    q = (live.writeStream.format("memory").queryName("live_triples")
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(600)
-
-    # update mode appends one row per key per trigger; the LAST row per
-    # key is the final state (n_sources is monotone within a key)
-    rows = spark.table("live_triples").collect()
-    final = {}
-    for r in rows:
-        key = (r["subj"], r["pred"], r["obj"])
-        cur = final.get(key)
-        if cur is None or r["n_sources"] >= cur["n_sources"]:
-            final[key] = r
-    got = sorted(
-        (k[0], k[1], k[2], tuple(r["sources"]), r["n_sources"],
-         r["justification"], r["score"])
-        for k, r in final.items())
-    assert got == _canon_rows(want)
-
-
 def _drain_live(spark, live, ckpt, name):
     q = (live.writeStream.format("memory").queryName(name)
          .outputMode("update").option("checkpointLocation", ckpt)
@@ -217,14 +182,14 @@ def test_live_view_with_links_equals_batch_linked_triples(
     want = materialize.materialize_triples(
         materialize.evidence_rows(merged, residual, canon_df))
     base = materialize.materialize_triples(materialize.evidence_rows(
-        mention.mentions_view(batch_stage2), None, canon_df))
+        mention.mentions_view(batch_stage2), residual.limit(0), canon_df))
     # the corpus must exercise the link pass, else this test proves nothing
     assert _canon_rows(want) != _canon_rows(base)
     assert residual.count() > 0
 
     canon_map_d = canon_as_dict(spark, layer_map)
     pairs = stream_evidence_pairs(_stream_pages(spark, pages_path),
-                                  layer_map, canon_map_d, link=True)
+                                  layer_map, canon_map_d)
     live = stream_triples_live(pairs)
     final = _drain_live(spark, live, str(tmp_path_factory.mktemp(
         "live_link_ckpt")), "live_triples_linked")
@@ -236,12 +201,14 @@ def test_live_view_with_links_equals_batch_linked_triples(
     assert all(r["replays_detected"] == 0 for r in final.values())
 
 
-def test_live_view_replay_guard(spark, layer_map, pages_path, canon_df,
+def test_live_view_replay_guard(spark, layer_map, pages_path,
                                 tmp_path_factory):
     """A url replayed across micro-batches violates the one-batch-per-url
     contract: the bounded state detects it (the url is in the k-smallest
     sample), surfaces replays_detected > 0, and does NOT double-count
     n_sources."""
+    from apt_bron_re_spark.plans.pipeline import Pipeline
+
     dup_dir = str(tmp_path_factory.mktemp("kg_pages_dup") / "p")
     pages = spark.read.parquet(pages_path).limit(8)
     # the same 8 urls in TWO files -> two triggers see the same urls
@@ -250,17 +217,16 @@ def test_live_view_replay_guard(spark, layer_map, pages_path, canon_df,
 
     canon_map_d = canon_as_dict(spark, layer_map)
     pairs = stream_evidence_pairs(_stream_pages(spark, dup_dir),
-                                  layer_map, canon_map_d, link=False)
+                                  layer_map, canon_map_d)
     live = stream_triples_live(pairs)
     final = _drain_live(spark, live, str(tmp_path_factory.mktemp(
         "live_dup_ckpt")), "live_triples_dup")
 
-    want = materialize.materialize_triples(materialize.evidence_rows(
-        mention.detect_mentions(
-            pages.filter(F.col("lang") == "en").select("url", "html"),
-            layer_map, from_html=True)
-        .filter("rec_type = 'mention'").drop("rec_type", "bucket"),
-        None, canon_df))
+    # the linked batch triples of the same 8 pages (one file's worth)
+    once = spark.read.parquet(dup_dir).dropDuplicates(["url"])
+    want = Pipeline(spark, layer_map,
+                    str(tmp_path_factory.mktemp("kg_replay_batch")),
+                    n_buckets=8, fuse_extract=True).run(once, resume=False)
     want_n = {(r["subj"], r["pred"], r["obj"]): r["n_sources"]
               for r in want.collect()}
     # no double counting despite every url arriving twice...

@@ -6,9 +6,11 @@ import importlib.util as iu
 import random
 from pathlib import Path
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from apt_bron_re_spark.operators.materialize import (
+    MAX_SOURCES,
     materialize_triples,
     merge_partial_triples,
     partial_triples,
@@ -53,6 +55,28 @@ def test_salted_deterministic(spark):
     kb = {(r.subj, r.pred, r.obj): (tuple(r.sources), r.n_sources) for r in b}
     # salt count must not change the result
     assert ka == kb
+
+
+def test_merged_partials_truncate_like_one_shot(spark):
+    """Three url-disjoint chunks of a 300-url hub: merging their partials
+    keeps the MAX_SOURCES smallest of the chunks' source lists, so the
+    merge truncates as the one-shot aggregation does."""
+    ev = _ev(spark)
+    chunk = F.pmod(F.crc32("url"), F.lit(3))
+    partials = [partial_triples(ev.filter(chunk == i)) for i in range(3)]
+    # every chunk's hub list is already full, so the merge must truncate
+    for part in partials:
+        hub = part.filter(F.col("subj") == "G1").collect()
+        assert [len(r.part_sources) for r in hub] == [MAX_SOURCES]
+    merged = merge_partial_triples(
+        partials[0].unionByName(partials[1]).unionByName(partials[2]))
+    want = _by_triple(materialize_triples(ev))
+    assert _by_triple(merged) == want
+
+    sources, n_sources, justification, score = want[("G1", "uses", "T1")]
+    assert sources == tuple(f"u{i:04d}" for i in range(MAX_SOURCES))
+    assert n_sources == 300
+    assert (justification, score) == ("s299", 0.5)
 
 
 # The triples schema: column types and nullability
