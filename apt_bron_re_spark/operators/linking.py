@@ -345,15 +345,16 @@ def spark_round(x: float) -> float:
 
 
 class RowLinker:
-    """Frozen-catalog entity linking (L2-L5) for ONE document at a time —
-    the row-local twin of ``build_links`` + the best-link rule of
-    ``best_links``.  Neither the variant table nor the node embeddings
+    """Frozen-catalog entity linking (L2-L5) and the L6 fold (``merge``)
+    for ONE url at a time — the row-local twin of ``build_links`` + the
+    best-link rule of ``best_links`` + ``merge_links``.  Neither the variant table nor the node embeddings
     depend on the corpus, so the pass is exact inside a per-url kernel;
     only BM25 (corpus df/m/avgdl) cannot move here.
 
     Built once on the driver, shipped in the UDF closure (catalog-sized,
-    broadcast semantics).  ``link_stage`` and the streaming kernel
-    (streaming/kg_stream.py) both run it."""
+    broadcast semantics).  Its one caller is ``_link_urls``, the url fold
+    that the batch link stage and the streaming kernel
+    (streaming/kg_stream.py) both run."""
 
     def __init__(self, layer_map: dict[str, list[dict]]) -> None:
         self.variants: dict[str, list[tuple]] = {}
@@ -442,20 +443,6 @@ class RowLinker:
                     for (label, oid_l), (winner, max_s) in best.items()
                     if (label, oid_l) not in keys]
         return annotated, residual
-
-    def apply(self, results: dict, residue: dict) -> list[tuple]:
-        """``merge`` over a document's {category: [entry]} results: fold
-        the link scores into the entries' NER_score IN PLACE and return
-        the residual-link evidence [(label, original_id, score)]."""
-        entries = [(category, ent) for category, ents in results.items()
-                   for ent in ents]
-        annotated, residual = self.merge(
-            residue, [(category, ent.get("original_id"), ent.get("NER_score"))
-                      for category, ent in entries])
-        for (_category, ent), (score, winner) in zip(entries, annotated):
-            if winner is not None:
-                ent["NER_score"] = score
-        return [(label, winner[7], max_s) for label, winner, max_s in residual]
 
 
 # --------------------------------------------------------------------------

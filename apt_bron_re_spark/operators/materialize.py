@@ -21,7 +21,10 @@ Pipeline:
 A *partial* (``partial_triples``) is a merged row per triple of one chunk
 or micro-batch, so ``merge_partial_triples`` is finish . merge.  Batch,
 chunked and streaming (streaming/kg_stream.py) runs pair with
-``doc_pairs`` and merge with ``_merge_parts``: the rules exist once.
+``_pair_urls`` and merge with ``_merge_parts``: the rules exist once.  The
+evidence rule has two forms: ``evidence_rows`` over Spark tables, and
+``link_evidence`` over the link kernel's pandas rows inside the stream
+kernel.
 
 Scale notes: the evidence table shuffles exactly once, by url, and a task
 holds one url's evidence at a time; the hub-entity skew shows up in the
@@ -101,6 +104,26 @@ def evidence_rows(mentions_linked: DataFrame, residual_links: DataFrame,
                 F.coalesce(canon.canon_id, m.entity_id).alias("canon_id"),
                 m.score, m.sentence)
     )
+
+
+def link_evidence(links: pd.DataFrame, canon_map: dict) -> pd.DataFrame:
+    """``evidence_rows`` in pandas, over the link kernel's rows
+    (``linking.LINK_ROWS_SCHEMA``; a residual link's value is null):
+    (url, label, canon_id, score, sentence) in row order, the entity
+    coalesce(original_id, value) looked up in the collected canon map
+    {(label, original_id): canon_id}.  The streaming kernel's evidence
+    step."""
+    labels = links["category"].tolist()
+    # coalesce: an empty-string original_id must NOT fall through to value
+    entities = [oid if oid is not None else value for oid, value
+                in zip(links["original_id"], links["value"])]
+    return pd.DataFrame({
+        "url": links["url"].tolist(),
+        "label": labels,
+        "canon_id": [canon_map.get(key, key[1])
+                     for key in zip(labels, entities)],
+        "score": links["ner_score"].fillna(0.0).tolist(),
+        "sentence": links["sentence"].tolist()})
 
 
 def _sent_key(row: tuple[float, str | None]) -> tuple:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog.build import compile_catalog
+from ..catalog.build import CompiledCatalog, compile_catalog
 from ..functions.extract_text import extract_text
 from .doc_core import NerTagger, process_document
 
@@ -52,7 +52,80 @@ MENTION_SCHEMA = T.StructType([
     T.StructField("bucket", T.StringType(), True),
 ])
 
-_COLS = [f.name for f in MENTION_SCHEMA.fields]
+
+def mention_rows(pdf: pd.DataFrame, catalog: CompiledCatalog,
+                 tagger: NerTagger, from_html: bool = False,
+                 event_time_col: str | None = None) -> list[dict]:
+    """The stage-table rows of one batch of docs(url, text), or of
+    pages(url, html) when ``from_html``: per document one ``doc`` row,
+    its ``mention`` and ``residue`` rows, or one ``error`` row when
+    extraction or ``process_document`` raises.  ``event_time_col`` is
+    carried onto every row.  ``detect_mentions`` and the streaming kernel
+    (streaming/kg_stream.py) build their rows here."""
+    rows: list[dict] = []
+    ets = pdf[event_time_col] if event_time_col else None
+    payload = pdf["html"] if from_html else pdf["text"]
+    for i, (url, text) in enumerate(zip(pdf["url"], payload)):
+        extra = {event_time_col: ets.iloc[i]} if event_time_col else {}
+        try:
+            if from_html:
+                text = extract_text(text)
+            results, residue, dl = process_document(text, catalog, tagger)
+        except Exception as exc:  # reference basic.py:300-301
+            rows.append({
+                **extra, "url": url, "rec_type": "error",
+                "category": None, "name": None, "original_id": None,
+                "value": f"{type(exc).__name__}: {exc}"[:500],
+                "index": None, "alias": None, "software_type": None,
+                "product": None, "vendor": None, "version": None,
+                "ner_score": None, "sentence": None, "bucket": None,
+            })
+            continue
+        # one 'doc' row per document carries dl (BM25 doc length,
+        # reference statistics.py:28) — no second pass over text
+        rows.append({
+            **extra, "url": url, "rec_type": "doc",
+            "category": None, "name": None, "original_id": None,
+            "value": None, "index": dl, "alias": None,
+            "software_type": None, "product": None, "vendor": None,
+            "version": None, "ner_score": None, "sentence": None,
+            "bucket": None,
+        })
+        for category, entries in results.items():
+            for ent in entries:
+                rows.append({
+                    **extra,
+                    "url": url,
+                    "rec_type": "mention",
+                    "category": category,
+                    "name": ent.get("name"),
+                    "original_id": ent.get("original_id"),
+                    "value": ent.get("value"),
+                    "index": ent.get("index"),
+                    "alias": ent.get("alias"),
+                    "software_type": ent.get("software_type"),
+                    "product": ent.get("product"),
+                    "vendor": ent.get("vendor"),
+                    "version": ent.get("version"),
+                    "ner_score": float(ent.get("NER_score", 0.0)),
+                    "sentence": ent.get("sentence"),
+                    "bucket": None,
+                })
+        for bucket, values in residue.items():
+            for val in values:
+                rows.append({
+                    **extra,
+                    "url": url,
+                    "rec_type": "residue",
+                    "category": None, "name": None,
+                    "original_id": None, "value": val,
+                    "index": None, "alias": None,
+                    "software_type": None, "product": None,
+                    "vendor": None, "version": None,
+                    "ner_score": None, "sentence": None,
+                    "bucket": bucket,
+                })
+    return rows
 
 
 def detect_mentions(docs: DataFrame,
@@ -82,71 +155,9 @@ def detect_mentions(docs: DataFrame,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[dict] = []
-            ets = pdf[event_time_col] if event_time_col else None
-            payload = pdf["html"] if from_html else pdf["text"]
-            for i, (url, text) in enumerate(zip(pdf["url"], payload)):
-                extra = {event_time_col: ets.iloc[i]} if event_time_col else {}
-                try:
-                    if from_html:
-                        text = extract_text(text)
-                    results, residue, dl = process_document(
-                        text, catalog, tagger)
-                except Exception as exc:  # reference basic.py:300-301
-                    rows.append({
-                        **extra, "url": url, "rec_type": "error",
-                        "category": None, "name": None, "original_id": None,
-                        "value": f"{type(exc).__name__}: {exc}"[:500],
-                        "index": None, "alias": None, "software_type": None,
-                        "product": None, "vendor": None, "version": None,
-                        "ner_score": None, "sentence": None, "bucket": None,
-                    })
-                    continue
-                # one 'doc' row per document carries dl (BM25 doc length,
-                # reference statistics.py:28) — no second pass over text
-                rows.append({
-                    **extra, "url": url, "rec_type": "doc",
-                    "category": None, "name": None, "original_id": None,
-                    "value": None, "index": dl, "alias": None,
-                    "software_type": None, "product": None, "vendor": None,
-                    "version": None, "ner_score": None, "sentence": None,
-                    "bucket": None,
-                })
-                for category, entries in results.items():
-                    for ent in entries:
-                        rows.append({
-                            **extra,
-                            "url": url,
-                            "rec_type": "mention",
-                            "category": category,
-                            "name": ent.get("name"),
-                            "original_id": ent.get("original_id"),
-                            "value": ent.get("value"),
-                            "index": ent.get("index"),
-                            "alias": ent.get("alias"),
-                            "software_type": ent.get("software_type"),
-                            "product": ent.get("product"),
-                            "vendor": ent.get("vendor"),
-                            "version": ent.get("version"),
-                            "ner_score": float(ent.get("NER_score", 0.0)),
-                            "sentence": ent.get("sentence"),
-                            "bucket": None,
-                        })
-                for bucket, values in residue.items():
-                    for val in values:
-                        rows.append({
-                            **extra,
-                            "url": url,
-                            "rec_type": "residue",
-                            "category": None, "name": None,
-                            "original_id": None, "value": val,
-                            "index": None, "alias": None,
-                            "software_type": None, "product": None,
-                            "vendor": None, "version": None,
-                            "ner_score": None, "sentence": None,
-                            "bucket": bucket,
-                        })
-            yield pd.DataFrame(rows, columns=out_cols)
+            yield pd.DataFrame(
+                mention_rows(pdf, catalog, tagger, from_html, event_time_col),
+                columns=out_cols)
 
     return docs.select(*in_cols).mapInPandas(run, schema)
 

@@ -123,8 +123,9 @@ def cosine_cross_pairs(a: DataFrame, b: DataFrame, threshold: float,
     # null b-side vectors produced null cosines (dropped) in the old
     # plan; drop them up front so the kernel sees a clean matrix
     b_rows = b.select(b_id, b_vec).where(F.col(b_vec).isNotNull()).collect()
-    id_type = a.schema[a_id].dataType.simpleString()
-    out_schema = f"{a_id} {id_type}, {b_id} {id_type}, cos_raw double"
+    out_schema = (f"{a_id} {a.schema[a_id].dataType.simpleString()}, "
+                  f"{b_id} {b.schema[b_id].dataType.simpleString()}, "
+                  "cos_raw double")
     if not b_rows:
         empty = spark.createDataFrame([], out_schema)
         return (empty.select(a_id, b_id,

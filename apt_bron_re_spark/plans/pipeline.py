@@ -31,15 +31,18 @@ Every batch stage, the chunked link stage's frozen BM25 globals included,
 is written by one runner, ``_run_stage``.  The link stage (L2-L5 links ->
 L6 merge, then BM25) is ONE kernel, ``operators.linking.link_stage``: a
 url-local ``mapInPandas`` pass over the mention stage table repartitioned
-by url, run with the same ``linking.RowLinker`` as the streaming kernel.
+by url, folding each url with ``linking._link_urls``.
 ``_link_tables`` builds its two tables from the persisted kernel output
 for ``run`` (the whole table, BM25 globals inline) and for
 ``run_link_incremental`` (one call per bucket chunk).  The kernel scores
 against the global BM25 (stats, df) it is handed, so the chunked wrapper
 freezes those once from the whole corpus; per-chunk stats would give
 wrong idf.  (The streaming micro-batch step,
-``streaming.kg_stream.kg_batch_step``, runs stages 2-5 row-locally
-instead.)  Materialize is likewise one url-local kernel,
+``streaming.kg_stream.kg_batch_step``, runs the same mention, link and
+pair folds, with the evidence rule's pandas form between them, inside ONE
+row-local pass; only its plan differs, unsorted because Spark rejects a
+sort on a stream.)
+Materialize is likewise one url-local kernel,
 ``operators.materialize.evidence_pairs``, under ``run``
 (``materialize_triples``) and ``run_materialize_incremental``
 (``partial_triples`` per chunk).  The ``run_*_incremental`` stages share

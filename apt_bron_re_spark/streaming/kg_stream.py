@@ -1,58 +1,48 @@
 """Streaming KG construction — stages 2-5 over arriving pages.
 
 The reference is a pure batch pipeline (SURVEY.md §1.3), but a
-Common-Crawl-scale deployment ingests pages continuously.  Two streaming
-execution shapes, both reusing the batch operators:
+Common-Crawl-scale deployment ingests pages continuously.  Both streaming
+execution shapes run ONE row-local kernel, ``stream_evidence_pairs``, and
+that kernel runs the batch per-url folds one after another: the mention
+stage's row builder (``mention.mention_rows``, extract fused), the link
+kernel's fold (``linking._link_urls``: ``RowLinker`` L2-L6 against the
+FROZEN catalog), the pandas form of ``materialize.evidence_rows``
+(``materialize.link_evidence``, canon ids from the map collected once per
+stream query) and the pair kernel's fold (``materialize._pair_urls``).
+So a failed page, a repeated url and a link-only key follow the batch
+rules by construction.  Only the plan differs: the batch kernels'
+``linking.url_local`` sorts each partition by url, and Spark rejects a
+sort on a streaming DataFrame ("Sorting is not supported on streaming
+DataFrames"), so the kernel is ``repartition(url)`` -> ``mapInPandas``
+and each task sorts its own rows (a stable pandas sort) once its input
+is drained.  No BM25 runs here: evidence scores never read it.
 
 1. **Exact micro-batch pipeline** (``run_kg_stream``): foreachBatch runs
-   stages 2-5 on every micro-batch as ONE row-local pass, the pairing
-   kernel of shape 2 (``stream_evidence_pairs``: extract, mentions,
-   frozen-catalog links, canon lookup and per-url pairing in one
-   url-clustered ``mapInPandas``), then the salted partial triple
+   the kernel on every micro-batch, then the salted partial triple
    aggregate (operators/materialize.py ``partial_triples_of_pairs``), and
    appends it partitioned by ``batch_id``.  A micro-batch is four Spark
    jobs: the url exchange, the two exchanges of the salted aggregate (one
-   per phase) and the write; the canon map is collected once per stream
-   query, before it starts.  The kernel pairs
-   with ``materialize.doc_pairs``, the batch pair kernel's fold.  The
-   partials merge associatively
+   per phase) and the write.  The partials merge associatively
    (``merge_partial_triples`` — correct because a page's url lives in
    exactly one micro-batch, the same url-disjointness that makes the
    batch incremental chunks exact), so ``merged_triples`` equals the
-   single-shot batch pipeline EXACTLY (pytest-pinned).  No BM25 runs
-   here: evidence scores never read it.  Idempotence: a foreachBatch
-   replay after failure reuses the same ``batch_id``; dynamic partition
-   overwrite rewrites that partition instead of appending duplicates —
-   the same exactly-once mechanism as plans/pipeline.py
-   ``_write_buckets``.
+   single-shot batch pipeline EXACTLY (pytest-pinned).  Idempotence: a
+   foreachBatch replay after failure reuses the same ``batch_id``;
+   dynamic partition overwrite rewrites that partition instead of
+   appending duplicates — the same exactly-once mechanism as
+   plans/pipeline.py ``_write_buckets``.
 
 2. **Live triple view** (``stream_evidence_pairs`` + ``stream_triples_live``):
-   a fully streaming stateful rollup.  Per-url evidence pairing runs
-   row-locally inside one ``mapInPandas`` after one ``repartition(url)``
-   (every page row of a url lands in one task and is merged there before
-   linking and pairing, as the batch link stage merges them), then
-   ``applyInPandasWithState`` keyed by (subj, pred, obj) maintains BOUNDED
-   per-key state: exact distinct-source count, the k lexicographically
-   smallest source urls, the best-scored justification, and the max score
-   — the same merge algebra as the batch salted aggregation, so on a
+   a fully streaming stateful rollup.  ``applyInPandasWithState`` keyed by
+   (subj, pred, obj) maintains BOUNDED per-key state over the kernel's
+   pairs: exact distinct-source count, the k lexicographically smallest
+   source urls, the best-scored justification, and the max score — the
+   same merge algebra as the batch salted aggregation, so on a
    url-disjoint stream the final emitted row per key equals the batch
-   ``materialize_triples(evidence_rows(merged, residual, canon))`` row exactly
-   (pytest-pinned).  The L2-L5 link pass (variant + semantic against the
-   FROZEN catalog — neither needs corpus statistics) runs row-locally
-   inside the same UDF, with the same ``linking.RowLinker`` as the batch
-   link stage: mention scores take max(mention, link) and link-only keys
-   become sentence-free residual evidence.  Only the BM25 annotation
-   (corpus-global df/m/avgdl) is inherently batch-shaped; it never feeds
-   evidence scores, so the live triple set matches batch even on corpora
-   where links change it.  Urls must arrive in exactly one micro-batch;
-   proven violations are surfaced per key as ``replays_detected`` (see
-   stream_triples_live).
-
-   The kernel keeps its own plan rather than the batch kernels'
-   ``linking.url_local``: ``stream_triples_live`` feeds it a streaming
-   DataFrame, and Spark rejects any sort on one ("Sorting is not
-   supported on streaming DataFrames"), so each task merges its urls in
-   a dict instead of streaming them sorted.
+   ``materialize_triples(evidence_rows(merged, residual, canon))`` row
+   exactly (pytest-pinned), links included.  Urls must arrive in exactly
+   one micro-batch; proven violations are surfaced per key as
+   ``replays_detected`` (see stream_triples_live).
 
 Scale notes: state per key is O(MAX_SOURCES) regardless of how many pages
 mention a hub edge — the streaming twin of the batch salted two-phase
@@ -77,12 +67,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog.build import compile_catalog
-from ..config import LANG, PREDICATE_MAP
-from ..functions.extract_text import extract_text
+from ..config import LANG
 from ..operators import materialize
 from ..operators.canonicalize import canonical_map
-from ..operators.doc_core import NerTagger, process_document
-from ..operators.linking import RowLinker
+from ..operators.doc_core import NerTagger
+from ..operators.linking import RowLinker, _link_urls
+from ..operators.mention import MENTION_SCHEMA, mention_rows
 
 TRIPLE_SCHEMA = T.StructType([
     T.StructField("subj", T.StringType(), False),
@@ -122,68 +112,30 @@ def _collect_canon(canon: DataFrame) -> dict:
             for r in canon.collect()}
 
 
-def _evidence(results: dict, residual_links: list[tuple],
-              canon_map: dict) -> Iterator[tuple]:
-    """One document's evidence tuples (label, canon_id, score, sentence)
-    for ``materialize.doc_pairs`` — the row-local twin of
-    ``materialize.evidence_rows``: mention entries, then the sentence-free
-    residual links (label, original_id, score), canonicalized through the
-    collected canon map."""
-    for label, entries in results.items():
-        for ent in entries:
-            # explicit None check == F.coalesce(original_id, value): an
-            # empty-string original_id must NOT fall through to value
-            entity_id = ent.get("original_id")
-            if entity_id is None:
-                entity_id = ent.get("value")
-            yield (label, canon_map.get((label, entity_id), entity_id),
-                   ent.get("NER_score"), ent.get("sentence"))
-    for label, entity_id, score in residual_links:
-        yield label, canon_map.get((label, entity_id), entity_id), score, None
-
-
 def stream_evidence_pairs(pages_stream: DataFrame,
                           layer_map: dict[str, list[dict]],
                           canon_map: dict) -> DataFrame:
-    """pages stream -> (subj, pred, obj, url, subj_label, pair_score,
-    justification), at most one row per (triple, url): extract + mention
-    + frozen-catalog linking + canonicalize + per-url pairing in ONE
-    row-local mapInPandas pass (works identically on a batch DataFrame).
-
-    Exact per url, like the batch link stage: one ``repartition(url)``
-    puts every page row of a url in one task, which merges their
-    ``process_document`` outputs (mentions and residues) before linking
-    and pairing.  So the task holds its partition's per-doc outputs until
-    its input is drained."""
+    """pages stream -> ``materialize.PAIR_SCHEMA`` rows, at most one per
+    (triple, url): the kernel of both shapes, the batch folds in one
+    ``mapInPandas`` (module docstring; works identically on a batch
+    DataFrame).  One ``repartition(url)`` puts every page row of a url in
+    one task, which holds its partition's mention rows until its input is
+    drained, then sorts them by url and folds them url by url.  A page
+    that fails extraction becomes an error row, dropped before linking as
+    the batch link stage drops it."""
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
     linker = RowLinker(layer_map)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        docs: dict[str, tuple[dict, dict]] = {}
-        for pdf in batches:
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    doc = process_document(extract_text(html), catalog,
-                                           tagger)[:2]
-                except Exception:  # reference catch-and-log per doc
-                    continue
-                if url not in docs:
-                    docs[url] = doc
-                    continue
-                for merged, part in zip(docs[url], doc):
-                    for key, values in part.items():
-                        merged.setdefault(key, []).extend(values)
-        rows: list[tuple] = []
-        for url, (results, residue) in docs.items():
-            residuals = linker.apply(results, residue)
-            rows.extend(
-                (subj, pred, obj, url, subj_label, s, j)
-                for (subj, pred, obj), (s, j, subj_label)
-                in materialize.doc_pairs(
-                    _evidence(results, residuals, canon_map),
-                    PREDICATE_MAP).items())
-        yield pd.DataFrame(rows, columns=materialize.PAIR_SCHEMA.names)
+        rows = pd.DataFrame(
+            [row for pdf in batches
+             for row in mention_rows(pdf, catalog, tagger, from_html=True)],
+            columns=MENTION_SCHEMA.names)
+        rows = (rows[rows["rec_type"] != "error"]
+                .sort_values("url", kind="stable").assign(bm25_key=None))
+        yield materialize._pair_urls(materialize.link_evidence(
+            _link_urls(linker, rows), canon_map))
 
     return (pages_stream.filter(F.col("lang") == LANG)
             .select("url", "html").repartition("url")

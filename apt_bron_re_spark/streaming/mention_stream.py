@@ -2,9 +2,10 @@
 
 The reference is a pure batch pipeline (SURVEY.md §1.3 — no streams), but a
 Common-Crawl-scale deployment ingests pages continuously.  This module runs
-the SAME stage-1/2 logic (extract UDF + mention mapInPandas) over a
-``readStream`` source — the plan is identical to the batch plan, which is
-the point of Structured Streaming: one definition, two execution modes.
+the SAME stage-1/2 logic (the mention mapInPandas with extraction fused)
+over a ``readStream`` source — the plan is identical to the batch plan,
+which is the point of Structured Streaming: one definition, two execution
+modes.
 
   * ``stream_pages``      — file-source stream of page parquet drops
   * ``stream_mentions``   — extract + mention detection on the stream
@@ -21,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import LANG
-from ..operators.extract import extract_text_udf
-from ..operators.mention import MENTION_SCHEMA, detect_mentions
+from ..operators.mention import detect_mentions
 
 PAGE_DDL = ("url string, warc_ts timestamp, html binary, text string, "
             "lang string")
@@ -38,16 +38,13 @@ def stream_pages(spark: SparkSession, path: str,
 
 def stream_mentions(pages_stream: DataFrame,
                     layer_map: dict[str, list[dict]]) -> DataFrame:
-    """extract -> mention on a streaming DataFrame (same UDFs as batch).
-    The event time rides through the mention UDF (``event_time_col``) so no
-    stream-stream join is needed downstream."""
-    docs = (
-        pages_stream
-        .filter(F.col("lang") == LANG)
-        .select("url", "warc_ts",
-                extract_text_udf(F.col("html")).alias("text"))
-    )
-    return detect_mentions(docs, layer_map, event_time_col="warc_ts")
+    """extract -> mention on a streaming DataFrame: the batch mention
+    UDF with extraction fused (``from_html``).  The event time rides
+    through the mention UDF (``event_time_col``) so no stream-stream join
+    is needed downstream."""
+    return detect_mentions(pages_stream.filter(F.col("lang") == LANG),
+                           layer_map, event_time_col="warc_ts",
+                           from_html=True)
 
 
 def windowed_mention_counts(pages_stream: DataFrame,

@@ -56,9 +56,6 @@ def one_url_exchange(stage: str, plan: str) -> tuple:
 
 
 def main() -> None:
-    import os
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-
     from apt_bron_re_spark.catalog.synthetic import build_layer_map
     from apt_bron_re_spark.operators import bm25 as bm25_mod
     from apt_bron_re_spark.operators.extract import extract_docs
@@ -67,7 +64,10 @@ def main() -> None:
     from apt_bron_re_spark.session import get_spark
     from apt_bron_re_spark.sources.pages import pages_df
 
-    spark = get_spark("explain_audit", shuffle_partitions=8)
+    # a pinned master: the url-local kernels coalesce to the core count,
+    # so a host-sized session would print a host-dependent plan
+    spark = get_spark("explain_audit", master="local[4]",
+                      shuffle_partitions=8)
     layers = build_layer_map()
     checks: list[tuple[str, str, list[str], list[str]]] = []
 

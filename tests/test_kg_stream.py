@@ -281,6 +281,36 @@ def test_duplicate_urls_within_a_trigger_equal_batch(
     assert all(r["replays_detected"] == 0 for r in final.values())
 
 
+def test_null_html_page_in_a_micro_batch_equals_batch(
+        spark, layer_map, canon_df, tmp_path_factory):
+    """A micro-batch holding a lang='en' page whose html is null
+    completes: the page becomes an error row, dropped before linking as
+    the batch link stage drops it, and the merged triples equal
+    ``Pipeline.run``'s over the same pages — the stream twin of
+    test_pipeline.py::test_null_html_page_is_one_error_row."""
+    from apt_bron_re_spark.plans.pipeline import Pipeline
+
+    pages = pages_df(spark, 20)
+    with_null = pages.unionByName(spark.createDataFrame(
+        [("http://example.invalid/null-html", None, None, None, "en")],
+        pages.schema))
+    path = str(tmp_path_factory.mktemp("kg_pages_null_html") / "p")
+    with_null.coalesce(1).write.parquet(path)
+
+    want = _canon_rows(Pipeline(
+        spark, layer_map, str(tmp_path_factory.mktemp("kg_null_batch")),
+        n_buckets=8, fuse_extract=True).run(with_null, resume=False))
+
+    out = str(tmp_path_factory.mktemp("kg_null_out"))
+    q = run_kg_stream(_stream_pages(spark, path), layer_map, None, None,
+                      canon_df, out,
+                      str(tmp_path_factory.mktemp("kg_null_ckpt")),
+                      available_now=True)
+    q.awaitTermination(600)
+    assert spark.read.parquet(out).select("batch_id").distinct().count() == 1
+    assert _canon_rows(merged_triples(spark, out)) == want
+
+
 def test_row_linker_score_is_max_over_candidates(spark, layer_map):
     """RowLinker must report max(link_ner_score) over ALL of a key's
     candidates — mirroring batch best_links' SEPARATE F.max aggregate —
@@ -305,8 +335,9 @@ def test_row_linker_score_is_max_over_candidates(spark, layer_map):
         for r in linking._residuals(best, empty_keys).collect()}
 
     linker = RowLinker(layer_map)
-    stream_residuals = {(label, oid): score
-                       for (label, oid, score) in linker.apply({}, residue)}
+    _annotated, residual = linker.merge(residue, [])
+    stream_residuals = {(label, winner[7]): max_s
+                        for (label, winner, max_s) in residual}
     assert stream_residuals == batch_residuals
 
     # the planted shape must actually exercise the divergence: some key's
@@ -319,10 +350,9 @@ def test_row_linker_score_is_max_over_candidates(spark, layer_map):
     # batch _annotate rule
     label, oid_l = diverging[0]
     winner, max_s = linker._links_for(residue)[(label, oid_l)]
-    results = {label: [{"original_id": winner[7], "NER_score": 0.1,
-                        "sentence": "s"}]}
-    linker.apply(results, residue)
-    assert results[label][0]["NER_score"] == max_s
+    [(score, _winner)], _residual = linker.merge(
+        residue, [(label, winner[7], 0.1)])
+    assert score == max_s
     assert max_s > winner[1]
 
 
@@ -330,17 +360,18 @@ def test_doc_pairs_pure_function(layer_map):
     """doc_pairs folds per-url maxima associatively: planted two-entry
     case with a tie on score resolved by sentence order (Spark struct-max
     tie-break)."""
-    from apt_bron_re_spark.operators.materialize import doc_pairs
-    from apt_bron_re_spark.streaming.kg_stream import _evidence
-    results = {
-        "group": [
-            {"original_id": "G1", "NER_score": 0.5, "sentence": "abc"},
-            {"original_id": "G1", "NER_score": 0.5, "sentence": "abd"},
-        ],
-        "technique": [
-            {"original_id": "T1", "NER_score": 0.9, "sentence": "t"},
-        ],
-    }
-    pairs = doc_pairs(_evidence(results, [], {}),
+    import pandas as pd
+
+    from apt_bron_re_spark.operators.materialize import (doc_pairs,
+                                                         link_evidence)
+    links = pd.DataFrame(
+        [("u", "group", "G1", None, 0.5, "abc"),
+         ("u", "group", "G1", None, 0.5, "abd"),
+         ("u", "technique", "T1", None, 0.9, "t")],
+        columns=["url", "category", "original_id", "value", "ner_score",
+                 "sentence"])
+    ev = link_evidence(links, {})
+    pairs = doc_pairs(zip(ev["label"], ev["canon_id"], ev["score"],
+                          ev["sentence"]),
                       {("group", "technique"): "uses"})
     assert pairs == {("G1", "uses", "T1"): (0.5, "abd", "group")}

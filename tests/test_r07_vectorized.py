@@ -78,6 +78,29 @@ def test_cosine_cross_pairs_zero_vector_nan(spark):
     assert [r[:2] for r in got] == [("2", "10")]   # finite pair survives
 
 
+def test_cosine_cross_pairs_keeps_each_sides_id_type(spark):
+    """Each id column keeps its own side's type: bigint a-ids against
+    string b-ids come back as (bigint, string), equal to the crossJoin
+    fold."""
+    from apt_bron_re_spark.operators.similarity import cosine_cross_pairs
+    a = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "a_id bigint, a_emb array<float>")
+    b = spark.createDataFrame(
+        [("x", [1.0, 0.1]), ("y", [0.1, 1.0])],
+        "b_id string, b_emb array<float>")
+    old = (a.crossJoin(F.broadcast(b))
+           .select("a_id", "b_id",
+                   F.round(_cosine(F.col("a_emb"), F.col("b_emb")), 3)
+                   .alias("cos_sim"))
+           .filter(F.col("cos_sim") >= 0.15))
+    new = cosine_cross_pairs(a, b, threshold=0.15, round_dp=3)
+    assert [f.dataType.simpleString() for f in new.schema.fields[:2]] == [
+        "bigint", "string"]
+    assert _rows(new) == _rows(old)
+    assert len(_rows(new)) == 2         # non-vacuous
+
+
 def test_ivf_assign_matches_struct_max(spark):
     """Vectorized ivf_assign == the crossJoin + max(struct(ip, -c_id))
     aggregation, including the smallest-c_id tie-break."""
