@@ -244,3 +244,11 @@ def canonical_map(spark, layer_map: dict[str, list[dict]]) -> DataFrame:
         ids.join(canon, ["component", "label"])
         .select("label", "original_id", "canon_id")
     )
+
+
+def collect_canon(canon: DataFrame) -> dict:
+    """{(label, original_id): canon_id}: a canonical map table
+    (``canonical_map``'s rows, catalog-sized) collected to the driver, for
+    a kernel closure."""
+    return {(r["label"], r["original_id"]): r["canon_id"]
+            for r in canon.collect()}

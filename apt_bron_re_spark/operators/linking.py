@@ -18,12 +18,13 @@ Spark mapping: the pipeline runs L2-L6 as ONE row-local kernel,
 ``url_local``, the url-clustered plan it shares with materialize's pair
 kernel: hash-partitioned by url once, coalesced to at most one partition
 per core, sorted by url inside each partition and streamed url by url
-through a single ``mapInPandas``.  There ``RowLinker`` builds the variant
-and semantic links of the url's residues against the frozen catalog and
-picks the best link per key, then the url's mention rows are annotated
-and its residual links emitted.  The kernel also emits each scored row's
-BM25 inputs; the score itself stays a Spark expression
-(``bm25.score_frozen``).
+through a single ``mapInPandas`` (``fold_urls``).  There ``RowLinker``
+builds the variant and semantic links of the url's residues against the
+frozen catalog and picks the best link per key, then the url's mention
+rows are annotated and its residual links emitted.  The kernel also emits
+each scored row's BM25 inputs; the score itself stays a Spark expression
+(``bm25.score_frozen``).  Its output stays clustered and sorted by url,
+so the pair kernel can fold it in place.
 
 The DataFrame operators below are the column-wise form of the same rules,
 and the differential tests pin the kernel to them: L2/L3 are ONE
@@ -510,32 +511,39 @@ def complete_urls(batches: Iterator[pd.DataFrame]
         yield carry
 
 
+def fold_urls(rows: DataFrame,
+              fold: Callable[[pd.DataFrame], pd.DataFrame],
+              schema: T.StructType) -> DataFrame:
+    """``fold`` over frames of complete urls, returning ``schema`` rows:
+    ONE narrow ``mapInPandas`` that streams each partition url by url
+    (``complete_urls``).  ``rows`` must already hold every row of a url in
+    one partition, sorted by url, as ``url_local`` and the link kernel's
+    own output (``link_rows``) do."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in complete_urls(batches):
+            yield fold(pdf)
+
+    return rows.mapInPandas(run, schema)
+
+
 def url_local(rows: DataFrame, partitions: int | None,
               fold: Callable[[pd.DataFrame], pd.DataFrame],
               schema: T.StructType) -> DataFrame:
     """The url-clustered plan of the batch kernels (``link_rows``,
-    ``materialize.evidence_pairs``): ``fold`` over frames of complete
-    urls, sorted by url, returning ``schema`` rows.
+    ``materialize.link_pairs`` over tables read back): ``fold_urls`` over
+    ``rows`` clustered and sorted by url.
 
     ``rows`` is hash-partitioned by url into ``partitions`` partitions
     (the session's shuffle partitions when None) — the kernel's only
     exchange, which puts every row of a url in one partition.  The
     partitions are coalesced to at most one per core: every Python task
     pays a fixed start-up cost, and coalescing keeps each hash partition,
-    hence each url, inside one task.  Each partition is sorted by url and
-    streamed through ONE ``mapInPandas`` url by url
-    (``complete_urls``)."""
+    hence each url, inside one task.  Each partition is sorted by url."""
     cores = rows.sparkSession.sparkContext.defaultParallelism
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in complete_urls(batches):
-            yield fold(pdf)
-
     by_url = (rows.repartition(partitions, F.col("url")) if partitions
               else rows.repartition(F.col("url")))
-    return (by_url.coalesce(cores)
-            .sortWithinPartitions("url")
-            .mapInPandas(run, schema))
+    return fold_urls(by_url.coalesce(cores).sortWithinPartitions("url"),
+                     fold, schema)
 
 
 def _link_urls(linker: RowLinker, pdf: pd.DataFrame) -> pd.DataFrame:

@@ -5,29 +5,32 @@ Edge shape per the reference's output spec (README.md:47-58):
 (config.PREDICATE_MAP) and a confidence ``score``.
 
 Pipeline:
-  1. per-document *evidence* rows (``evidence_rows``): one row per mention
-     or residual link with (url, label, canon_id, score, sentence);
-  2. the url-local pair kernel (``evidence_pairs``): under
-     ``linking.url_local`` the evidence is hash-partitioned by url once,
-     coalesced to at most one partition per core, sorted by url and
-     streamed url by url through ONE ``mapInPandas``, where ``doc_pairs``
-     folds each url's evidence into co-occurrence pairs restricted to the
-     typed label pairs (no quadratic all-pairs blowup) — at most one pair
-     row per (triple, url);
-  3. the salted two-phase triple aggregation, map-side combined:
+  1. the url-local pair kernel (``link_pairs``): over the link kernel's
+     rows (``LINK_COLS``: mention rows and residual links, clustered by
+     url), ``link_evidence`` turns each url's rows into evidence (url,
+     label, canon_id, score, sentence) against the collected canonical
+     map, and ``doc_pairs`` folds that evidence into co-occurrence pairs
+     restricted to the typed label pairs (no quadratic all-pairs blowup)
+     — at most one pair row per (triple, url).  The fold runs in ONE
+     ``mapInPandas``; only its plan varies.  A fresh ``Pipeline.run``
+     folds the link kernel's cached rows in place, which are already
+     clustered and sorted by url (``linking.fold_urls``, no exchange).
+     Tables read back (a resumed run, chunks) are hash-partitioned by url
+     once under ``linking.url_local``;
+  2. the salted two-phase triple aggregation, map-side combined:
      ``_per_salt`` (one partial row per triple and url salt), then
      ``_merge_parts`` (one merged row per triple), then ``_finish``.
 
-A *partial* (``partial_triples``) is a merged row per triple of one chunk
-or micro-batch, so ``merge_partial_triples`` is finish . merge.  Batch,
-chunked and streaming (streaming/kg_stream.py) runs pair with
-``_pair_urls`` and merge with ``_merge_parts``: the rules exist once.  The
-evidence rule has two forms: ``evidence_rows`` over Spark tables, and
-``link_evidence`` over the link kernel's pandas rows inside the stream
-kernel.
+A *partial* (``partial_triples_of_pairs``) is a merged row per triple of
+one chunk or micro-batch, so ``merge_partial_triples`` is finish . merge.
+Batch, chunked and streaming (streaming/kg_stream.py) runs pair with
+``link_evidence`` and ``_pair_urls`` and merge with ``_merge_parts``: the
+rules exist once.  ``evidence_rows`` is the evidence rule as a Spark plan;
+no pipeline path calls it, and ``materialize_triples`` and
+``partial_triples`` take its output.
 
-Scale notes: the evidence table shuffles exactly once, by url, and a task
-holds one url's evidence at a time; the hub-entity skew shows up in the
+Scale notes: the pair kernel holds one url's rows at a time, and the link
+rows shuffle at most once, by url; the hub-entity skew shows up in the
 final groupBy, which is algebraic (set-union/max) and salted.  The output
 table should be partitioned by ``pred`` (S10).
 
@@ -56,12 +59,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PREDICATE_MAP
-from .linking import url_local
+from .linking import fold_urls, url_local
 
 # Source urls kept per triple (the k smallest) and salts of the two-phase
 # triple aggregation (_per_salt).
 MAX_SOURCES = 64
 N_SALTS = 16
+
+# The link kernel's columns the evidence rule reads (a residual link's
+# value and sentence are null).
+LINK_COLS = ["url", "category", "original_id", "value", "ner_score",
+             "sentence"]
 
 # One evidence pair per (triple, url): the pair kernel's output.  Every
 # column is nullable, as in ``evidence_rows``.
@@ -81,7 +89,8 @@ def evidence_rows(mentions_linked: DataFrame, residual_links: DataFrame,
     """Pre-aggregation evidence: one row per mention / residual link with
     (url, label, canon_id, score, sentence).  CVE mentions (value, no
     original_id) use the CVE id; the canonical map is broadcast
-    (catalog-sized)."""
+    (catalog-sized).  The Spark form of ``link_evidence``, which the
+    pipeline runs instead."""
     m = mentions_linked.select(
         "url",
         F.col("category").alias("label"),
@@ -107,12 +116,12 @@ def evidence_rows(mentions_linked: DataFrame, residual_links: DataFrame,
 
 
 def link_evidence(links: pd.DataFrame, canon_map: dict) -> pd.DataFrame:
-    """``evidence_rows`` in pandas, over the link kernel's rows
-    (``linking.LINK_ROWS_SCHEMA``; a residual link's value is null):
-    (url, label, canon_id, score, sentence) in row order, the entity
-    coalesce(original_id, value) looked up in the collected canon map
-    {(label, original_id): canon_id}.  The streaming kernel's evidence
-    step."""
+    """The evidence rule over link rows (``LINK_COLS``; a residual link's
+    value is null): (url, label, canon_id, score, sentence) in row order,
+    the entity coalesce(original_id, value) looked up in the collected
+    canon map {(label, original_id): canon_id} (``collect_canon``), an
+    entity with no entry its own canon_id.  The evidence step of the pair
+    kernel, batch and stream."""
     labels = links["category"].tolist()
     # coalesce: an empty-string original_id must NOT fall through to value
     entities = [oid if oid is not None else value for oid, value
@@ -189,14 +198,43 @@ def _pair_urls(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=PAIR_SCHEMA.names)
 
 
-def evidence_pairs(ev: DataFrame, partitions: int | None) -> DataFrame:
-    """``evidence_rows`` output -> ``PAIR_SCHEMA`` rows, at most one per
-    (triple, url): the url-local pair kernel, ``doc_pairs`` folded url by
-    url under ``linking.url_local``.  The url exchange is the stage's only
-    one before the triple aggregation."""
-    return url_local(ev.select("url", "label", "canon_id", "score",
-                               "sentence"),
-                     partitions, _pair_urls, PAIR_SCHEMA)
+def link_pairs(links: DataFrame, canon_map: dict,
+               partitions: int | None = None,
+               clustered: bool = False) -> DataFrame:
+    """Link rows (``LINK_COLS``) -> ``PAIR_SCHEMA`` rows, at most one per
+    (triple, url): the pair kernel, ``link_evidence`` then ``doc_pairs``
+    folded url by url.  ``clustered`` rows (the link kernel's own output,
+    clustered and sorted by url in each partition) fold in place with no
+    exchange (``linking.fold_urls``); other rows are hash-partitioned by
+    url into ``partitions`` under ``linking.url_local``, the stage's only
+    exchange before the triple aggregation."""
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _pair_urls(link_evidence(pdf, canon_map))
+
+    links = links.select(*LINK_COLS)
+    if clustered:
+        return fold_urls(links, fold, PAIR_SCHEMA)
+    return url_local(links, partitions, fold, PAIR_SCHEMA)
+
+
+def links_of_tables(linked: DataFrame, residual: DataFrame) -> DataFrame:
+    """The link stage's two tables (``linked``, ``links_residual``) read
+    back as link rows (``LINK_COLS``)."""
+    none = F.lit(None).cast("string")
+    return linked.select(*LINK_COLS).unionByName(residual.select(
+        "url", "category", "original_id", none.alias("value"), "ner_score",
+        none.alias("sentence")))
+
+
+def _pairs_of_evidence(ev: DataFrame, partitions: int | None) -> DataFrame:
+    """``evidence_rows`` output -> ``PAIR_SCHEMA`` rows: evidence is link
+    rows whose entity is already canonical, so an empty canon map keeps
+    each canon_id."""
+    none = F.lit(None).cast("string")
+    return link_pairs(ev.select(
+        "url", F.col("label").alias("category"),
+        F.col("canon_id").alias("original_id"), none.alias("value"),
+        F.col("score").alias("ner_score"), "sentence"), {}, partitions)
 
 
 def _per_salt(pairs: DataFrame, max_sources: int,
@@ -259,24 +297,31 @@ def _finish(merged: DataFrame) -> DataFrame:
         F.round("part_score", 4).alias("score"))
 
 
+def triples_of_pairs(pairs: DataFrame, max_sources: int = MAX_SOURCES,
+                     n_salts: int = N_SALTS) -> DataFrame:
+    """Evidence pairs (``PAIR_SCHEMA``) -> triples(subj, pred, obj,
+    sources, n_sources, justification, score): the salted two-phase
+    aggregation."""
+    return _finish(_merge_parts(_per_salt(pairs, max_sources, n_salts),
+                                max_sources))
+
+
 def materialize_triples(ev: DataFrame,
                         max_sources: int = MAX_SOURCES,
                         n_salts: int = N_SALTS,
                         partitions: int | None = None) -> DataFrame:
-    """evidence -> triples(subj, pred, obj, sources, n_sources,
-    justification, score).  ``ev`` is ``evidence_rows`` output (any
+    """evidence -> triples.  ``ev`` is ``evidence_rows`` output (any
     per-(url, label, canon_id) pre-aggregation of it gives the same
     triples); ``partitions`` is the url exchange's partition count."""
-    return _finish(_merge_parts(
-        _per_salt(evidence_pairs(ev, partitions), max_sources, n_salts),
-        max_sources))
+    return triples_of_pairs(_pairs_of_evidence(ev, partitions), max_sources,
+                            n_salts)
 
 
 def partial_triples(ev: DataFrame,
                     partitions: int | None = None) -> DataFrame:
-    """Chunk-local partial triple aggregate for merge-on-append incremental
-    materialization: ``partial_triples_of_pairs`` over the pair kernel."""
-    return partial_triples_of_pairs(evidence_pairs(ev, partitions))
+    """Chunk-local partial triple aggregate of ``evidence_rows`` output:
+    ``partial_triples_of_pairs`` over the pair kernel."""
+    return partial_triples_of_pairs(_pairs_of_evidence(ev, partitions))
 
 
 def partial_triples_of_pairs(pairs: DataFrame) -> DataFrame:
@@ -289,5 +334,5 @@ def partial_triples_of_pairs(pairs: DataFrame) -> DataFrame:
 
 def merge_partial_triples(partials: DataFrame) -> DataFrame:
     """Merge chunk-partial aggregates into final triples — identical output
-    to a single-shot materialize_triples over the full evidence table."""
+    to a single-shot ``triples_of_pairs`` over every chunk's pairs."""
     return _finish(_merge_parts(partials, MAX_SOURCES))

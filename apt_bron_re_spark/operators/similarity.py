@@ -203,12 +203,17 @@ def lsh_signatures(df: DataFrame, dim: int,
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def sig(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        q = np.floor(mat * QUANT + 0.5)            # exact integer grid
-        bits = (q @ flat.T) > 0                    # B x (tables*planes)
-        bits = bits.reshape(len(mat), len(planes), -1)
-        buckets = (bits @ weights).astype(np.int32)
-        return pd.Series(list(buckets))
+        # a null vector has null buckets; an empty batch stacks nothing
+        ok = vecs.notna().to_numpy()
+        out = pd.Series([None] * len(vecs), dtype=object)
+        if ok.any():
+            mat = np.stack(vecs.to_numpy()[ok]).astype(np.float64)
+            q = np.floor(mat * QUANT + 0.5)        # exact integer grid
+            bits = (q @ flat.T) > 0                # B x (tables*planes)
+            bits = bits.reshape(len(mat), len(planes), -1)
+            buckets = (bits @ weights).astype(np.int32)
+            out[ok] = pd.Series(list(buckets), index=out.index[ok])
+        return out
 
     return df.withColumn("buckets", sig(F.col(vec_col)))
 
@@ -434,10 +439,15 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
     @F.pandas_udf(T.LongType())
     def assign(vecs: pd.Series) -> pd.Series:
         c_ids_, C_ = bc.value
-        M = np.stack(vecs.to_numpy()).astype(np.float64)
-        q = np.floor(M * QUANT + 0.5)          # the exact integer grid
-        ip = q @ C_.T                          # integer-exact in float64
-        return pd.Series(c_ids_[np.argmax(ip, axis=1)])
+        # a null vector has a null c_id; an empty batch stacks nothing
+        ok = vecs.notna().to_numpy()
+        out = pd.Series(pd.NA, index=range(len(vecs)), dtype="Int64")
+        if ok.any():
+            M = np.stack(vecs.to_numpy()[ok]).astype(np.float64)
+            q = np.floor(M * QUANT + 0.5)      # the exact integer grid
+            ip = q @ C_.T                      # integer-exact in float64
+            out[ok] = c_ids_[np.argmax(ip, axis=1)]
+        return out
 
     return vectors.select(F.col(id_col),
                           assign(F.col(vec_col)).alias("c_id"))

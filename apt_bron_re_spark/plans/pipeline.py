@@ -37,17 +37,23 @@ for ``run`` (the whole table, BM25 globals inline) and for
 ``run_link_incremental`` (one call per bucket chunk).  The kernel scores
 against the global BM25 (stats, df) it is handed, so the chunked wrapper
 freezes those once from the whole corpus; per-chunk stats would give
-wrong idf.  (The streaming micro-batch step,
-``streaming.kg_stream.kg_batch_step``, runs the same mention, link and
-pair folds, with the evidence rule's pandas form between them, inside ONE
-row-local pass; only its plan differs, unsorted because Spark rejects a
-sort on a stream.)
-Materialize is likewise one url-local kernel,
-``operators.materialize.evidence_pairs``, under ``run``
-(``materialize_triples``) and ``run_materialize_incremental``
-(``partial_triples`` per chunk).  The ``run_*_incremental`` stages share
-one chunk loop (``_run_chunks``): exactly-once per-partition writes plus
-per-bucket lineage, counted by each chunk's write.
+wrong idf.
+Materialize is one pair kernel over link rows,
+``operators.materialize.link_pairs`` (evidence against the canon map the
+canon stage collects, then the per-url pairing), and only its plan
+varies.  When ``run`` has just run the link stage, the kernel rows stay
+cached until the triples write commits, and materialize folds them in
+place: they are already clustered and sorted by url, so the stage reads
+no table back, joins nothing and adds no url exchange.  When the link
+stage was skipped (a resumed run), and per chunk in
+``run_materialize_incremental``, it reads ``linked`` and
+``links_residual`` back under one url exchange (``linking.url_local``).
+(The streaming micro-batch step, ``streaming.kg_stream.kg_batch_step``,
+runs the same mention, link and pair folds inside ONE row-local pass;
+only its plan differs, unsorted because Spark rejects a sort on a
+stream.)  The ``run_*_incremental`` stages share one chunk loop
+(``_run_chunks``): exactly-once per-partition writes plus per-bucket
+lineage, counted by each chunk's write.
 """
 
 from __future__ import annotations
@@ -56,7 +62,7 @@ import json
 import time
 import warnings
 from concurrent.futures import Future, ThreadPoolExecutor
-from contextlib import contextmanager, nullcontext
+from contextlib import ExitStack, contextmanager, nullcontext
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -176,13 +182,14 @@ class Pipeline:
             self.base.mkdir(parents=True, exist_ok=True)
             marker.write_text(json.dumps(want))
 
-    def _canon_stage(self, resume: bool = True) -> DataFrame:
-        """Stage 4: the catalog-derived canonical map."""
+    def _canon_stage(self, resume: bool = True) -> dict:
+        """Stage 4: the catalog-derived canonical map, written and then
+        collected from its table (``canonicalize.collect_canon``)."""
         self._run_stage(
             "canonicalize", self._fps()[3],
             lambda: nullcontext({"canon": canonicalize.canonical_map(
                 self.spark, self.layer_map)}), resume=resume)
-        return self._read("canon")
+        return canonicalize.collect_canon(self._read("canon"))
 
     # -- helpers ----------------------------------------------------------
     def _path(self, name: str) -> str:
@@ -229,7 +236,13 @@ class Pipeline:
             # (materialize stage 31 s <-> 132 s across identical reps);
             # hashing the ~11 preds into n_buckets partitions gives ~8-10
             # stable write tasks (measured: materialize 66.8 -> 36.2 s at
-            # 256k pages, local[4]).
+            # 256k pages, local[4]).  Writing from the triple
+            # aggregate's own partitioning instead was measured at 10,000
+            # pages (local[4], 8 shuffle partitions, n_buckets=32): AQE
+            # coalesced the write to 4 tasks, each spraying every pred (4
+            # files per pred dir), against 9 writing tasks (one file per
+            # pred dir) here; the stage was 2.33 s vs 2.66 s (median of
+            # 3), but the write lost task parallelism, so this stays.
             df = df.repartition(self.n_buckets, *[F.col(c) for c in partition_by])
         df, counts = _observed(df)
         w = df.write.mode("overwrite")
@@ -286,14 +299,18 @@ class Pipeline:
     @contextmanager
     def _link_tables(self, stage_rows: DataFrame, stats: DataFrame,
                      df_: DataFrame):
-        """The link stage's bucketed ``{linked, links_residual}``:
+        """-> (tables, rows): the link stage's bucketed ``{linked,
+        links_residual}`` and the kernel output ``rows`` both read:
         ``linking.link_stage`` over mention stage rows, scored against the
-        BM25 globals ``(stats, df_)``.  The kernel output both tables read
-        is persisted while the context is open (the Python kernel runs
-        once) and unpersisted on exit, a failed write included.  The kernel
-        coalesces its url hash partitions without a shuffle, so each
-        pbucket (== the HashPartitioning partition id, _bucketed) lies in
-        one task and neither write repartitions.  ``run`` passes globals
+        BM25 globals ``(stats, df_)``.  ``rows`` is persisted while the
+        context is open (the Python kernel runs once) and unpersisted when
+        it exits, a failed write included.  ``run`` keeps the context open
+        until the triples write has committed, so materialize folds the
+        cached rows; a ``run_link_incremental`` chunk exits it once its
+        two writes commit.  The kernel coalesces its url hash partitions
+        without a shuffle, so each pbucket (== the HashPartitioning
+        partition id, _bucketed) lies in one task and neither write
+        repartitions.  ``run`` passes globals
         computed inline from the un-repartitioned mention table (narrow
         aggregations; df is catalog-bounded, so it broadcasts);
         ``run_link_incremental`` passes frozen parquet copies, which
@@ -302,10 +319,22 @@ class Pipeline:
             stage_rows, stats, df_, self.layer_map, self.n_buckets)
         rows.persist()
         try:
-            yield {"linked": self._bucketed(merged),
-                   "links_residual": self._bucketed(residual)}
+            yield ({"linked": self._bucketed(merged),
+                    "links_residual": self._bucketed(residual)}, rows)
         finally:
             rows.unpersist()
+
+    def _materialize(self, links: DataFrame, canon_map: dict,
+                     clustered: bool, resume: bool = True) -> None:
+        """Stage 5: the triples of link rows (``materialize.link_pairs``:
+        ``clustered`` for the link kernel's cached rows, else one url
+        exchange), written partitioned by pred."""
+        self._run_stage(
+            "materialize", self._fps()[4],
+            lambda: nullcontext({"triples": materialize.triples_of_pairs(
+                materialize.link_pairs(links, canon_map, self.n_buckets,
+                                       clustered))}),
+            partition_by=["pred"], resume=resume)
 
     def _mentions(self, pages: DataFrame) -> DataFrame:
         """The fused extract+mention plan: ``pages`` (already filtered to
@@ -409,7 +438,7 @@ class Pipeline:
 
     def _run_body(self, pages: DataFrame, resume: bool,
                   canon: Future) -> DataFrame:
-        fp0, fp1, fp2, _fp3, fp4 = self._fps()
+        fp0, fp1, fp2, _fp3, _fp4 = self._fps()
         if self.fuse_extract:
             def mentions():
                 return nullcontext({"mentions": self._mentions(
@@ -427,20 +456,23 @@ class Pipeline:
         self._run_stage("mention", fp1, mentions, resume=resume)
         stage2 = self._read("mentions")
 
-        self._run_stage(
-            "link", fp2,
-            lambda: self._link_tables(stage2, *_bm25_globals(stage2)),
-            partition_by=["pbucket"], resume=resume)
-        linked = self._read("linked")
-        residual = self._read("links_residual")
-
-        canon_df = canon.result()  # re-raises the canon stage's error
-        self._run_stage(
-            "materialize", fp4,
-            lambda: nullcontext({"triples": materialize.materialize_triples(
-                materialize.evidence_rows(linked, residual, canon_df),
-                partitions=self.n_buckets)}),
-            partition_by=["pred"], resume=resume)
+        with ExitStack() as cache:
+            if resume and self.log.is_complete("link", fp2):
+                # link completed in an earlier run: its tables are read
+                # back and exchanged by url once
+                links = materialize.links_of_tables(
+                    self._read("linked"), self._read("links_residual"))
+                clustered = False
+            else:
+                # the kernel rows stay cached until the triples write
+                # commits: materialize folds them in place
+                tables, links = cache.enter_context(self._link_tables(
+                    stage2, *_bm25_globals(stage2)))
+                self._run_stage("link", fp2, lambda: nullcontext(tables),
+                                partition_by=["pbucket"], resume=False)
+                clustered = True
+            # canon.result() re-raises the canon stage's error
+            self._materialize(links, canon.result(), clustered, resume)
         return self._read("triples")
 
     def triples(self) -> DataFrame:
@@ -532,32 +564,37 @@ class Pipeline:
         self._run_stage("link_aux", fingerprint(fp2, "link_aux"), frozen)
         stats = self._read("link_aux_stats")
         df_ = self._read("link_aux_df")
-        return self._run_chunks(
-            "link", fp2, n_chunks, max_chunks,
-            lambda chunk: self._link_tables(
-                stage2.filter(F.col("pbucket").isin(chunk)), stats, df_))
+
+        @contextmanager
+        def build(chunk):
+            chunk_rows = stage2.filter(F.col("pbucket").isin(chunk))
+            with self._link_tables(chunk_rows, stats, df_) as (tables, _):
+                yield tables
+
+        return self._run_chunks("link", fp2, n_chunks, max_chunks, build)
 
     def run_materialize_incremental(self, n_chunks: int = 4,
                                     max_chunks: int | None = None) -> bool:
         """Bucket-chunked materialize with merge-on-append: each chunk
-        writes an exact PARTIAL triple aggregate (k-smallest sources,
-        distinct-source count, best justification, max score — all
-        mergeable because chunks partition the corpus by url), and the
+        pairs its read-back link rows (``materialize.link_pairs``, one url
+        exchange) and writes an exact PARTIAL triple aggregate (k-smallest
+        sources, distinct-source count, best justification, max score —
+        all mergeable because chunks partition the corpus by url), and the
         final merge reduces the partials into the triples table.  Identical
-        output to single-shot materialize_triples (tested)."""
+        output to a single-shot ``run`` (tested)."""
         _fp0, _fp1, _fp2, _fp3, fp4 = self._fps()
         if self.log.is_complete("materialize", fp4):
             return True
         linked = self._read("linked")
         residual = self._read("links_residual")
-        canon = self._canon_stage(resume=True)
+        canon_map = self._canon_stage(resume=True)
 
         def build(chunk):
-            ev = materialize.evidence_rows(
+            links = materialize.links_of_tables(
                 linked.filter(F.col("pbucket").isin(chunk)),
-                residual.filter(F.col("pbucket").isin(chunk)),
-                canon)
-            part = (materialize.partial_triples(ev, partitions=self.n_buckets)
+                residual.filter(F.col("pbucket").isin(chunk)))
+            part = (materialize.partial_triples_of_pairs(
+                materialize.link_pairs(links, canon_map, self.n_buckets))
                     .withColumn("chunk_key", F.lit(min(chunk))))
             return nullcontext({"triples_partial": part})
 

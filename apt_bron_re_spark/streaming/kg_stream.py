@@ -6,9 +6,9 @@ execution shapes run ONE row-local kernel, ``stream_evidence_pairs``, and
 that kernel runs the batch per-url folds one after another: the mention
 stage's row builder (``mention.mention_rows``, extract fused), the link
 kernel's fold (``linking._link_urls``: ``RowLinker`` L2-L6 against the
-FROZEN catalog), the pandas form of ``materialize.evidence_rows``
-(``materialize.link_evidence``, canon ids from the map collected once per
-stream query) and the pair kernel's fold (``materialize._pair_urls``).
+FROZEN catalog), the evidence rule (``materialize.link_evidence``, canon
+ids from the map collected once per stream query) and the pair kernel's
+fold (``materialize._pair_urls``).
 So a failed page, a repeated url and a link-only key follow the batch
 rules by construction.  Only the plan differs: the batch kernels'
 ``linking.url_local`` sorts each partition by url, and Spark rejects a
@@ -39,9 +39,8 @@ is drained.  No BM25 runs here: evidence scores never read it.
    source urls, the best-scored justification, and the max score — the
    same merge algebra as the batch salted aggregation, so on a
    url-disjoint stream the final emitted row per key equals the batch
-   ``materialize_triples(evidence_rows(merged, residual, canon))`` row
-   exactly (pytest-pinned), links included.  Urls must arrive in exactly
-   one micro-batch; proven violations are surfaced per key as
+   triple row exactly (pytest-pinned), links included.  Urls must arrive
+   in exactly one micro-batch; proven violations are surfaced per key as
    ``replays_detected`` (see stream_triples_live).
 
 Scale notes: state per key is O(MAX_SOURCES) regardless of how many pages
@@ -69,7 +68,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..catalog.build import compile_catalog
 from ..config import LANG
 from ..operators import materialize
-from ..operators.canonicalize import canonical_map
+from ..operators.canonicalize import canonical_map, collect_canon
 from ..operators.doc_core import NerTagger
 from ..operators.linking import RowLinker, _link_urls
 from ..operators.mention import MENTION_SCHEMA, mention_rows
@@ -104,12 +103,7 @@ def canon_as_dict(spark: SparkSession,
                   layer_map: dict[str, list[dict]]) -> dict:
     """{(label, original_id): canon_id} — the catalog-sized canonical map
     (stage 4 output), collected once for closure broadcast."""
-    return _collect_canon(canonical_map(spark, layer_map))
-
-
-def _collect_canon(canon: DataFrame) -> dict:
-    return {(r["label"], r["original_id"]): r["canon_id"]
-            for r in canon.collect()}
+    return collect_canon(canonical_map(spark, layer_map))
 
 
 def stream_evidence_pairs(pages_stream: DataFrame,
@@ -251,7 +245,7 @@ def run_kg_stream(pages_stream: DataFrame,
     computes no BM25, since evidence scores never read it.  They stay in
     the signature for callers that pass them by position.  The ``canon``
     table is collected once here, not once per micro-batch."""
-    canon_map = _collect_canon(canon)
+    canon_map = collect_canon(canon)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         kg_batch_step(batch_df, batch_id, layer_map, canon_map, out_path)

@@ -55,6 +55,25 @@ def one_url_exchange(stage: str, plan: str) -> tuple:
     )
 
 
+def fold_over_cache(stage: str, plan: str) -> tuple:
+    """A derived check: in ``plan``'s operator tree the pair kernel's
+    ``MapInPandas`` reads an ``InMemoryTableScan`` whose cached plan is
+    the link kernel's ``MapInPandas``, with no operator, hence no
+    ``Exchange``, between them."""
+    ok = re.search(
+        r"MapInPandas \(\d+\)\n\s*\+- InMemoryTableScan \(\d+\)\n"
+        r"\s*\+- InMemoryRelation \(\d+\)\n"
+        r"\s*\+- AdaptiveSparkPlan \(\d+\)\n\s*\+- MapInPandas", plan)
+    return (
+        f"{stage}: the pair kernel reads the cached link kernel rows",
+        "(derived from the plan above: MapInPandas <- InMemoryTableScan <- "
+        "InMemoryRelation <- MapInPandas, no Exchange between)"
+        + (" FOLD_OVER_CACHE_OK" if ok else ""),
+        ["FOLD_OVER_CACHE_OK"],
+        [],
+    )
+
+
 def main() -> None:
     from apt_bron_re_spark.catalog.synthetic import build_layer_map
     from apt_bron_re_spark.operators import bm25 as bm25_mod
@@ -231,10 +250,10 @@ def main() -> None:
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ))
 
-    # 14. evidence pairing: one url exchange feeding the url-local pair
-    # kernel (materialize.evidence_pairs) — no join of any kind pairs the
-    # evidence, and the url exchange is the only one before the salted
-    # triple aggregate
+    # 14. evidence pairing over tables read back: one url exchange feeding
+    # the url-local pair kernel (materialize.link_pairs) — no join of any
+    # kind pairs the evidence, and the url exchange is the only one before
+    # the salted triple aggregate
     from apt_bron_re_spark.operators.materialize import materialize_triples
     ev = docs_df.selectExpr(
         "url",
@@ -275,10 +294,12 @@ def main() -> None:
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ))
 
-    # 17/18. link + materialize stage plans over REAL stage tables: one
-    # url hash-partitioning per stage, each feeding one url-local
-    # MapInPandas kernel; a regression that brings back a DataFrame
-    # composition plans more url exchanges and shuffle joins above them.
+    # 17/18. link + materialize stage plans over REAL stage tables: the
+    # link stage is one url hash-partitioning feeding one url-local
+    # MapInPandas kernel; a fresh run's materialize folds that kernel's
+    # cached rows with no further exchange, and a resumed run's reads the
+    # link tables back under one url exchange.  A regression that brings
+    # back a DataFrame composition plans more url exchanges and joins.
     # Built on a tiny fused mention stage in a temp dir.
     import shutil
     import tempfile
@@ -294,8 +315,11 @@ def main() -> None:
     # the linked write plan exactly as Pipeline.run builds it (one
     # linking.link_stage call over the url-repartitioned stage table)
     stage2 = spark.read.parquet(f"{td}/mentions")
-    with pipe._link_tables(stage2, *_bm25_globals(stage2)) as tables:
+    canon_map = pipe._canon_stage()
+    with pipe._link_tables(stage2, *_bm25_globals(stage2)) as (tables, rows):
         p = plan_of(tables["linked"])
+        fresh = plan_of(_mat.triples_of_pairs(
+            _mat.link_pairs(rows, canon_map, 8, clustered=True)))
     checks.append((
         "link stage (one url exchange, one url-local MapInPandas kernel)", p,
         ["MapInPandas", "REPARTITION_BY_NUM"],
@@ -303,17 +327,32 @@ def main() -> None:
     ))
     checks.append(one_url_exchange("link stage", p))
 
+    # a fresh run's materialize stage folds the link kernel's rows where
+    # the link stage cached them: the pair kernel reads the cache with no
+    # exchange after the link kernel and no canon join (the canon map is a
+    # collected dict); the only url exchange is the link kernel's own
+    checks.append((
+        "materialize stage, fresh run (pair kernel over the cached link "
+        "kernel rows)", fresh,
+        ["MapInPandas", "InMemoryTableScan"],
+        NO_SHUFFLE_JOINS + ["BroadcastHashJoin"],
+    ))
+    checks.append(fold_over_cache("materialize stage, fresh run", fresh))
+    checks.append(one_url_exchange("materialize stage, fresh run", fresh))
+
+    # a resumed run (link skipped) reads the link tables back: one url
+    # exchange feeds the same pair kernel
     linked = spark.read.parquet(f"{td}/linked")
     residual = spark.read.parquet(f"{td}/links_residual")
-    canon = spark.read.parquet(f"{td}/canon")
-    tri = _mat.materialize_triples(
-        _mat.evidence_rows(linked, residual, canon), partitions=8)
-    p = plan_of(tri)
+    p = plan_of(_mat.triples_of_pairs(_mat.link_pairs(
+        _mat.links_of_tables(linked, residual), canon_map, 8)))
     checks.append((
-        "materialize stage (one url exchange, url-local pair kernel)", p,
-        ["MapInPandas", "REPARTITION_BY_NUM"], NO_SHUFFLE_JOINS,
+        "materialize stage, resumed run (one url exchange, url-local pair "
+        "kernel)", p,
+        ["MapInPandas", "REPARTITION_BY_NUM"],
+        NO_SHUFFLE_JOINS + ["BroadcastHashJoin"],
     ))
-    checks.append(one_url_exchange("materialize stage", p))
+    checks.append(one_url_exchange("materialize stage, resumed run", p))
 
     # 22b. streaming micro-batch step: the partial aggregate kg_batch_step
     # writes.  Stages 2-5 are ONE url-clustered MapInPandas (extract,

@@ -172,6 +172,8 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
     url-local kernel, persisted for its two writes: at most 12 Spark jobs
     (under AQE one per exchange and broadcast, plus the writes and the
     read-back)."""
+    from contextlib import nullcontext
+
     from apt_bron_re_spark.operators import mention
     from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
@@ -187,10 +189,11 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
     sc.setJobGroup(group, "job count of one link stage")
     try:
         # the stage exactly as Pipeline.run builds it
-        pipe._run_stage(
-            "link", pipe._fps()[2],
-            lambda: pipe._link_tables(stage2, *_bm25_globals(stage2)),
-            partition_by=["pbucket"], resume=False)
+        with pipe._link_tables(stage2, *_bm25_globals(stage2)) as (tables,
+                                                                   _rows):
+            pipe._run_stage("link", pipe._fps()[2],
+                            lambda: nullcontext(tables),
+                            partition_by=["pbucket"], resume=False)
         pipe._read("linked")
         started = set(tracker.getJobIdsForGroup(group))
     finally:
@@ -200,38 +203,36 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
 
 
 def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
-    """The materialize stage is the canon broadcast, one url exchange
-    feeding the url-local pair kernel, the two exchanges of the salted
-    aggregate and the pred-partitioned write, then the read-back: at most
-    7 Spark jobs (under AQE one per exchange and broadcast, plus the write
-    and the read-back; the lineage record starts none)."""
+    """A fresh run's materialize stage folds the link kernel's cached rows
+    in place, with no url exchange: under AQE one Spark job per exchange
+    (the two phases of the salted aggregate and the write's pred
+    repartition), the write and the read-back, at most 5 jobs.  The canon
+    stage collects the canon map, and the lineage record starts none."""
     from contextlib import nullcontext
 
-    from apt_bron_re_spark.operators import materialize
+    from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("mat_jobs"),
                     n_buckets=8, fuse_extract=True)
     pipe.run(pages_df(spark, N_PAGES), resume=False)
-    linked, residual, canon = (pipe._read(name) for name in
-                               ("linked", "links_residual", "canon"))
+    stage2 = pipe._read("mentions")
+    canon_map = pipe._canon_stage()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "materialize_stage_jobs"
-    sc.setJobGroup(group, "job count of one materialize stage")
-    try:
-        # the stage exactly as Pipeline.run builds it
-        pipe._run_stage(
-            "materialize", pipe._fps()[4],
-            lambda: nullcontext({"triples": materialize.materialize_triples(
-                materialize.evidence_rows(linked, residual, canon),
-                partitions=pipe.n_buckets)}),
-            partition_by=["pred"], resume=False)
-        pipe._read("triples")
-        started = set(tracker.getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert 0 < len(started) <= 7, sorted(started)
+    # the link stage as Pipeline.run runs it, which caches the kernel rows
+    with pipe._link_tables(stage2, *_bm25_globals(stage2)) as (tables, rows):
+        pipe._run_stage("link", pipe._fps()[2], lambda: nullcontext(tables),
+                        partition_by=["pbucket"], resume=False)
+        sc.setJobGroup(group, "job count of one materialize stage")
+        try:
+            pipe._materialize(rows, canon_map, clustered=True, resume=False)
+            pipe._read("triples")
+            started = set(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(started) <= 5, sorted(started)
 
 
 STAGE_TABLES = {"extract": "docs", "mention": "mentions", "link": "linked",
@@ -397,3 +398,83 @@ def test_failed_link_write_releases_cache(spark, layer_map, tmp_path_factory,
     for pipe in (batch, chunked):
         assert pipe.log.metrics().filter(
             F.col("stage") == "link").count() == 0
+
+
+_write = Pipeline._write
+
+
+def _triples_write_fails(self, df, name, *args, **kwargs):
+    """``Pipeline._write`` that fails for the ``triples`` table."""
+    if name == "triples":
+        raise RuntimeError("triples write failed")
+    return _write(self, df, name, *args, **kwargs)
+
+
+def test_failed_materialize_releases_cache(spark, layer_map,
+                                           tmp_path_factory, monkeypatch):
+    """A run keeps the link kernel's rows cached until the triples write
+    commits.  When that write fails, or the canon stage does, the run
+    raises, leaves nothing cached and records no materialize row."""
+    from apt_bron_re_spark.operators import canonicalize
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def canon_fails(*args, **kwargs):
+        raise RuntimeError("canon failed")
+
+    pages = pages_df(spark, 10)
+    before = n_persisted()
+    for patch, error in [((Pipeline, "_write", _triples_write_fails),
+                          "triples write failed"),
+                         ((canonicalize, "canonical_map", canon_fails),
+                          "canon failed")]:
+        pipe = Pipeline(spark, layer_map,
+                        tmp_path_factory.mktemp("mat_err"), n_buckets=8,
+                        fuse_extract=True)
+        with monkeypatch.context() as m:
+            m.setattr(*patch)
+            with pytest.raises(RuntimeError, match=error):
+                pipe.run(pages, resume=False)
+        assert n_persisted() == before, error
+        lineage = pipe.log.metrics()
+        assert lineage.filter(F.col("stage") == "link").count() == 1, error
+        assert lineage.filter(
+            F.col("stage") == "materialize").count() == 0, error
+
+
+def test_resume_after_failed_materialize_reads_links_back(
+        spark, layer_map, tmp_path_factory, monkeypatch):
+    """A run that fails at the triples write has completed the link
+    stage.  Its resume skips link and pairs the read-back link tables
+    under one url exchange; a fresh run folds the cached kernel rows.  Both
+    give the same triples on all 7 fields."""
+    from apt_bron_re_spark.operators import materialize
+
+    plans = []
+    link_pairs = materialize.link_pairs
+
+    def spy(links, canon_map, partitions=None, clustered=False):
+        plans.append(clustered)
+        return link_pairs(links, canon_map, partitions, clustered)
+
+    monkeypatch.setattr(materialize, "link_pairs", spy)
+    pages = pages_df(spark, N_PAGES)
+    want = Pipeline(spark, layer_map, tmp_path_factory.mktemp("fresh"),
+                    n_buckets=8, fuse_extract=True).run(pages, resume=False)
+    assert plans == [True]
+
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("resumed"),
+                    n_buckets=8, fuse_extract=True)
+    with monkeypatch.context() as m:
+        m.setattr(Pipeline, "_write", _triples_write_fails)
+        with pytest.raises(RuntimeError, match="triples write failed"):
+            pipe.run(pages, resume=False)
+    link_rows = pipe.log.metrics().filter(F.col("stage") == "link").count()
+    assert link_rows == 1
+    plans.clear()
+    got = pipe.run(pages, resume=True)
+    assert plans == [False]
+    assert pipe.log.metrics().filter(
+        F.col("stage") == "link").count() == link_rows
+    assert _triple_rows(got) == _triple_rows(want)

@@ -136,6 +136,49 @@ def test_ivf_assign_tie_breaks_to_smallest_centroid(spark):
     assert got == {0: 3, 1: 3}
 
 
+def _with_null_vectors(spark):
+    """Two real vectors, a null one between them, and a frame of only a
+    null vector (a batch with nothing to stack)."""
+    schema = "vec_id bigint, embedding array<float>"
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, None), (2, [3.0, -1.0])], schema)
+    return vecs, spark.createDataFrame([(1, None)], schema)
+
+
+def test_ivf_assign_null_vector_gets_null_centroid(spark):
+    """A null vector gets a null c_id and leaves the other rows'
+    assignments as they are; a batch of only null vectors, or no rows,
+    gives no assignment instead of failing in np.stack."""
+    from apt_bron_re_spark.operators.similarity import _quant, ivf_assign
+    vecs, only_null = _with_null_vectors(spark)
+    cent = spark.createDataFrame(
+        [(7, [1.0, 1.0]), (3, [1.0, -1.0])],
+        "c_id bigint, embedding array<float>").select(
+        "c_id", _quant(F.col("embedding")).alias("c_q"))
+    got = {r["vec_id"]: r["c_id"] for r in ivf_assign(vecs, cent).collect()}
+    assert got == {0: 7, 1: None, 2: 3}
+    assert [tuple(r) for r in ivf_assign(only_null, cent).collect()] == [
+        (1, None)]
+    assert ivf_assign(vecs.limit(0), cent).collect() == []
+
+
+def test_lsh_signatures_null_vector_gets_null_buckets(spark):
+    """A null vector gets null buckets and leaves the other rows' buckets
+    as they are; a batch of only null vectors, or no rows, gives no
+    buckets instead of failing in np.stack."""
+    from apt_bron_re_spark.operators.similarity import lsh_signatures
+    vecs, only_null = _with_null_vectors(spark)
+    want = {r["vec_id"]: r["buckets"] for r in lsh_signatures(
+        vecs.filter(F.col("embedding").isNotNull()), 2).collect()}
+    got = {r["vec_id"]: r["buckets"]
+           for r in lsh_signatures(vecs, 2).collect()}
+    assert got == {**want, 1: None}
+    assert len(want[0]) == len(want[2]) > 0
+    assert [r["buckets"] for r in lsh_signatures(only_null, 2).collect()] \
+        == [None]
+    assert lsh_signatures(vecs.limit(0), 2).collect() == []
+
+
 def test_embedding_near_pairs_dense_matches_lsh_join(spark):
     """The dense-regime path == the LSH equi-join path (identical
     candidate predicate + identical exact verify), on the sf0.001
