@@ -2,10 +2,11 @@
 
 A from-scratch, Spark-first rebuild of the capabilities of the reference
 pipeline d4nieldev/apt-bron-re (APT-report relation extraction for the BRON
-knowledge graph). Five checkpointed stages over a Common-Crawl-style
-``pages`` table:
+knowledge graph). Five stages over a Common-Crawl-style ``pages`` table;
+extraction runs inside the mention stage's UDF, so four tables are
+checkpointed:
 
-    pages -> extract -> mention -> link -> canonicalize -> materialize
+    pages -> extract+mention -> link -> canonicalize -> materialize
 
 All heavy per-row logic is vectorized (Arrow/pandas UDFs); all relational
 logic is DataFrame-native so Catalyst can push filters/prune columns and AQE

@@ -1,2 +1,3 @@
-"""Pipeline operators: extract, mention, link, canonicalize, materialize,
-plus training-data-pipeline operators (dedup, similarity, text stats)."""
+"""Pipeline operators: extract (run inside the mention stage's UDF),
+mention, link, canonicalize, materialize, plus training-data-pipeline
+operators (dedup, similarity, text stats)."""

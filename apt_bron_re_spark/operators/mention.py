@@ -1,4 +1,5 @@
-"""Stage 2 — mention detection: docs -> long mentions + NER-residue rows.
+"""Stage 2 — mention detection: pages (extraction fused, as the pipeline
+runs it) or docs -> long mentions + NER-residue rows.
 
 M1-M8 + N4-N6 + A1 + A2 in SURVEY.md, all in ONE ``mapInPandas`` pass per
 document (the per-doc logic is ``doc_core.process_document``, a faithful
@@ -137,9 +138,10 @@ def detect_mentions(docs: DataFrame,
     ``event_time_col`` (streaming): a timestamp column carried through the
     UDF so windowed aggregations downstream need no stream-stream join.
     ``from_html``: fuse E1 into this pass — input is pages(url, html) and
-    the byte-identical ``extract_text`` runs inside the same UDF, skipping
-    the materialized docs table entirely (the deployment profile; the
-    unfused path keeps the extract checkpoint).
+    the byte-identical ``extract_text`` runs inside the same UDF, so no
+    text table is materialized.  The pipeline's mention stage runs this
+    mode; the docs mode feeds gold text straight in, the differential
+    against ``process_document``.
     """
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
@@ -178,8 +180,3 @@ def residue_view(stage: DataFrame) -> DataFrame:
     return (stage.filter(F.col("rec_type") == "residue")
             .select("url", "bucket", "value"))
 
-
-def errors_view(stage: DataFrame) -> DataFrame:
-    """Per-document failures: (url, error)."""
-    return (stage.filter(F.col("rec_type") == "error")
-            .select("url", F.col("value").alias("error")))

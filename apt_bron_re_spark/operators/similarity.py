@@ -331,9 +331,13 @@ def _near_pairs_dense(vectors: DataFrame, dim: int, threshold: float,
         return (bits.reshape(len(M), n_tables, n_planes)
                 @ weights).astype(np.int32)
 
-    rows = vectors.select(id_col, vec_col).collect()
+    # a null vector is in no bucket, so the LSH join drops it: drop it
+    # here too (np.array cannot stack it into the matrix)
+    rows = (vectors.select(id_col, vec_col)
+            .where(F.col(vec_col).isNotNull()).collect())
     ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    M = np.array([r[vec_col] for r in rows], dtype=np.float64)
+    M = np.array([r[vec_col] for r in rows],
+                 dtype=np.float64).reshape(len(rows), dim)
     bk = buckets_of(M)
     # PRE-normalized rows: the prefilter cosine is then ONE matmul per
     # slab instead of matmul + norm-outer + divide (three full m x n

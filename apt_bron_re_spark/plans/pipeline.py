@@ -1,6 +1,6 @@
 """The 5-stage KG-construction pipeline over staged parquet tables.
 
-    pages -> extract -> mention -> link -> canonicalize -> materialize
+    pages -> extract+mention -> link -> canonicalize -> materialize
 
 Each stage writes an idempotent parquet table under ``base_dir`` (bucketed
 by ``pbucket = pmod(murmur3(url), n_buckets)`` — exactly Spark's
@@ -16,10 +16,12 @@ stopped.
 
 Stage-table layout (versioned stage tables replace the reference's
 in-place file rewrites — SURVEY.md §3):
-    docs/            url, text (+ pbucket column; batch writes carry no
-    mentions/        partition dirs — the UDF output streams straight to
-                     parquet with NO shuffle; incremental writers lay
-                     out pbucket=N dirs for per-bucket resume/pruning)
+    mentions/        doc/mention/residue/error rows + pbucket column;
+                     extraction runs inside the mention UDF, so no text
+                     table is written (batch writes carry no partition
+                     dirs — the UDF output streams straight to parquet
+                     with NO shuffle; incremental writers lay out
+                     pbucket=N dirs for per-bucket resume/pruning)
     linked/          mention rows + bm25 + link annotations, pbucket=N
     links_residual/  dirs written SHUFFLE-FREE (partitions are
                      pbucket-pure by construction)
@@ -72,7 +74,6 @@ from pyspark.sql.functions.partitioning import bucket
 
 from ..config import LANG, NER_MATCH_SCORE, SIM_THRESHOLD
 from ..operators import bm25, canonicalize, linking, materialize, mention
-from ..operators.extract import extract_docs
 from .lineage import LineageLog, fingerprint
 
 # Bucket-layout identity of a base_dir.  pbucket was crc32(url) % n in
@@ -119,12 +120,13 @@ class Pipeline:
                  layer_map: dict[str, list[dict]],
                  base_dir: str | Path,
                  n_buckets: int = 32,
-                 fuse_extract: bool = False,
+                 fuse_extract: bool = True,
                  catalog: str | None = None) -> None:
-        """``fuse_extract=True`` runs E1 inside the mention UDF and skips
-        materializing the docs table (half the stage-table IO; the same
-        byte-identical extractor).  The unfused default keeps the extract
-        checkpoint for stage-level resume granularity.
+        """Extraction (E1) always runs inside the mention UDF: the batch
+        plan has no extract stage and writes no text table.
+        ``fuse_extract`` stays only because ``bench.py`` and
+        ``perfbench/workloads.py`` pass ``fuse_extract=True``; ``False``
+        asked for the removed extract stage and raises ``ValueError``.
 
         ``catalog``: the Iceberg one-line swap (S7/S8 proper).  When set
         (e.g. ``"ice.db"``), every stage table becomes the Iceberg table
@@ -139,11 +141,14 @@ class Pipeline:
         Iceberg runtime on the session (tests/test_iceberg_optional.py
         runs the full pipeline this way when ``SPARK_ICEBERG_JAR`` is
         set; the sandbox has no jars, so it skips explicitly)."""
+        if not fuse_extract:
+            raise ValueError(
+                "fuse_extract=False: there is no separate extract stage; "
+                "extraction runs inside the mention stage")
         self.spark = spark
         self.layer_map = layer_map
         self.base = Path(base_dir)
         self.n_buckets = n_buckets
-        self.fuse_extract = fuse_extract
         self.catalog = catalog
         self.log = LineageLog(spark, base_dir)
         self._catalog_fp = fingerprint(layer_map)
@@ -337,19 +342,20 @@ class Pipeline:
             partition_by=["pred"], resume=resume)
 
     def _mentions(self, pages: DataFrame) -> DataFrame:
-        """The fused extract+mention plan: ``pages`` (already filtered to
-        ``LANG``) -> the bucketed mention stage rows, with E1 run inside
-        the mention UDF."""
+        """Stages 1-2: the ``LANG`` pages of ``pages`` -> the bucketed
+        mention stage rows, with E1 run inside the mention UDF.  The
+        language filter sits before the UDF, so Catalyst pushes it into
+        the scan and other pages never reach Python (S4)."""
         return self._bucketed(mention.detect_mentions(
-            pages.select("url", "html"), self.layer_map, from_html=True))
+            pages.filter(F.col("lang") == LANG).select("url", "html"),
+            self.layer_map, from_html=True))
 
     def _fps(self) -> tuple[str, str, str, str, str]:
-        """The stage fingerprint chain (fp0..fp4) for the current config."""
+        """The stage fingerprint chain (fp0..fp4) for the current config.
+        fp0 (the extraction config) is no stage of its own; it stays in
+        the chain, and ``"fused"`` in fp1, so existing base_dirs resume."""
         fp0 = fingerprint(self._catalog_fp, LANG, "extract")
-        if self.fuse_extract:
-            fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
-        else:
-            fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention")
+        fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
         # (True, SIM_THRESHOLD): semantic linking is always on; the pair
         # stays in the hash so existing base_dirs still resume
         fp2 = fingerprint(fp1, True, SIM_THRESHOLD, "link")
@@ -402,7 +408,7 @@ class Pipeline:
 
     # -- stages -----------------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = True) -> DataFrame:
-        # Batch stage-1/2 writes keep the pbucket COLUMN but skip the
+        # The batch mention write keeps the pbucket COLUMN but skips the
         # bucketing repartition + partitionBy dirs: the mention UDF output
         # streams straight from the scan-aligned tasks into parquet — no
         # wide shuffle of sentence-bearing rows just to lay out dirs the
@@ -438,22 +444,11 @@ class Pipeline:
 
     def _run_body(self, pages: DataFrame, resume: bool,
                   canon: Future) -> DataFrame:
-        fp0, fp1, fp2, _fp3, _fp4 = self._fps()
-        if self.fuse_extract:
-            def mentions():
-                return nullcontext({"mentions": self._mentions(
-                    pages.filter(F.col("lang") == LANG))})
-        else:
-            self._run_stage(
-                "extract", fp0,
-                lambda: nullcontext({"docs": self._bucketed(
-                    extract_docs(pages))}), resume=resume)
-            docs = self._read("docs").drop("pbucket")
-
-            def mentions():
-                return nullcontext({"mentions": self._bucketed(
-                    mention.detect_mentions(docs, self.layer_map))})
-        self._run_stage("mention", fp1, mentions, resume=resume)
+        _fp0, fp1, fp2, _fp3, _fp4 = self._fps()
+        self._run_stage(
+            "mention", fp1,
+            lambda: nullcontext({"mentions": self._mentions(pages)}),
+            resume=resume)
         stage2 = self._read("mentions")
 
         with ExitStack() as cache:
@@ -525,20 +520,20 @@ class Pipeline:
     def run_mention_incremental(self, pages: DataFrame,
                                 n_chunks: int = 4,
                                 max_chunks: int | None = None) -> bool:
-        """Execute the (fused) mention stage in bucket-group chunks with a
+        """Execute the mention stage in bucket-group chunks with a
         per-bucket lineage checkpoint after each chunk — the north-star
         resume mechanism: kill the job between chunks and a re-run
         processes only the buckets without a lineage row (_run_chunks).
         Returns True when the stage is complete (summary lineage row
         written)."""
-        fp1 = fingerprint(self._fps()[0], NER_MATCH_SCORE, "mention", "fused")
+        fp1 = self._fps()[1]
         if self.log.is_complete("mention", fp1):
             return True
-        filtered = self._bucketed(pages.filter(F.col("lang") == LANG))
+        bucketed = self._bucketed(pages)
 
         def build(chunk):
             return nullcontext({"mentions": self._mentions(
-                filtered.filter(F.col("pbucket").isin(chunk)))})
+                bucketed.filter(F.col("pbucket").isin(chunk)))})
 
         return self._run_chunks("mention", fp1, n_chunks, max_chunks, build)
 

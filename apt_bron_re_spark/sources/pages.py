@@ -9,7 +9,7 @@ Iceberg-style ``pages`` table with columns
 Every page is generated from a seeded ``random.Random`` — same seed, same
 corpus, no wall-clock — and its ``text`` column is produced by running the
 reference extractor ``extract_text`` on the generated ``html``, so the
-byte-identical invariant holds by construction and the extract stage can be
+byte-identical invariant holds by construction and the extractor can be
 verified against it.
 
 The corpus plants (FIXTURES.md §1):

@@ -73,7 +73,7 @@ pages_df(spark, {n_pages}, scale={page_scale}, hub_rate={hub_rate},
          partitions={shuffle}).write.mode("overwrite").parquet(pp)
 pages = spark.read.parquet(pp)
 pipe = Pipeline(spark, build_layer_map(), os.path.join(td, "st"),
-                n_buckets={shuffle}, fuse_extract=True)
+                n_buckets={shuffle})
 # canonicalization is a CATALOG-derived dimension artifact (stage 4 never
 # reads the corpus) — precompute it once per catalog fingerprint before
 # the timed span, the same precompute-once shape as the reference's node
@@ -307,7 +307,7 @@ def _stage_table(results, low, high):
         f"| {s} | {results[0]['stages'].get(s, '-')} "
         f"| {results[1]['stages'].get(s, '-')} "
         f"| {round(results[0]['stages'][s] / results[1]['stages'][s], 2) if results[1]['stages'].get(s) else '-'}x |\n"
-        for s in ["extract", "mention", "link", "canonicalize", "materialize"])
+        for s in ["mention", "link", "canonicalize", "materialize"])
 
 
 SKEW_SECTION = "## Skew stress (hub-heavy corpus vs default)"
@@ -318,8 +318,7 @@ def _render_skew(sk: dict) -> str:
     rows = "".join(
         f"| {s} | {uni['stages'].get(s, '-')} | {hub['stages'].get(s, '-')} "
         f"| {round(hub['stages'][s] / uni['stages'][s], 2) if uni['stages'].get(s) and hub['stages'].get(s) else '-'}x |\n"
-        for s in ["extract", "mention", "link", "canonicalize",
-                  "materialize"])
+        for s in ["mention", "link", "canonicalize", "materialize"])
     return f"""{SKEW_SECTION}
 
 Generated by `scripts/bench_scaling.py skew` on {sk['when']}: the

@@ -8,7 +8,7 @@ stages and checks the plan properties the 100 TB design relies on:
   * small dimension joins are BroadcastHashJoin, fact-fact joins are
     shuffle joins (SortMergeJoin/ShuffledHashJoin);
   * relational expressions sit inside WholeStageCodegen spans;
-  * the mention/extract UDF stages are single narrow projections
+  * the extract+mention UDF stage is a single narrow projection
     (no shuffle before the stage write).
 
 Writes PLANS.md with the verdicts + plan excerpts.
@@ -75,10 +75,12 @@ def fold_over_cache(stage: str, plan: str) -> tuple:
 
 
 def main() -> None:
+    import shutil
+    import tempfile
+
     from apt_bron_re_spark.catalog.synthetic import build_layer_map
     from apt_bron_re_spark.operators import bm25 as bm25_mod
-    from apt_bron_re_spark.operators.extract import extract_docs
-    from apt_bron_re_spark.operators.mention import detect_mentions
+    from apt_bron_re_spark.plans.pipeline import Pipeline
     from apt_bron_re_spark.queries import SPARK_QUERIES
     from apt_bron_re_spark.session import get_spark
     from apt_bron_re_spark.sources.pages import pages_df
@@ -90,27 +92,23 @@ def main() -> None:
     layers = build_layer_map()
     checks: list[tuple[str, str, list[str], list[str]]] = []
 
-    # 1. extract stage: lang filter pushed, only url+html read
+    # 1. extract+mention stage, as Pipeline.run writes it: lang filter
+    # pushed to the scan, then one narrow mapInPandas with extraction
+    # inside it, no shuffle
     pages = pages_df(spark, 50)
     pages_path = "/tmp/_audit_pages"
     pages.write.mode("overwrite").parquet(pages_path)
     pages_pq = spark.read.parquet(pages_path)
-    p = plan_of(extract_docs(pages_pq))
+    td = tempfile.mkdtemp(prefix="_audit_stage_")
+    pipe = Pipeline(spark, layers, td, n_buckets=8)
+    p = plan_of(pipe._mentions(pages_pq))
     checks.append((
-        "extract stage (pages parquet -> docs)", p,
-        # lang filter pushed to the scan; ReadSchema pruned to url+html
-        # (never reads the gold text or warc_ts columns)
+        "extract+mention stage (pages parquet -> mentions)", p,
+        # ReadSchema pruned to url+html+lang (never reads the gold text
+        # or warc_ts columns)
         ["PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]",
-         "ReadSchema: struct<url:string,html:binary,lang:string>"],
-        [],
-    ))
-
-    # 2. mention stage: narrow mapInPandas, no shuffle
-    docs = extract_docs(pages_pq)
-    p = plan_of(detect_mentions(docs, layers))
-    checks.append((
-        "mention stage (docs -> mentions)", p,
-        ["MapInPandas"],
+         "ReadSchema: struct<url:string,html:binary,lang:string>",
+         "MapInPandas"],
         ["Exchange"],
     ))
 
@@ -300,17 +298,10 @@ def main() -> None:
     # cached rows with no further exchange, and a resumed run's reads the
     # link tables back under one url exchange.  A regression that brings
     # back a DataFrame composition plans more url exchanges and joins.
-    # Built on a tiny fused mention stage in a temp dir.
-    import shutil
-    import tempfile
-
+    # Built on a tiny run's stage tables in the temp dir.
     from apt_bron_re_spark.operators import materialize as _mat
-    from apt_bron_re_spark.plans.pipeline import Pipeline as _Pipeline
     from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
-    td = tempfile.mkdtemp(prefix="_audit_stage_")
-    lm = build_layer_map()
-    pipe = _Pipeline(spark, lm, td, n_buckets=8, fuse_extract=True)
     pipe.run(pages_df(spark, 80), resume=False)
     # the linked write plan exactly as Pipeline.run builds it (one
     # linking.link_stage call over the url-repartitioned stage table)
@@ -360,7 +351,8 @@ def main() -> None:
     # no join of any kind before the salted aggregate
     from apt_bron_re_spark.streaming.kg_stream import (batch_partials,
                                                        canon_as_dict)
-    p = plan_of(batch_partials(pages_pq, lm, canon_as_dict(spark, lm)))
+    p = plan_of(batch_partials(pages_pq, layers,
+                               canon_as_dict(spark, layers)))
     checks.append((
         "kg_batch_step (one url-clustered row-local pass + salted partial "
         "aggregate)", p,

@@ -134,7 +134,7 @@ want = sorted((r.subj, r.pred, r.obj, tuple(r.sources), r.n_sources,
               for r in pq.run(pages, resume=False).collect())
 # full Iceberg-backed run: batch stages + incremental mention chunks
 ice = Pipeline(spark, lm, tempfile.mkdtemp(prefix="ice_st_"), n_buckets=8,
-               catalog="ice.db", fuse_extract=True)
+               catalog="ice.db")
 assert ice.run_mention_incremental(pages, n_chunks=2)
 assert ice.run_link_incremental(n_chunks=2)
 assert ice.run_materialize_incremental(n_chunks=2)

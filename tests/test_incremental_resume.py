@@ -23,21 +23,19 @@ def test_interrupt_and_resume_equals_single_shot(spark, layer_map,
 
     # single-shot reference
     base_a = tmp_path_factory.mktemp("inc_a")
-    pa = Pipeline(spark, layer_map, base_a, n_buckets=8, fuse_extract=True)
+    pa = Pipeline(spark, layer_map, base_a, n_buckets=8)
     pa.run(pages)
     want = rows_of(spark.read.parquet(str(base_a / "mentions")))
 
     # incremental with interruption after 1 of 4 chunks
     base_b = tmp_path_factory.mktemp("inc_b")
-    pb = Pipeline(spark, layer_map, base_b, n_buckets=8, fuse_extract=True)
+    pb = Pipeline(spark, layer_map, base_b, n_buckets=8)
     finished = pb.run_mention_incremental(pages, n_chunks=4, max_chunks=1)
     assert finished is False
 
     partial = spark.read.parquet(str(base_b / "mentions"))
     assert 0 < partial.count() < len(want)
-    done = set(pb.log.bucket_counts(
-        "mention",
-        _mention_fp(pb)))
+    done = set(pb.log.bucket_counts("mention", pb._fps()[1]))
     assert 0 < len(done) < 8
 
     # resume: completes only the missing buckets
@@ -59,11 +57,14 @@ def test_interrupt_and_resume_equals_single_shot(spark, layer_map,
     assert ta == tb
 
 
-def _mention_fp(pipe):
-    from apt_bron_re_spark.config import LANG, NER_MATCH_SCORE
-    from apt_bron_re_spark.plans.lineage import fingerprint
-    fp0 = fingerprint(pipe._catalog_fp, LANG, "extract")
-    return fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
+def test_fingerprint_chain_is_pinned(spark, layer_map, tmp_path):
+    """The stage fingerprints of the synthetic catalog are pinned: a
+    change to any of them makes every existing base_dir re-run its stages
+    instead of resuming.  They equal the chain of the earlier fused
+    extract+mention plan, so base_dirs written by it still resume."""
+    assert Pipeline(spark, layer_map, tmp_path)._fps() == (
+        "09171dc6336fb136", "1f67a43e0c23fc5e", "aa47d54fa70dd936",
+        "2a3c397b68740451", "2dd5b7ecc4d5ce07")
 
 
 def test_link_and_materialize_interrupt_resume(spark, layer_map,
@@ -76,13 +77,13 @@ def test_link_and_materialize_interrupt_resume(spark, layer_map,
     pages = pages_df(spark, N_PAGES)
 
     base_a = tmp_path_factory.mktemp("lm_a")
-    pa = Pipeline(spark, layer_map, base_a, n_buckets=8, fuse_extract=True)
+    pa = Pipeline(spark, layer_map, base_a, n_buckets=8)
     want = {(r.subj, r.pred, r.obj):
             (tuple(sorted(r.sources)), r.n_sources, r.justification, r.score)
             for r in pa.run(pages).collect()}
 
     base_b = tmp_path_factory.mktemp("lm_b")
-    pb = Pipeline(spark, layer_map, base_b, n_buckets=8, fuse_extract=True)
+    pb = Pipeline(spark, layer_map, base_b, n_buckets=8)
     assert pb.run_mention_incremental(pages, n_chunks=2) is True
 
     # link: interrupt after 1 of 4 chunks, then resume
@@ -121,12 +122,12 @@ def test_mention_chunk_rerun_after_commit_is_exactly_once(spark, layer_map,
     pages = pages_df(spark, 120)
 
     base_a = tmp_path_factory.mktemp("once_a")
-    pa = Pipeline(spark, layer_map, base_a, n_buckets=8, fuse_extract=True)
+    pa = Pipeline(spark, layer_map, base_a, n_buckets=8)
     want = _triples_of(pa.run(pages))
     want_rows = spark.read.parquet(str(base_a / "mentions"))
 
     base_b = tmp_path_factory.mktemp("once_b")
-    pb = Pipeline(spark, layer_map, base_b, n_buckets=8, fuse_extract=True)
+    pb = Pipeline(spark, layer_map, base_b, n_buckets=8)
     record = pb.log.record_buckets
 
     def killed(*args, **kwargs):
@@ -165,21 +166,18 @@ def test_chunked_rerun_under_new_fingerprint_keeps_no_stale_rows(
             if k not in ("technique", "software", "capec", "cwe")}
 
     fresh = tmp_path_factory.mktemp("fp_fresh")
-    _run_chunked(Pipeline(spark, lm_b, fresh, n_buckets=32,
-                          fuse_extract=True), pages)
+    _run_chunked(Pipeline(spark, lm_b, fresh, n_buckets=32), pages)
     want = {name: _stage_rows(spark, fresh, name)
             for name in ("links_residual", "linked", "triples")}
 
     for first in ("chunked", "batch"):
         base = tmp_path_factory.mktemp(f"fp_{first}")
-        pa = Pipeline(spark, layer_map, base, n_buckets=32,
-                      fuse_extract=True)
+        pa = Pipeline(spark, layer_map, base, n_buckets=32)
         if first == "chunked":
             _run_chunked(pa, pages)
         else:
             pa.run(pages)
-        _run_chunked(Pipeline(spark, lm_b, base, n_buckets=32,
-                              fuse_extract=True), pages)
+        _run_chunked(Pipeline(spark, lm_b, base, n_buckets=32), pages)
         for name, rows in want.items():
             assert _stage_rows(spark, base, name) == rows, (first, name)
 
@@ -211,7 +209,7 @@ def test_empty_residual_table_reads_back(spark, layer_map, tmp_path_factory):
     assert batch._read("links_residual").count() == 0
 
     base = tmp_path_factory.mktemp("empty_chunked")
-    chunked = Pipeline(spark, lm, base, n_buckets=8, fuse_extract=True)
+    chunked = Pipeline(spark, lm, base, n_buckets=8)
     _run_chunked(chunked, pages)
     assert _triples_of(chunked.triples()) == want
     # a resume skips every stage and reads the empty tables back

@@ -226,7 +226,7 @@ def test_live_view_replay_guard(spark, layer_map, pages_path,
     once = spark.read.parquet(dup_dir).dropDuplicates(["url"])
     want = Pipeline(spark, layer_map,
                     str(tmp_path_factory.mktemp("kg_replay_batch")),
-                    n_buckets=8, fuse_extract=True).run(once, resume=False)
+                    n_buckets=8).run(once, resume=False)
     want_n = {(r["subj"], r["pred"], r["obj"]): r["n_sources"]
               for r in want.collect()}
     # no double counting despite every url arriving twice...
@@ -258,7 +258,7 @@ def test_duplicate_urls_within_a_trigger_equal_batch(
 
     want = _canon_rows(Pipeline(
         spark, layer_map, str(tmp_path_factory.mktemp("kg_dup_batch")),
-        n_buckets=8, fuse_extract=True).run(pages, resume=False))
+        n_buckets=8).run(pages, resume=False))
 
     out = str(tmp_path_factory.mktemp("kg_dup_out"))
     q = run_kg_stream(_stream_pages(spark, path), layer_map, None, None,
@@ -299,7 +299,7 @@ def test_null_html_page_in_a_micro_batch_equals_batch(
 
     want = _canon_rows(Pipeline(
         spark, layer_map, str(tmp_path_factory.mktemp("kg_null_batch")),
-        n_buckets=8, fuse_extract=True).run(with_null, resume=False))
+        n_buckets=8).run(with_null, resume=False))
 
     out = str(tmp_path_factory.mktemp("kg_null_out"))
     q = run_kg_stream(_stream_pages(spark, path), layer_map, None, None,

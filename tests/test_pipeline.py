@@ -49,15 +49,23 @@ def test_canonical_ids_in_triples(triples):
     assert triples.filter("subj = 'G0104'").count() == 0
 
 
-def test_lineage_recorded(pipeline, triples):
+def test_lineage_recorded(spark, layer_map, pipeline, triples, base_dir,
+                          tmp_path_factory):
+    """Four stages are recorded: extraction runs inside the mention
+    stage, which writes no text table, and asking for the removed
+    separate extract stage raises."""
+    import os
+
     lin = pipeline.log.metrics()
     stages = {r.stage for r in lin.select("stage").distinct().collect()}
-    assert stages == {"extract", "mention", "link", "canonicalize",
-                      "materialize"}
+    assert stages == {"mention", "link", "canonicalize", "materialize"}
     # batch stages record only the summary row
-    ext = lin.filter("stage = 'extract'")
-    assert ext.filter("bucket = -1").count() == 1
+    assert lin.filter("stage = 'mention' AND bucket = -1").count() == 1
     assert lin.filter("bucket >= 0").count() == 0
+    assert not os.path.exists(str(base_dir / "docs"))
+    with pytest.raises(ValueError, match="extract stage"):
+        Pipeline(spark, layer_map, tmp_path_factory.mktemp("unfused"),
+                 n_buckets=8, fuse_extract=False)
 
 
 def test_resume_skips_and_is_identical(spark, pipeline, triples, base_dir):
@@ -101,23 +109,6 @@ def test_linked_write_is_shuffle_free_aligned(pipeline, triples, base_dir):
     # batch mention stage keeps the pbucket COLUMN but skips the bucketing
     # shuffle entirely — no partition dirs
     assert not glob.glob(str(base_dir / "mentions" / "pbucket=*"))
-
-
-def test_fused_extract_mode_identical(spark, layer_map, triples,
-                                      tmp_path_factory):
-    # fuse_extract runs E1 inside the mention UDF; triples must be
-    # identical to the staged mode.
-    base3 = tmp_path_factory.mktemp("stages_fused")
-    p3 = Pipeline(spark, layer_map, base3, n_buckets=8, fuse_extract=True)
-    t3 = p3.run(pages_df(spark, N_PAGES), resume=False)
-    a = {(r.subj, r.pred, r.obj, tuple(r.sources), r.score)
-         for r in triples.collect()}
-    b = {(r.subj, r.pred, r.obj, tuple(r.sources), r.score)
-         for r in t3.collect()}
-    assert a == b
-    # and the docs table was never written
-    import os
-    assert not os.path.exists(str(base3 / "docs"))
 
 
 def test_layout_marker_fails_fast_on_mismatch(spark, layer_map,
@@ -178,7 +169,7 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
     from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("link_jobs"),
-                    n_buckets=8, fuse_extract=True)
+                    n_buckets=8)
     pipe._write(pipe._bucketed(mention.detect_mentions(
         pages_df(spark, N_PAGES).select("url", "html"), layer_map,
         from_html=True)), "mentions")
@@ -213,7 +204,7 @@ def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
     from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("mat_jobs"),
-                    n_buckets=8, fuse_extract=True)
+                    n_buckets=8)
     pipe.run(pages_df(spark, N_PAGES), resume=False)
     stage2 = pipe._read("mentions")
     canon_map = pipe._canon_stage()
@@ -235,7 +226,7 @@ def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
     assert 0 < len(started) <= 5, sorted(started)
 
 
-STAGE_TABLES = {"extract": "docs", "mention": "mentions", "link": "linked",
+STAGE_TABLES = {"mention": "mentions", "link": "linked",
                 "canonicalize": "canon", "materialize": "triples"}
 
 
@@ -247,25 +238,19 @@ def _summaries(pipe):
 def test_lineage_counts_match_tables(spark, layer_map, pipeline, triples,
                                      tmp_path_factory):
     """Every lineage count is observed by the write that produced the
-    table, and equals a recount of that table: batch summaries (fused and
-    unfused), chunked per-bucket rows (a bucket with no rows recorded as
-    0) and chunked summaries, materialize's included."""
-    fused = Pipeline(spark, layer_map, tmp_path_factory.mktemp("cnt_fused"),
-                     n_buckets=8, fuse_extract=True)
-    fused.run(pages_df(spark, N_PAGES), resume=False)
-    for pipe, stages in [(pipeline, set(STAGE_TABLES)),
-                         (fused, set(STAGE_TABLES) - {"extract"})]:
-        got = _summaries(pipe)
-        assert set(got) == stages
-        for stage in stages:
-            assert got[stage] == pipe._read(STAGE_TABLES[stage]).count(), \
-                stage
+    table, and equals a recount of that table: batch summaries, chunked
+    per-bucket rows (a bucket with no rows recorded as 0) and chunked
+    summaries, materialize's included."""
+    got = _summaries(pipeline)
+    assert set(got) == set(STAGE_TABLES)
+    for stage, table in STAGE_TABLES.items():
+        assert got[stage] == pipeline._read(table).count(), stage
 
     # chunked, with bucket 0 left empty
     pages = pages_df(spark, N_PAGES).filter(
         F.pmod(F.hash("url"), F.lit(8)) != 0)
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("cnt_chunks"),
-                    n_buckets=8, fuse_extract=True)
+                    n_buckets=8)
     assert pipe.run_mention_incremental(pages, n_chunks=2) is True
     assert pipe.run_link_incremental(n_chunks=2) is True
     assert pipe.run_materialize_incremental(n_chunks=2) is True
@@ -309,21 +294,18 @@ def _triple_rows(df):
          r.justification, r.score) for r in df.collect())
 
 
-@pytest.mark.parametrize("fuse_extract", [True, False])
-def test_null_html_page_is_one_error_row(spark, layer_map, tmp_path_factory,
-                                         fuse_extract):
+def test_null_html_page_is_one_error_row(spark, layer_map, tmp_path_factory):
     """A page whose html is null becomes one ``rec_type='error'`` row of
-    the mention stage (the reference's per-document catch-and-log), fused
-    or not; the run completes with the triples of the corpus without it."""
+    the mention stage (the reference's per-document catch-and-log); the
+    run completes with the triples of the corpus without it."""
     pages = pages_df(spark, 20)
     bad_url = "http://example.invalid/null-html"
     with_null = pages.unionByName(spark.createDataFrame(
         [(bad_url, None, None, None, "en")], pages.schema))
     want = Pipeline(spark, layer_map, tmp_path_factory.mktemp("null_want"),
-                    n_buckets=8, fuse_extract=fuse_extract).run(
-        pages, resume=False)
+                    n_buckets=8).run(pages, resume=False)
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("null_html"),
-                    n_buckets=8, fuse_extract=fuse_extract)
+                    n_buckets=8)
     got = pipe.run(with_null, resume=False)
     rows = pipe._read("mentions").filter(F.col("url") == bad_url).collect()
     assert [r.rec_type for r in rows] == ["error"]
@@ -349,7 +331,7 @@ def test_canon_overlap_failures_propagate(spark, layer_map, tmp_path_factory,
     monkeypatch.setattr(canonicalize, "canonical_map", canon_fails)
     pages = pages_df(spark, 10)
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("canon_err"),
-                    n_buckets=8, fuse_extract=True)
+                    n_buckets=8)
     with pytest.raises(RuntimeError, match="canon failed"):
         pipe.run(pages, resume=False)
     assert pipe.log.metrics().filter(
@@ -383,10 +365,10 @@ def test_failed_link_write_releases_cache(spark, layer_map, tmp_path_factory,
     pages = pages_df(spark, 10)
     before = n_persisted()
     batch = Pipeline(spark, layer_map, tmp_path_factory.mktemp("link_err"),
-                     n_buckets=8, fuse_extract=True)
+                     n_buckets=8)
     chunked = Pipeline(spark, layer_map,
                        tmp_path_factory.mktemp("link_err_chunks"),
-                       n_buckets=8, fuse_extract=True)
+                       n_buckets=8)
     assert chunked.run_mention_incremental(pages, n_chunks=2) is True
     for name in ("_write", "_replace_table", "_write_buckets"):
         monkeypatch.setattr(Pipeline, name, failing(getattr(Pipeline, name)))
@@ -430,8 +412,7 @@ def test_failed_materialize_releases_cache(spark, layer_map,
                          ((canonicalize, "canonical_map", canon_fails),
                           "canon failed")]:
         pipe = Pipeline(spark, layer_map,
-                        tmp_path_factory.mktemp("mat_err"), n_buckets=8,
-                        fuse_extract=True)
+                        tmp_path_factory.mktemp("mat_err"), n_buckets=8)
         with monkeypatch.context() as m:
             m.setattr(*patch)
             with pytest.raises(RuntimeError, match=error):
@@ -461,11 +442,11 @@ def test_resume_after_failed_materialize_reads_links_back(
     monkeypatch.setattr(materialize, "link_pairs", spy)
     pages = pages_df(spark, N_PAGES)
     want = Pipeline(spark, layer_map, tmp_path_factory.mktemp("fresh"),
-                    n_buckets=8, fuse_extract=True).run(pages, resume=False)
+                    n_buckets=8).run(pages, resume=False)
     assert plans == [True]
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("resumed"),
-                    n_buckets=8, fuse_extract=True)
+                    n_buckets=8)
     with monkeypatch.context() as m:
         m.setattr(Pipeline, "_write", _triples_write_fails)
         with pytest.raises(RuntimeError, match="triples write failed"):

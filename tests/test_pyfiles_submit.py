@@ -30,7 +30,7 @@ spark = get_spark("pyfiles_job", master="local[2]", shuffle_partitions=4)
 td = tempfile.mkdtemp(prefix="pyfiles_")
 pages = pages_df(spark, 500, partitions=4)
 pipe = Pipeline(spark, build_layer_map(), os.path.join(td, "st"),
-                n_buckets=4, fuse_extract=True)
+                n_buckets=4)
 n = pipe.run(pages).count()
 print("PYFILES_TRIPLES", n)
 """

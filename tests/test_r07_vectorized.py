@@ -179,25 +179,33 @@ def test_lsh_signatures_null_vector_gets_null_buckets(spark):
     assert lsh_signatures(vecs.limit(0), 2).collect() == []
 
 
-def test_embedding_near_pairs_dense_matches_lsh_join(spark):
+def test_embedding_near_pairs_dense_matches_lsh_join(spark, monkeypatch):
     """The dense-regime path == the LSH equi-join path (identical
     candidate predicate + identical exact verify), on the sf0.001
-    embeddings with the wide-bucket query parameters."""
+    embeddings with the wide-bucket query parameters; also with a null
+    embedding planted, which both paths drop (the pairs equal the run
+    without it), and on an input of null embeddings only."""
     from apt_bron_re_spark.operators import similarity as S
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    dense = S.embedding_near_pairs(emb, dim=64, threshold=0.4,
-                                   n_tables=20, n_planes=4)
-    # force the join path by shrinking the dense budget
-    orig = S._DENSE_MAX_VECTORS
-    S._DENSE_MAX_VECTORS = 0
-    try:
-        joined = S.embedding_near_pairs(emb, dim=64, threshold=0.4,
-                                        n_tables=20, n_planes=4)
-    finally:
-        S._DENSE_MAX_VECTORS = orig
-    d, j = _rows(dense), _rows(joined)
-    assert d == j
+    top = emb.agg(F.max("vec_id")).first()[0]
+    nulls = spark.createDataFrame(
+        [(top + 1 + i, None, 0) for i in range(16)], emb.schema)
+
+    def both(vectors):
+        dense = _rows(S.embedding_near_pairs(vectors, dim=64, threshold=0.4,
+                                             n_tables=20, n_planes=4))
+        # force the join path by shrinking the dense budget
+        with monkeypatch.context() as m:
+            m.setattr(S, "_DENSE_MAX_VECTORS", 0)
+            joined = _rows(S.embedding_near_pairs(
+                vectors, dim=64, threshold=0.4, n_tables=20, n_planes=4))
+        assert dense == joined
+        return dense
+
+    d = both(emb)
     assert len(d) > 0                   # non-vacuous
+    assert both(emb.unionByName(nulls.limit(1))) == d
+    assert both(nulls) == []
 
 
 def test_ngram_jaccard_query_matches_array_exprs(spark):

@@ -1,11 +1,13 @@
 """End-to-end Spark checks for stages 1-2 against the pure-Python gold:
-the Spark mention stage must emit exactly the rows process_document emits
-when run directly (SURVEY.md §5 differential testing)."""
+the Spark mention UDF must emit exactly the rows process_document emits
+when run directly on the gold text (SURVEY.md §5 differential testing),
+and the extractor must reproduce that text byte for byte."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from apt_bron_re_spark.operators.doc_core import NerTagger, process_document
-from apt_bron_re_spark.operators.extract import extract_docs, extraction_parity
+from apt_bron_re_spark.operators.extract import extraction_parity
 from apt_bron_re_spark.operators.mention import (
     detect_mentions,
     mentions_view,
@@ -23,7 +25,7 @@ def pages(spark):
 
 @pytest.fixture(scope="module")
 def stage_df(spark, pages, layer_map):
-    docs = extract_docs(pages)
+    docs = pages.filter("lang = 'en'").select("url", "text")
     return detect_mentions(docs, layer_map).cache()
 
 
@@ -32,11 +34,18 @@ def test_extraction_byte_identical(spark, pages):
     assert bad == 0
 
 
-def test_extract_filters_lang(spark, pages):
-    docs = extract_docs(pages)
-    n_en = pages.filter("lang = 'en'").count()
-    assert docs.count() == n_en
-    assert docs.columns == ["url", "text"]
+def test_extract_filters_lang(spark, pages, layer_map, tmp_path):
+    """S4: the mention stage, extraction fused, reads only the 'en' pages
+    (scripts/explain_audit.py pins the filter pushed into the scan): one
+    doc or error row per 'en' page, and no row for any other page."""
+    from apt_bron_re_spark.plans.pipeline import Pipeline
+
+    rows = Pipeline(spark, layer_map, tmp_path)._mentions(pages)
+    en = [r.url for r in pages.filter("lang = 'en'").collect()]
+    assert 0 < len(en) < pages.count()
+    per_doc = rows.filter(F.col("rec_type").isin("doc", "error"))
+    assert sorted(r.url for r in per_doc.collect()) == sorted(en)
+    assert rows.filter(~F.col("url").isin(en)).count() == 0
 
 
 def gold_rows(layer_map):

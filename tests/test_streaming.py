@@ -4,7 +4,6 @@ the batch counts over the same pages (one definition, two modes)."""
 import pytest
 from pyspark.sql import functions as F
 
-from apt_bron_re_spark.operators.extract import extract_docs
 from apt_bron_re_spark.operators.mention import detect_mentions, mentions_view
 from apt_bron_re_spark.sources.pages import pages_df
 from apt_bron_re_spark.streaming.mention_stream import (
@@ -48,7 +47,8 @@ def test_streaming_counts_equal_batch(spark, layer_map, pages_path,
     got_counts = {r.category: r.n for r in got}
 
     pages = spark.read.parquet(pages_path)
-    batch = detect_mentions(extract_docs(pages), layer_map)
+    batch = detect_mentions(pages.filter("lang = 'en'"), layer_map,
+                            from_html=True)
     want = {r.category: r.n for r in
             mentions_view(batch).groupBy("category")
             .agg(F.count("*").alias("n")).collect()}
