@@ -529,9 +529,10 @@ def fold_urls(rows: DataFrame,
 def url_local(rows: DataFrame, partitions: int | None,
               fold: Callable[[pd.DataFrame], pd.DataFrame],
               schema: T.StructType) -> DataFrame:
-    """The url-clustered plan of the batch kernels (``link_rows``,
-    ``materialize.link_pairs`` over tables read back): ``fold_urls`` over
-    ``rows`` clustered and sorted by url.
+    """The url-clustered plan of the url-local kernels (``link_rows``,
+    ``materialize.link_pairs`` over tables read back, and the streaming
+    micro-batch kernel ``streaming.kg_stream.batch_partials``):
+    ``fold_urls`` over ``rows`` clustered and sorted by url.
 
     ``rows`` is hash-partitioned by url into ``partitions`` partitions
     (the session's shuffle partitions when None) — the kernel's only

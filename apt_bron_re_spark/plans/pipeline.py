@@ -51,11 +51,11 @@ stage was skipped (a resumed run), and per chunk in
 ``run_materialize_incremental``, it reads ``linked`` and
 ``links_residual`` back under one url exchange (``linking.url_local``).
 (The streaming micro-batch step, ``streaming.kg_stream.kg_batch_step``,
-runs the same mention, link and pair folds inside ONE row-local pass;
-only its plan differs, unsorted because Spark rejects a sort on a
-stream.)  The ``run_*_incremental`` stages share one chunk loop
-(``_run_chunks``): exactly-once per-partition writes plus per-bucket
-lineage, counted by each chunk's write.
+runs the same mention, link and pair folds one after another inside ONE
+url-local pass over the micro-batch's pages, under the same
+``linking.url_local`` plan.)  The ``run_*_incremental`` stages share one
+chunk loop (``_run_chunks``): exactly-once per-partition writes plus
+per-bucket lineage, counted by each chunk's write.
 """
 
 from __future__ import annotations

@@ -347,8 +347,10 @@ def main() -> None:
 
     # 22b. streaming micro-batch step: the partial aggregate kg_batch_step
     # writes.  Stages 2-5 are ONE url-clustered MapInPandas (extract,
-    # mentions, links, canon lookup, pairing) — no cached mention table,
-    # no join of any kind before the salted aggregate
+    # mentions, links, canon lookup, pairing) under linking.url_local: the
+    # url exchange, then a Sort ahead of the kernel (complete_urls needs
+    # url order) — no cached mention table, no join of any kind before the
+    # salted aggregate
     from apt_bron_re_spark.streaming.kg_stream import (batch_partials,
                                                        canon_as_dict)
     p = plan_of(batch_partials(pages_pq, layers,
@@ -356,7 +358,7 @@ def main() -> None:
     checks.append((
         "kg_batch_step (one url-clustered row-local pass + salted partial "
         "aggregate)", p,
-        ["MapInPandas", "REPARTITION_BY_COL"],
+        ["MapInPandas", "REPARTITION_BY_COL", "Sort ("],
         ["InMemoryTableScan", "BroadcastNestedLoopJoin", "ShuffledHashJoin"],
     ))
     shutil.rmtree(td, ignore_errors=True)

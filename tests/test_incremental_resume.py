@@ -4,7 +4,6 @@ single-shot run (SURVEY.md §5 resume test; north-star per-partition
 lineage)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from apt_bron_re_spark.plans.pipeline import Pipeline
 from apt_bron_re_spark.sources.pages import pages_df
@@ -192,9 +191,8 @@ def test_empty_residual_table_reads_back(spark, layer_map, tmp_path_factory):
     pages = pages_df(spark, N_PAGES)
     lm = {"tactic": layer_map["tactic"]}
 
-    stage2 = mention.detect_mentions(
-        pages.filter(F.col("lang") == "en").select("url", "html"), lm,
-        from_html=True)
+    stage2 = Pipeline(spark, lm, tmp_path_factory.mktemp("empty_stage2"),
+                      n_buckets=8)._mentions(pages)
     stats, df_ = bm25.bm25_global_stats(mention.mentions_view(stage2),
                                         mention.doc_lengths_view(stage2))
     merged, residual, _links = linking.link_stage(stage2, stats, df_, lm, 8)

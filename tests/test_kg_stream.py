@@ -1,15 +1,15 @@
 """Streaming KG construction must equal the batch pipeline.
 
-Two parity pins over the same multi-trigger stream of synthetic pages:
-
-* the foreachBatch micro-batch pipeline (stages 2-5, frozen BM25 globals,
-  merge-on-append partials) == single-shot batch pipeline, EXACTLY;
-* the live applyInPandasWithState triple view == batch
-  materialize_triples(evidence_rows(merged, residual, canon)), EXACTLY.
+The foreachBatch micro-batch pipeline (stages 2-5 under the batch
+url-clustered plan, merge-on-append partials) == the batch triples over
+a multi-trigger stream of synthetic pages whose link pass changes the
+triple set, EXACTLY.
 
 Plus an exactly-once check: replaying a micro-batch with the same
-batch_id leaves the merged result unchanged, parity on a stream whose
-urls repeat within one trigger, and the micro-batch step's job count.
+batch_id leaves the merged result unchanged; parity on a stream whose
+urls repeat within one trigger, also when a url's pages straddle Arrow
+batches; parity with a null-html page; and the micro-batch step's job
+count.
 """
 
 import pytest
@@ -17,15 +17,15 @@ from pyspark.sql import functions as F
 
 from apt_bron_re_spark.operators import bm25, linking, materialize, mention
 from apt_bron_re_spark.operators.canonicalize import canonical_map
-from apt_bron_re_spark.sources.pages import pages_df
+from apt_bron_re_spark.plans.pipeline import Pipeline
+from apt_bron_re_spark.sources.pages import generate_page, pages_df
 from apt_bron_re_spark.streaming.kg_stream import (
     canon_as_dict,
     kg_batch_step,
     merged_triples,
     run_kg_stream,
-    stream_evidence_pairs,
-    stream_triples_live,
 )
+from apt_bron_re_spark.streaming.mention_stream import PAGE_DDL
 
 N_PAGES = 40
 
@@ -40,11 +40,10 @@ def pages_path(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def batch_stage2(spark, layer_map, pages_path):
-    pages = spark.read.parquet(pages_path)
-    df = mention.detect_mentions(
-        pages.filter(F.col("lang") == "en").select("url", "html"),
-        layer_map, from_html=True)
+def batch_stage2(spark, layer_map, pages_path, tmp_path_factory):
+    """The mention stage exactly as ``Pipeline.run`` writes it."""
+    df = Pipeline(spark, layer_map, tmp_path_factory.mktemp("kg_stage2"),
+                  n_buckets=8)._mentions(spark.read.parquet(pages_path))
     df.persist().count()
     return df
 
@@ -81,7 +80,6 @@ def batch_linked(layer_map, batch_stage2, frozen_stats):
 
 
 def _stream_pages(spark, path):
-    from apt_bron_re_spark.streaming.mention_stream import PAGE_DDL
     return (spark.readStream.schema(PAGE_DDL).format("parquet")
             .option("maxFilesPerTrigger", 1).load(path))
 
@@ -94,11 +92,20 @@ def _canon_rows(df):
 
 
 def test_foreachbatch_pipeline_equals_batch(spark, layer_map, pages_path,
-                                            frozen_stats, batch_linked,
-                                            canon_df, tmp_path_factory):
+                                            batch_stage2, frozen_stats,
+                                            batch_linked, canon_df,
+                                            tmp_path_factory):
+    """Batch truth: triples over merged mentions + residual links, on a
+    corpus where the links really change the triple set (asserted)."""
     stats, df_ = frozen_stats
+    merged, residual = batch_linked
     want = materialize.materialize_triples(
-        materialize.evidence_rows(*batch_linked, canon_df))
+        materialize.evidence_rows(merged, residual, canon_df))
+    base = materialize.materialize_triples(materialize.evidence_rows(
+        mention.mentions_view(batch_stage2), residual.limit(0), canon_df))
+    # the corpus must exercise the link pass, else this test proves nothing
+    assert _canon_rows(want) != _canon_rows(base)
+    assert residual.count() > 0
 
     out = str(tmp_path_factory.mktemp("kg_stream_out"))
     ckpt = str(tmp_path_factory.mktemp("kg_stream_ckpt"))
@@ -158,107 +165,33 @@ def test_batch_step_runs_few_jobs(spark, layer_map, pages_path,
     assert 0 < len(started) <= 4, sorted(started)
 
 
-def _drain_live(spark, live, ckpt, name):
-    q = (live.writeStream.format("memory").queryName(name)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    final = {}
-    for r in spark.table(name).collect():
-        key = (r["subj"], r["pred"], r["obj"])
-        cur = final.get(key)
-        if cur is None or r["n_sources"] >= cur["n_sources"]:
-            final[key] = r
-    return final
-
-
-def test_live_view_with_links_equals_batch_linked_triples(
-        spark, layer_map, pages_path, batch_stage2, batch_linked, canon_df,
-        tmp_path_factory):
-    """Live view WITH the row-local L2-L5 link pass == batch triples over
-    merged mentions + residual links — on a corpus where the links really
-    change the triple set (asserted), the round-3 residual-link parity."""
-    merged, residual = batch_linked
-    want = materialize.materialize_triples(
-        materialize.evidence_rows(merged, residual, canon_df))
-    base = materialize.materialize_triples(materialize.evidence_rows(
-        mention.mentions_view(batch_stage2), residual.limit(0), canon_df))
-    # the corpus must exercise the link pass, else this test proves nothing
-    assert _canon_rows(want) != _canon_rows(base)
-    assert residual.count() > 0
-
-    canon_map_d = canon_as_dict(spark, layer_map)
-    pairs = stream_evidence_pairs(_stream_pages(spark, pages_path),
-                                  layer_map, canon_map_d)
-    live = stream_triples_live(pairs)
-    final = _drain_live(spark, live, str(tmp_path_factory.mktemp(
-        "live_link_ckpt")), "live_triples_linked")
-    got = sorted(
-        (k[0], k[1], k[2], tuple(r["sources"]), r["n_sources"],
-         r["justification"], r["score"])
-        for k, r in final.items())
-    assert got == _canon_rows(want)
-    assert all(r["replays_detected"] == 0 for r in final.values())
-
-
-def test_live_view_replay_guard(spark, layer_map, pages_path,
-                                tmp_path_factory):
-    """A url replayed across micro-batches violates the one-batch-per-url
-    contract: the bounded state detects it (the url is in the k-smallest
-    sample), surfaces replays_detected > 0, and does NOT double-count
-    n_sources."""
-    from apt_bron_re_spark.plans.pipeline import Pipeline
-
-    dup_dir = str(tmp_path_factory.mktemp("kg_pages_dup") / "p")
-    pages = spark.read.parquet(pages_path).limit(8)
-    # the same 8 urls in TWO files -> two triggers see the same urls
-    pages.coalesce(1).write.mode("overwrite").parquet(dup_dir)
-    pages.coalesce(1).write.mode("append").parquet(dup_dir)
-
-    canon_map_d = canon_as_dict(spark, layer_map)
-    pairs = stream_evidence_pairs(_stream_pages(spark, dup_dir),
-                                  layer_map, canon_map_d)
-    live = stream_triples_live(pairs)
-    final = _drain_live(spark, live, str(tmp_path_factory.mktemp(
-        "live_dup_ckpt")), "live_triples_dup")
-
-    # the linked batch triples of the same 8 pages (one file's worth)
-    once = spark.read.parquet(dup_dir).dropDuplicates(["url"])
-    want = Pipeline(spark, layer_map,
-                    str(tmp_path_factory.mktemp("kg_replay_batch")),
-                    n_buckets=8).run(once, resume=False)
-    want_n = {(r["subj"], r["pred"], r["obj"]): r["n_sources"]
-              for r in want.collect()}
-    # no double counting despite every url arriving twice...
-    assert {k: r["n_sources"] for k, r in final.items()} == want_n
-    # ...and the violation is surfaced
-    assert any(r["replays_detected"] > 0 for r in final.values())
-
-
-def test_duplicate_urls_within_a_trigger_equal_batch(
-        spark, layer_map, canon_df, tmp_path_factory):
-    """Pages 50-59 reuse the urls of pages 0-9 with other content, in the
-    same trigger.  Batch merges every page row of a url before linking
-    and pairing; the micro-batch pipeline and the live view must too."""
-    from apt_bron_re_spark.plans.pipeline import Pipeline
-    from apt_bron_re_spark.sources.pages import generate_page
-    from apt_bron_re_spark.streaming.mention_stream import PAGE_DDL
-
+@pytest.fixture(scope="module")
+def repeated_url_pages(spark, layer_map, tmp_path_factory):
+    """Pages 50-59 reuse the urls of pages 0-9 with other content, and
+    ``Pipeline.run``'s triples over them."""
     rows = [generate_page(i, 1) for i in range(60)]
     for i in range(50, 60):
         rows[i]["url"] = rows[i - 50]["url"]
     cols = [c.split()[0] for c in PAGE_DDL.split(", ")]
     pages = spark.createDataFrame([tuple(r[c] for c in cols) for r in rows],
                                   PAGE_DDL)
+    want = _canon_rows(Pipeline(
+        spark, layer_map, str(tmp_path_factory.mktemp("kg_dup_batch")),
+        n_buckets=8).run(pages, resume=False))
+    return rows, pages, want
+
+
+def test_duplicate_urls_within_a_trigger_equal_batch(
+        spark, layer_map, canon_df, repeated_url_pages, tmp_path_factory):
+    """The repeated urls arrive in the same trigger.  Batch merges every
+    page row of a url before linking and pairing; the micro-batch
+    pipeline must too."""
+    rows, pages, want = repeated_url_pages
     # two files, two triggers; every repeated url shares the first one
     path = str(tmp_path_factory.mktemp("kg_pages_dup_urls") / "p")
     first = F.col("url").isin([r["url"] for r in rows[:30]])
     pages.filter(first).coalesce(1).write.parquet(path)
     pages.filter(~first).coalesce(1).write.mode("append").parquet(path)
-
-    want = _canon_rows(Pipeline(
-        spark, layer_map, str(tmp_path_factory.mktemp("kg_dup_batch")),
-        n_buckets=8).run(pages, resume=False))
 
     out = str(tmp_path_factory.mktemp("kg_dup_out"))
     q = run_kg_stream(_stream_pages(spark, path), layer_map, None, None,
@@ -269,16 +202,24 @@ def test_duplicate_urls_within_a_trigger_equal_batch(
     assert spark.read.parquet(out).select("batch_id").distinct().count() == 2
     assert _canon_rows(merged_triples(spark, out)) == want
 
-    pairs = stream_evidence_pairs(_stream_pages(spark, path), layer_map,
-                                  canon_as_dict(spark, layer_map))
-    final = _drain_live(spark, stream_triples_live(pairs), str(
-        tmp_path_factory.mktemp("live_dup_urls_ckpt")), "live_dup_urls")
-    got = sorted(
-        (k[0], k[1], k[2], tuple(r["sources"]), r["n_sources"],
-         r["justification"], r["score"])
-        for k, r in final.items())
-    assert got == want
-    assert all(r["replays_detected"] == 0 for r in final.values())
+
+def test_repeated_urls_straddling_arrow_batches_equal_batch(
+        spark, layer_map, repeated_url_pages, tmp_path_factory):
+    """With 3-row Arrow batches a url's pages straddle batch boundaries
+    and reach the fold only through ``linking.complete_urls``' carry: the
+    merged triples of the repeated-url micro-batch still equal
+    ``Pipeline.run``'s."""
+    _rows, pages, want = repeated_url_pages
+    out = str(tmp_path_factory.mktemp("kg_carry_out"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        kg_batch_step(pages, 0, layer_map, canon_as_dict(spark, layer_map),
+                      out)
+    finally:
+        spark.conf.set(key, prior)
+    assert _canon_rows(merged_triples(spark, out)) == want
 
 
 def test_null_html_page_in_a_micro_batch_equals_batch(
@@ -288,8 +229,6 @@ def test_null_html_page_in_a_micro_batch_equals_batch(
     the batch link stage drops it, and the merged triples equal
     ``Pipeline.run``'s over the same pages — the stream twin of
     test_pipeline.py::test_null_html_page_is_one_error_row."""
-    from apt_bron_re_spark.plans.pipeline import Pipeline
-
     pages = pages_df(spark, 20)
     with_null = pages.unionByName(spark.createDataFrame(
         [("http://example.invalid/null-html", None, None, None, "en")],

@@ -18,6 +18,7 @@ from apt_bron_re_spark.operators.linking import (
     spark_round,
     variant_links,
 )
+from apt_bron_re_spark.plans.pipeline import Pipeline
 
 
 @pytest.fixture()
@@ -138,10 +139,10 @@ def _rows(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
-def _assert_kernel_equals_composition(spark, pages, layer_map, n=8):
-    stage2 = mention.detect_mentions(
-        pages.filter(F.col("lang") == "en").select("url", "html"),
-        layer_map, from_html=True).persist()
+def _assert_kernel_equals_composition(spark, pages, layer_map, base, n=8):
+    # the mention stage exactly as Pipeline.run writes it, minus pbucket
+    stage2 = Pipeline(spark, layer_map, base, n_buckets=n)._mentions(
+        pages).drop("pbucket").persist()
     try:
         m = mention.mentions_view(stage2)
         dls = mention.doc_lengths_view(stage2)
@@ -166,7 +167,8 @@ def _assert_kernel_equals_composition(spark, pages, layer_map, n=8):
         stage2.unpersist()
 
 
-def test_kernel_equals_composition_on_repeated_urls(spark, layer_map):
+def test_kernel_equals_composition_on_repeated_urls(spark, layer_map,
+                                                   tmp_path):
     """Pages 50-59 reuse the urls of pages 0-9 with other content: the
     kernel must merge every row of a url before linking, and emit a
     scored row once per doc row of its url, as the dl join does."""
@@ -179,10 +181,10 @@ def test_kernel_equals_composition_on_repeated_urls(spark, layer_map):
     cols = [c.split()[0] for c in PAGE_DDL.split(", ")]
     pages = spark.createDataFrame(
         [tuple(r[c] for c in cols) for r in rows], PAGE_DDL).repartition(3)
-    _assert_kernel_equals_composition(spark, pages, layer_map)
+    _assert_kernel_equals_composition(spark, pages, layer_map, tmp_path)
 
 
-def test_kernel_equals_composition_on_corpus(spark, layer_map):
+def test_kernel_equals_composition_on_corpus(spark, layer_map, tmp_path):
     from apt_bron_re_spark.sources.pages import pages_df
     _assert_kernel_equals_composition(spark, pages_df(spark, 200),
-                                      layer_map, n=32)
+                                      layer_map, tmp_path, n=32)

@@ -165,14 +165,11 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
     read-back)."""
     from contextlib import nullcontext
 
-    from apt_bron_re_spark.operators import mention
     from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("link_jobs"),
                     n_buckets=8)
-    pipe._write(pipe._bucketed(mention.detect_mentions(
-        pages_df(spark, N_PAGES).select("url", "html"), layer_map,
-        from_html=True)), "mentions")
+    pipe._write(pipe._mentions(pages_df(spark, N_PAGES)), "mentions")
     stage2 = pipe._read("mentions")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
