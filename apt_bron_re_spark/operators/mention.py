@@ -7,9 +7,10 @@ re-expression of reference basic.py:181-301).  Doing NER scoring and
 residue filtering inside the same pass costs zero extra shuffles — the only
 wide operation this stage triggers downstream is whatever consumes it.
 
-Output is a single union-shaped DataFrame (``rec_type`` ∈ {mention,
+Output is a single union-shaped DataFrame (``rec_type`` ∈ {doc, mention,
 residue, error}) so the stage materializes exactly once; the logical
 outputs are cheap filters over the stage table (see plans/pipeline.py).
+A ``doc`` row carries the document's BM25 length in ``index``.
 ``error`` rows carry per-document failures (the reference's catch-and-log,
 basic.py:300-301) so one malformed page never fails a task at scale.
 
@@ -54,89 +55,60 @@ MENTION_SCHEMA = T.StructType([
 ])
 
 
+# process_document's entity keys, in their MENTION_SCHEMA column order
+_ENT_KEYS = ("name", "original_id", "value", "index", "alias",
+             "software_type", "product", "vendor", "version")
+
+
+def _row(url, rec_type, category=None, name=None, original_id=None,
+         value=None, index=None, alias=None, software_type=None,
+         product=None, vendor=None, version=None, ner_score=None,
+         sentence=None, bucket=None) -> tuple:
+    """One stage-table row, in ``MENTION_SCHEMA`` order."""
+    return (url, rec_type, category, name, original_id, value, index, alias,
+            software_type, product, vendor, version, ner_score, sentence,
+            bucket)
+
+
 def mention_rows(pdf: pd.DataFrame, catalog: CompiledCatalog,
-                 tagger: NerTagger, from_html: bool = False,
-                 event_time_col: str | None = None) -> list[dict]:
-    """The stage-table rows of one batch of docs(url, text), or of
-    pages(url, html) when ``from_html``: per document one ``doc`` row,
-    its ``mention`` and ``residue`` rows, or one ``error`` row when
-    extraction or ``process_document`` raises.  ``event_time_col`` is
-    carried onto every row.  ``detect_mentions`` and the streaming kernel
-    (streaming/kg_stream.py) build their rows here."""
-    rows: list[dict] = []
-    ets = pdf[event_time_col] if event_time_col else None
+                 tagger: NerTagger, from_html: bool = False) -> pd.DataFrame:
+    """The stage-table frame (``MENTION_SCHEMA`` columns) of one batch of
+    docs(url, text), or of pages(url, html) when ``from_html``: per
+    document one ``doc`` row, its ``mention`` and ``residue`` rows, or one
+    ``error`` row when extraction or ``process_document`` raises.
+    ``detect_mentions`` and the streaming kernel (streaming/kg_stream.py)
+    build their rows here."""
+    rows: list[tuple] = []
     payload = pdf["html"] if from_html else pdf["text"]
-    for i, (url, text) in enumerate(zip(pdf["url"], payload)):
-        extra = {event_time_col: ets.iloc[i]} if event_time_col else {}
+    for url, text in zip(pdf["url"], payload):
         try:
             if from_html:
                 text = extract_text(text)
             results, residue, dl = process_document(text, catalog, tagger)
         except Exception as exc:  # reference basic.py:300-301
-            rows.append({
-                **extra, "url": url, "rec_type": "error",
-                "category": None, "name": None, "original_id": None,
-                "value": f"{type(exc).__name__}: {exc}"[:500],
-                "index": None, "alias": None, "software_type": None,
-                "product": None, "vendor": None, "version": None,
-                "ner_score": None, "sentence": None, "bucket": None,
-            })
+            rows.append(_row(url, "error",
+                             value=f"{type(exc).__name__}: {exc}"[:500]))
             continue
         # one 'doc' row per document carries dl (BM25 doc length,
         # reference statistics.py:28) — no second pass over text
-        rows.append({
-            **extra, "url": url, "rec_type": "doc",
-            "category": None, "name": None, "original_id": None,
-            "value": None, "index": dl, "alias": None,
-            "software_type": None, "product": None, "vendor": None,
-            "version": None, "ner_score": None, "sentence": None,
-            "bucket": None,
-        })
+        rows.append(_row(url, "doc", index=dl))
         for category, entries in results.items():
             for ent in entries:
-                rows.append({
-                    **extra,
-                    "url": url,
-                    "rec_type": "mention",
-                    "category": category,
-                    "name": ent.get("name"),
-                    "original_id": ent.get("original_id"),
-                    "value": ent.get("value"),
-                    "index": ent.get("index"),
-                    "alias": ent.get("alias"),
-                    "software_type": ent.get("software_type"),
-                    "product": ent.get("product"),
-                    "vendor": ent.get("vendor"),
-                    "version": ent.get("version"),
-                    "ner_score": float(ent.get("NER_score", 0.0)),
-                    "sentence": ent.get("sentence"),
-                    "bucket": None,
-                })
+                rows.append(_row(
+                    url, "mention", category, *map(ent.get, _ENT_KEYS),
+                    ner_score=float(ent.get("NER_score", 0.0)),
+                    sentence=ent.get("sentence")))
         for bucket, values in residue.items():
             for val in values:
-                rows.append({
-                    **extra,
-                    "url": url,
-                    "rec_type": "residue",
-                    "category": None, "name": None,
-                    "original_id": None, "value": val,
-                    "index": None, "alias": None,
-                    "software_type": None, "product": None,
-                    "vendor": None, "version": None,
-                    "ner_score": None, "sentence": None,
-                    "bucket": bucket,
-                })
-    return rows
+                rows.append(_row(url, "residue", value=val, bucket=bucket))
+    return pd.DataFrame(rows, columns=MENTION_SCHEMA.names)
 
 
 def detect_mentions(docs: DataFrame,
                     layer_map: dict[str, list[dict]],
-                    event_time_col: str | None = None,
                     from_html: bool = False) -> DataFrame:
     """docs(url, text) -> union table of doc + mention + residue rows.
 
-    ``event_time_col`` (streaming): a timestamp column carried through the
-    UDF so windowed aggregations downstream need no stream-stream join.
     ``from_html``: fuse E1 into this pass — input is pages(url, html) and
     the byte-identical ``extract_text`` runs inside the same UDF, so no
     text table is materialized.  The pipeline's mention stage runs this
@@ -146,22 +118,12 @@ def detect_mentions(docs: DataFrame,
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
 
-    schema = MENTION_SCHEMA
-    in_cols = ["url", "html" if from_html else "text"]
-    if event_time_col:
-        schema = T.StructType(
-            MENTION_SCHEMA.fields
-            + [T.StructField(event_time_col, T.TimestampType(), True)])
-        in_cols.append(event_time_col)
-    out_cols = [f.name for f in schema.fields]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame(
-                mention_rows(pdf, catalog, tagger, from_html, event_time_col),
-                columns=out_cols)
+            yield mention_rows(pdf, catalog, tagger, from_html)
 
-    return docs.select(*in_cols).mapInPandas(run, schema)
+    return (docs.select("url", "html" if from_html else "text")
+            .mapInPandas(run, MENTION_SCHEMA))
 
 
 def doc_lengths_view(stage: DataFrame) -> DataFrame:

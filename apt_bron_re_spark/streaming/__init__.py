@@ -1,1 +1,1 @@
-"""Structured Streaming variants of the batch operators."""
+"""The streaming KG pipeline: stages 2-5 over arriving pages (kg_stream)."""

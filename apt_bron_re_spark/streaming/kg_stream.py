@@ -41,21 +41,15 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog.build import compile_catalog
 from ..config import LANG
 from ..operators import materialize
-from ..operators.canonicalize import canonical_map, collect_canon
+from ..operators.canonicalize import collect_canon
 from ..operators.doc_core import NerTagger
 from ..operators.linking import RowLinker, _link_urls, url_local
-from ..operators.mention import MENTION_SCHEMA, mention_rows
-
-
-def canon_as_dict(spark: SparkSession,
-                  layer_map: dict[str, list[dict]]) -> dict:
-    """{(label, original_id): canon_id} — the catalog-sized canonical map
-    (stage 4 output), collected once for closure broadcast."""
-    return collect_canon(canonical_map(spark, layer_map))
+from ..operators.mention import mention_rows
 
 
 def batch_partials(pages_batch: DataFrame,
@@ -63,19 +57,18 @@ def batch_partials(pages_batch: DataFrame,
                    canon_map: dict) -> DataFrame:
     """The PARTIAL triple aggregate of one micro-batch of pages: the
     kernel (module docstring) against the frozen catalog and
-    ``canon_map`` (``canon_as_dict``) under ``linking.url_local``, at most
-    one ``materialize.PAIR_SCHEMA`` row per (triple, url), then
-    ``materialize.partial_triples_of_pairs``.  Every page of a url is
-    merged before linking; a page that fails extraction becomes an error
-    row, dropped before linking as the batch link stage drops it."""
+    ``canon_map`` (``collect_canon`` of the canon table) under
+    ``linking.url_local``, at most one ``materialize.PAIR_SCHEMA`` row per
+    (triple, url), then ``materialize.partial_triples_of_pairs``.  Every
+    page of a url is merged before linking; a page that fails extraction
+    becomes an error row, dropped before linking as the batch link stage
+    drops it."""
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
     linker = RowLinker(layer_map)
 
     def fold(pages: pd.DataFrame) -> pd.DataFrame:
-        rows = pd.DataFrame(
-            mention_rows(pages, catalog, tagger, from_html=True),
-            columns=MENTION_SCHEMA.names)
+        rows = mention_rows(pages, catalog, tagger, from_html=True)
         rows = rows[rows["rec_type"] != "error"].assign(bm25_key=None)
         return materialize._pair_urls(materialize.link_evidence(
             _link_urls(linker, rows), canon_map))
@@ -132,6 +125,10 @@ def run_kg_stream(pages_stream: DataFrame,
 
 def merged_triples(spark: SparkSession, out_path: str) -> DataFrame:
     """Merge the streamed per-batch partials into final triples —
-    identical output to the single-shot batch materialize (tested)."""
-    partials = spark.read.parquet(out_path).drop("batch_id")
+    identical output to the single-shot batch materialize (tested).  The
+    partials are read with their schema (no Spark job), so a stream whose
+    micro-batches wrote no row merges to no triples."""
+    schema = materialize.partial_triples_of_pairs(spark.createDataFrame(
+        [], materialize.PAIR_SCHEMA)).schema.add("batch_id", T.IntegerType())
+    partials = spark.read.schema(schema).parquet(out_path).drop("batch_id")
     return materialize.merge_partial_triples(partials)

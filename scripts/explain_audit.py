@@ -351,10 +351,8 @@ def main() -> None:
     # url exchange, then a Sort ahead of the kernel (complete_urls needs
     # url order) — no cached mention table, no join of any kind before the
     # salted aggregate
-    from apt_bron_re_spark.streaming.kg_stream import (batch_partials,
-                                                       canon_as_dict)
-    p = plan_of(batch_partials(pages_pq, layers,
-                               canon_as_dict(spark, layers)))
+    from apt_bron_re_spark.streaming.kg_stream import batch_partials
+    p = plan_of(batch_partials(pages_pq, layers, canon_map))
     checks.append((
         "kg_batch_step (one url-clustered row-local pass + salted partial "
         "aggregate)", p,

@@ -8,19 +8,19 @@ triple set, EXACTLY.
 Plus an exactly-once check: replaying a micro-batch with the same
 batch_id leaves the merged result unchanged; parity on a stream whose
 urls repeat within one trigger, also when a url's pages straddle Arrow
-batches; parity with a null-html page; and the micro-batch step's job
-count.
+batches; parity with a null-html page and with a stream that writes no
+partial; and the micro-batch step's job count.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from apt_bron_re_spark.operators import bm25, linking, materialize, mention
-from apt_bron_re_spark.operators.canonicalize import canonical_map
+from apt_bron_re_spark.operators.canonicalize import (canonical_map,
+                                                       collect_canon)
 from apt_bron_re_spark.plans.pipeline import Pipeline
 from apt_bron_re_spark.sources.pages import generate_page, pages_df
 from apt_bron_re_spark.streaming.kg_stream import (
-    canon_as_dict,
     kg_batch_step,
     merged_triples,
     run_kg_stream,
@@ -123,14 +123,14 @@ def test_foreachbatch_pipeline_equals_batch(spark, layer_map, pages_path,
 
 
 def test_batch_step_replay_is_idempotent(spark, layer_map, pages_path,
-                                         tmp_path_factory):
+                                         canon_df, tmp_path_factory):
     """foreachBatch replay semantics: running the SAME micro-batch with the
     same batch_id twice rewrites its partition (dynamic partition
     overwrite) instead of appending duplicates."""
     out = str(tmp_path_factory.mktemp("kg_replay_out"))
     micro = spark.read.parquet(pages_path).filter(
         F.pmod(F.crc32("url"), F.lit(2)) == 0)
-    canon_map = canon_as_dict(spark, layer_map)
+    canon_map = collect_canon(canon_df)
 
     kg_batch_step(micro, 7, layer_map, canon_map, out)
     once = _canon_rows(merged_triples(spark, out))
@@ -141,7 +141,7 @@ def test_batch_step_replay_is_idempotent(spark, layer_map, pages_path,
     assert spark.read.parquet(out).count() == n_once
 
 
-def test_batch_step_runs_few_jobs(spark, layer_map, pages_path,
+def test_batch_step_runs_few_jobs(spark, layer_map, pages_path, canon_df,
                                   tmp_path_factory):
     """One micro-batch step is one row-local pass plus the partial
     aggregate: at most 4 Spark jobs (under AQE, one per exchange, plus
@@ -150,7 +150,7 @@ def test_batch_step_runs_few_jobs(spark, layer_map, pages_path,
     out = str(tmp_path_factory.mktemp("kg_jobs_out"))
     micro = spark.read.parquet(pages_path).filter(
         F.pmod(F.crc32("url"), F.lit(3)) == 0)
-    canon_map = canon_as_dict(spark, layer_map)
+    canon_map = collect_canon(canon_df)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "kg_batch_step_jobs"
@@ -204,7 +204,7 @@ def test_duplicate_urls_within_a_trigger_equal_batch(
 
 
 def test_repeated_urls_straddling_arrow_batches_equal_batch(
-        spark, layer_map, repeated_url_pages, tmp_path_factory):
+        spark, layer_map, canon_df, repeated_url_pages, tmp_path_factory):
     """With 3-row Arrow batches a url's pages straddle batch boundaries
     and reach the fold only through ``linking.complete_urls``' carry: the
     merged triples of the repeated-url micro-batch still equal
@@ -215,8 +215,7 @@ def test_repeated_urls_straddling_arrow_batches_equal_batch(
     prior = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
-        kg_batch_step(pages, 0, layer_map, canon_as_dict(spark, layer_map),
-                      out)
+        kg_batch_step(pages, 0, layer_map, collect_canon(canon_df), out)
     finally:
         spark.conf.set(key, prior)
     assert _canon_rows(merged_triples(spark, out)) == want
@@ -247,6 +246,30 @@ def test_null_html_page_in_a_micro_batch_equals_batch(
                       available_now=True)
     q.awaitTermination(600)
     assert spark.read.parquet(out).select("batch_id").distinct().count() == 1
+    assert _canon_rows(merged_triples(spark, out)) == want
+
+
+def test_stream_without_partials_equals_batch(spark, layer_map, canon_df,
+                                             tmp_path_factory):
+    """A stream whose pages yield no evidence pair (here: no 'en' page)
+    writes no partial file; its merged triples still equal
+    ``Pipeline.run``'s over the same pages, which are none."""
+    pages = pages_df(spark, 10).withColumn("lang", F.lit("de"))
+    path = str(tmp_path_factory.mktemp("kg_pages_no_en") / "p")
+    pages.coalesce(1).write.parquet(path)
+
+    want = _canon_rows(Pipeline(
+        spark, layer_map, str(tmp_path_factory.mktemp("kg_no_en_batch")),
+        n_buckets=8).run(pages, resume=False))
+    assert want == []
+
+    out = str(tmp_path_factory.mktemp("kg_no_en_out") / "out")
+    q = run_kg_stream(_stream_pages(spark, path), layer_map, None, None,
+                      canon_df, out,
+                      str(tmp_path_factory.mktemp("kg_no_en_ckpt")),
+                      available_now=True)
+    q.awaitTermination(600)
+    assert q.exception() is None
     assert _canon_rows(merged_triples(spark, out)) == want
 
 

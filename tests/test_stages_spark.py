@@ -3,15 +3,17 @@ the Spark mention UDF must emit exactly the rows process_document emits
 when run directly on the gold text (SURVEY.md §5 differential testing),
 and the extractor must reproduce that text byte for byte."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from apt_bron_re_spark.operators.doc_core import NerTagger, process_document
 from apt_bron_re_spark.operators.extract import extraction_parity
 from apt_bron_re_spark.operators.mention import (
+    MENTION_SCHEMA,
     detect_mentions,
     mentions_view,
-    residue_view,
 )
 from apt_bron_re_spark.sources.pages import generate_pages, pages_df
 
@@ -48,42 +50,61 @@ def test_extract_filters_lang(spark, pages, layer_map, tmp_path):
     assert rows.filter(~F.col("url").isin(en)).count() == 0
 
 
-def gold_rows(layer_map):
+def gold_rows(layer_map) -> Counter:
+    """The stage rows ``process_document`` gives on the gold text of each
+    'en' page, every ``MENTION_SCHEMA`` column built by name: one ``doc``
+    row whose ``index`` is the document length, its ``mention`` rows
+    (``bucket`` null) and its ``residue`` rows."""
     from apt_bron_re_spark.catalog.build import compile_catalog
     catalog = compile_catalog(layer_map)
     tagger = NerTagger(layer_map)
-    mention_rows = set()
-    residue_rows = set()
-    for i, page in enumerate(generate_pages(N_PAGES)):
+    rows = Counter()
+
+    def add(**cols):
+        rows[tuple(cols.get(c) for c in MENTION_SCHEMA.names)] += 1
+
+    for page in generate_pages(N_PAGES):
         if page["lang"] != "en":
             continue
-        results, residue, _dl = process_document(page["text"], catalog, tagger)
+        url = page["url"]
+        results, residue, dl = process_document(page["text"], catalog, tagger)
+        add(url=url, rec_type="doc", index=dl)
         for category, entries in results.items():
             for e in entries:
-                mention_rows.add((
-                    page["url"], category, e.get("name"), e.get("original_id"),
-                    e.get("value"), e.get("index"), e.get("alias"),
-                    float(e.get("NER_score", 0.0)), e.get("sentence"),
-                ))
+                add(url=url, rec_type="mention", category=category,
+                    name=e.get("name"), original_id=e.get("original_id"),
+                    value=e.get("value"), index=e.get("index"),
+                    alias=e.get("alias"),
+                    software_type=e.get("software_type"),
+                    product=e.get("product"), vendor=e.get("vendor"),
+                    version=e.get("version"),
+                    ner_score=float(e.get("NER_score", 0.0)),
+                    sentence=e.get("sentence"))
         for bucket, values in residue.items():
             for v in values:
-                residue_rows.add((page["url"], bucket, v))
-    return mention_rows, residue_rows
+                add(url=url, rec_type="residue", value=v, bucket=bucket)
+    return rows
 
 
-def test_mentions_match_pure_python_gold(spark, stage_df, layer_map):
-    gold_mentions, gold_residue = gold_rows(layer_map)
+def test_mentions_match_pure_python_gold(spark, pages, stage_df, layer_map,
+                                         tmp_path):
+    """Both inputs of the mention stage emit exactly the gold rows, on
+    every column: the docs mode over the gold text, and the html mode the
+    pipeline runs (``Pipeline._mentions``, extraction fused)."""
+    from apt_bron_re_spark.plans.pipeline import Pipeline
 
-    got_mentions = {
-        (r.url, r.category, r.name, r.original_id, r.value, r["index"],
-         r.alias, r.ner_score, r.sentence)
-        for r in mentions_view(stage_df).collect()
-    }
-    assert got_mentions == gold_mentions
-
-    got_residue = {(r.url, r.bucket, r.value)
-                   for r in residue_view(stage_df).collect()}
-    assert got_residue == gold_residue
+    gold = gold_rows(layer_map)
+    assert {key[1] for key in gold} == {"doc", "mention", "residue"}
+    # the corpus fills every mention column but bucket, so a misplaced
+    # column cannot pass
+    mentions = [key for key in gold if key[1] == "mention"]
+    assert [c for i, c in enumerate(MENTION_SCHEMA.names)
+            if all(key[i] is None for key in mentions)] == ["bucket"]
+    piped = Pipeline(spark, layer_map, tmp_path)._mentions(pages)
+    for stage in (stage_df, piped.drop("pbucket")):
+        assert stage.columns == MENTION_SCHEMA.names
+        got = Counter(tuple(r) for r in stage.collect())
+        assert got == gold
 
 
 def test_cpe_unversioned_dead_code_preserved(stage_df):
