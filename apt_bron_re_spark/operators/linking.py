@@ -538,8 +538,11 @@ def url_local(rows: DataFrame, partitions: int | None,
     (the session's shuffle partitions when None) — the kernel's only
     exchange, which puts every row of a url in one partition.  The
     partitions are coalesced to at most one per core: every Python task
-    pays a fixed start-up cost, and coalescing keeps each hash partition,
-    hence each url, inside one task.  Each partition is sorted by url."""
+    pays a fixed start-up cost (a no-op task takes about 0.065 s of slot
+    time on a 4-vCPU host under the session's worker daemon, 0.18-0.23 s
+    under pyspark's; ``scripts/probe_python_tasks.py``), and coalescing
+    keeps each hash partition, hence each url, inside one task.  Each
+    partition is sorted by url."""
     cores = rows.sparkSession.sparkContext.defaultParallelism
     by_url = (rows.repartition(partitions, F.col("url")) if partitions
               else rows.repartition(F.col("url")))

@@ -54,6 +54,18 @@ def get_spark(app_name: str = "apt_bron_re_spark",
         # single-threaded driver work — a data-sized build side serializes
         # the whole stage.  Only dimension tables should broadcast.
     )
+    # pyspark's workers call importlib.invalidate_caches() on every task,
+    # which re-reads each archive on their path (pyspark.zip, the py4j zip
+    # and the spark-core jar): the daemon in worker_daemon.py starts
+    # without them.  The daemon imports this package at start, so that
+    # needs the package on a directory; a package shipped as a zip
+    # (--py-files) keeps pyspark's daemon.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if os.path.isdir(root):
+        builder = (builder
+                   .config("spark.python.daemon.module",
+                           f"{__package__}.worker_daemon")
+                   .config("spark.executorEnv.PYTHONPATH", root))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -38,6 +38,8 @@ UDF closure (catalog-sized, broadcast semantics).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -127,8 +129,11 @@ def merged_triples(spark: SparkSession, out_path: str) -> DataFrame:
     """Merge the streamed per-batch partials into final triples —
     identical output to the single-shot batch materialize (tested).  The
     partials are read with their schema (no Spark job), so a stream whose
-    micro-batches wrote no row merges to no triples."""
+    micro-batches wrote no row merges to no triples, and a stream that ran
+    no micro-batch (``out_path`` never written) merges none either."""
     schema = materialize.partial_triples_of_pairs(spark.createDataFrame(
         [], materialize.PAIR_SCHEMA)).schema.add("batch_id", T.IntegerType())
-    partials = spark.read.schema(schema).parquet(out_path).drop("batch_id")
-    return materialize.merge_partial_triples(partials)
+    partials = (spark.read.schema(schema).parquet(out_path)
+                if os.path.exists(out_path)
+                else spark.createDataFrame([], schema))
+    return materialize.merge_partial_triples(partials.drop("batch_id"))

@@ -8,8 +8,9 @@ triple set, EXACTLY.
 Plus an exactly-once check: replaying a micro-batch with the same
 batch_id leaves the merged result unchanged; parity on a stream whose
 urls repeat within one trigger, also when a url's pages straddle Arrow
-batches; parity with a null-html page and with a stream that writes no
-partial; and the micro-batch step's job count.
+batches; parity with a null-html page, with a stream that writes no
+partial and with one that runs no micro-batch; and the micro-batch step's
+job count.
 """
 
 import pytest
@@ -267,6 +268,28 @@ def test_stream_without_partials_equals_batch(spark, layer_map, canon_df,
     q = run_kg_stream(_stream_pages(spark, path), layer_map, None, None,
                       canon_df, out,
                       str(tmp_path_factory.mktemp("kg_no_en_ckpt")),
+                      available_now=True)
+    q.awaitTermination(600)
+    assert q.exception() is None
+    assert _canon_rows(merged_triples(spark, out)) == want
+
+
+def test_stream_without_micro_batches_equals_batch(spark, layer_map,
+                                                   canon_df,
+                                                   tmp_path_factory):
+    """A stream over an empty page directory runs no micro-batch, so its
+    ``out_path`` is never written; its merged triples still equal
+    ``Pipeline.run``'s over no pages, which are none."""
+    want = _canon_rows(Pipeline(
+        spark, layer_map, str(tmp_path_factory.mktemp("kg_empty_batch")),
+        n_buckets=8).run(spark.createDataFrame([], PAGE_DDL), resume=False))
+    assert want == []
+
+    out = str(tmp_path_factory.mktemp("kg_empty_out") / "out")
+    q = run_kg_stream(_stream_pages(spark,
+                                    str(tmp_path_factory.mktemp("kg_empty"))),
+                      layer_map, None, None, canon_df, out,
+                      str(tmp_path_factory.mktemp("kg_empty_ckpt")),
                       available_now=True)
     q.awaitTermination(600)
     assert q.exception() is None

@@ -5,7 +5,8 @@ Packages ``dist/apt_bron_re_spark.zip`` with scripts/make_pyfiles.sh and
 runs the full 5-stage pipeline in a FRESH spark-submit process whose only
 access to the engine is the zip (the job asserts /root/repo is absent
 from sys.path), proving the package is self-contained — no repo-relative
-imports, data files, or cwd assumptions.
+imports, data files, or cwd assumptions.  Such a session keeps pyspark's
+worker daemon (the job asserts ``spark.python.daemon.module`` is unset).
 """
 
 import shutil
@@ -27,6 +28,8 @@ from apt_bron_re_spark.plans.pipeline import Pipeline
 from apt_bron_re_spark.sources.pages import pages_df
 
 spark = get_spark("pyfiles_job", master="local[2]", shuffle_partitions=4)
+# a package imported from a zip cannot start a worker daemon of its own
+assert spark.sparkContext.getConf().get("spark.python.daemon.module") is None
 td = tempfile.mkdtemp(prefix="pyfiles_")
 pages = pages_df(spark, 500, partitions=4)
 pipe = Pipeline(spark, build_layer_map(), os.path.join(td, "st"),
