@@ -632,12 +632,9 @@ def link_stage(stage_rows: DataFrame, stats: DataFrame, df_table: DataFrame,
     url-local; df/m/avgdl must not be recomputed from a chunk, or idf
     comes out wrong).  Callers that write both outputs persist ``rows``
     and unpersist it once both writes commit, so the Python kernel runs
-    once.
-
-    The kernel coalesces its ``n_buckets`` url hash partitions without a
-    shuffle, so each partition of ``merged`` and ``residual`` holds whole
-    hash partitions: with the pipeline's ``pbucket`` (== the hash
-    partition id) every pbucket lies in one task."""
+    once.  ``Pipeline.run`` writes both flat, with a ``pbucket`` column
+    and no exchange after the kernel's own; only the chunked writers lay
+    out partition dirs."""
     rows = link_rows(stage_rows, layer_map, n_buckets)
     merged = bm25.score_frozen(
         rows.filter(~F.col("residual")), stats, df_table).select(

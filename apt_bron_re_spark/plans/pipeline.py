@@ -2,32 +2,28 @@
 
     pages -> extract+mention -> link -> canonicalize -> materialize
 
-Each stage writes an idempotent parquet table under ``base_dir`` (bucketed
-by ``pbucket = pmod(murmur3(url), n_buckets)`` — exactly Spark's
-HashPartitioning partition id, so url-partitioned plans write with no
-extra shuffle; the parquet stand-in for Iceberg's ``bucket(url)``
-partition transform — a production deployment swaps the writer for
-``df.writeTo(...).partitionedBy(bucket(N, "url"))`` with zero logic
-changes) and appends a lineage summary row whose row count the write
-itself observed (``_observed``: no scan recounts a table).
-``run(resume=True)`` skips stages whose fingerprint already completed —
-kill the job at any stage boundary and re-running continues where it
-stopped.
+Each stage writes an idempotent table under ``base_dir`` (parquet, or
+Iceberg with ``catalog``) and appends a lineage summary row whose row
+count the write itself observed (``_observed``: no scan recounts a
+table).  ``run(resume=True)`` skips stages whose fingerprint already
+completed — kill the job at any stage boundary and re-running continues
+where it stopped.
 
 Stage-table layout (versioned stage tables replace the reference's
-in-place file rewrites — SURVEY.md §3):
-    mentions/        doc/mention/residue/error rows + pbucket column;
-                     extraction runs inside the mention UDF, so no text
-                     table is written (batch writes carry no partition
-                     dirs — the UDF output streams straight to parquet
-                     with NO shuffle; incremental writers lay out
-                     pbucket=N dirs for per-bucket resume/pruning)
-    linked/          mention rows + bm25 + link annotations, pbucket=N
-    links_residual/  dirs written SHUFFLE-FREE (partitions are
-                     pbucket-pure by construction)
+in-place file rewrites — SURVEY.md §3).  One rule: batch tables are flat,
+with a ``pbucket = pmod(murmur3(url), n_buckets)`` column (``_bucketed``);
+triples are partitioned by pred (S10); only the chunked writers
+(``_replace_table``/``_write_buckets``) lay out partition dirs, by their
+chunk key.  A batch table streams from its stage's own tasks into
+parquet, with no shuffle or sort to lay out dirs no batch read prunes on;
+per-bucket dirs serve only the chunked resume.  Reads select buckets by
+filtering the ``pbucket`` column, which works on either layout.
+    mentions/        doc/mention/residue/error rows; extraction runs
+                     inside the mention UDF, so no text table is written
+    linked/          mention rows + bm25 + link annotations
+    links_residual/  residual links (best-link keys with no mention row)
     canon/           (label, original_id, canon_id)
     triples/         subj, pred, obj, sources[], justification, score
-                     partitioned by pred (S10)
 
 Every batch stage, the chunked link stage's frozen BM25 globals included,
 is written by one runner, ``_run_stage``.  The link stage (L2-L5 links ->
@@ -70,7 +66,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions.partitioning import bucket
 
 from ..config import LANG, NER_MATCH_SCORE, SIM_THRESHOLD
 from ..operators import bm25, canonicalize, linking, materialize, mention
@@ -130,13 +125,12 @@ class Pipeline:
 
         ``catalog``: the Iceberg one-line swap (S7/S8 proper).  When set
         (e.g. ``"ice.db"``), every stage table becomes the Iceberg table
-        ``<catalog>.<name>`` written via ``writeTo(...).partitionedBy(
-        bucket(n_buckets, url))`` — the real partition transform the
-        parquet ``pbucket`` column emulates.  Tables written by incremental
-        chunks are instead partitioned by identity(pbucket), the chunk
-        key: a stage's first chunk replaces the table, and each later
-        chunk uses ``overwritePartitions()`` (Iceberg's native dynamic
-        overwrite, same exactly-once semantics as the parquet path).
+        ``<catalog>.<name>``, laid out as its parquet twin: batch tables
+        unpartitioned, triples partitioned by pred, and tables written by
+        incremental chunks partitioned by identity of the chunk key.  A
+        stage's first chunk replaces the table, and each later chunk uses
+        ``overwritePartitions()`` (Iceberg's native dynamic overwrite,
+        same exactly-once semantics as the parquet path).
         Requires an
         Iceberg runtime on the session (tests/test_iceberg_optional.py
         runs the full pipeline this way when ``SPARK_ICEBERG_JAR`` is
@@ -159,7 +153,7 @@ class Pipeline:
         """Pin the base_dir's bucket layout (LAYOUT_ID + n_buckets): a
         resume against a base_dir written under a different layout fails
         fast instead of silently mixing bucket assignments.  Iceberg-mode
-        skips this — the bucket transform lives in table metadata."""
+        skips this: its tables live in the catalog, not under base_dir."""
         marker = self.base / "_layout.json"
         want = {"layout": LAYOUT_ID, "n_buckets": self.n_buckets}
         if marker.exists():
@@ -192,8 +186,8 @@ class Pipeline:
         collected from its table (``canonicalize.collect_canon``)."""
         self._run_stage(
             "canonicalize", self._fps()[3],
-            lambda: nullcontext({"canon": canonicalize.canonical_map(
-                self.spark, self.layer_map)}), resume=resume)
+            lambda: {"canon": canonicalize.canonical_map(
+                self.spark, self.layer_map)}, resume=resume)
         return canonicalize.collect_canon(self._read("canon"))
 
     # -- helpers ----------------------------------------------------------
@@ -204,37 +198,26 @@ class Pipeline:
         # "pbucket" (partition bucket) — distinct from the NER residue
         # "bucket" column of the mention stage table.  Defined as
         # pmod(murmur3(url), n) — EXACTLY Spark's HashPartitioning(url, n)
-        # partition-id expression (same hash, same seed 42) — so a plan
-        # that is repartition(n, url)-partitioned has pbucket-PURE
-        # partitions and can be written partitionBy("pbucket") with no
-        # further shuffle (one file per bucket dir per branch).
+        # partition-id expression (same hash, same seed 42).  Batch tables
+        # keep it as a column with no partition dirs; the chunked stages
+        # pick their chunks by it, and the chunked mention and link
+        # tables lay out one dir per value.
         return df.withColumn(
             "pbucket", F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
 
-    def _iceberg_writer(self, df: DataFrame, name: str,
-                        partition_by: list[str] | None):
-        w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
-        if partition_by == ["pbucket"]:
-            # the REAL bucket transform the parquet pbucket emulates
-            return w.partitionedBy(bucket(self.n_buckets, F.col("url")))
-        if partition_by:
-            return w.partitionedBy(*[F.col(c) for c in partition_by])
-        return w
-
     def _write(self, df: DataFrame, name: str,
                partition_by: list[str] | None = None) -> int:
-        """Write a stage table; returns its row count, observed by the
-        write (``_observed``)."""
+        """Write a batch stage table, flat or (triples) partitioned by
+        ``partition_by``; returns its row count, observed by the write
+        (``_observed``)."""
         if self.catalog:
             df, counts = _observed(df)
-            self._iceberg_writer(df, name, partition_by).createOrReplace()
+            w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
+            if partition_by:
+                w = w.partitionedBy(*[F.col(c) for c in partition_by])
+            w.createOrReplace()
             return counts()["n"]
-        # pbucket tables are written here only by the batch link stage,
-        # whose plans are HashPartitioning(url, n_buckets) partitions
-        # coalesced without a shuffle: every pbucket value (see _bucketed)
-        # lies in one task, so partitionBy writes one file per dir with NO
-        # write-side shuffle.
-        if partition_by and partition_by != ["pbucket"]:
+        if partition_by:
             # low-cardinality partition columns (pred): pinned.  A
             # rebalance hint was tried here and AQE's 64MB advisory
             # re-serialized the triples encode into 1 task on most runs
@@ -284,17 +267,16 @@ class Pipeline:
                    partition_by: list[str] | None = None,
                    resume: bool = True) -> None:
         """Build and write one batch stage unless its fingerprint already
-        completed.  ``tables()`` is a context manager yielding the stage's
-        ``{table: df}``; each table is written in order, and only after
-        every write has committed is the summary lineage row (the first
-        table's observed count) appended, so a kill in between re-runs the
-        whole stage.  Callers ``_read`` the tables they need."""
+        completed.  ``tables()`` returns the stage's ``{table: df}``; each
+        table is written in order, and only after every write has
+        committed is the summary lineage row (the first table's observed
+        count) appended, so a kill in between re-runs the whole stage.
+        Callers ``_read`` the tables they need."""
         if resume and self.log.is_complete(stage, fp):
             return
         t0 = time.time()
-        with tables() as out:
-            n_rows = [self._write(df, name, partition_by)
-                      for name, df in out.items()]
+        n_rows = [self._write(df, name, partition_by)
+                  for name, df in tables().items()]
         self.log.record(stage, fp, n_rows[0], time.time() - t0)
 
     def _join_records(self) -> None:
@@ -304,20 +286,20 @@ class Pipeline:
     @contextmanager
     def _link_tables(self, stage_rows: DataFrame, stats: DataFrame,
                      df_: DataFrame):
-        """-> (tables, rows): the link stage's bucketed ``{linked,
-        links_residual}`` and the kernel output ``rows`` both read:
+        """-> (tables, rows): the link stage's ``{linked,
+        links_residual}``, flat with a ``pbucket`` column (``_bucketed``),
+        and the kernel output ``rows`` both read:
         ``linking.link_stage`` over mention stage rows, scored against the
         BM25 globals ``(stats, df_)``.  ``rows`` is persisted while the
         context is open (the Python kernel runs once) and unpersisted when
         it exits, a failed write included.  ``run`` keeps the context open
         until the triples write has committed, so materialize folds the
         cached rows; a ``run_link_incremental`` chunk exits it once its
-        two writes commit.  The kernel coalesces its url hash partitions
-        without a shuffle, so each pbucket (== the HashPartitioning
-        partition id, _bucketed) lies in one task and neither write
-        repartitions.  ``run`` passes globals
-        computed inline from the un-repartitioned mention table (narrow
-        aggregations; df is catalog-bounded, so it broadcasts);
+        two writes commit.  ``run`` writes the tables flat, adding no
+        exchange to the kernel's; only the chunk writers lay out pbucket
+        dirs.  ``run`` passes globals computed inline from the
+        un-repartitioned mention table (narrow aggregations; df is
+        catalog-bounded, so it broadcasts);
         ``run_link_incremental`` passes frozen parquet copies, which
         cross-session exactness requires."""
         merged, residual, rows = linking.link_stage(
@@ -336,9 +318,9 @@ class Pipeline:
         exchange), written partitioned by pred."""
         self._run_stage(
             "materialize", self._fps()[4],
-            lambda: nullcontext({"triples": materialize.triples_of_pairs(
+            lambda: {"triples": materialize.triples_of_pairs(
                 materialize.link_pairs(links, canon_map, self.n_buckets,
-                                       clustered))}),
+                                       clustered))},
             partition_by=["pred"], resume=resume)
 
     def _mentions(self, pages: DataFrame) -> DataFrame:
@@ -408,17 +390,6 @@ class Pipeline:
 
     # -- stages -----------------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = True) -> DataFrame:
-        # The batch mention write keeps the pbucket COLUMN but skips the
-        # bucketing repartition + partitionBy dirs: the mention UDF output
-        # streams straight from the scan-aligned tasks into parquet — no
-        # wide shuffle of sentence-bearing rows just to lay out dirs the
-        # batch path never prunes on.  (The link stage establishes its own
-        # url partitioning from the scan.)  The per-bucket layout matters
-        # only for chunked-incremental resume, whose own writers
-        # (run_mention_incremental/_write_buckets) still produce it; reads
-        # work identically on either layout because pbucket is a column
-        # filter there, with dir pruning as a bonus when dirs exist.
-        #
         # Canon overlap: stage 4 is CATALOG-derived (canonical_map never
         # reads the corpus), so it runs on a one-worker pool under the
         # CPU-bound mention/link stages (the reference's thread-parallel
@@ -447,7 +418,7 @@ class Pipeline:
         _fp0, fp1, fp2, _fp3, _fp4 = self._fps()
         self._run_stage(
             "mention", fp1,
-            lambda: nullcontext({"mentions": self._mentions(pages)}),
+            lambda: {"mentions": self._mentions(pages)},
             resume=resume)
         stage2 = self._read("mentions")
 
@@ -463,8 +434,7 @@ class Pipeline:
                 # commits: materialize folds them in place
                 tables, links = cache.enter_context(self._link_tables(
                     stage2, *_bm25_globals(stage2)))
-                self._run_stage("link", fp2, lambda: nullcontext(tables),
-                                partition_by=["pbucket"], resume=False)
+                self._run_stage("link", fp2, lambda: tables, resume=False)
                 clustered = True
             # canon.result() re-raises the canon stage's error
             self._materialize(links, canon.result(), clustered, resume)
@@ -479,7 +449,8 @@ class Pipeline:
                     partition_col: str = "pbucket", finish=None) -> bool:
         """The chunk loop of the ``run_*_incremental`` stages.  For each
         chunk of pending pbuckets, ``build(chunk)`` is a context manager
-        yielding ``{table: df}`` (as ``_run_stage``'s ``tables()``), and
+        yielding ``{table: df}`` (the chunked link stage persists its
+        kernel rows only while the chunk's tables are written), and
         each table is written with ``_write_buckets`` (the first chunk
         of a stage with no completed buckets: ``_replace_table``).  The
         first table's write counts the chunk's rows per bucket (the chunk's
@@ -554,7 +525,7 @@ class Pipeline:
 
         def frozen():
             stats, df_ = _bm25_globals(stage2)
-            return nullcontext({"link_aux_stats": stats, "link_aux_df": df_})
+            return {"link_aux_stats": stats, "link_aux_df": df_}
 
         self._run_stage("link_aux", fingerprint(fp2, "link_aux"), frozen)
         stats = self._read("link_aux_stats")

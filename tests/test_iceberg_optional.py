@@ -1,9 +1,11 @@
 """S7/S8 Iceberg proper — exercised when an Iceberg runtime is present,
 skipped (not silently dropped) when it is not.
 
-The stage tables ship as parquet with a ``pbucket = pmod(murmur3(url), N)``
-column — the documented analog of Iceberg's ``bucket(N, url)`` partition
-transform (plans/pipeline.py module docstring).  Two tiers:
+The stage tables ship as parquet, laid out as the plans/pipeline.py module
+docstring states: batch tables flat with a ``pbucket = pmod(murmur3(url),
+N)`` column, triples by pred, chunk tables by their chunk key.  With
+``Pipeline(catalog=...)`` they are Iceberg tables with the same layout.
+Three tiers:
 
 * ``test_iceberg_bucket_partitioned_write_or_skip`` — the minimal
   ``writeTo(...).partitionedBy(bucket(...))`` swap against whatever

@@ -92,23 +92,31 @@ def test_rerun_without_resume_is_deterministic(spark, layer_map, triples,
     assert a == b
 
 
-def test_linked_write_is_shuffle_free_aligned(pipeline, triples, base_dir):
-    """The linked stage writes WITHOUT a write-side repartition; that is
-    only lossless because pbucket == pmod(murmur3(url), n) == the
-    HashPartitioning partition id, making every task pbucket-pure.  If
-    the alignment breaks, each of the 2*n_buckets tasks sprays files
-    into many dirs — so <= 2 files per dir (one per union branch) IS the
-    alignment proof."""
-    import glob
-    import os
-    dirs = glob.glob(str(base_dir / "linked" / "pbucket=*"))
-    assert dirs
-    for d in dirs:
-        n_files = len(glob.glob(os.path.join(d, "*.parquet")))
-        assert 1 <= n_files <= 2, f"{d}: {n_files} files (misaligned write)"
-    # batch mention stage keeps the pbucket COLUMN but skips the bucketing
-    # shuffle entirely — no partition dirs
-    assert not glob.glob(str(base_dir / "mentions" / "pbucket=*"))
+def test_batch_tables_are_flat(spark, pipeline, triples, base_dir):
+    """``run`` writes its mention and link tables flat, with a
+    ``pbucket`` column and no partition dirs; triples stay split by pred.
+    The ``linked`` frame holds exactly one url exchange, the link
+    kernel's, so its write adds no shuffle."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    from apt_bron_re_spark.plans.pipeline import _bm25_globals
+
+    assert not list(base_dir.rglob("pbucket=*"))
+    for name in ("mentions", "linked", "links_residual"):
+        assert pipeline._read(name).columns[-1] == "pbucket", name
+    assert list((base_dir / "triples").glob("pred=*"))
+
+    stage2 = pipeline._read("mentions")
+    with pipeline._link_tables(stage2, *_bm25_globals(stage2)) as (tables,
+                                                                   _rows):
+        with redirect_stdout(io.StringIO()) as plan:
+            tables["linked"].explain("formatted")
+    # the regex of scripts/explain_audit.py::one_url_exchange
+    assert len(re.findall(
+        r"hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_NUM",
+        plan.getvalue())) == 1
 
 
 def test_layout_marker_fails_fast_on_mismatch(spark, layer_map,
@@ -163,8 +171,6 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
     url-local kernel, persisted for its two writes: at most 12 Spark jobs
     (under AQE one per exchange and broadcast, plus the writes and the
     read-back)."""
-    from contextlib import nullcontext
-
     from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("link_jobs"),
@@ -179,9 +185,8 @@ def test_link_stage_runs_few_jobs(spark, layer_map, tmp_path_factory):
         # the stage exactly as Pipeline.run builds it
         with pipe._link_tables(stage2, *_bm25_globals(stage2)) as (tables,
                                                                    _rows):
-            pipe._run_stage("link", pipe._fps()[2],
-                            lambda: nullcontext(tables),
-                            partition_by=["pbucket"], resume=False)
+            pipe._run_stage("link", pipe._fps()[2], lambda: tables,
+                            resume=False)
         pipe._read("linked")
         started = set(tracker.getJobIdsForGroup(group))
     finally:
@@ -196,8 +201,6 @@ def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
     (the two phases of the salted aggregate and the write's pred
     repartition), the write and the read-back, at most 5 jobs.  The canon
     stage collects the canon map, and the lineage record starts none."""
-    from contextlib import nullcontext
-
     from apt_bron_re_spark.plans.pipeline import _bm25_globals
 
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("mat_jobs"),
@@ -210,8 +213,8 @@ def test_materialize_runs_few_jobs(spark, layer_map, tmp_path_factory):
     group = "materialize_stage_jobs"
     # the link stage as Pipeline.run runs it, which caches the kernel rows
     with pipe._link_tables(stage2, *_bm25_globals(stage2)) as (tables, rows):
-        pipe._run_stage("link", pipe._fps()[2], lambda: nullcontext(tables),
-                        partition_by=["pbucket"], resume=False)
+        pipe._run_stage("link", pipe._fps()[2], lambda: tables,
+                        resume=False)
         sc.setJobGroup(group, "job count of one materialize stage")
         try:
             pipe._materialize(rows, canon_map, clustered=True, resume=False)
@@ -456,3 +459,27 @@ def test_resume_after_failed_materialize_reads_links_back(
     assert pipe.log.metrics().filter(
         F.col("stage") == "link").count() == link_rows
     assert _triple_rows(got) == _triple_rows(want)
+
+
+def test_chunked_materialize_after_batch_link(spark, layer_map, triples,
+                                              tmp_path_factory, monkeypatch):
+    """A run that fails in materialize leaves the flat batch link tables.
+    The chunked materialize then selects each chunk's buckets by the
+    ``pbucket`` column (no dirs to prune), is interrupted after one
+    chunk and resumed, and gives the single-shot triples on all 7
+    fields."""
+    def materialize_fails(self, *args, **kwargs):
+        raise RuntimeError("materialize failed")
+
+    base = tmp_path_factory.mktemp("batch_link_chunked_mat")
+    pipe = Pipeline(spark, layer_map, base, n_buckets=8)
+    with monkeypatch.context() as m:
+        m.setattr(Pipeline, "_materialize", materialize_fails)
+        with pytest.raises(RuntimeError, match="materialize failed"):
+            pipe.run(pages_df(spark, N_PAGES), resume=False)
+    assert pipe.log.metrics().filter(F.col("stage") == "link").count() == 1
+    assert not list(base.rglob("pbucket=*"))
+
+    assert pipe.run_materialize_incremental(n_chunks=4, max_chunks=1) is False
+    assert pipe.run_materialize_incremental(n_chunks=4) is True
+    assert _triple_rows(pipe.triples()) == _triple_rows(triples)
