@@ -46,8 +46,8 @@ class LineageLog:
     def __init__(self, spark: SparkSession, base_dir: str | Path) -> None:
         self.spark = spark
         self.path = str(Path(base_dir) / "_lineage")
-        # appends are serialized: the pipeline records stages from two
-        # CONCURRENT driver threads (the main one and the canon overlap);
+        # appends are serialized: a pipeline run records from one thread,
+        # but a log may be shared by recorders on several driver threads;
         # unique filenames make the files conflict-free, the lock keeps
         # the mkdir+write critical section single-threaded
         self._append_lock = threading.Lock()

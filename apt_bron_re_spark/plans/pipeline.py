@@ -7,7 +7,8 @@ Iceberg with ``catalog``) and appends a lineage summary row whose row
 count the write itself observed (``_observed``: no scan recounts a
 table).  ``run(resume=True)`` skips stages whose fingerprint already
 completed — kill the job at any stage boundary and re-running continues
-where it stopped.
+where it stopped.  The stages run in this order on the calling thread:
+a run starts no thread.
 
 Stage-table layout (versioned stage tables replace the reference's
 in-place file rewrites — SURVEY.md §3).  One rule: batch tables are flat,
@@ -58,8 +59,6 @@ from __future__ import annotations
 
 import json
 import time
-import warnings
-from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import ExitStack, contextmanager, nullcontext
 from pathlib import Path
 
@@ -182,13 +181,21 @@ class Pipeline:
             marker.write_text(json.dumps(want))
 
     def _canon_stage(self, resume: bool = True) -> dict:
-        """Stage 4: the catalog-derived canonical map, written and then
-        collected from its table (``canonicalize.collect_canon``)."""
-        self._run_stage(
-            "canonicalize", self._fps()[3],
-            lambda: {"canon": canonicalize.canonical_map(
-                self.spark, self.layer_map)}, resume=resume)
-        return canonicalize.collect_canon(self._read("canon"))
+        """Stage 4: the catalog-derived canonical map, collected to the
+        driver (``canonicalize.collect_canon``).  A fresh stage writes the
+        ``canonical_map`` frame and collects that same frame: every real
+        catalog resolves on the driver into a local relation, which
+        collects with no Spark job.  A completed stage, and the frame of
+        the distributed CC (which a second action would re-run), are read
+        back from the table."""
+        fp = self._fps()[3]
+        if resume and self.log.is_complete("canonicalize", fp):
+            return canonicalize.collect_canon(self._read("canon"))
+        canon = canonicalize.canonical_map(self.spark, self.layer_map)
+        self._run_stage("canonicalize", fp, lambda: {"canon": canon},
+                        resume=False)
+        return canonicalize.collect_canon(
+            canon if canon.isLocal() else self._read("canon"))
 
     # -- helpers ----------------------------------------------------------
     def _path(self, name: str) -> str:
@@ -390,31 +397,9 @@ class Pipeline:
 
     # -- stages -----------------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = True) -> DataFrame:
-        # Canon overlap: stage 4 is CATALOG-derived (canonical_map never
-        # reads the corpus), so it runs on a one-worker pool under the
-        # CPU-bound mention/link stages (the reference's thread-parallel
-        # driver, L7/E3): its tiny jobs interleave with the mention UDF
-        # tasks, hiding seconds of catalog-sized job latency.  It is the
-        # only thread a run starts.  Lineage appends are lock-serialized
-        # (LineageLog._append) and the canon stage writes only its own
-        # paths, so the overlap is race-free.  Leaving the pool joins the
-        # thread on EVERY exit path: a failed run leaves no thread racing
-        # a caller's spark.stop() (ADVICE r6).
-        with ThreadPoolExecutor(1, thread_name_prefix="canon-stage") as pool:
-            canon = pool.submit(self._canon_stage, resume)
-            try:
-                return self._run_body(pages, resume, canon)
-            except BaseException as exc:
-                # a canon failure that loses to another error stays visible
-                canon_exc = canon.exception()
-                if canon_exc is not None and canon_exc is not exc:
-                    warnings.warn(
-                        "canon stage ALSO failed (suppressed in favor of "
-                        f"the propagating error): {canon_exc!r}")
-                raise
-
-    def _run_body(self, pages: DataFrame, resume: bool,
-                  canon: Future) -> DataFrame:
+        # The stages run in order on the calling thread.  Canonicalize
+        # runs after the link stage has committed, while the link
+        # kernel's rows are still cached, so materialize folds them.
         _fp0, fp1, fp2, _fp3, _fp4 = self._fps()
         self._run_stage(
             "mention", fp1,
@@ -436,8 +421,8 @@ class Pipeline:
                     stage2, *_bm25_globals(stage2)))
                 self._run_stage("link", fp2, lambda: tables, resume=False)
                 clustered = True
-            # canon.result() re-raises the canon stage's error
-            self._materialize(links, canon.result(), clustered, resume)
+            self._materialize(links, self._canon_stage(resume), clustered,
+                              resume)
         return self._read("triples")
 
     def triples(self) -> DataFrame:
@@ -461,6 +446,8 @@ class Pipeline:
         if given, else the sum of the stage's per-bucket rows.
         ``max_chunks`` processes at most that many chunks (test hook to
         simulate interruption).  Returns True when the stage is done."""
+        if n_chunks < 1:
+            raise ValueError(f"n_chunks must be at least 1, got {n_chunks}")
         counts = self.log.bucket_counts(stage, fp)
         fresh = not counts
         pending = [b for b in range(self.n_buckets) if b not in counts]

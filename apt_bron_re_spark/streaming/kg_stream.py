@@ -38,8 +38,6 @@ UDF closure (catalog-sized, broadcast semantics).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,10 +128,14 @@ def merged_triples(spark: SparkSession, out_path: str) -> DataFrame:
     identical output to the single-shot batch materialize (tested).  The
     partials are read with their schema (no Spark job), so a stream whose
     micro-batches wrote no row merges to no triples, and a stream that ran
-    no micro-batch (``out_path`` never written) merges none either."""
+    no micro-batch (``out_path`` never written) merges none either.
+    Whether ``out_path`` exists is asked of the Hadoop filesystem Spark
+    writes through, so a URI path (``file://``, ``hdfs://``) is found."""
     schema = materialize.partial_triples_of_pairs(spark.createDataFrame(
         [], materialize.PAIR_SCHEMA)).schema.add("batch_id", T.IntegerType())
-    partials = (spark.read.schema(schema).parquet(out_path)
-                if os.path.exists(out_path)
+    path = spark._jvm.org.apache.hadoop.fs.Path(out_path)
+    written = path.getFileSystem(
+        spark._jsparkSession.sessionState().newHadoopConf()).exists(path)
+    partials = (spark.read.schema(schema).parquet(out_path) if written
                 else spark.createDataFrame([], schema))
     return materialize.merge_partial_triples(partials.drop("batch_id"))

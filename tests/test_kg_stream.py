@@ -9,8 +9,8 @@ Plus an exactly-once check: replaying a micro-batch with the same
 batch_id leaves the merged result unchanged; parity on a stream whose
 urls repeat within one trigger, also when a url's pages straddle Arrow
 batches; parity with a null-html page, with a stream that writes no
-partial and with one that runs no micro-batch; and the micro-batch step's
-job count.
+partial and with one that runs no micro-batch; a merge through a URI
+path; and the micro-batch step's job count.
 """
 
 import pytest
@@ -51,9 +51,12 @@ def batch_stage2(spark, layer_map, pages_path, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def canon_df(spark, layer_map):
+    # unpersisted at teardown: a cached copy of this plan would turn a
+    # later module's canon collect into a cache scan (a Spark job)
     df = canonical_map(spark, layer_map)
     df.persist().count()
-    return df
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -294,6 +297,19 @@ def test_stream_without_micro_batches_equals_batch(spark, layer_map,
     q.awaitTermination(600)
     assert q.exception() is None
     assert _canon_rows(merged_triples(spark, out)) == want
+
+
+def test_merge_through_a_uri_equals_plain_path(spark, layer_map, pages_path,
+                                               canon_df, tmp_path_factory):
+    """``merged_triples`` finds the partials through the filesystem Spark
+    writes with: the ``file://`` URI of an output path merges the same
+    triples as the plain path, on all 7 fields."""
+    out = tmp_path_factory.mktemp("kg_uri_out") / "out"
+    kg_batch_step(spark.read.parquet(pages_path), 0, layer_map,
+                  collect_canon(canon_df), str(out))
+    want = _canon_rows(merged_triples(spark, str(out)))
+    assert want
+    assert _canon_rows(merged_triples(spark, out.as_uri())) == want
 
 
 def test_row_linker_score_is_max_over_candidates(spark, layer_map):

@@ -1,8 +1,6 @@
 """End-to-end 5-stage pipeline: structural checks, determinism, lineage,
 and idempotent resume (SURVEY.md §5 resume/idempotency tests)."""
 
-import threading
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -312,40 +310,73 @@ def test_null_html_page_is_one_error_row(spark, layer_map, tmp_path_factory):
     assert _triple_rows(got) == _triple_rows(want)
 
 
-def _canon_threads():
-    return [t for t in threading.enumerate()
-            if t.name.startswith("canon-stage") and t.is_alive()]
-
-
-def test_canon_overlap_failures_propagate(spark, layer_map, tmp_path_factory,
-                                          monkeypatch):
-    """A canon stage error propagates from ``run`` before materialize
-    writes anything; when the mention stage fails too, its error wins and
-    the canon error is reported as a warning.  No canon thread outlives
-    the run."""
-    from apt_bron_re_spark.operators import canonicalize, mention
+def test_canon_failure_propagates(spark, layer_map, tmp_path_factory,
+                                  monkeypatch):
+    """Canonicalize runs after the link stage has committed: a canon
+    stage error propagates from ``run`` with the link row recorded and
+    no materialize row."""
+    from apt_bron_re_spark.operators import canonicalize
 
     def canon_fails(*args, **kwargs):
         raise RuntimeError("canon failed")
 
     monkeypatch.setattr(canonicalize, "canonical_map", canon_fails)
-    pages = pages_df(spark, 10)
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("canon_err"),
                     n_buckets=8)
     with pytest.raises(RuntimeError, match="canon failed"):
-        pipe.run(pages, resume=False)
-    assert pipe.log.metrics().filter(
-        F.col("stage") == "materialize").count() == 0
-    assert not _canon_threads()
+        pipe.run(pages_df(spark, 10), resume=False)
+    lineage = pipe.log.metrics()
+    assert lineage.filter(F.col("stage") == "link").count() == 1
+    assert lineage.filter(F.col("stage") == "materialize").count() == 0
 
-    def mention_fails(*args, **kwargs):
-        raise ValueError("mention failed")
 
-    monkeypatch.setattr(mention, "detect_mentions", mention_fails)
-    with pytest.warns(UserWarning, match="canon stage ALSO failed"), \
-            pytest.raises(ValueError, match="mention failed"):
-        pipe.run(pages, resume=False)
-    assert not _canon_threads()
+def test_canon_stage_runs_one_job(spark, layer_map, tmp_path_factory,
+                                  monkeypatch):
+    """A fresh canon stage writes the driver-resolved canonical map and
+    collects that same local frame: one Spark job, the write, and no
+    table read back.  Its map equals the table read back, which is what
+    a resumed stage returns."""
+    from apt_bron_re_spark.operators import canonicalize
+
+    reads = []
+    read = Pipeline._read
+
+    def spy(self, name):
+        reads.append(name)
+        return read(self, name)
+
+    monkeypatch.setattr(Pipeline, "_read", spy)
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("canon_jobs"),
+                    n_buckets=8)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "canon_stage_jobs"
+    sc.setJobGroup(group, "job count of one canon stage")
+    try:
+        canon_map = pipe._canon_stage(resume=False)
+        started = set(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(started) == 1, sorted(started)
+    assert reads == []
+    assert canon_map
+    assert pipe._canon_stage(resume=True) == canon_map
+    assert reads == ["canon"]
+    assert canon_map == canonicalize.collect_canon(pipe._read("canon"))
+
+
+def test_run_chunks_rejects_fewer_than_one_chunk(spark, layer_map,
+                                                 tmp_path_factory):
+    """``n_chunks`` below 1 raises before any chunk is written."""
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("no_chunks"),
+                    n_buckets=8)
+    for n_chunks in (0, -1):
+        with pytest.raises(ValueError, match="n_chunks"):
+            pipe.run_mention_incremental(pages_df(spark, 10),
+                                         n_chunks=n_chunks)
+    assert not (pipe.base / "mentions").exists()
+    assert pipe.log.bucket_counts("mention", pipe._fps()[1]) == {}
 
 
 def test_failed_link_write_releases_cache(spark, layer_map, tmp_path_factory,
