@@ -352,10 +352,10 @@ class RowLinker:
     depend on the corpus, so the pass is exact inside a per-url kernel;
     only BM25 (corpus df/m/avgdl) cannot move here.
 
-    Built once on the driver, shipped in the UDF closure (catalog-sized,
-    broadcast semantics).  Its one caller is ``_link_urls``, the url fold
-    that the batch link stage and the streaming kernel
-    (streaming/kg_stream.py) both run."""
+    Built once on the driver, shipped in the UDF closure (catalog-sized;
+    every Python task unpickles it again, ROADMAP.md item 2).  Its one
+    caller is ``_link_urls``, the url fold that the batch link stage and
+    the streaming kernel (streaming/kg_stream.py) both run."""
 
     def __init__(self, layer_map: dict[str, list[dict]]) -> None:
         self.variants: dict[str, list[tuple]] = {}

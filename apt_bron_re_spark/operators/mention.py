@@ -16,7 +16,8 @@ basic.py:300-301) so one malformed page never fails a task at scale.
 
 Scale notes:
   * the compiled catalog + tagger ride in the UDF closure — built once on
-    the driver, deserialized once per executor (broadcast semantics);
+    the driver, but unpickled again in every Python task, not once per
+    executor (loading it once per worker is ROADMAP.md item 2);
   * per-task cost is pure dict probing over Arrow batches; batch size is
     bounded by spark.sql.execution.arrow.maxRecordsPerBatch so huge pages
     don't blow batch memory (SURVEY.md §4 item 2);

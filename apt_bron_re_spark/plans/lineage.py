@@ -10,7 +10,10 @@ A completed stage appends one summary row (bucket = -1); a chunked
 (``run_*_incremental``) stage also appends one row per bucket of each
 chunk, zero-row buckets included, which is the set a resumed run skips.
 Every ``n_rows`` is counted by the write that produced the table (a
-``DataFrame.observe`` on it), so recording starts no Spark job.  A stage
+``DataFrame.observe`` on it).  The driver appends the rows with pyarrow
+and reads them back with pyarrow, so neither recording nor a resume's
+checks (``is_complete``, ``bucket_counts``) start a Spark job, as the
+reference's existence check starts none.  A stage
 re-runs only when no summary row matches its input fingerprint —
 re-running is always safe because stage outputs are idempotent
 overwrites of a deterministic function of their inputs.
@@ -29,9 +32,17 @@ import threading
 import time
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+# The ledger's columns: ``ARROW_SCHEMA`` is what the driver writes and
+# reads, ``LINEAGE_SCHEMA`` the same columns as ``metrics()`` hands them
+# to Spark.
+ARROW_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("fingerprint", pa.string()),
+    ("bucket", pa.int32()), ("n_rows", pa.int64()),
+    ("wall_s", pa.float64()), ("completed_at", pa.float64())])
 LINEAGE_SCHEMA = ("stage string, fingerprint string, bucket int, "
                   "n_rows long, wall_s double, completed_at double")
 
@@ -55,18 +66,11 @@ class LineageLog:
     def _append(self, rows: list[tuple]) -> None:
         """Driver-side parquet append: the rows are driver-sized (<=
         n_buckets + 1), so pyarrow writes them straight into the table dir
-        under a unique name, with LINEAGE_SCHEMA's names and types, at ~ms
-        cost (a Spark job per append took 1-6 s when other stages held the
-        task slots)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        schema = pa.schema([
-            ("stage", pa.string()), ("fingerprint", pa.string()),
-            ("bucket", pa.int32()), ("n_rows", pa.int64()),
-            ("wall_s", pa.float64()), ("completed_at", pa.float64())])
+        under a unique name, at ~ms cost (a Spark job per append took 1-6 s
+        when other stages held the task slots)."""
         table = pa.Table.from_pylist(
-            [dict(zip(schema.names, r)) for r in rows], schema=schema)
+            [dict(zip(ARROW_SCHEMA.names, r)) for r in rows],
+            schema=ARROW_SCHEMA)
         with self._append_lock:
             Path(self.path).mkdir(parents=True, exist_ok=True)
             fname = (f"part-lineage-{os.getpid()}-{time.time_ns()}"
@@ -75,28 +79,28 @@ class LineageLog:
             # dot-prefixed name (Spark/parquet readers ignore '.'/'_'
             # files) and rename into place — a kill mid-write leaves an
             # invisible temp instead of a truncated visible part file
-            # that would poison every later _read() and silently disable
+            # that would poison every later _rows() and silently disable
             # resume.  rename() is atomic within the directory.
             tmp = Path(self.path) / f".{fname}.tmp"
             pq.write_table(table, str(tmp), compression="snappy")
             os.rename(tmp, Path(self.path) / fname)
 
-    def _read(self) -> DataFrame | None:
-        """The ledger, or None when nothing was ever recorded.  The explicit
-        schema makes a dir holding only a killed append's dot-prefixed temp
-        file read as empty; any other read error (a corrupt part file, a
-        JVM failure) propagates instead of silently disabling resume."""
+    def _rows(self, stage: str | None = None,
+              fp: str | None = None) -> list[dict] | None:
+        """The ledger's rows (those of ``stage`` and ``fp`` when given),
+        read on the driver by pyarrow, so no check of the ledger starts
+        a Spark job; None when nothing was ever recorded.  pyarrow skips
+        the dot-prefixed temp file of a killed append, so a dir holding
+        only that reads as empty; any other read error (a corrupt part
+        file) propagates instead of silently disabling resume."""
         if not Path(self.path).exists():
             return None
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
+        rows = pq.read_table(self.path, schema=ARROW_SCHEMA).to_pylist()
+        return [r for r in rows if stage is None
+                or (r["stage"], r["fingerprint"]) == (stage, fp)]
 
     def is_complete(self, stage: str, fp: str) -> bool:
-        df = self._read()
-        if df is None:
-            return False
-        return (df.filter((F.col("stage") == stage)
-                          & (F.col("fingerprint") == fp)
-                          & (F.col("bucket") == -1)).limit(1).count() > 0)
+        return any(r["bucket"] == -1 for r in self._rows(stage, fp) or ())
 
     def record(self, stage: str, fp: str, n_rows: int,
                wall_s: float) -> None:
@@ -106,14 +110,8 @@ class LineageLog:
     def bucket_counts(self, stage: str, fp: str) -> dict[int, int]:
         """{bucket: n_rows} of the per-bucket rows for this (stage,
         fingerprint) — the per-partition checkpoint of mid-stage resume."""
-        df = self._read()
-        if df is None:
-            return {}
-        rows = (df.filter((F.col("stage") == stage)
-                          & (F.col("fingerprint") == fp)
-                          & (F.col("bucket") >= 0))
-                .select("bucket", "n_rows").collect())
-        return {r.bucket: r.n_rows for r in rows}
+        return {r["bucket"]: r["n_rows"] for r in self._rows(stage, fp) or ()
+                if r["bucket"] >= 0}
 
     def record_buckets(self, stage: str, fp: str, bucket_counts: dict[int, int],
                        wall_s: float) -> None:
@@ -125,4 +123,10 @@ class LineageLog:
         self._append(rows)
 
     def metrics(self) -> DataFrame | None:
-        return self._read()
+        """The whole ledger as a Spark DataFrame (a local relation of the
+        driver-read rows), or None when nothing was ever recorded."""
+        rows = self._rows()
+        if rows is None:
+            return None
+        return self.spark.createDataFrame(
+            [tuple(r.values()) for r in rows], LINEAGE_SCHEMA)

@@ -13,18 +13,24 @@ a run starts no thread.
 Stage-table layout (versioned stage tables replace the reference's
 in-place file rewrites — SURVEY.md §3).  One rule: batch tables are flat,
 with a ``pbucket = pmod(murmur3(url), n_buckets)`` column (``_bucketed``);
-triples are partitioned by pred (S10); only the chunked writers
-(``_replace_table``/``_write_buckets``) lay out partition dirs, by their
-chunk key.  A batch table streams from its stage's own tasks into
-parquet, with no shuffle or sort to lay out dirs no batch read prunes on;
-per-bucket dirs serve only the chunked resume.  Reads select buckets by
-filtering the ``pbucket`` column, which works on either layout.
+triples are partitioned by pred (S10); only the chunk writes of the
+``run_*_incremental`` stages lay out partition dirs, by their chunk key.
+A batch table streams from its stage's own tasks into parquet, with no
+shuffle or sort to lay out dirs no batch read prunes on; per-bucket dirs
+serve only the chunked resume.  Reads select buckets by filtering the
+``pbucket`` column, which works on either layout.
     mentions/        doc/mention/residue/error rows; extraction runs
                      inside the mention UDF, so no text table is written
     linked/          mention rows + bm25 + link annotations
     links_residual/  residual links (best-link keys with no mention row)
     canon/           (label, original_id, canon_id)
     triples/         subj, pred, obj, sources[], justification, score
+
+Every stage table is written by one writer, ``_write``, which keeps a
+parquet table's schema beside it (``_schema.json``): ``_read`` reads the
+table back with that schema and starts no schema-inference job.  With the
+ledger also read on the driver (``LineageLog``), a resumed run over a
+completed base_dir starts one Spark job, the canon collect.
 
 Every batch stage, the chunked link stage's frozen BM25 globals included,
 is written by one runner, ``_run_stage``.  The link stage (L2-L5 links ->
@@ -78,9 +84,10 @@ from .lineage import LineageLog, fingerprint
 # write; a mismatched resume fails fast instead of mis-bucketing.
 LAYOUT_ID = "pbucket=pmod(murmur3_hash(url),n_buckets)"
 
-# Schema of a partitioned stage table that was written with zero rows
-# (``Pipeline._keep_schema_if_empty``); readers skip '_' files.
-EMPTY_SCHEMA = "_schema.json"
+# The schema a parquet stage table was written with, kept beside it by
+# ``Pipeline._write`` (partition columns last, as a read orders them) so
+# ``Pipeline._read`` infers nothing; readers skip '_' files.
+SCHEMA_FILE = "_schema.json"
 
 
 def _observed(df: DataFrame, buckets=()):
@@ -88,8 +95,8 @@ def _observed(df: DataFrame, buckets=()):
     plan, ``counts()`` is its row count ``n`` plus one count per pbucket
     in ``buckets`` (keyed ``str(b)``), so no second scan counts the table.
     AQE drops a stage it finds empty together with the metrics observed
-    in it, so under an exchange (a chunk writer's repartition, an Iceberg
-    write distribution) an empty observation means zero rows."""
+    in it, so under an exchange (a partitioned write's repartition, an
+    Iceberg write distribution) an empty observation means zero rows."""
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("n"), *[
         F.count_if(F.col("pbucket") == b).alias(str(b)) for b in buckets])
@@ -101,6 +108,13 @@ def _observed(df: DataFrame, buckets=()):
         return dict.fromkeys(["n", *map(str, buckets)], 0)
 
     return df, counts
+
+
+def _check_chunks(n_chunks: int) -> None:
+    """A ``run_*_incremental`` stage needs at least one chunk; checked
+    before the stage writes any table or lineage row."""
+    if n_chunks < 1:
+        raise ValueError(f"n_chunks must be at least 1, got {n_chunks}")
 
 
 def _bm25_globals(stage_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -213,62 +227,70 @@ class Pipeline:
             "pbucket", F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
 
     def _write(self, df: DataFrame, name: str,
-               partition_by: list[str] | None = None) -> int:
-        """Write a batch stage table, flat or (triples) partitioned by
-        ``partition_by``; returns its row count, observed by the write
-        (``_observed``)."""
+               partition_by: list[str] | None = None,
+               dynamic: bool = False) -> None:
+        """Write a stage table: flat, or split into dirs by
+        ``partition_by`` (triples by pred, chunk tables by their chunk
+        key).  The write replaces the whole table, or with ``dynamic``
+        only the partitions ``df`` touches: a chunk after a stage's first
+        replaces its own partitions, and a retry after a kill between its
+        data commit and its lineage row rewrites the same partitions
+        instead of appending duplicates.  The overwrite mode is set on
+        every write, so a session default cannot keep stale partitions."""
         if self.catalog:
-            df, counts = _observed(df)
-            w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
+            w = df.writeTo(f"{self.catalog}.{name}")
+            if dynamic:
+                # Iceberg's native dynamic overwrite
+                w.overwritePartitions()
+                return
+            w = w.using("iceberg")
             if partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
+                # identity(partition_by), NOT bucket(n, url): Iceberg's
+                # bucket hash (murmur3_32, seed 0) is not Spark's
+                # pmod(hash(url), n) (seed 42) that picks a chunk, so a
+                # chunk's rows would touch most Iceberg buckets and
+                # overwritePartitions would delete earlier chunks' rows.
+                w = w.partitionedBy(*map(F.col, partition_by))
             w.createOrReplace()
-            return counts()["n"]
+            return
+        partition_by = partition_by or []
         if partition_by:
-            # low-cardinality partition columns (pred): pinned.  A
-            # rebalance hint was tried here and AQE's 64MB advisory
-            # re-serialized the triples encode into 1 task on most runs
-            # (materialize stage 31 s <-> 132 s across identical reps);
-            # hashing the ~11 preds into n_buckets partitions gives ~8-10
-            # stable write tasks (measured: materialize 66.8 -> 36.2 s at
-            # 256k pages, local[4]).  Writing from the triple
+            # low-cardinality partition columns (pred, a chunk key):
+            # pinned.  A rebalance hint was tried here and AQE's 64MB
+            # advisory re-serialized the triples encode into 1 task on
+            # most runs (materialize stage 31 s <-> 132 s across identical
+            # reps); hashing the ~11 preds into n_buckets partitions gives
+            # ~8-10 stable write tasks (measured: materialize 66.8 -> 36.2
+            # s at 256k pages, local[4]).  Writing from the triple
             # aggregate's own partitioning instead was measured at 10,000
             # pages (local[4], 8 shuffle partitions, n_buckets=32): AQE
             # coalesced the write to 4 tasks, each spraying every pred (4
             # files per pred dir), against 9 writing tasks (one file per
             # pred dir) here; the stage was 2.33 s vs 2.66 s (median of
             # 3), but the write lost task parallelism, so this stays.
-            df = df.repartition(self.n_buckets, *[F.col(c) for c in partition_by])
-        df, counts = _observed(df)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._path(name))
-        if partition_by:
-            self._keep_schema_if_empty(df, name, partition_by)
-        return counts()["n"]
-
-    def _keep_schema_if_empty(self, df: DataFrame, name: str,
-                              partition_by: list[str]) -> None:
-        """A partitioned parquet write of zero rows leaves no data file, so
-        a read could not infer the schema.  Keep it beside the table
-        (partition columns last, as a read infers them) for ``_read``."""
+            df = df.repartition(self.n_buckets, *map(F.col, partition_by))
         path = Path(self._path(name))
-        if next(path.rglob("*.parquet"), None) is None:
-            fields = sorted(df.schema.fields,
-                            key=lambda f: f.name in partition_by)
-            (path / EMPTY_SCHEMA).write_text(T.StructType(fields).json())
+        (df.write.option("partitionOverwriteMode",
+                         "dynamic" if dynamic else "static")
+         .parquet(str(path), mode="overwrite",
+                  partitionBy=partition_by or None))
+        schema = df.schema.toNullable()  # as parquet stores it
+        fields = ([f for f in schema if f.name not in partition_by]
+                  + [schema[c] for c in partition_by])
+        (path / SCHEMA_FILE).write_text(T.StructType(fields).json())
 
     def _read(self, name: str) -> DataFrame:
+        """A stage table, read with the schema ``_write`` kept beside it.
+        A parquet table with no such file (written before tables kept
+        one) is read with an inferred schema."""
         if self.catalog:
             return self.spark.table(f"{self.catalog}.{name}")
         path = Path(self._path(name))
-        schema = path / EMPTY_SCHEMA
-        if schema.exists() and next(path.rglob("*.parquet"), None) is None:
-            return (self.spark.read
-                    .schema(T.StructType.fromJson(json.loads(schema.read_text())))
-                    .parquet(str(path)))
-        return self.spark.read.parquet(str(path))
+        reader = self.spark.read
+        if (path / SCHEMA_FILE).exists():
+            reader = reader.schema(T.StructType.fromJson(
+                json.loads((path / SCHEMA_FILE).read_text())))
+        return reader.parquet(str(path))
 
     def _run_stage(self, stage: str, fp: str, tables,
                    partition_by: list[str] | None = None,
@@ -276,15 +298,19 @@ class Pipeline:
         """Build and write one batch stage unless its fingerprint already
         completed.  ``tables()`` returns the stage's ``{table: df}``; each
         table is written in order, and only after every write has
-        committed is the summary lineage row (the first table's observed
-        count) appended, so a kill in between re-runs the whole stage.
-        Callers ``_read`` the tables they need."""
+        committed is the summary lineage row (the first table's count,
+        observed by its write: ``_observed``) appended, so a kill in
+        between re-runs the whole stage.  Callers ``_read`` the tables
+        they need."""
         if resume and self.log.is_complete(stage, fp):
             return
         t0 = time.time()
-        n_rows = [self._write(df, name, partition_by)
-                  for name, df in tables().items()]
-        self.log.record(stage, fp, n_rows[0], time.time() - t0)
+        out = tables()
+        first = next(iter(out))
+        out[first], counts = _observed(out[first])
+        for name, df in out.items():
+            self._write(df, name, partition_by)
+        self.log.record(stage, fp, counts()["n"], time.time() - t0)
 
     def _join_records(self) -> None:
         """No-op: lineage records are synchronous and start no thread.
@@ -355,46 +381,6 @@ class Pipeline:
         fp4 = fingerprint(fp2, fp3, "materialize")
         return fp0, fp1, fp2, fp3, fp4
 
-    def _write_buckets(self, df: DataFrame, name: str,
-                       partition_col: str = "pbucket") -> None:
-        """Exactly-once per-partition write for incremental chunks: dynamic
-        partition overwrite replaces exactly the chunk's partitions, so a
-        retry after a kill between data-commit and lineage-append rewrites
-        the same partitions instead of appending duplicates.  The table
-        exists: the stage's first chunk wrote it (``_replace_table``)."""
-        if self.catalog:
-            # Iceberg's native dynamic overwrite
-            df.writeTo(f"{self.catalog}.{name}").overwritePartitions()
-            return
-        self._chunk_writer(df, partition_col, "dynamic").parquet(
-            self._path(name))
-
-    def _replace_table(self, df: DataFrame, name: str,
-                       partition_col: str) -> None:
-        """The first chunk of a stage with no completed buckets replaces
-        the whole table.  A chunk overwrite replaces only the partitions
-        its output touches, so otherwise a bucket that comes out empty
-        would keep the rows an earlier fingerprint (or a batch run) wrote."""
-        if self.catalog:
-            # identity(partition_col), NOT bucket(n, url): Iceberg's
-            # bucket hash (murmur3_32, seed 0) is not Spark's
-            # pmod(hash(url), n) (seed 42) that picks the chunk, so a
-            # chunk's rows would touch most Iceberg buckets and
-            # overwritePartitions would delete earlier chunks' rows.
-            (df.writeTo(f"{self.catalog}.{name}").using("iceberg")
-             .partitionedBy(F.col(partition_col)).createOrReplace())
-            return
-        self._chunk_writer(df, partition_col, "static").parquet(
-            self._path(name))
-        self._keep_schema_if_empty(df, name, [partition_col])
-
-    def _chunk_writer(self, df: DataFrame, partition_col: str,
-                      overwrite_mode: str):
-        return (df.repartition(self.n_buckets, F.col(partition_col))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", overwrite_mode)
-                .partitionBy(partition_col))
-
     # -- stages -----------------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = True) -> DataFrame:
         # The stages run in order on the calling thread.  Canonicalize
@@ -436,8 +422,11 @@ class Pipeline:
         chunk of pending pbuckets, ``build(chunk)`` is a context manager
         yielding ``{table: df}`` (the chunked link stage persists its
         kernel rows only while the chunk's tables are written), and
-        each table is written with ``_write_buckets`` (the first chunk
-        of a stage with no completed buckets: ``_replace_table``).  The
+        each table is written partitioned by ``partition_col``.  The first
+        chunk of a stage with no completed buckets replaces the whole
+        table, so a bucket that comes out empty keeps no rows an earlier
+        fingerprint (or a batch run) wrote; every later chunk replaces
+        only its own partitions (``_write``'s ``dynamic``).  The
         first table's write counts the chunk's rows per bucket (the chunk's
         total for each bucket when not chunked by pbucket); those lineage
         rows are appended only after the chunk's writes commit, so a kill in
@@ -445,9 +434,8 @@ class Pipeline:
         partitions.  The summary row records the count ``finish()`` returns
         if given, else the sum of the stage's per-bucket rows.
         ``max_chunks`` processes at most that many chunks (test hook to
-        simulate interruption).  Returns True when the stage is done."""
-        if n_chunks < 1:
-            raise ValueError(f"n_chunks must be at least 1, got {n_chunks}")
+        simulate interruption).  Returns True when the stage is done.
+        The public callers have checked ``n_chunks`` (``_check_chunks``)."""
         counts = self.log.bucket_counts(stage, fp)
         fresh = not counts
         pending = [b for b in range(self.n_buckets) if b not in counts]
@@ -458,14 +446,13 @@ class Pipeline:
             if max_chunks is not None and i >= max_chunks:
                 return False
             t0 = time.time()
-            write = (self._replace_table if i == 0 and fresh
-                     else self._write_buckets)
             with build(chunk) as tables:
                 first = next(iter(tables))
                 tables[first], observed = _observed(
                     tables[first], chunk if per_bucket else ())
                 for name, df in tables.items():
-                    write(df, name, partition_col)
+                    self._write(df, name, [partition_col],
+                                dynamic=i > 0 or not fresh)
             n = observed()
             chunk_counts = ({b: n[str(b)] for b in chunk} if per_bucket
                             else dict.fromkeys(chunk, n["n"]))
@@ -484,6 +471,7 @@ class Pipeline:
         processes only the buckets without a lineage row (_run_chunks).
         Returns True when the stage is complete (summary lineage row
         written)."""
+        _check_chunks(n_chunks)
         fp1 = self._fps()[1]
         if self.log.is_complete("mention", fp1):
             return True
@@ -505,6 +493,7 @@ class Pipeline:
         chunk scores against the frozen tables; everything else in the
         stage is url-local, so chunking by url-bucket is exact.  Each
         chunk's tables come from ``_link_tables``, as in ``run``."""
+        _check_chunks(n_chunks)
         _fp0, _fp1, fp2, _fp3, _fp4 = self._fps()
         if self.log.is_complete("link", fp2):
             return True
@@ -535,6 +524,7 @@ class Pipeline:
         all mergeable because chunks partition the corpus by url), and the
         final merge reduces the partials into the triples table.  Identical
         output to a single-shot ``run`` (tested)."""
+        _check_chunks(n_chunks)
         _fp0, _fp1, _fp2, _fp3, fp4 = self._fps()
         if self.log.is_complete("materialize", fp4):
             return True
@@ -552,9 +542,10 @@ class Pipeline:
             return nullcontext({"triples_partial": part})
 
         def merge() -> int:
-            return self._write(materialize.merge_partial_triples(
-                self._read("triples_partial").drop("chunk_key")),
-                "triples", partition_by=["pred"])
+            triples, counts = _observed(materialize.merge_partial_triples(
+                self._read("triples_partial").drop("chunk_key")))
+            self._write(triples, "triples", ["pred"])
+            return counts()["n"]
 
         return self._run_chunks("materialize", fp4, n_chunks, max_chunks,
                                 build, partition_col="chunk_key",

@@ -30,10 +30,12 @@ same url-disjointness that makes the batch incremental chunks exact), so
 (pytest-pinned).  Idempotence: a foreachBatch replay after failure
 reuses the same ``batch_id``; dynamic partition overwrite rewrites that
 partition instead of appending duplicates — the same exactly-once
-mechanism as plans/pipeline.py ``_write_buckets``.
+mechanism as the chunk writes of plans/pipeline.py (``_write`` with
+``dynamic``).
 
 Scale notes: the kernel carries the compiled catalog + canon map in the
-UDF closure (catalog-sized, broadcast semantics).
+UDF closure (catalog-sized), which every Python task unpickles again
+(loading it once per worker is ROADMAP.md item 2).
 """
 
 from __future__ import annotations

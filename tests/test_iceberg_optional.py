@@ -96,12 +96,12 @@ def test_iceberg_chunk_tables_partition_by_chunk_key(spark, layer_map,
                     catalog="ice.db")
     for col in ("pbucket", "chunk_key"):
         df = _Frame()
-        pipe._replace_table(df, "t", col)
+        pipe._write(df, "t", [col])
         assert df.calls == [("writeTo", "ice.db.t"), ("using", "iceberg"),
                             ("partitionedBy", [str(F.col(col))]),
                             ("createOrReplace",)]
     df = _Frame()
-    pipe._write_buckets(df, "t")
+    pipe._write(df, "t", ["pbucket"], dynamic=True)
     assert df.calls == [("writeTo", "ice.db.t"), ("overwritePartitions",)]
 
 

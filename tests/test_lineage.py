@@ -1,10 +1,11 @@
 """LineageLog unit tests — the resume mechanism's ledger.
 
-Round 6 moved appends from Spark write jobs to driver-side pyarrow
-files in the same table dir; these tests pin the contract that makes
-that safe: Spark reads the pyarrow-written files with EXACTLY the
-LINEAGE_SCHEMA types, mixed dirs (Spark- and pyarrow-written files)
-read as one table, and concurrent recorder threads never lose rows.
+The driver appends the ledger with pyarrow and reads it back with
+pyarrow; ``metrics()`` hands the rows to Spark.  These tests pin the
+contract that makes that safe: the rows read back with EXACTLY the
+LINEAGE_SCHEMA types, mixed dirs (Spark- and pyarrow-written files) read
+as one table, a killed append's temp file is invisible, a corrupt part
+file raises, and concurrent recorder threads never lose rows.
 """
 
 from __future__ import annotations

@@ -368,15 +368,34 @@ def test_canon_stage_runs_one_job(spark, layer_map, tmp_path_factory,
 
 def test_run_chunks_rejects_fewer_than_one_chunk(spark, layer_map,
                                                  tmp_path_factory):
-    """``n_chunks`` below 1 raises before any chunk is written."""
+    """``n_chunks`` below 1 raises before the stage writes anything: no
+    chunk, and for the link and materialize stages neither the frozen
+    BM25 globals (``link_aux_*``) nor the canon stage they run first, and
+    no lineage row."""
     pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("no_chunks"),
                     n_buckets=8)
+    pages = pages_df(spark, 10)
     for n_chunks in (0, -1):
         with pytest.raises(ValueError, match="n_chunks"):
-            pipe.run_mention_incremental(pages_df(spark, 10),
-                                         n_chunks=n_chunks)
+            pipe.run_mention_incremental(pages, n_chunks=n_chunks)
     assert not (pipe.base / "mentions").exists()
     assert pipe.log.bucket_counts("mention", pipe._fps()[1]) == {}
+
+    assert pipe.run_mention_incremental(pages, n_chunks=2) is True
+    n_rows = pipe.log.metrics().count()
+    for n_chunks in (0, -1):
+        with pytest.raises(ValueError, match="n_chunks"):
+            pipe.run_link_incremental(n_chunks=n_chunks)
+    assert not list(pipe.base.glob("link_aux_*"))
+    assert pipe.log.metrics().count() == n_rows
+
+    assert pipe.run_link_incremental(n_chunks=2) is True
+    n_rows = pipe.log.metrics().count()
+    for n_chunks in (0, -1):
+        with pytest.raises(ValueError, match="n_chunks"):
+            pipe.run_materialize_incremental(n_chunks=n_chunks)
+    assert not (pipe.base / "canon").exists()
+    assert pipe.log.metrics().count() == n_rows
 
 
 def test_failed_link_write_releases_cache(spark, layer_map, tmp_path_factory,
@@ -401,8 +420,7 @@ def test_failed_link_write_releases_cache(spark, layer_map, tmp_path_factory,
                        tmp_path_factory.mktemp("link_err_chunks"),
                        n_buckets=8)
     assert chunked.run_mention_incremental(pages, n_chunks=2) is True
-    for name in ("_write", "_replace_table", "_write_buckets"):
-        monkeypatch.setattr(Pipeline, name, failing(getattr(Pipeline, name)))
+    monkeypatch.setattr(Pipeline, "_write", failing(Pipeline._write))
     with pytest.raises(RuntimeError, match="residual write failed"):
         batch.run(pages, resume=False)
     with pytest.raises(RuntimeError, match="residual write failed"):
@@ -514,3 +532,101 @@ def test_chunked_materialize_after_batch_link(spark, layer_map, triples,
     assert pipe.run_materialize_incremental(n_chunks=4, max_chunks=1) is False
     assert pipe.run_materialize_incremental(n_chunks=4) is True
     assert _triple_rows(pipe.triples()) == _triple_rows(triples)
+
+
+def _job_ids(spark, group: str, action) -> set:
+    """The ids of the Spark jobs ``action()`` starts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_resume_checks_start_no_job(spark, layer_map, pipeline, triples,
+                                    tmp_path_factory):
+    """The ledger is read on the driver and every stage table with the
+    schema kept beside it.  A resumed run over a completed base_dir starts
+    at most one Spark job (the canon collect), and a fresh run starts as
+    many jobs with ``resume=True`` as with ``resume=False``."""
+    pages = pages_df(spark, N_PAGES)
+    done = _job_ids(spark, "resume_done",
+                    lambda: pipeline.run(pages, resume=True))
+    assert len(done) <= 1, sorted(done)
+    fresh = {}
+    for resume in (True, False):
+        pipe = Pipeline(spark, layer_map,
+                        tmp_path_factory.mktemp("fresh_jobs"), n_buckets=8)
+        fresh[resume] = len(_job_ids(spark, f"fresh_{resume}",
+                                     lambda: pipe.run(pages, resume=resume)))
+    assert fresh[True] == fresh[False], fresh
+
+
+def test_stage_tables_keep_their_schema(spark, layer_map, pipeline, triples,
+                                        tmp_path_factory):
+    """Every parquet stage table of a batch run and of a chunked run keeps
+    its schema beside it, and ``_read`` gives the schema Spark infers from
+    the table's files."""
+    from apt_bron_re_spark.plans.pipeline import SCHEMA_FILE
+
+    chunked = Pipeline(spark, layer_map,
+                       tmp_path_factory.mktemp("chunk_schemas"), n_buckets=8)
+    assert chunked.run_mention_incremental(pages_df(spark, 20), n_chunks=2)
+    assert chunked.run_link_incremental(n_chunks=2)
+    assert chunked.run_materialize_incremental(n_chunks=2)
+    names = {}
+    for pipe in (pipeline, chunked):
+        names[pipe] = sorted(p.name for p in pipe.base.iterdir()
+                             if not p.name.startswith("_"))
+        for name in names[pipe]:
+            path = pipe.base / name
+            assert (path / SCHEMA_FILE).exists(), name
+            assert pipe._read(name).schema == \
+                spark.read.parquet(str(path)).schema, name
+    assert len(names[pipeline]) + len(names[chunked]) == 13, names
+
+
+def test_write_replaces_partitions_under_a_dynamic_session(
+        spark, layer_map, tmp_path_factory):
+    """A stage write replaces the whole table even when the session's
+    default partition overwrite mode is dynamic: re-writing triples keeps
+    no pred dir the new rows do not touch."""
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("dyn_conf"),
+                    n_buckets=8)
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "dynamic")
+    try:
+        for rows in ([("x", "a"), ("y", "b")], [("z", "a")]):
+            pipe._write(spark.createDataFrame(rows, "subj string, pred string"),
+                        "triples", ["pred"])
+        got = sorted(tuple(r) for r in pipe._read("triples").collect())
+    finally:
+        spark.conf.set(conf, old)
+    assert got == [("z", "a")]
+    assert [p.name for p in (pipe.base / "triples").glob("pred=*")] == \
+        ["pred=a"]
+
+
+def test_base_dir_without_schema_files_resumes(spark, layer_map, pipeline,
+                                               triples, tmp_path_factory):
+    """A base_dir whose tables keep no schema file (written before tables
+    kept one) is read with inferred schemas: its resume skips every stage
+    and gives the same triples on all 7 fields."""
+    import shutil
+
+    from apt_bron_re_spark.plans.pipeline import SCHEMA_FILE
+
+    base = tmp_path_factory.mktemp("no_schema_files") / "stages"
+    shutil.copytree(pipeline.base, base)
+    for kept in base.glob(f"*/{SCHEMA_FILE}"):
+        kept.unlink()
+    pipe = Pipeline(spark, layer_map, base, n_buckets=8)
+    n_rows = pipe.log.metrics().count()
+    got = pipe.run(pages_df(spark, N_PAGES), resume=True)
+    assert pipe.log.metrics().count() == n_rows
+    assert not list(base.glob(f"*/{SCHEMA_FILE}"))
+    assert _triple_rows(got) == _triple_rows(triples)
