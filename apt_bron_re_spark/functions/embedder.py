@@ -58,5 +58,7 @@ def embed_batch(texts) -> np.ndarray:
 
 
 def cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Pairwise cosine for row-wise L2-normalized matrices: just a matmul."""
+    """Pairwise cosine for row-wise L2-normalized matrices: just a matmul.
+    The one copy of the L4 cosine: ``linking.semantic_links`` and
+    ``linking.RowLinker`` both score residue values with it."""
     return a @ b.T

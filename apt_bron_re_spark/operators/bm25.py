@@ -15,8 +15,9 @@ partial+final hash aggregations; (m, avgdl) is a 1-row aggregate broadcast
 back — so the whole thing is two shuffles (tf keyed by (category,url,key);
 df keyed by (category,key)) and broadcast joins back.  The pipeline's link
 stage takes tf and dl from its url-local kernel instead
-(``score_frozen``); both paths evaluate the one score expression,
-``_score``.  No Python computes a score.
+(``score_frozen``); both paths, and the driver query ``bm25_terms``
+(queries.py, over the documents corpus), evaluate the one score
+expression, ``_score``.  No Python computes a score.
 """
 
 from __future__ import annotations
@@ -77,7 +78,8 @@ def _score(f: Column, n: Column, dl: Column, m: Column,
     """The BM25 score of a term with frequency ``f`` in a doc of length
     ``dl`` (the corpus mean ``avgdl`` where null), the term in ``n`` of
     ``m`` docs: the formula of the module docstring, 0.0 where its
-    denominator is 0.  The one copy of the formula."""
+    denominator is 0.  The one copy of the formula, with k1 and b read
+    from ``config``."""
     dl = F.coalesce(dl, avgdl)
     idf = F.log((m - n + 0.5) / (n + 0.5) + 1.0)
     denom = f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)

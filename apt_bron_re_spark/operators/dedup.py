@@ -5,7 +5,6 @@ Beyond the reference's exact per-report dedup (A1, basic.py:304-340), a
 are deterministic AND fully JVM-side (pure column expressions, whole-stage
 codegen — no Python UDFs in any hot path):
 
-  * exact_duplicates      — hash-groupBy on md5(text)
   * minhash_candidates    — word-shingle -> 64-perm MinHash -> LSH banding
                             -> bucket self-join (candidate pairs only; no
                             quadratic blowup)
@@ -71,17 +70,6 @@ def _md5_60(col: Column) -> Column:
 def _words(text_col: Column) -> Column:
     """Whitespace tokens, Python-str.split() semantics (no empties)."""
     return F.filter(F.split(F.trim(text_col), r"\s+"), lambda t: t != "")
-
-
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical documents: (text_hash, n_docs, doc_ids)."""
-    return (
-        docs.select("doc_id", F.md5(F.col(text_col)).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(F.count("*").alias("n_docs"),
-             F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def shingle_hash_col(text_col: Column, k: int = SHINGLE_K) -> Column:

@@ -31,9 +31,9 @@ and the differential tests pin the kernel to them: L2/L3 are ONE
 broadcast hash equi-join against the exploded variant catalog (small: ~6
 variants x catalog nodes; the score is a CASE on label equality), L4 is a
 broadcast nested-loop θ-join executed as a vectorized pandas UDF over the
-distinct residue values (numpy matmul against the closure-captured
-node-embedding matrix, then explode), and L6 is an aggregation + a single
-left join.
+distinct residue values (``embedder.cosine_matrix`` against the
+closure-captured node-embedding matrix, then explode), and L6 is an
+aggregation + a single left join.
 
 Like the reference (ner.py:233-255 builds its layer_map from the embedding
 cache, which skips cpe labels — embeddings.py:24-25), linking covers the
@@ -62,7 +62,7 @@ from pyspark.sql import types as T
 
 from ..catalog.build import CPE_LABELS, surface_texts
 from ..config import BM25_LABELS, SIM_THRESHOLD
-from ..functions.embedder import embed_batch
+from ..functions.embedder import cosine_matrix, embed_batch
 from ..functions.variants import generate_variants
 from . import bm25, mention
 
@@ -148,7 +148,7 @@ def semantic_links(residues: DataFrame,
         if values.empty:
             return pd.Series([], dtype=object)
         vecs = embed_batch(values.fillna("").tolist())  # B x D
-        sims = vecs @ emb_matrix.T                      # B x K
+        sims = cosine_matrix(vecs, emb_matrix)          # B x K
         out = []
         for row in sims:
             idx = (row >= SIM_THRESHOLD).nonzero()[0]
@@ -392,7 +392,7 @@ class RowLinker:
                 sem_values.append((bucket, value))
         if sem_values:
             vecs = embed_batch([v for _b, v in sem_values])
-            sims = vecs @ self.emb_matrix.T
+            sims = cosine_matrix(vecs, self.emb_matrix)
             for (bucket, value), row in zip(sem_values, sims):
                 for k in (row >= SIM_THRESHOLD).nonzero()[0]:
                     label, oid, name = self.emb_nodes[int(k)]

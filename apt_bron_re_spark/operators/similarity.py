@@ -17,6 +17,18 @@ product — integer dot products are EXACT in any engine and any summation
 order, so the bucket assignment is bit-identical between the numpy batch
 UDF here and the DuckDB oracle SQL in queries.py.
 
+One owner per rule, shared by every operator here (and the driver
+queries in queries.py):
+  * ``cosine_expr`` (over ``_dot``) — the JVM cosine fold;
+  * ``_rerank`` — round(cosine, 3), the per-query window and the
+    ``rnk <= k`` cut that brute-force, IVF and LSH top-k all end with;
+  * ``_grid`` / ``_grid_buckets`` — the integer grid and the sign-LSH
+    buckets on it (``_quant`` is the grid's column form, for IVF);
+  * ``_verify`` — the exact join + round(cosine, 4) filter both
+    near-pair plans end with.
+``_seq_dots`` stays apart from all of them: it reproduces the JVM fold's
+summation order bit for bit, which a matmul does not.
+
 Default (n_tables=20, n_planes=4) is tuned for near-uniform vectors (the
 synthetic corpus has 10th-neighbour cosine ~0.28 — the hard case): pytest
 gates recall@10 >= 0.9 vs brute force.  Clustered real-world embeddings
@@ -166,8 +178,16 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
                      q_id_col: str = "q_id", q_vec_col: str = "q_emb",
                      ) -> DataFrame:
     """Exact top-k neighbours per query (broadcast nested loop + window)."""
-    joined = vectors.crossJoin(F.broadcast(queries))
-    scored = joined.select(
+    return _rerank(vectors.crossJoin(F.broadcast(queries)), k,
+                   id_col, vec_col, q_id_col, q_vec_col)
+
+
+def _rerank(cands: DataFrame, k: int, id_col: str, vec_col: str,
+            q_id_col: str, q_vec_col: str) -> DataFrame:
+    """The exact re-rank every top-k search ends with: each candidate
+    (query, vector) row scored by ``round(cosine, 3)``, then the ``k``
+    best per query (ties -> smallest vector id), ranked in ``rnk``."""
+    scored = cands.select(
         F.col(q_id_col), F.col(id_col),
         F.round(cosine_expr(F.col(vec_col), F.col(q_vec_col)), 3)
         .alias("cos_sim"))
@@ -192,14 +212,30 @@ def hyperplanes(dim: int, n_tables: int = N_TABLES,
     return out
 
 
+def _grid(M: "np.ndarray") -> "np.ndarray":
+    """floor(x*QUANT + 0.5): the exact integer grid every signature and
+    IVF inner product is taken on (``_quant`` is its column form)."""
+    return np.floor(M * QUANT + 0.5)
+
+
+def _grid_buckets(M: "np.ndarray", planes: "np.ndarray") -> "np.ndarray":
+    """(len(M), n_tables) int32 sign-LSH buckets of the rows of ``M``
+    against ``hyperplanes`` ``planes``: bit i of a table's bucket is the
+    sign of the grid row's dot with plane i — integer dots, exact in
+    float64 in any summation order."""
+    n_tables, n_planes, dim = planes.shape
+    bits = (_grid(M) @ planes.reshape(n_tables * n_planes, dim).T) > 0
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
+    return (bits.reshape(len(M), n_tables, n_planes)
+            @ weights).astype(np.int32)
+
+
 def lsh_signatures(df: DataFrame, dim: int,
                    n_tables: int = N_TABLES, n_planes: int = N_PLANES,
                    vec_col: str = "embedding") -> DataFrame:
     """Adds ``buckets array<int>`` — one sign-LSH bucket per table.
     Quantized-integer dot products: exact, order-independent."""
     planes = hyperplanes(dim, n_tables, n_planes)
-    flat = planes.reshape(n_tables * n_planes, dim)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def sig(vecs: pd.Series) -> pd.Series:
@@ -208,11 +244,8 @@ def lsh_signatures(df: DataFrame, dim: int,
         out = pd.Series([None] * len(vecs), dtype=object)
         if ok.any():
             mat = np.stack(vecs.to_numpy()[ok]).astype(np.float64)
-            q = np.floor(mat * QUANT + 0.5)        # exact integer grid
-            bits = (q @ flat.T) > 0                # B x (tables*planes)
-            bits = bits.reshape(len(mat), len(planes), -1)
-            buckets = (bits @ weights).astype(np.int32)
-            out[ok] = pd.Series(list(buckets), index=out.index[ok])
+            out[ok] = pd.Series(list(_grid_buckets(mat, planes)),
+                                index=out.index[ok])
         return out
 
     return df.withColumn("buckets", sig(F.col(vec_col)))
@@ -243,28 +276,26 @@ def embedding_near_pairs(vectors: DataFrame, dim: int,
     approach all-pairs on large corpora: only use them with LOW
     thresholds on small/filtered inputs.
 
-    Size/regime-adaptive plan choice (round 7): when the bucket regime
-    is DENSE — the expected random collisions per vector,
-    (n-1)*(1 - (1 - 2^-n_planes)^n_tables), reach ~all-pairs territory —
-    the equi-join plan degenerates: at sf1.0 (20k vectors, 20x4 buckets)
-    ~72% of all pairs collide somewhere, so the join + dropDuplicates
-    materializes ~140M pair rows and then shuffles two 64-float arrays
-    onto each of them for the verify (measured 375 s).  For that regime,
-    when the corpus side also fits a broadcast (<= _DENSE_MAX_VECTORS),
-    ``_near_pairs_dense`` computes the SAME candidate predicate
-    per-pair with numpy (exact integer bucket grid + a margin-gated BLAS
-    cosine prefilter) and hands only the surviving pairs to the
-    UNCHANGED exact JVM verify — identical rows, no 140M-row shuffle.
-    The narrow-bucket regime (the real 100 TB near-dup setting, e.g. the
-    16x10 default) and anything bigger than the broadcast budget keep
-    the LSH equi-join plan untouched — that is the scale path; the dense
-    path is the right plan only where candidates ~ all pairs, exactly as
-    this docstring already warned."""
-    n_vec = vectors.count()
+    Regime-adaptive plan choice: when the bucket regime is WIDE — an
+    unrelated pair collides in some table with probability
+    p = 1 - (1 - 2^-n_planes)^n_tables >= _DENSE_MIN_COLLIDE — the
+    equi-join plan degenerates: at sf1.0 (20k vectors, 20x4 buckets,
+    p ~ 0.72) the join + dropDuplicates materializes ~140M pair rows and
+    then shuffles two 64-float arrays onto each of them for the verify
+    (measured 375 s).  For that regime, when the corpus side also fits a
+    broadcast (<= _DENSE_MAX_VECTORS), ``_near_pairs_dense`` computes
+    the SAME candidate predicate per-pair with numpy (exact integer
+    bucket grid + a margin-gated BLAS cosine prefilter) and hands only
+    the surviving pairs to the same exact JVM verify (``_verify``) —
+    identical rows, no 140M-row shuffle.  The narrow-bucket regime (the
+    real 100 TB near-dup setting, e.g. the 16x10 default, p ~ 0.0155)
+    keeps the LSH equi-join plan at any n, and p is tested before the
+    corpus is counted, so building its plan starts no Spark job; inputs
+    bigger than the broadcast budget keep the join too."""
     p_collide = 1.0 - (1.0 - 0.5 ** n_planes) ** n_tables
     id_type = vectors.schema[id_col].dataType.simpleString()
-    if (n_vec <= _DENSE_MAX_VECTORS and (n_vec - 1) * p_collide >= 8.0
-            and id_type in ("bigint", "int")):
+    if (p_collide >= _DENSE_MIN_COLLIDE and id_type in ("bigint", "int")
+            and vectors.count() <= _DENSE_MAX_VECTORS):
         return _near_pairs_dense(vectors, dim, threshold, n_tables,
                                  n_planes, id_col, vec_col)
     bands = (lsh_signatures(vectors, dim, n_tables, n_planes, vec_col)
@@ -277,6 +308,14 @@ def embedding_near_pairs(vectors: DataFrame, dim: int,
         .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
+    return _verify(pairs, vectors, threshold, id_col, vec_col)
+
+
+def _verify(pairs: DataFrame, vectors: DataFrame, threshold: float,
+            id_col: str, vec_col: str) -> DataFrame:
+    """The exact verify both near-pair plans end with: each candidate
+    (a_id, b_id) pair joined to its two vectors, kept where
+    ``round(cosine, 4) >= threshold``, as (a_id, b_id, cos_sim)."""
     va = vectors.select(F.col(id_col).alias("a_id"),
                         F.col(vec_col).alias("a_emb"))
     vb = vectors.select(F.col(id_col).alias("b_id"),
@@ -286,6 +325,12 @@ def embedding_near_pairs(vectors: DataFrame, dim: int,
             .select("a_id", "b_id", sim.alias("cos_sim"))
             .filter(F.col("cos_sim") >= threshold))
 
+
+# Dense-path gate: the per-pair collision probability from which the
+# candidate set is a large share of all pairs.  The 20x4 regime (p ~ 0.72)
+# is in it and the 16x10 default (p ~ 0.0155) is not; no cut between the
+# two has been measured, 1/2 only separates them.
+_DENSE_MIN_COLLIDE = 0.5
 
 # Dense-path broadcast budget: ids + float64 matrix + bucket table for
 # 2^18 vectors of dim 64 is ~150 MB — comfortably under executor memory,
@@ -300,13 +345,13 @@ def _near_pairs_dense(vectors: DataFrame, dim: int, threshold: float,
     ``embedding_near_pairs``): per-pair evaluation of the IDENTICAL
     candidate predicate — "collides in >= 1 of the n_tables exact
     integer-grid buckets" — plus a superset cosine prefilter, then the
-    unchanged exact JVM verify.
+    join path's exact JVM verify (``_verify``).
 
     Exactness:
-      * buckets are computed with the same integer quantization and
-        plane matrix as ``lsh_signatures`` (integer dots are exact in
-        float64 in any summation order), so bucket equality is
-        bit-identical to the equi-join's keys;
+      * buckets come from ``_grid_buckets`` with the plane matrix
+        ``lsh_signatures`` uses (integer dots are exact in float64 in
+        any summation order), so bucket equality is bit-identical to
+        the equi-join's keys;
       * the BLAS cosine is a PREFILTER ONLY, gated at
         threshold - 1.1e-4: the final filter keeps a pair iff
         round(cos_fold, 4) >= threshold, i.e. cos_fold >= threshold -
@@ -317,20 +362,11 @@ def _near_pairs_dense(vectors: DataFrame, dim: int, threshold: float,
         are kept as candidates (zero-norm vectors then hit the same
         ANSI DIVIDE_BY_ZERO in the JVM verify the old plan raised —
         identical behavior even on degenerate input);
-      * the final ``round(cosine_expr, 4) >= threshold`` runs in Spark,
-        unchanged, on the surviving pairs only.
+      * the final ``round(cosine_expr, 4) >= threshold`` runs in Spark
+        (``_verify``) on the surviving pairs only.
     """
     spark = vectors.sparkSession
     planes = hyperplanes(dim, n_tables, n_planes)
-    flat = planes.reshape(n_tables * n_planes, dim)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    def buckets_of(M: "np.ndarray") -> "np.ndarray":
-        q = np.floor(M * QUANT + 0.5)
-        bits = (q @ flat.T) > 0
-        return (bits.reshape(len(M), n_tables, n_planes)
-                @ weights).astype(np.int32)
-
     # a null vector is in no bucket, so the LSH join drops it: drop it
     # here too (np.array cannot stack it into the matrix)
     rows = (vectors.select(id_col, vec_col)
@@ -338,7 +374,7 @@ def _near_pairs_dense(vectors: DataFrame, dim: int, threshold: float,
     ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     M = np.array([r[vec_col] for r in rows],
                  dtype=np.float64).reshape(len(rows), dim)
-    bk = buckets_of(M)
+    bk = _grid_buckets(M, planes)
     # PRE-normalized rows: the prefilter cosine is then ONE matmul per
     # slab instead of matmul + norm-outer + divide (three full m x n
     # passes -> one; the prefilter is margin-gated, so the ~dim*eps
@@ -361,7 +397,7 @@ def _near_pairs_dense(vectors: DataFrame, dim: int, threshold: float,
                 continue
             A_all = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             aid_all = pdf[id_col].to_numpy()
-            abk_all = buckets_of(A_all)
+            abk_all = _grid_buckets(A_all, planes)
             with np.errstate(invalid="ignore", divide="ignore"):
                 An_all = A_all / np.sqrt(
                     np.einsum("ij,ij->i", A_all, A_all))[:, None]
@@ -386,14 +422,7 @@ def _near_pairs_dense(vectors: DataFrame, dim: int, threshold: float,
     par = spark.sparkContext.defaultParallelism
     pairs = (vectors.select(id_col, vec_col).repartition(par)
              .mapInPandas(gen, f"a_id {id_type}, b_id {id_type}"))
-    va = vectors.select(F.col(id_col).alias("a_id"),
-                        F.col(vec_col).alias("a_emb"))
-    vb = vectors.select(F.col(id_col).alias("b_id"),
-                        F.col(vec_col).alias("b_emb"))
-    sim = F.round(cosine_expr(F.col("a_emb"), F.col("b_emb")), 4)
-    return (pairs.join(va, "a_id").join(vb, "b_id")
-            .select("a_id", "b_id", sim.alias("cos_sim"))
-            .filter(F.col("cos_sim") >= threshold))
+    return _verify(pairs, vectors, threshold, id_col, vec_col)
 
 
 def _quant(vec) -> "F.Column":
@@ -448,8 +477,7 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
         out = pd.Series(pd.NA, index=range(len(vecs)), dtype="Int64")
         if ok.any():
             M = np.stack(vecs.to_numpy()[ok]).astype(np.float64)
-            q = np.floor(M * QUANT + 0.5)      # the exact integer grid
-            ip = q @ C_.T                      # integer-exact in float64
+            ip = _grid(M) @ C_.T               # integer-exact in float64
             out[ok] = c_ids_[np.argmax(ip, axis=1)]
         return out
 
@@ -499,13 +527,7 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
 
     cands = inv.join(F.broadcast(probes), "c_id").select(
         q_id_col, id_col, vec_col, q_vec_col)
-    scored = cands.select(
-        F.col(q_id_col), F.col(id_col),
-        F.round(cosine_expr(F.col(vec_col), F.col(q_vec_col)), 3)
-        .alias("cos_sim"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k))
+    return _rerank(cands, k, id_col, vec_col, q_id_col, q_vec_col)
 
 
 def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int, k: int = 10,
@@ -525,10 +547,4 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int, k: int = 10,
         .select(q_id_col, id_col, vec_col, q_vec_col)
         .dropDuplicates([q_id_col, id_col])
     )
-    scored = cands.select(
-        F.col(q_id_col), F.col(id_col),
-        F.round(cosine_expr(F.col(vec_col), F.col(q_vec_col)), 3)
-        .alias("cos_sim"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k))
+    return _rerank(cands, k, id_col, vec_col, q_id_col, q_vec_col)

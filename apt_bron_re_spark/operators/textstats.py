@@ -1,5 +1,5 @@
 """Text analysis operators for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting.
+stratified sampling, document fingerprinting.
 
 All column-expression based (JVM-side, whole-stage-codegen friendly) except
 the rolling-hash fingerprint, which is a vectorized pandas UDF.
@@ -21,26 +21,6 @@ _LANG_PROFILES = {
     "fr": ["le", "la", "et", "les", "des", "est", "une", "dans", "pour"],
     "es": ["el", "la", "los", "las", "una", "es", "en", "por", "para"],
 }
-
-# BPE-ish token estimate: word chars cluster ~3.5 chars/token; punctuation
-# and digits tokenize alone.
-_WORD_RE = r"\w+"
-
-
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace tokens + a BPE-ish subword estimate per doc."""
-    words = F.regexp_extract_all(F.col(text_col), F.lit(_WORD_RE), F.lit(0))
-    n_ws = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    word_chars = F.aggregate(
-        F.transform(words, lambda w: F.length(w)), F.lit(0), lambda a, x: a + x)
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[\w\s]", ""))
-    bpe_est = (F.ceil(word_chars / 3.5) + n_punct).cast("long")
-    return docs.select(
-        "doc_id",
-        n_ws.alias("n_ws_tokens"),
-        F.size(words).alias("n_word_tokens"),
-        bpe_est.alias("n_bpe_est"),
-    )
 
 
 def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
@@ -78,27 +58,6 @@ def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
                      F.lit(_thr(rates[stratum]))).otherwise(thr)
     return (df.withColumn("sample_bucket", bucket)
             .filter(F.col("sample_bucket") < thr))
-
-
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality features: length, punctuation ratio, stopword
-    ratio, mean word length, distinct-token ratio."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_tok = F.size(toks)
-    n_stop = F.size(F.filter(
-        toks, lambda t: F.lower(t).isin(_LANG_PROFILES["en"])))
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[\w\s]", ""))
-    n_chars = F.length(F.col(text_col))
-    return docs.select(
-        "doc_id",
-        n_chars.alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        F.round(F.size(F.array_distinct(toks)).cast("double") / n_tok, 4)
-        .alias("distinct_ratio"),
-        F.round(n_stop.cast("double") / n_tok, 4).alias("stopword_ratio"),
-        F.round(n_punct.cast("double") / F.greatest(n_chars, F.lit(1)), 4)
-        .alias("punct_ratio"),
-    )
 
 
 def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -95,8 +95,8 @@ def _observed(df: DataFrame, buckets=()):
     plan, ``counts()`` is its row count ``n`` plus one count per pbucket
     in ``buckets`` (keyed ``str(b)``), so no second scan counts the table.
     AQE drops a stage it finds empty together with the metrics observed
-    in it, so under an exchange (a partitioned write's repartition, an
-    Iceberg write distribution) an empty observation means zero rows."""
+    in it, so under an exchange (a producer's repartition, an Iceberg
+    write distribution) an empty observation means zero rows."""
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("n"), *[
         F.count_if(F.col("pbucket") == b).alias(str(b)) for b in buckets])
@@ -226,17 +226,36 @@ class Pipeline:
         return df.withColumn(
             "pbucket", F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
 
+    def _by_pred(self, triples: DataFrame) -> DataFrame:
+        """Triples hashed by pred into ``n_buckets`` write tasks, for the
+        pred-partitioned triples writes.  A rebalance hint was tried
+        instead and AQE's 64MB advisory re-serialized the triples encode
+        into 1 task on most runs (materialize stage 31 s <-> 132 s across
+        identical reps); hashing the ~11 preds into n_buckets partitions
+        gives ~8-10 stable write tasks (measured: materialize 66.8 -> 36.2
+        s at 256k pages, local[4]).  Writing from the triple aggregate's
+        own partitioning instead was measured at 10,000 pages (local[4],
+        8 shuffle partitions, n_buckets=32): AQE coalesced the write to 4
+        tasks, each spraying every pred (4 files per pred dir), against 9
+        writing tasks (one file per pred dir) here; the stage was 2.33 s
+        vs 2.66 s (median of 3), but the write lost task parallelism, so
+        this stays."""
+        return triples.repartition(self.n_buckets, F.col("pred"))
+
     def _write(self, df: DataFrame, name: str,
                partition_by: list[str] | None = None,
                dynamic: bool = False) -> None:
-        """Write a stage table: flat, or split into dirs by
-        ``partition_by`` (triples by pred, chunk tables by their chunk
-        key).  The write replaces the whole table, or with ``dynamic``
-        only the partitions ``df`` touches: a chunk after a stage's first
-        replaces its own partitions, and a retry after a kill between its
-        data commit and its lineage row rewrites the same partitions
-        instead of appending duplicates.  The overwrite mode is set on
-        every write, so a session default cannot keep stale partitions."""
+        """Write a stage table as it is given: flat, or split into dirs
+        by ``partition_by`` (triples by pred, chunk tables by their chunk
+        key).  A producer whose rows are not already clustered by the
+        partition columns clusters them itself (``_by_pred``, the mention
+        chunks), so a write adds no exchange.  The write replaces the
+        whole table, or with ``dynamic`` only the partitions ``df``
+        touches: a chunk after a stage's first replaces its own
+        partitions, and a retry after a kill between its data commit and
+        its lineage row rewrites the same partitions instead of appending
+        duplicates.  The overwrite mode is set on every write, so a
+        session default cannot keep stale partitions."""
         if self.catalog:
             w = df.writeTo(f"{self.catalog}.{name}")
             if dynamic:
@@ -254,21 +273,6 @@ class Pipeline:
             w.createOrReplace()
             return
         partition_by = partition_by or []
-        if partition_by:
-            # low-cardinality partition columns (pred, a chunk key):
-            # pinned.  A rebalance hint was tried here and AQE's 64MB
-            # advisory re-serialized the triples encode into 1 task on
-            # most runs (materialize stage 31 s <-> 132 s across identical
-            # reps); hashing the ~11 preds into n_buckets partitions gives
-            # ~8-10 stable write tasks (measured: materialize 66.8 -> 36.2
-            # s at 256k pages, local[4]).  Writing from the triple
-            # aggregate's own partitioning instead was measured at 10,000
-            # pages (local[4], 8 shuffle partitions, n_buckets=32): AQE
-            # coalesced the write to 4 tasks, each spraying every pred (4
-            # files per pred dir), against 9 writing tasks (one file per
-            # pred dir) here; the stage was 2.33 s vs 2.66 s (median of
-            # 3), but the write lost task parallelism, so this stays.
-            df = df.repartition(self.n_buckets, *map(F.col, partition_by))
         path = Path(self._path(name))
         (df.write.option("partitionOverwriteMode",
                          "dynamic" if dynamic else "static")
@@ -351,9 +355,9 @@ class Pipeline:
         exchange), written partitioned by pred."""
         self._run_stage(
             "materialize", self._fps()[4],
-            lambda: {"triples": materialize.triples_of_pairs(
+            lambda: {"triples": self._by_pred(materialize.triples_of_pairs(
                 materialize.link_pairs(links, canon_map, self.n_buckets,
-                                       clustered))},
+                                       clustered)))},
             partition_by=["pred"], resume=resume)
 
     def _mentions(self, pages: DataFrame) -> DataFrame:
@@ -478,8 +482,10 @@ class Pipeline:
         bucketed = self._bucketed(pages)
 
         def build(chunk):
+            # pbucket-clustered, so each write task fills few bucket dirs
             return nullcontext({"mentions": self._mentions(
-                bucketed.filter(F.col("pbucket").isin(chunk)))})
+                bucketed.filter(F.col("pbucket").isin(chunk)))
+                .repartition(self.n_buckets, F.col("pbucket"))})
 
         return self._run_chunks("mention", fp1, n_chunks, max_chunks, build)
 
@@ -544,7 +550,7 @@ class Pipeline:
         def merge() -> int:
             triples, counts = _observed(materialize.merge_partial_triples(
                 self._read("triples_partial").drop("chunk_key")))
-            self._write(triples, "triples", ["pred"])
+            self._write(self._by_pred(triples), "triples", ["pred"])
             return counts()["n"]
 
         return self._run_chunks("materialize", fp4, n_chunks, max_chunks,

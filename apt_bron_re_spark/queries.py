@@ -26,6 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.bm25 import _score
+from .operators.similarity import _dot, cosine_expr
+
 # Dictionary terms for the mention-detection analogs (all appear in the
 # corpus vocabulary).
 DICT_TERMS = ["spark", "join", "window", "scan", "stream", "merge"]
@@ -92,15 +95,6 @@ def _cents(col):
     return F.sum(F.round(F.col(col) * 100).cast("long"))
 
 
-def _dot(a, b):
-    prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _cosine(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 _TERMS_SQL = ", ".join(f"('{t}')" for t in DICT_TERMS)
 
 # DuckDB token table: one row per (doc_id, lang, source, pos, token), pos
@@ -144,8 +138,11 @@ def q_mention_counts(spark, sf_dir):
 
 
 def q_bm25_terms(spark, sf_dir):
-    """A3/A4: BM25 (k1=1.5, b=0.75, reference statistics.py:69-71) for the
-    dictionary terms over documents; exact-integer tf/df/dl inputs."""
+    """A3/A4: BM25 (reference statistics.py:69-71) for the dictionary
+    terms over documents; exact-integer tf/df/dl inputs, scored by the
+    pipeline's one copy of the formula, ``bm25._score`` (every dl is
+    non-null and every f >= 1 here, so its null and zero-denominator
+    guards never fire)."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(_tokens("text")).alias("token"))
@@ -154,19 +151,13 @@ def q_bm25_terms(spark, sf_dir):
     tf = (toks.join(F.broadcast(_terms_df(spark)), toks.token == F.col("term"))
           .groupBy("doc_id", "term").agg(F.count("*").alias("f")))
     df_ = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("n"))
-    k1, b = 1.5, 0.75
     return (
         tf.join(df_, "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id", "term",
-            F.round(
-                F.log((F.col("m") - F.col("n") + 0.5) / (F.col("n") + 0.5) + 1.0)
-                * (F.col("f") * (k1 + 1.0))
-                / (F.col("f") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-                4).alias("bm25"),
-        )
+        .select("doc_id", "term",
+                _score(*map(F.col, ("f", "n", "dl", "m", "avgdl")))
+                .alias("bm25"))
     )
 
 
@@ -249,7 +240,7 @@ def q_ann_topk(spark, sf_dir):
         emb.filter("vec_id <> 0")
         .crossJoin(F.broadcast(q))
         .select("vec_id", "label",
-                F.round(_cosine(F.col("embedding"), F.col("q_emb")), 3)
+                F.round(cosine_expr(F.col("embedding"), F.col("q_emb")), 3)
                 .alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)

@@ -90,10 +90,10 @@ def kg_batch_step(pages_batch: DataFrame, batch_id: int,
     part = (batch_partials(pages_batch, layer_map, canon_map)
             .withColumn("batch_id", F.lit(int(batch_id))))
     # NOT repartition(batch_id): batch_id is constant per micro-batch, so
-    # hashing it funnels every row into ONE task — the serial-tail class
-    # pipeline._write pins against.  partitionBy alone yields the one dir
-    # per batch; the partial aggregate's existing distribution sets the
-    # task count.
+    # hashing it funnels every row into ONE task (the chunked
+    # triples_partial write skips its constant chunk_key hash for the same
+    # reason).  partitionBy alone yields the one dir per batch; the
+    # partial aggregate's existing distribution sets the task count.
     (part.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("batch_id")

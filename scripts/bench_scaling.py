@@ -328,7 +328,8 @@ vs hub-heavy (`hub_rate={sk['hub_rate']}`: the hub group AND one fixed
 hub CVE each in ~{int(sk['hub_rate']*100)}% of pages — the reference's
 hub-entity reality, SURVEY §4, pushed past the default).  The salted
 paths under stress: canonicalize's two-phase salted aggregation and
-materialize's salted exact k-smallest + hub-key explode pairing.
+materialize's salted two-phase triple aggregation (exact k-smallest
+sources).
 
 | | wall (s) | triples | triples/sec | steal (s) |
 |---|---|---|---|---|
@@ -500,53 +501,6 @@ Per-stage wall seconds, 2v8 protocol:
 | stage | local[2] | local[8] | stage speedup |
 |---|---|---|---|
 """ + _stage_table(res28, 2, 8) + """
-## Round-4 scaling work (sort removal + job overlap)
-
-1. **Sort-free materialize**: profiling (scripts/profile_materialize.py)
-   showed the stage's flat tail was SortAggregate — Spark hash-aggregates
-   only primitive buffers, so max(struct(...)) SORTED the full evidence
-   table in both branches and the justification-attach SortMergeJoin
-   sorted both streams.  has_sentence became two primitive maxes
-   (HashAggregate); the argmax-sentence aggs carry a collect_set(lit(1))
-   companion that flips the planner to ObjectHashAggregate; the attach
-   join hashes on the catalog-bounded triple side.  Plan: 0 Sorts
-   (was 4 + SMJ); clean-window local[4] stage wall 39.3 -> 29.5 s.
-2. **Sort-free link stage**: same fix for best_links (ObjectHash flip),
-   the BM25 dl-attach join and the residual anti-join (shuffle_hash).
-3. **Job-overlap link writes** (landed post-record in round 3, first
-   measured here): the linked and residual tables write as CONCURRENT
-   jobs — the residual job's fixed latencies overlap under the linked
-   write at 4N, a no-op at N=1.
-4. Sorts matter for SCALING more than raw speed: single-thread sorts of
-   32 small partitions are cheap (local[1] barely moved), but at 4
-   threads they contend on memory bandwidth in one shared JVM — removal
-   shows up as efficiency, not local[1] wall.
-
-## Round-3 scaling work (shuffle BYTES, not ratios)
-
-Round 3 attacked the round-2 gap (0.532/0.500) as shuffle bytes:
-
-1. **Mention stage writes with NO shuffle** — the batch path keeps the
-   pbucket column but drops the bucketing repartition; the UDF output
-   streams from scan-aligned tasks straight into parquet.
-2. **Link stage: one url hash-partitioning end-to-end** — pbucket is
-   redefined as pmod(murmur3(url), n) == the HashPartitioning partition
-   id, so the stage writes shuffle-free; BM25 tf, the frozen-global
-   broadcasts, the score join, best-link aggregation, L6 merge join and
-   residual anti-join all preserve the single url repartition
-   (requireAllClusterKeysForCoPartition=false re-enables subset
-   co-partition reuse for joins).  The score/merge joins are
-   shuffle_hash — the wide sentence-bearing stream is never SORTED.
-3. **Materialize: argmax-first justification + explode pairing** —
-   sentences ride NO aggregation and NO join fan-out; the pairing
-   self-join is replaced by a row-local double explode over per-url
-   entity arrays; each triple aggregates only its best-evidence key and
-   the sentence attaches afterwards via one narrow pinned shuffle join
-   (an AQE broadcast of the data-sized sentence table was caught making
-   the stage bimodal 80 <-> 220 s and pinned out — the same failure
-   class round 2 met on the old pairing join).
-4. **Canonicalize** is precomputed per catalog fingerprint (see above).
-
 The residual wall-efficiency gap is the part a single shared-everything
 JVM cannot express: all local[k] levels share one shuffle service,
 memory bus, allocator and GC, while a real N -> 4N EXECUTOR scale-up

@@ -534,6 +534,44 @@ def test_chunked_materialize_after_batch_link(spark, layer_map, triples,
     assert _triple_rows(pipe.triples()) == _triple_rows(triples)
 
 
+def test_chunk_writes_add_no_cluster_exchange(spark, layer_map,
+                                              tmp_path_factory, monkeypatch):
+    """A chunk table is written from its producer's own tasks.  The link
+    chunks' ``linked`` and ``links_residual`` (clustered by the kernel's
+    url exchange, whose partition id is pbucket) get no hash exchange on
+    pbucket, and ``triples_partial`` (one constant chunk_key per chunk)
+    none on chunk_key, which would put every row in one task.  The mention
+    chunks keep their pbucket exchange and the triples their pred one."""
+    import re
+
+    from pyspark.sql import DataFrameWriter
+
+    plans: dict[str, list[str]] = {}
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans.setdefault(path.rstrip("/").rsplit("/", 1)[-1], []).append(
+            self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    pipe = Pipeline(spark, layer_map, tmp_path_factory.mktemp("chunk_writes"),
+                    n_buckets=8)
+    assert pipe.run_mention_incremental(pages_df(spark, N_PAGES), n_chunks=2)
+    assert pipe.run_link_incremental(n_chunks=2)
+    assert pipe.run_materialize_incremental(n_chunks=2)
+
+    def hashed(name: str, col: str) -> list[bool]:
+        return [bool(re.search(rf"hashpartitioning\({col}#", p))
+                for p in plans[name]]
+
+    assert hashed("mentions", "pbucket") == [True, True]
+    assert hashed("linked", "pbucket") == [False, False]
+    assert hashed("links_residual", "pbucket") == [False, False]
+    assert hashed("triples_partial", "chunk_key") == [False, False]
+    assert hashed("triples", "pred") == [True]
+
+
 def _job_ids(spark, group: str, action) -> set:
     """The ids of the Spark jobs ``action()`` starts."""
     sc = spark.sparkContext
